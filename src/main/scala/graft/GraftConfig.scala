@@ -21,8 +21,8 @@ package graft
   * `infra.CheckEnv` (`infra/env.go:9-15`): an unset/empty variable is a
   * PANIC with the reference's message, not a default — fail at startup,
   * not mid-stream. Spark-side consumers: `Streaming
-  * .notificationDrivenStream` takes a config and maps `Worker` to the
-  * conversion thread pool (≈ the worker goroutines, convertor.go:62-65)
+  * .notificationDrivenStream` maps `Worker` to each batch's conversion
+  * job's concurrent-task cap (≈ the worker goroutines, convertor.go:62-65)
   * and `Poller` to the per-trigger file cap (pollers × the 10-message
   * poll batch, convertor.go:52).
   */

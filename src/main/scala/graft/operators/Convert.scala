@@ -1,7 +1,12 @@
 package graft.operators
 
 import graft.{Num, QueryDef}
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -32,17 +37,23 @@ object Convert {
     StructField("nationality", StringType),
     StructField("age", IntegerType)))
 
+  private val narrowedAge = expr("try_cast(age AS TINYINT)")
+
   /** The reference's output projection+cast `toParquet`
     * (`convertor/struct.go:20-28`): field-by-field copy, age narrowed to
     * int8 (logical INT_8 on INT32 physical — Spark ByteType writes the
     * same annotation). Go silently wraps out-of-range values
     * (`int32(p.Age)`); under ANSI SQL that's an error, so we use
     * try_cast — out-of-range age becomes NULL instead of corrupting the
-    * value or failing the batch. */
-  def toParquet(df: DataFrame): DataFrame =
-    df.select(
-      col("ID"), col("name"), col("nationality"),
-      expr("try_cast(age AS TINYINT)").as("age"))
+    * value or failing the batch. `keep` names extra columns to carry. */
+  def toParquet(df: DataFrame, keep: String*): DataFrame =
+    df.select(Seq(col("ID"), col("name"), col("nationality"),
+      narrowedAge.as("age")) ++ keep.map(col): _*)
+
+  /** What one conversion pass read, dropped and altered, observed in the
+    * same scan (`Dataset.observe`, no second pass): input rows, rows
+    * dropped as corrupt, and ages narrowed to NULL by [[toParquet]]. */
+  final case class ConvertStats(rowsIn: Long, corruptDropped: Long, agesNulled: Long)
 
   /** JSON → Parquet with the reference writer's exact knobs
     * (`convertor/convertor.go:180-182`): 16 MiB row groups, SNAPPY,
@@ -61,29 +72,125 @@ object Convert {
       in: String,
       out: String,
       schema: StructType = personSchema,
-      multiLine: Boolean = true): Unit = {
-    val withCorrupt = schema.add("_corrupt_record", StringType)
-    val df = spark.read
-      .schema(withCorrupt)
-      .option("multiLine", multiLine)
-      .option("mode", "PERMISSIVE")
+      multiLine: Boolean = true): ConvertStats =
+    convertPass(spark, Seq(in), out, schema, multiLine)
+
+  /** The one read → drop-corrupt → [[toParquet]] → write pass both
+    * conversion entry points run. `tag` adds a column computed from the
+    * raw rows, and the write is partitioned by it; `maxTasks` caps the
+    * job's concurrent tasks. */
+  private def convertPass(spark: SparkSession, in: Seq[String], out: String,
+      schema: StructType = personSchema, multiLine: Boolean = true,
+      maxTasks: Option[Int] = None, tag: Option[Column] = None): ConvertStats = {
+    val raw = spark.read.schema(schema.add("_corrupt_record", StringType))
+      .option("multiLine", multiLine).option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(in)
-      .filter(col("_corrupt_record").isNull)
-      .drop("_corrupt_record")
-    writeRefParquet(toParquet(df), out)
+      .json(in: _*)
+    val tagged = tag.fold(raw)(raw.withColumn(KeyIndex, _))
+    val obs = Observation()
+    val clean = col("_corrupt_record").isNull
+    val kept = maxTasks.fold(tagged)(tagged.coalesce)
+      .observe(obs,
+        count(lit(1)).as("rows_in"),
+        count_if(!clean).as("corrupt"),
+        count_if(clean && col("age").isNotNull && narrowedAge.isNull).as("nulled"))
+      .filter(clean)
+    val keep = tag.map(_ => KeyIndex).toSeq
+    writeRefParquet(toParquet(kept, keep: _*), out, keep)
+    val m = obs.get.view.mapValues(_.asInstanceOf[Long])
+    ConvertStats(m("rows_in"), m("corrupt"), m("nulled"))
   }
 
   /** The reference writer's exact knobs (`convertor/convertor.go:180-182`)
-    * in ONE place, shared by both source modes — the sink contract must
-    * not drift between the explicit-schema and inference paths. */
-  private def writeRefParquet(df: DataFrame, out: String): Unit =
+    * in ONE place, shared by every source mode — the sink contract must
+    * not drift between the explicit-schema, batched and inference paths. */
+  private def writeRefParquet(
+      df: DataFrame, out: String, partitionBy: Seq[String] = Nil): Unit =
     df.write
       .mode(SaveMode.Overwrite)
+      .partitionBy(partitionBy: _*)
       .option("compression", "snappy")
       .option("parquet.block.size", 16 * 1024 * 1024)
       .option("parquet.enable.dictionary", true)
       .parquet(out)
+
+  private val KeyIndex = "key_index"
+
+  /** A zero-row file with [[toParquet]]'s output schema, written on the
+    * driver (no Spark job), for a key none of whose rows survived. */
+  private def writeEmptyParquet(spark: SparkSession, file: Path): Unit = {
+    val schema = toParquet(
+      spark.createDataFrame(java.util.List.of[Row](), personSchema)).schema
+    ExampleParquetWriter.builder(HadoopOutputFile.fromPath(file, spark.sessionState.newHadoopConf()))
+      .withType(new SparkToParquetSchemaConverter(spark.sessionState.conf).convert(schema))
+      .withExtraMetaData(java.util.Map.of(ParquetReadSupport.SPARK_METADATA_KEY, schema.json))
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .build().close()
+  }
+
+  /** Convert every object a notification micro-batch names in ONE Spark
+    * job, each `<objectRoot>/<key>` to the `<outDir>/<key>.parquet`
+    * [[jsonToParquet]] would give it: one read over every object; each
+    * row tagged with its object's index via `_metadata.file_path` (a row
+    * of an unmapped file fails the job by `raise_error`, never lands
+    * under a wrong key); one write partitioned by that index into
+    * `<outDir>/_staging/<batchId>`; then the driver moves each index's
+    * directory to its key's output (delete, then rename; a FALSE rename
+    * throws). A key with no surviving rows gets a zero-row file. Every
+    * move overwrites, so a replayed batch id is idempotent. Missing
+    * objects are skipped, the rest converted, then the call throws
+    * naming them, so the caller's batch does not commit. */
+  def jsonToParquetBatch(
+      spark: SparkSession,
+      objectRoot: String,
+      keys: Seq[String],
+      outDir: String,
+      batchId: Long,
+      maxTasks: Option[Int] = None): ConvertStats = {
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new Path(outDir).getFileSystem(conf)
+    // each object's path in the form `_metadata.file_path` reports it:
+    // percent-encoded, and `file:/…` where the qualified path is `file:///…`
+    val located = keys.map { k =>
+      val p = new Path(s"$objectRoot/$k")
+      k -> (try {
+        val u = p.getFileSystem(conf).getFileStatus(p).getPath.toUri
+        Some(new java.net.URI(u.getScheme, Option(u.getAuthority).filter(_.nonEmpty)
+          .orNull, u.getPath, null, null).toString)
+      } catch { case _: java.io.FileNotFoundException => None })
+    }
+    // keys naming one object differ only in spelling (`a//b`, `a/b`),
+    // which the output path normalizes too: one read and one move each
+    val files = located.collect { case (k, Some(f)) => (k, f) }.distinctBy(_._2)
+    val index = files.map(_._2).zipWithIndex.toMap
+    val stage = new Path(s"$outDir/_staging/$batchId")
+    val file = col("_metadata.file_path")
+    val stats = try {
+      val s = if (files.isEmpty) ConvertStats(0, 0, 0) else convertPass(
+        spark, files.map(k => s"$objectRoot/${k._1}"), stage.toString,
+        maxTasks = maxTasks, tag = Some(coalesce(try_element_at(typedLit(index), file),
+          raise_error(concat(lit("no key names input file "), file)))))
+      for (((k, _), i) <- files.zipWithIndex) {
+        val dst = new Path(s"$outDir/$k.parquet")
+        if (!fs.delete(dst, true) && fs.exists(dst))
+          throw new java.io.IOException(s"FileSystem.delete($dst) returned false")
+        fs.mkdirs(dst.getParent)
+        val part = new Path(stage, s"$KeyIndex=$i")
+        if (!fs.exists(part)) writeEmptyParquet(spark, new Path(dst, "part-00000.parquet"))
+        else if (!fs.rename(part, dst)) throw new java.io.IOException(
+          s"FileSystem.rename($part -> $dst) returned false; batch not committed")
+      }
+      fs.delete(stage, true)
+      s
+    } catch { case e: Exception =>
+      throw new RuntimeException(s"batch $batchId left ${keys.length} " +
+        s"unconverted keys: ${keys.mkString(",")}", e)
+    }
+    val missing = located.collect { case (k, None) => k }
+    if (missing.nonEmpty) throw new RuntimeException(s"batch $batchId left " +
+      s"${missing.length} unconverted keys (no object): ${missing.mkString(",")}")
+    stats
+  }
 
   /** Schema-INFERENCE mode — the second source mode SURVEY §1 promises:
     * point the converter at JSON of UNKNOWN shape and let Spark derive
@@ -138,9 +245,7 @@ object Convert {
     * encoder maps straight onto the columnar rows). */
   def typedPersons(spark: SparkSession, in: String): Dataset[Person] = {
     import spark.implicits._
-    spark.read.schema(personSchema).option("multiLine", true).json(in)
-      .select(col("ID"), col("name"), col("nationality"),
-        expr("try_cast(age AS TINYINT)").as("age"))
+    toParquet(spark.read.schema(personSchema).option("multiLine", true).json(in))
       .as[Person]
   }
 

@@ -1,10 +1,17 @@
 package graft.streaming
 
+import java.io.IOException
+
 import graft.{Num, QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.operators.{Convert, Dedup}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, MapState, OutputMode,
+  StatefulProcessor, StatefulProcessorWithInitialState, StreamingQuery, TTLConfig, TimeMode,
+  TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 /** Streaming layer (SURVEY.md §2A #1/#6/#7 + §2B streaming rows).
   *
@@ -33,7 +40,7 @@ object Streaming {
       inDir: String,
       outDir: String,
       checkpointDir: String,
-      schema: StructType = graft.operators.Convert.personSchema,
+      schema: StructType = Convert.personSchema,
       maxFilesPerTrigger: Int = 10,
       backfill: Boolean = false): StreamingQuery = {
     val in = spark.readStream
@@ -43,7 +50,7 @@ object Streaming {
       // (sample_json/*.json) — same whole-file parse as the batch path
       .option("multiLine", true)
       .json(inDir)
-    graft.operators.Convert.toParquet(in)
+    Convert.toParquet(in)
       .writeStream
       .format("parquet")
       .option("path", outDir)
@@ -61,21 +68,15 @@ object Streaming {
   /** The reference's FULL control flow: a stream of S3-event-notification
     * bodies (the SQS messages), each naming object keys to convert — not
     * just a watched directory. Notification JSON files land in
-    * `notifyDir`; each micro-batch parses them (`Convert.parseS3Events`,
-    * multi-record safe), resolves keys against `objectRoot` (the S3
-    * bucket stand-in), reads the named JSON objects, and writes one
-    * parquet per key under `outDir` — the reference's deterministic
-    * `<key>.parquet` idempotent output (`convertor/convertor.go:171`).
-    *
-    * The per-batch key loop is control-plane work (like the reference's
-    * per-message worker, `convertor.go:109-166`); the data plane — read,
-    * project, write — is distributed Spark per key. Failed keys are
-    * skipped like the reference's log-and-continue; the checkpoint
-    * replaces the SQS redelivery loop.
+    * `notifyDir`; each micro-batch is one [[convertNotificationBatch]]:
+    * parse the keys, resolve them against `objectRoot` (the S3 bucket
+    * stand-in) and write one parquet per key under `outDir` — the
+    * reference's deterministic `<key>.parquet` idempotent output
+    * (`convertor/convertor.go:171`).
     *
     * `config` (optional) is the reference-faithful [[graft.GraftConfig]]
-    * env mirror: `Worker` bounds the concurrent per-key conversion
-    * submissions the way the worker goroutine count bounds the
+    * env mirror: `Worker` caps the concurrent tasks of the batch's one
+    * conversion job the way the worker goroutine count bounds the
     * reference's fan-out (`convertor.go:62-65`), and `Poller` caps the
     * per-trigger notification intake at pollers × the 10-message poll
     * batch (`convertor.go:52`) via maxFilesPerTrigger. */
@@ -86,65 +87,44 @@ object Streaming {
       outDir: String,
       checkpointDir: String,
       config: Option[graft.GraftConfig] = None): StreamingQuery = {
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val reader = spark.readStream
       .schema(StructType(Seq(StructField("value", StringType))))
       .option("wholetext", true)
     config.foreach(c =>
       reader.option("maxFilesPerTrigger", c.filesPerTrigger))
-    val bodies = reader.text(notifyDir)
-    bodies.writeStream
+    reader.text(notifyDir).writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        // distinct: at-least-once event delivery can name the same key
-        // twice in one batch; converting it concurrently twice would
-        // race two write jobs on the same output path
-        val keys = graft.operators.Convert
-          .parseS3Events(batch, "value")
-          .select("key").distinct().collect().map(_.getString(0))
-        // Attempt every key, then FAIL the batch if any failed: the
-        // checkpoint must not advance past unconverted objects, or a
-        // transient error becomes silent data loss. Failing the batch
-        // makes Spark re-run it — the redelivery the reference gets from
-        // not acking the message (convertor.go:156-164); the idempotent
-        // <key>.parquet overwrite makes the retry safe.
-        //
-        // Keys convert CONCURRENTLY: each conversion is only a
-        // driver-side job submission (the executors do the data plane),
-        // so a batch naming many keys must not serialize on one thread —
-        // the scheduler interleaves the per-key jobs across the cluster,
-        // mirroring the reference's per-message worker fan-out
-        // (convertor.go:109).
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        // Worker (when configured) bounds the in-flight job submissions
-        // exactly like the reference's worker goroutine pool; without a
-        // config the global pool's width stands in.
-        val pool = config.map(c =>
-          java.util.concurrent.Executors.newFixedThreadPool(c.worker))
-        implicit val ec: ExecutionContext =
-          pool.map(ExecutionContext.fromExecutorService(_))
-            .getOrElse(ExecutionContext.global)
-        val failed = try Await.result(
-          Future.traverse(keys.toSeq) { key =>
-            Future {
-              try {
-                graft.operators.Convert.jsonToParquet(
-                  batch.sparkSession, s"$objectRoot/$key",
-                  s"$outDir/$key.parquet")
-                None
-              } catch { case e: Exception =>
-                System.err.println(s"[graft] failed $key: ${e.getMessage}")
-                Some(key)
-              }
-            }
-          }, Duration.Inf).flatten
-        finally pool.foreach(_.shutdown())
-        if (failed.nonEmpty) throw new RuntimeException(
-          s"batch left ${failed.length} unconverted keys: ${failed.mkString(",")}")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        convertNotificationBatch(batch, batchId, objectRoot, outDir,
+          config.map(_.worker))
+        ()
       }
       .trigger(Trigger.ProcessingTime("1 second"))
       .start()
+  }
+
+  /** One micro-batch of [[notificationDrivenStream]]: every key the
+    * notification bodies (`value` column) name converts in ONE Spark job
+    * (`Convert.jsonToParquetBatch`), and the pass's counters go to stderr
+    * as one JSON line. `distinct`: at-least-once delivery can name a key
+    * twice. If any key fails the call throws and the batch does not
+    * commit, so Spark re-runs it on restart — the redelivery the
+    * reference gets from not acking the message (convertor.go:156-164);
+    * the overwriting moves make the re-run safe. */
+  def convertNotificationBatch(
+      batch: DataFrame,
+      batchId: Long,
+      objectRoot: String,
+      outDir: String,
+      maxTasks: Option[Int] = None): Convert.ConvertStats = {
+    val keys = Convert.parseS3Events(batch, "value")
+      .select("key").distinct().collect().map(_.getString(0)).toSeq
+    val s = Convert.jsonToParquetBatch(
+      batch.sparkSession, objectRoot, keys, outDir, batchId, maxTasks)
+    System.err.println(s"""{"batch":$batchId,"keys":${keys.length},""" +
+      s""""rows_in":${s.rowsIn},"corrupt_dropped":${s.corruptDropped},""" +
+      s""""ages_nulled":${s.agesNulled}}""")
+    s
   }
 
   /** Idempotent keyed upsert: merge a micro-batch into the parquet table
@@ -171,16 +151,14 @@ object Streaming {
     val (fs, tableP) = tableFs(s, tablePath)
     val existing =
       if (fs.exists(tableP)) s.read.parquet(tablePath)
-      else s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(key)).orderBy(col("__prio").desc)
+      else s.createDataFrame(s.sparkContext.emptyRDD[Row], batch.schema)
+    val w = Window.partitionBy(col(key)).orderBy(col("__prio").desc)
     val merged = existing.withColumn("__prio", lit(0))
       .unionByName(batch.withColumn("__prio", lit(1)))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__prio", "__rn")
-    merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+    merged.write.mode(SaveMode.Overwrite)
       .parquet(tablePath + ".tmp")
     asideSwap(s, tablePath)
   }
@@ -225,16 +203,14 @@ object Streaming {
     val (fs, tableP) = tableFs(s, tablePath)
     val existing =
       if (fs.exists(tableP)) s.read.parquet(tablePath)
-      else s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(key))
+      else s.createDataFrame(s.sparkContext.emptyRDD[Row], batch.schema)
+    val w = Window.partitionBy(col(key))
       .orderBy(col("ts").desc, col("event_id").desc)
     val merged = existing.unionByName(batch)
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
-    merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+    merged.write.mode(SaveMode.Overwrite)
       .parquet(tablePath + ".tmp")
     asideSwap(s, tablePath)
   }
@@ -250,8 +226,8 @@ object Streaming {
     * Spark-writable filesystem (local, HDFS, S3A object stores), not
     * just `java.io`-visible local disk (ADVICE r8). */
   private def tableFs(s: SparkSession, tablePath: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(tablePath)
+      : (FileSystem, Path) = {
+    val p = new Path(tablePath)
     (p.getFileSystem(s.sessionState.newHadoopConf()), p)
   }
 
@@ -262,11 +238,9 @@ object Streaming {
     * surviving table copy still at `.old` — silent data loss (ADVICE
     * r9). Every rename in the swap protocol goes through this check. */
   private def renameOrThrow(
-      fs: org.apache.hadoop.fs.FileSystem,
-      from: org.apache.hadoop.fs.Path, to: org.apache.hadoop.fs.Path,
-      step: String): Unit = {
+      fs: FileSystem, from: Path, to: Path, step: String): Unit = {
     if (!fs.rename(from, to))
-      throw new java.io.IOException(
+      throw new IOException(
         s"$step: FileSystem.rename($from -> $to) returned false; " +
           "table swap aborted with all existing copies left in place")
   }
@@ -280,7 +254,7 @@ object Streaming {
     * exact data-loss mode this recovery exists to prevent. */
   private def recoverFromAside(s: SparkSession, tablePath: String): Unit = {
     val (fs, p) = tableFs(s, tablePath)
-    val aside = new org.apache.hadoop.fs.Path(tablePath + ".old")
+    val aside = new Path(tablePath + ".old")
     if (!fs.exists(p) && fs.exists(aside))
       renameOrThrow(fs, aside, p, "recoverFromAside")
   }
@@ -301,15 +275,15 @@ object Streaming {
     * directory. */
   private def asideSwap(s: SparkSession, tablePath: String): Unit = {
     val (fs, p) = tableFs(s, tablePath)
-    val aside = new org.apache.hadoop.fs.Path(tablePath + ".old")
-    val tmp = new org.apache.hadoop.fs.Path(tablePath + ".tmp")
+    val aside = new Path(tablePath + ".old")
+    val tmp = new Path(tablePath + ".tmp")
     if (fs.exists(p)) {
       // A stale `.old` (crash after the final rename of a previous
       // swap) must clear before the current table can move aside. A
       // FALSE delete of an EXISTING aside would make the next rename
       // fail or merge-into — stop here with both copies intact.
       if (fs.exists(aside) && !fs.delete(aside, true))
-        throw new java.io.IOException(
+        throw new IOException(
           s"asideSwap: FileSystem.delete($aside) returned false; " +
             "swap aborted before touching the live table")
       renameOrThrow(fs, p, aside, "asideSwap(old->aside)")
@@ -348,8 +322,8 @@ object Streaming {
       // does anyway): the extra doc_id partition term gives every
       // null-hash row its own window partition, so both dedup layers
       // agree regardless of which batch such rows arrive in.
-      .withColumn("__rn", row_number().over(org.apache.spark.sql.expressions
-        .Window.partitionBy(col("h"), when(col("h").isNull, col("doc_id")))
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy(col("h"), when(col("h").isNull, col("doc_id")))
         .orderBy(col("doc_id"))))
       .filter(col("__rn") === 1).drop("__rn")
     // Read every EARLIER batch's hashes — excluding this batch's own
@@ -362,10 +336,8 @@ object Streaming {
     // pins the known schema: an earlier batch whose rows were all
     // deduplicated away leaves a part-file-less directory that schema
     // inference would refuse.
-    val stateSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("h",
-        org.apache.spark.sql.types.StringType)))
-    val statePath = new org.apache.hadoop.fs.Path(stateDir)
+    val stateSchema = StructType(Seq(StructField("h", StringType)))
+    val statePath = new Path(stateDir)
     val fs = statePath.getFileSystem(s.sparkContext.hadoopConfiguration)
     val earlier =
       if (fs.exists(statePath))
@@ -378,8 +350,7 @@ object Streaming {
     val seen =
       if (earlier.nonEmpty)
         s.read.schema(stateSchema).parquet(earlier: _*).select(col("h"))
-      else s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
+      else s.createDataFrame(s.sparkContext.emptyRDD[Row], stateSchema)
     val fresh = hashed.join(seen, Seq("h"), "left_anti").cache()
     try {
       fresh.drop("h").write
@@ -430,15 +401,11 @@ object Streaming {
       batch: DataFrame, batchId: Long,
       corpusDir: String, bandsDir: String): Unit = {
     val s = batch.sparkSession
-    val bands = graft.operators.Dedup.minhashBandKeys(
-      graft.operators.Dedup.minhashSignatures(batch)).cache()
+    val bands = Dedup.minhashBandKeys(Dedup.minhashSignatures(batch)).cache()
     try {
-      val stateSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("band",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("band_key",
-          org.apache.spark.sql.types.StringType)))
-      val statePath = new org.apache.hadoop.fs.Path(bandsDir)
+      val stateSchema = StructType(Seq(
+        StructField("band", IntegerType), StructField("band_key", StringType)))
+      val statePath = new Path(bandsDir)
       val fs = statePath.getFileSystem(s.sparkContext.hadoopConfiguration)
       val earlier =
         if (fs.exists(statePath))
@@ -451,8 +418,7 @@ object Streaming {
       val seen =
         if (earlier.nonEmpty)
           s.read.schema(stateSchema).parquet(earlier: _*)
-        else s.createDataFrame(
-          s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
+        else s.createDataFrame(s.sparkContext.emptyRDD[Row], stateSchema)
       val dupCross = bands
         .join(seen, Seq("band", "band_key"), "left_semi")
         .select(col("doc_id"))
@@ -510,7 +476,7 @@ object Streaming {
         s.read.parquet(compDir)
           .select(col("node").as("id_a"), col("component").as("id_b"))
       else pairs.select(col("id_a"), col("id_b")).limit(0)
-    val merged = graft.operators.Dedup.connectedComponents(
+    val merged = Dedup.connectedComponents(
       pairs.select(col("id_a"), col("id_b")).unionByName(oldEdges))
     merged.write.mode(SaveMode.Overwrite).parquet(compDir + ".tmp")
     asideSwap(s, compDir)
@@ -723,8 +689,8 @@ object Streaming {
     * corpus without ever re-deriving history's span table. */
   def spanIngestBatch(batch: DataFrame, batchId: Long,
       spanDir: String,
-      window: Int = graft.operators.Dedup.substrWindow): Unit = {
-    graft.operators.Dedup.spanRelation(batch, window)
+      window: Int = Dedup.substrWindow): Unit = {
+    Dedup.spanRelation(batch, window)
       .select(col("doc_id"), col("sid")).distinct()
       .groupBy(col("sid")).agg(count(lit(1)).as("n_docs"))
       .write.mode(SaveMode.Overwrite)
@@ -784,20 +750,18 @@ object Streaming {
     // a base newer than the requested horizon would be orphaned by the
     // source deletes below while still being what readers prefer —
     // compaction horizons must only move forward
-    live.map(p => new org.apache.hadoop.fs.Path(p).getName)
+    live.map(p => new Path(p).getName)
       .filter(_.startsWith("compact=")).map(_.drop(8).toLong)
       .foreach(k => require(upToBatch >= k,
         s"spanCompact: horizon $upToBatch behind existing base $k"))
     val inputs = live.filter { p =>
-      val name = new org.apache.hadoop.fs.Path(p).getName
+      val name = new Path(p).getName
       !name.startsWith("batch=") || name.drop(6).toLong <= upToBatch
     }
-    val target = new org.apache.hadoop.fs.Path(spanDir,
-      s"compact=$upToBatch")
+    val target = new Path(spanDir, s"compact=$upToBatch")
     // compare by dir NAME — listStatus paths are fs-qualified
     // (file:/...), target is the raw spelling
-    val inputNames =
-      inputs.map(p => new org.apache.hadoop.fs.Path(p).getName)
+    val inputNames = inputs.map(p => new Path(p).getName)
     if (inputNames == Seq(target.getName)) {
       // Re-folding a lone base is the identity: a run at a horizon equal
       // to the newest base (including the re-run after a crash that
@@ -809,7 +773,7 @@ object Streaming {
       // through to the supersede sweep, which completes any pending
       // source deletes a crashed run left behind.
     } else if (inputs.nonEmpty) {
-      val staged = new org.apache.hadoop.fs.Path(spanDir, ".compact_staging")
+      val staged = new Path(spanDir, ".compact_staging")
       spark.read.parquet(inputs: _*)
         .groupBy(col("sid")).agg(sum(col("n_docs")).as("n_docs"))
         .write.mode(SaveMode.Overwrite).parquet(staged.toString)
@@ -820,15 +784,15 @@ object Streaming {
       // short-circuit above, so this branch expects no target — but a
       // violated contract should degrade to a recoverable aside swap,
       // never to deleting the only copy.
-      val aside = new org.apache.hadoop.fs.Path(spanDir, ".compact_aside")
+      val aside = new Path(spanDir, ".compact_aside")
       if (fs.exists(aside) && !fs.delete(aside, true))
-        throw new java.io.IOException(
+        throw new IOException(
           s"spanCompact: could not clear stale aside $aside")
       if (fs.exists(target))
         renameOrThrow(fs, target, aside, "spanCompact(base->aside)")
       renameOrThrow(fs, staged, target, "spanCompact(stage->base)")
       if (fs.exists(aside) && !fs.delete(aside, true))
-        throw new java.io.IOException(
+        throw new IOException(
           s"spanCompact: superseded aside $aside not deleted")
     }
     if (inputs.nonEmpty) {
@@ -845,13 +809,12 @@ object Streaming {
           (name.startsWith("batch=") && name.drop(6).toLong <= upToBatch) ||
             (name.startsWith("compact=") && name.drop(8).toLong < upToBatch)
         if (stale && !fs.delete(s.getPath, true))
-          throw new java.io.IOException(
+          throw new IOException(
             s"spanCompact: superseded ${s.getPath} not deleted")
       }
     }
     // root-level listing junk (_SUCCESS markers from staged writes)
-    fs.delete(new org.apache.hadoop.fs.Path(spanDir, ".compact_staging"),
-      true)
+    fs.delete(new Path(spanDir, ".compact_staging"), true)
   }
 
   // --------------------------------------------------------------------
@@ -1085,11 +1048,11 @@ object Streaming {
       .withColumn("tile", shiftright(
         graft.operators.Analytics.zInterleave8(col("ba"), col("bb")), 10))
       .select(col("rid"), col("a"), col("b"), col("tile"))
-    val dataStage = new org.apache.hadoop.fs.Path(dir, ".opt_data_staging")
-    val zoneStage = new org.apache.hadoop.fs.Path(dir, ".opt_zone_staging")
+    val dataStage = new Path(dir, ".opt_data_staging")
+    val zoneStage = new Path(dir, ".opt_zone_staging")
     Seq(dataStage, zoneStage).foreach { p =>
       if (fs.exists(p) && !fs.delete(p, true))
-        throw new java.io.IOException(s"zoneOptimize: stale staging $p")
+        throw new IOException(s"zoneOptimize: stale staging $p")
     }
     // Cluster by tile BEFORE the dynamic-partition write: without it,
     // every input task writes into every tile dir it touches — 6 scan
@@ -1118,18 +1081,16 @@ object Streaming {
         col("skr"), col("ska"), col("skb"))
       .write.mode(SaveMode.Overwrite).parquet(zoneStage.toString)
     // swap: data first, zones second — zones/opt=K implies complete data
-    def swapIn(stage: org.apache.hadoop.fs.Path, sub: String): Unit = {
-      val target = new org.apache.hadoop.fs.Path(
-        s"$dir/$sub", s"opt=$horizon")
-      val aside = new org.apache.hadoop.fs.Path(
-        s"$dir/$sub", s".opt_aside")
+    def swapIn(stage: Path, sub: String): Unit = {
+      val target = new Path(s"$dir/$sub", s"opt=$horizon")
+      val aside = new Path(s"$dir/$sub", s".opt_aside")
       if (fs.exists(aside) && !fs.delete(aside, true))
-        throw new java.io.IOException(s"zoneOptimize: stale aside $aside")
+        throw new IOException(s"zoneOptimize: stale aside $aside")
       if (fs.exists(target)) // contract-violating leftover: move aside,
         renameOrThrow(fs, target, aside, "zoneOptimize(target->aside)")
       renameOrThrow(fs, stage, target, s"zoneOptimize(stage->$sub)")
       if (fs.exists(aside) && !fs.delete(aside, true))
-        throw new java.io.IOException(
+        throw new IOException(
           s"zoneOptimize: superseded aside $aside not deleted")
     }
     swapIn(dataStage, "data")
@@ -1144,14 +1105,14 @@ object Streaming {
       spark: SparkSession, dir: String, horizon: Long): Unit = {
     val (fs, _) = tableFs(spark, dir)
     Seq("data", "zones").foreach { sub =>
-      val root = new org.apache.hadoop.fs.Path(s"$dir/$sub")
+      val root = new Path(s"$dir/$sub")
       if (fs.exists(root)) fs.listStatus(root).foreach { s =>
         val n = s.getPath.getName
         val stale =
           (n.startsWith("batch=") && n.drop(6).toLong <= horizon) ||
             (n.startsWith("opt=") && n.drop(4).toLong < horizon)
         if (stale && !fs.delete(s.getPath, true))
-          throw new java.io.IOException(
+          throw new IOException(
             s"zoneOptimize: superseded ${s.getPath} not deleted")
       }
     }
@@ -1263,18 +1224,18 @@ object Streaming {
   private[graft] def dvPublish(
       spark: SparkSession, dir: String, rows: DataFrame): Unit = {
     val (fs, _) = tableFs(spark, dir)
-    val stage = new org.apache.hadoop.fs.Path(dir, "dv/.dv_staging")
+    val stage = new Path(dir, "dv/.dv_staging")
     if (fs.exists(stage) && !fs.delete(stage, true))
-      throw new java.io.IOException(s"dvPublish: stale staging $stage")
+      throw new IOException(s"dvPublish: stale staging $stage")
     rows.coalesce(1).write.mode(SaveMode.Overwrite).parquet(stage.toString)
     val next = dvVisibleGen(spark, dir) + 1
     // the generation delta, computed against the STILL-VISIBLE old
     // generation from the staged bytes (never the unevaluated frame)
     val cur = dvTable(spark, dir)
       .select(col("file"), col("bucket"), col("word").as("oldw"))
-    val logStage = new org.apache.hadoop.fs.Path(dir, "dv_log/.staging")
+    val logStage = new Path(dir, "dv_log/.staging")
     if (fs.exists(logStage) && !fs.delete(logStage, true))
-      throw new java.io.IOException(s"dvPublish: stale staging $logStage")
+      throw new IOException(s"dvPublish: stale staging $logStage")
     spark.read.parquet(stage.toString)
       .join(cur, Seq("file", "bucket"), "left")
       .select(col("file"), col("bucket"),
@@ -1282,20 +1243,19 @@ object Streaming {
       .filter(col("word") =!= 0L)
       .coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(logStage.toString)
-    val logTarget = new org.apache.hadoop.fs.Path(dir, s"dv_log/gen=$next")
+    val logTarget = new Path(dir, s"dv_log/gen=$next")
     if (fs.exists(logTarget) && !fs.delete(logTarget, true))
-      throw new java.io.IOException(s"dvPublish: orphan log $logTarget")
+      throw new IOException(s"dvPublish: orphan log $logTarget")
     renameOrThrow(fs, logStage, logTarget, "dvPublish(log)")
-    val target = new org.apache.hadoop.fs.Path(dir, s"dv/gen=$next")
+    val target = new Path(dir, s"dv/gen=$next")
     renameOrThrow(fs, stage, target, "dvPublish(stage->gen)")
     // retire superseded generations; readers already ignore them
-    val root = new org.apache.hadoop.fs.Path(s"$dir/dv")
+    val root = new Path(s"$dir/dv")
     fs.listStatus(root).foreach { s =>
       val n = s.getPath.getName
       if (n.startsWith("gen=") && n.drop(4).toLong < next &&
           !fs.delete(s.getPath, true))
-        throw new java.io.IOException(
-          s"dvPublish: superseded ${s.getPath} not deleted")
+        throw new IOException(s"dvPublish: superseded ${s.getPath} not deleted")
     }
   }
 
@@ -1326,11 +1286,11 @@ object Streaming {
         else n.drop(4).toLong).max + 1
     val kept = spark.read.format("graft.sources.ZoneMapSource").load(dir)
       .select(col("rid"), col("a"), col("b"))
-    val dataStage = new org.apache.hadoop.fs.Path(dir, ".dv_mat_data")
-    val zoneStage = new org.apache.hadoop.fs.Path(dir, ".dv_mat_zones")
+    val dataStage = new Path(dir, ".dv_mat_data")
+    val zoneStage = new Path(dir, ".dv_mat_zones")
     Seq(dataStage, zoneStage).foreach { p =>
       if (fs.exists(p) && !fs.delete(p, true))
-        throw new java.io.IOException(s"dvMaterialize: stale staging $p")
+        throw new IOException(s"dvMaterialize: stale staging $p")
     }
     kept.write.mode(SaveMode.Overwrite).parquet(dataStage.toString)
     graft.functions.HllSketch.register(spark)
@@ -1345,22 +1305,20 @@ object Streaming {
         col("lb"), col("hb"), col("n"),
         col("skr"), col("ska"), col("skb"))
       .write.mode(SaveMode.Overwrite).parquet(zoneStage.toString)
-    renameOrThrow(fs, dataStage,
-      new org.apache.hadoop.fs.Path(s"$dir/data", s"opt=$gen"),
+    renameOrThrow(fs, dataStage, new Path(s"$dir/data", s"opt=$gen"),
       "dvMaterialize(data)")
-    renameOrThrow(fs, zoneStage,
-      new org.apache.hadoop.fs.Path(s"$dir/zones", s"opt=$gen"),
+    renameOrThrow(fs, zoneStage, new Path(s"$dir/zones", s"opt=$gen"),
       "dvMaterialize(zones)") // visibility flips here, atomically
     zoneRetire(spark, dir, gen)
-    val dvRoot = new org.apache.hadoop.fs.Path(s"$dir/dv")
+    val dvRoot = new Path(s"$dir/dv")
     if (fs.exists(dvRoot) && !fs.delete(dvRoot, true))
-      throw new java.io.IOException("dvMaterialize: dv table not cleared")
+      throw new IOException("dvMaterialize: dv table not cleared")
     // the retraction journal resets with the generations it indexes:
     // a feed consumer straddling a materialize must recompute (the
     // same contract as a compacted-away batch delta)
-    val logRoot = new org.apache.hadoop.fs.Path(s"$dir/dv_log")
+    val logRoot = new Path(s"$dir/dv_log")
     if (fs.exists(logRoot) && !fs.delete(logRoot, true))
-      throw new java.io.IOException("dvMaterialize: dv_log not cleared")
+      throw new IOException("dvMaterialize: dv_log not cleared")
   }
 
   /** CHANGE FEED WITH RETRACTIONS — the composition of the batch
@@ -1409,7 +1367,7 @@ object Streaming {
     // never silently missing retractions
     val logParts = gens.map { g =>
       val p = s"$dir/dv_log/gen=$g"
-      require(fs.exists(new org.apache.hadoop.fs.Path(p)),
+      require(fs.exists(new Path(p)),
         s"zone table $dir: retraction journal gen=$g is gone " +
           s"(vacuumed past the consumer's watermark $fromDvGen) — " +
           "recompute the materialization")
@@ -1475,7 +1433,7 @@ object Streaming {
           } else n.startsWith(".") // stale staging
         if (drop) {
           if (!fs.delete(st.getPath, true))
-            throw new java.io.IOException(s"vacuum: ${st.getPath} stuck")
+            throw new IOException(s"vacuum: ${st.getPath} stuck")
           removed += 1
         } else if (n.startsWith("gen=")) kept += 1
       }
@@ -1501,7 +1459,7 @@ object Streaming {
             g <= horizon && g < visible
           } else n.startsWith(".") // stale staging
         if (drop && !dfs.delete(st.getPath, true))
-          throw new java.io.IOException(s"vacuum: ${st.getPath} stuck")
+          throw new IOException(s"vacuum: ${st.getPath} stuck")
       }
     }
     (removed, kept)
@@ -1715,22 +1673,19 @@ object Streaming {
     * per source; at 100 TB that is exactly the state a quota needs, and
     * the RocksDB store checkpoints it incrementally. */
   class SourceQuotaProcessor(quota: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
+      extends StatefulProcessor[
         String, (String, Long, Long), (String, Long)] {
     @transient private var consumed:
-        org.apache.spark.sql.streaming.ValueState[Long] = _
+        ValueState[Long] = _
 
     override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      consumed = getHandle.getValueState[Long]("consumed",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        outputMode: OutputMode, timeMode: TimeMode): Unit =
+      consumed = getHandle.getValueState[Long]("consumed", Encoders.scalaLong,
+        TTLConfig.NONE)
 
     override def handleInputRows(
         source: String,
-        rows: Iterator[(String, Long, Long)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
+        rows: Iterator[(String, Long, Long)], timerValues: TimerValues)
         : Iterator[(String, Long)] = {
       var c = if (consumed.exists()) consumed.get() else 0L
       // materialize before returning: the state update must not depend
@@ -1749,15 +1704,13 @@ object Streaming {
     * `spark.sql.streaming.stateStore.providerClass=
     * org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`. */
   def quotaAdmit(
-      docs: org.apache.spark.sql.Dataset[(String, Long, Long)],
-      quota: Long): org.apache.spark.sql.Dataset[(String, Long)] = {
-    import org.apache.spark.sql.Encoders
-    implicit val outEnc: org.apache.spark.sql.Encoder[(String, Long)] =
+      docs: Dataset[(String, Long, Long)],
+      quota: Long): Dataset[(String, Long)] = {
+    implicit val outEnc: Encoder[(String, Long)] =
       Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
     docs.groupByKey(_._1)(Encoders.STRING)
-      .transformWithState(new SourceQuotaProcessor(quota),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
+      .transformWithState(new SourceQuotaProcessor(quota), TimeMode.None(),
+        OutputMode.Append())
   }
 
   /** Inactivity-timeout sessionizer on transformWithState EVENT-TIME
@@ -1779,25 +1732,20 @@ object Streaming {
     * leave nothing behind, which is what lets this run forever at
     * 100 TB (the watermark, not a scan, is the garbage collector). */
   class SessionTimeoutProcessor(gapMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
+      extends StatefulProcessor[
         Long, (Long, Long), (Long, Long, Long, Long)] {
     @transient private var sess:
-        org.apache.spark.sql.streaming.ValueState[(Long, Long, Long)] = _
+        ValueState[(Long, Long, Long)] = _
 
     override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
+        outputMode: OutputMode, timeMode: TimeMode): Unit =
       sess = getHandle.getValueState[(Long, Long, Long)]("sess",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong),
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong),
+        TTLConfig.NONE)
 
     override def handleInputRows(
         user: Long,
-        rows: Iterator[(Long, Long)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
+        rows: Iterator[(Long, Long)], timerValues: TimerValues)
         : Iterator[(Long, Long, Long, Long)] = {
       val ts = rows.map(_._2).toArray.sorted
       var (start, last, n) =
@@ -1818,9 +1766,7 @@ object Streaming {
     }
 
     override def handleExpiredTimer(
-        user: Long,
-        timerValues: org.apache.spark.sql.streaming.TimerValues,
-        expired: org.apache.spark.sql.streaming.ExpiredTimerInfo)
+        user: Long, timerValues: TimerValues, expired: ExpiredTimerInfo)
         : Iterator[(Long, Long, Long, Long)] =
       if (sess.exists()) {
         val (start, last, n) = sess.get()
@@ -1839,19 +1785,17 @@ object Streaming {
     * (user_id, session_start_ms, session_end_ms, n_events) — inline for
     * intra-batch gaps, via event-time timer for trailing sessions. */
   def sessionTimeout(events: DataFrame, gapMs: Long)
-      : org.apache.spark.sql.Dataset[(Long, Long, Long, Long)] = {
-    import org.apache.spark.sql.Encoders
-    implicit val inEnc: org.apache.spark.sql.Encoder[(Long, Long)] =
+      : Dataset[(Long, Long, Long, Long)] = {
+    implicit val inEnc: Encoder[(Long, Long)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    implicit val outEnc: org.apache.spark.sql.Encoder[(Long, Long, Long, Long)] =
+    implicit val outEnc: Encoder[(Long, Long, Long, Long)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
         Encoders.scalaLong, Encoders.scalaLong)
     events.select(col("user_id"), unix_millis(col("ts")).as("ts_ms"))
       .as[(Long, Long)]
       .groupByKey(_._1)(Encoders.scalaLong)
       .transformWithState(new SessionTimeoutProcessor(gapMs),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
+        TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** Bounded purchase←click attribution on transformWithState LIST
@@ -1868,24 +1812,19 @@ object Streaming {
     * Clicks older than windowMs prune on every touch, so the list also
     * never holds out-of-window state. */
   class ClickWindowProcessor(windowMs: Long, maxClicks: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
+      extends StatefulProcessor[
         Long, (Long, String, Long, Long), (Long, Long, Long)] {
     @transient private var clicks:
-        org.apache.spark.sql.streaming.ListState[(Long, Long)] = _
+        ListState[(Long, Long)] = _
 
     override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
+        outputMode: OutputMode, timeMode: TimeMode): Unit =
       clicks = getHandle.getListState[(Long, Long)]("clicks",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong),
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
 
     override def handleInputRows(
         user: Long,
-        rows: Iterator[(Long, String, Long, Long)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
+        rows: Iterator[(Long, String, Long, Long)], timerValues: TimerValues)
         : Iterator[(Long, Long, Long)] = {
       var buf: Vector[(Long, Long)] =
         if (clicks.exists()) clicks.get().toVector else Vector.empty
@@ -1915,16 +1854,14 @@ object Streaming {
     * purchase, holding at most maxClicks clicks of state per user.
     * Requires the RocksDB state store provider, like [[quotaAdmit]]. */
   def clickAttribution(
-      events: org.apache.spark.sql.Dataset[(Long, String, Long, Long)],
+      events: Dataset[(Long, String, Long, Long)],
       windowMs: Long, maxClicks: Int)
-      : org.apache.spark.sql.Dataset[(Long, Long, Long)] = {
-    import org.apache.spark.sql.Encoders
-    implicit val outEnc: org.apache.spark.sql.Encoder[(Long, Long, Long)] =
+      : Dataset[(Long, Long, Long)] = {
+    implicit val outEnc: Encoder[(Long, Long, Long)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
     events.groupByKey(_._1)(Encoders.scalaLong)
       .transformWithState(new ClickWindowProcessor(windowMs, maxClicks),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
+        TimeMode.None(), OutputMode.Append())
   }
 
   /** Streaming LAST-OBSERVATION as-of enrichment on transformWithState
@@ -1945,24 +1882,19 @@ object Streaming {
     * processor sorts WITHIN a batch, and cross-batch order is the
     * source's watermark discipline. */
   class AsOfLastProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
+      extends StatefulProcessor[
         Long, (Long, String, Long, Long), (Long, Long, Long)] {
     @transient private var lastClick:
-        org.apache.spark.sql.streaming.ValueState[(Long, Long)] = _
+        ValueState[(Long, Long)] = _
 
     override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
+        outputMode: OutputMode, timeMode: TimeMode): Unit =
       lastClick = getHandle.getValueState[(Long, Long)]("lastClick",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong),
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
 
     override def handleInputRows(
         user: Long,
-        rows: Iterator[(Long, String, Long, Long)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
+        rows: Iterator[(Long, String, Long, Long)], timerValues: TimerValues)
         : Iterator[(Long, Long, Long)] = {
       var last: (Long, Long) = // (ts_us, click_id), null = none yet
         if (lastClick.exists()) lastClick.get() else null
@@ -1988,15 +1920,13 @@ object Streaming {
     * when waves are ts-ordered. O(1) state per user; requires the
     * RocksDB state store provider, like [[quotaAdmit]]. */
   def asofEnrichStream(
-      events: org.apache.spark.sql.Dataset[(Long, String, Long, Long)])
-      : org.apache.spark.sql.Dataset[(Long, Long, Long)] = {
-    import org.apache.spark.sql.Encoders
-    implicit val outEnc: org.apache.spark.sql.Encoder[(Long, Long, Long)] =
+      events: Dataset[(Long, String, Long, Long)])
+      : Dataset[(Long, Long, Long)] = {
+    implicit val outEnc: Encoder[(Long, Long, Long)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
     events.groupByKey(_._1)(Encoders.scalaLong)
-      .transformWithState(new AsOfLastProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
+      .transformWithState(new AsOfLastProcessor, TimeMode.None(),
+        OutputMode.Append())
   }
 
   /** Per-user behavioral profile on transformWithState MAP state — the
@@ -2011,23 +1941,19 @@ object Streaming {
     * count) rows per batch — an incremental changelog a downstream
     * upsert sink applies directly. */
   class ProfileProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
+      extends StatefulProcessor[
         Long, (Long, String), (Long, String, Long)] {
     @transient private var counts:
-        org.apache.spark.sql.streaming.MapState[String, Long] = _
+        MapState[String, Long] = _
 
     override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      counts = getHandle.getMapState[String, Long]("counts",
-        org.apache.spark.sql.Encoders.STRING,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        outputMode: OutputMode, timeMode: TimeMode): Unit =
+      counts = getHandle.getMapState[String, Long]("counts", Encoders.STRING,
+        Encoders.scalaLong, TTLConfig.NONE)
 
     override def handleInputRows(
         user: Long,
-        rows: Iterator[(Long, String)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
+        rows: Iterator[(Long, String)], timerValues: TimerValues)
         : Iterator[(Long, String, Long)] = {
       // pre-aggregate the batch locally, then ONE point read+write per
       // touched key — never an iteration over untouched profile entries
@@ -2046,15 +1972,13 @@ object Streaming {
   /** Streaming per-user event-type profile over (user_id, event_type)
     * rows: emits the updated (user_id, event_type, count) changelog each
     * batch. Requires the RocksDB state store provider. */
-  def profileCounts(events: org.apache.spark.sql.Dataset[(Long, String)])
-      : org.apache.spark.sql.Dataset[(Long, String, Long)] = {
-    import org.apache.spark.sql.Encoders
-    implicit val outEnc: org.apache.spark.sql.Encoder[(Long, String, Long)] =
+  def profileCounts(events: Dataset[(Long, String)])
+      : Dataset[(Long, String, Long)] = {
+    implicit val outEnc: Encoder[(Long, String, Long)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.STRING, Encoders.scalaLong)
     events.groupByKey(_._1)(Encoders.scalaLong)
-      .transformWithState(new ProfileProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
+      .transformWithState(new ProfileProcessor, TimeMode.None(),
+        OutputMode.Append())
   }
 
   /** [[SourceQuotaProcessor]] with INITIAL STATE — the batch→stream
@@ -2065,28 +1989,24 @@ object Streaming {
     * per seeded key, before any input rows). Admission semantics are
     * identical to the unseeded processor; unseeded sources start at 0. */
   class SeededQuotaProcessor(quota: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
+      extends StatefulProcessorWithInitialState[
         String, (String, Long, Long), (String, Long), (String, Long)] {
     @transient private var consumed:
-        org.apache.spark.sql.streaming.ValueState[Long] = _
+        ValueState[Long] = _
 
     override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      consumed = getHandle.getValueState[Long]("consumed",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        outputMode: OutputMode, timeMode: TimeMode): Unit =
+      consumed = getHandle.getValueState[Long]("consumed", Encoders.scalaLong,
+        TTLConfig.NONE)
 
     override def handleInitialState(
         source: String,
-        initial: (String, Long),
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Unit =
+        initial: (String, Long), timerValues: TimerValues): Unit =
       consumed.update(initial._2)
 
     override def handleInputRows(
         source: String,
-        rows: Iterator[(String, Long, Long)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
+        rows: Iterator[(String, Long, Long)], timerValues: TimerValues)
         : Iterator[(String, Long)] = {
       var c = if (consumed.exists()) consumed.get() else 0L
       val admitted = rows.flatMap { case (_, docId, nTokens) =>
@@ -2101,18 +2021,14 @@ object Streaming {
     * table. Same admission rule; the initial state applies before the
     * first batch's rows. */
   def quotaAdmitSeeded(
-      docs: org.apache.spark.sql.Dataset[(String, Long, Long)],
-      quota: Long,
-      initial: org.apache.spark.sql.Dataset[(String, Long)])
-      : org.apache.spark.sql.Dataset[(String, Long)] = {
-    import org.apache.spark.sql.Encoders
-    implicit val outEnc: org.apache.spark.sql.Encoder[(String, Long)] =
+      docs: Dataset[(String, Long, Long)], quota: Long,
+      initial: Dataset[(String, Long)])
+      : Dataset[(String, Long)] = {
+    implicit val outEnc: Encoder[(String, Long)] =
       Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
     docs.groupByKey(_._1)(Encoders.STRING)
-      .transformWithState(new SeededQuotaProcessor(quota),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        initial.groupByKey(_._1)(Encoders.STRING))
+      .transformWithState(new SeededQuotaProcessor(quota), TimeMode.None(),
+        OutputMode.Append(), initial.groupByKey(_._1)(Encoders.STRING))
   }
 
   /** One micro-batch of INCREMENTAL top-k maintenance — the streaming
@@ -2143,8 +2059,7 @@ object Streaming {
     val prev =
       if (prevDir.exists()) s.read.parquet(prevDir.getPath)
       else fresh.limit(0)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
+    val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id").asc)
     prev.unionByName(fresh)
       .dropDuplicates("query_id", "neighbor_id")
@@ -2161,8 +2076,7 @@ object Streaming {
       .filter(f => f.isDirectory && f.getName.startsWith("v="))
       .map(_.getName.stripPrefix("v=").toLong)
     require(versions.nonEmpty, s"no versions under $tableDir")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
+    val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id").asc)
     spark.read.parquet(s"$tableDir/v=${versions.max}")
       .withColumn("rnk", row_number().over(w))
@@ -2193,22 +2107,19 @@ object Streaming {
     * documents, with the watermark bounding how stale a replayed
     * event can be. */
   class FunnelProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
+      extends StatefulProcessor[
         Long, (Long, String, Long), (Long, String, Long)] {
     @transient private var reached:
-        org.apache.spark.sql.streaming.ValueState[Int] = _
+        ValueState[Int] = _
 
     override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      reached = getHandle.getValueState[Int]("reached",
-        org.apache.spark.sql.Encoders.scalaInt,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        outputMode: OutputMode, timeMode: TimeMode): Unit =
+      reached = getHandle.getValueState[Int]("reached", Encoders.scalaInt,
+        TTLConfig.NONE)
 
     override def handleInputRows(
         user: Long,
-        rows: Iterator[(Long, String, Long)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
+        rows: Iterator[(Long, String, Long)], timerValues: TimerValues)
         : Iterator[(Long, String, Long)] = {
       var at = if (reached.exists()) reached.get() else 0
       val out = List.newBuilder[(Long, String, Long)]
@@ -2235,15 +2146,13 @@ object Streaming {
   /** Streaming funnel over (user_id, event_type, ts_ms) rows: emits
     * (user_id, stage, ts_ms) per stage transition. Requires the RocksDB
     * state store provider, like [[quotaAdmit]]. */
-  def funnelAdvance(events: org.apache.spark.sql.Dataset[(Long, String, Long)])
-      : org.apache.spark.sql.Dataset[(Long, String, Long)] = {
-    import org.apache.spark.sql.Encoders
-    implicit val outEnc: org.apache.spark.sql.Encoder[(Long, String, Long)] =
+  def funnelAdvance(events: Dataset[(Long, String, Long)])
+      : Dataset[(Long, String, Long)] = {
+    implicit val outEnc: Encoder[(Long, String, Long)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.STRING, Encoders.scalaLong)
     events.groupByKey(_._1)(Encoders.scalaLong)
-      .transformWithState(new FunnelProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
+      .transformWithState(new FunnelProcessor, TimeMode.None(),
+        OutputMode.Append())
   }
 
   /** Per-user streak state for [[streakAdvance]]: the O(1) record that
@@ -2261,22 +2170,19 @@ object Streaming {
     * revisits of the current day are no-ops. Within a batch days sort
     * and dedup first, so shuffle arrival order is invisible. */
   class StreakProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
+      extends StatefulProcessor[
         Long, (Long, Long), (Long, Long, Long, Long, Long)] {
     @transient private var st:
-        org.apache.spark.sql.streaming.ValueState[StreakState] = _
+        ValueState[StreakState] = _
 
     override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
+        outputMode: OutputMode, timeMode: TimeMode): Unit =
       st = getHandle.getValueState[StreakState]("streak",
-        org.apache.spark.sql.Encoders.product[StreakState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        Encoders.product[StreakState], TTLConfig.NONE)
 
     override def handleInputRows(
         user: Long,
-        rows: Iterator[(Long, Long)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
+        rows: Iterator[(Long, Long)], timerValues: TimerValues)
         : Iterator[(Long, Long, Long, Long, Long)] = {
       var s = if (st.exists()) st.get()
         else StreakState(Long.MinValue, 0L, 0L, 0L, Long.MaxValue, 0L)
@@ -2298,17 +2204,15 @@ object Streaming {
     * live twin of the batch `q_window_islands` query. Emits a
     * changelog row per touched user per batch; counters are monotone,
     * so the latest row per user is the current snapshot. */
-  def streakAdvance(days: org.apache.spark.sql.Dataset[(Long, Long)])
-      : org.apache.spark.sql.Dataset[(Long, Long, Long, Long, Long)] = {
-    import org.apache.spark.sql.Encoders
+  def streakAdvance(days: Dataset[(Long, Long)])
+      : Dataset[(Long, Long, Long, Long, Long)] = {
     implicit val outEnc
-        : org.apache.spark.sql.Encoder[(Long, Long, Long, Long, Long)] =
+        : Encoder[(Long, Long, Long, Long, Long)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
         Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
     days.groupByKey(_._1)(Encoders.scalaLong)
-      .transformWithState(new StreakProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
+      .transformWithState(new StreakProcessor, TimeMode.None(),
+        OutputMode.Append())
   }
 
   /** Per-user automaton state for [[seqMatchAdvance]]: the O(1)-state
@@ -2326,22 +2230,19 @@ object Streaming {
     * batch q_seq_match regexes (BehaviorSpec pins the batch side to the
     * same walk; StreamingSpec pins this side to the batch query). */
   class SeqMatchProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
+      extends StatefulProcessor[
         Long, (Long, Long, Long, String), (Long, Long, Long, Long, Long)] {
     @transient private var st:
-        org.apache.spark.sql.streaming.ValueState[SeqMatchState] = _
+        ValueState[SeqMatchState] = _
 
     override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
+        outputMode: OutputMode, timeMode: TimeMode): Unit =
       st = getHandle.getValueState[SeqMatchState]("seq",
-        org.apache.spark.sql.Encoders.product[SeqMatchState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        Encoders.product[SeqMatchState], TTLConfig.NONE)
 
     override def handleInputRows(
         user: Long,
-        rows: Iterator[(Long, Long, Long, String)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
+        rows: Iterator[(Long, Long, Long, String)], timerValues: TimerValues)
         : Iterator[(Long, Long, Long, Long, Long)] = {
       var s = if (st.exists()) st.get()
         else SeqMatchState(inV = false, 0L, 0L, 0, 0, 0, 0L)
@@ -2379,17 +2280,15 @@ object Streaming {
     * plan can claim. Emits (user_id, n_events, conversions,
     * frustration, max_click_run) per touched user per batch. */
   def seqMatchAdvance(
-      events: org.apache.spark.sql.Dataset[(Long, Long, Long, String)])
-      : org.apache.spark.sql.Dataset[(Long, Long, Long, Long, Long)] = {
-    import org.apache.spark.sql.Encoders
+      events: Dataset[(Long, Long, Long, String)])
+      : Dataset[(Long, Long, Long, Long, Long)] = {
     implicit val outEnc:
-        org.apache.spark.sql.Encoder[(Long, Long, Long, Long, Long)] =
+        Encoder[(Long, Long, Long, Long, Long)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
         Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
     events.groupByKey(_._1)(Encoders.scalaLong)
-      .transformWithState(new SeqMatchProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
+      .transformWithState(new SeqMatchProcessor, TimeMode.None(),
+        OutputMode.Append())
   }
 
   /** Streaming LAST-TOUCH attribution — the live twin of the batch
@@ -2405,22 +2304,20 @@ object Streaming {
     * StreamingSpec proves bit-equality with q_attribution's aggregate
     * over the full corpus fed in ts-ordered waves. */
   class AttributionProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
+      extends StatefulProcessor[
         Long, (Long, String, Long, Long, Long), (Long, String, Long)] {
     @transient private var channel:
-        org.apache.spark.sql.streaming.ValueState[String] = _
+        ValueState[String] = _
 
     override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      channel = getHandle.getValueState[String]("channel",
-        org.apache.spark.sql.Encoders.STRING,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        outputMode: OutputMode, timeMode: TimeMode): Unit =
+      channel = getHandle.getValueState[String]("channel", Encoders.STRING,
+        TTLConfig.NONE)
 
     override def handleInputRows(
         user: Long,
         rows: Iterator[(Long, String, Long, Long, Long)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
+        timerValues: TimerValues)
         : Iterator[(Long, String, Long)] = {
       val out = List.newBuilder[(Long, String, Long)]
       // (ts, event_id) order — the batch window's exact tie-break
@@ -2439,15 +2336,13 @@ object Streaming {
     * value_cents) rows: emits (user_id, channel, value_cents) per
     * purchase. Requires the RocksDB state store provider. */
   def attributeLastTouch(
-      events: org.apache.spark.sql.Dataset[(Long, String, Long, Long, Long)])
-      : org.apache.spark.sql.Dataset[(Long, String, Long)] = {
-    import org.apache.spark.sql.Encoders
-    implicit val outEnc: org.apache.spark.sql.Encoder[(Long, String, Long)] =
+      events: Dataset[(Long, String, Long, Long, Long)])
+      : Dataset[(Long, String, Long)] = {
+    implicit val outEnc: Encoder[(Long, String, Long)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.STRING, Encoders.scalaLong)
     events.groupByKey(_._1)(Encoders.scalaLong)
-      .transformWithState(new AttributionProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
+      .transformWithState(new AttributionProcessor, TimeMode.None(),
+        OutputMode.Append())
   }
 
   /** Purchase←click attribution: each purchase joins the same user's

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
+import graft.operators.Convert
 import graft.streaming.Streaming
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -129,6 +130,145 @@ class StreamingSpec extends SparkSpec {
         assert(df.select("name").collect()(0).getString(0) == s"N$i")
       }
     } finally q.stop()
+  }
+
+  /** A static micro-batch of notification bodies (the `value` column the
+    * notification stream hands its batch body), one body naming `keys`
+    * URL-encoded the way S3 event notifications carry them. */
+  private def notificationBatch(keys: String*) = {
+    import spark.implicits._
+    val enc = keys.map(k => java.net.URLEncoder.encode(k, "UTF-8"))
+    Seq(enc.map(k => s"""{"s3":{"object":{"key":"$k","size":1}}}""")
+      .mkString("""{"Records":[""", ",", "]}")).toDF("value")
+  }
+
+  private def writeObject(root: String, key: String, text: String): Unit = {
+    val p = Paths.get(root, key)
+    Files.createDirectories(p.getParent)
+    Files.writeString(p, text)
+  }
+
+  private def person(id: String, age: Any = 30): String =
+    s"""{ "ID": "$id", "name": "N$id", "nationality": "US", "age": $age }"""
+
+  /** Every `<key>.parquet` directory under `out`, as its key. */
+  private def outputKeys(out: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get(out)
+    Files.walk(root).iterator().asScala
+      .filter(p => Files.isDirectory(p) && p.toString.endsWith(".parquet"))
+      .map(p => root.relativize(p).toString.stripSuffix(".parquet")).toSet
+  }
+
+  private def rowsOf(out: String, key: String): Seq[String] =
+    spark.read.parquet(s"$out/$key.parquet").collect().map(_.toString).toSeq.sorted
+
+  test("notification batch maps every key to exactly its own object's rows") {
+    val objects = tmpDir("map_objects")
+    val out = tmpDir("map_out")
+    val keys = Seq("plain.json", "with space.json", "a+b.json", "100%.json",
+      "Élodie.json", "nested/dir a/deep.json")
+    keys.zipWithIndex.foreach { case (k, i) => writeObject(objects, k, person(s"id$i")) }
+    // the same key twice in one batch (an at-least-once redelivery), and
+    // a second spelling of one key's path
+    Streaming.convertNotificationBatch(notificationBatch(
+      keys :+ "plain.json" :+ "nested//dir a/deep.json": _*), 0L, objects, out)
+    assert(outputKeys(out) == keys.toSet)
+    keys.zipWithIndex.foreach { case (k, i) =>
+      assert(spark.read.parquet(s"$out/$k.parquet").collect()
+        .map(_.getString(0)).toSeq == Seq(s"id$i"), k)
+    }
+  }
+
+  test("notification batch gives zero-row outputs for all-corrupt, empty and truncated objects") {
+    import org.apache.spark.sql.types._
+    val objects = tmpDir("empty_objects")
+    val out = tmpDir("empty_out")
+    writeObject(objects, "good.json", person("g"))
+    writeObject(objects, "corrupt.json", person("c", "\"unknown\""))
+    writeObject(objects, "zero.json", "")
+    writeObject(objects, "truncated.json", person("t").take(20))
+    writeObject(objects, "good2.json", person("g2"))
+    val keys = Seq("good.json", "corrupt.json", "zero.json", "truncated.json", "good2.json")
+    Streaming.convertNotificationBatch(notificationBatch(keys: _*), 0L, objects, out)
+    assert(outputKeys(out) == keys.toSet)
+    val schema = StructType(Seq(StructField("ID", StringType),
+      StructField("name", StringType), StructField("nationality", StringType),
+      StructField("age", ByteType)))
+    for (k <- Seq("corrupt.json", "zero.json", "truncated.json")) {
+      val df = spark.read.parquet(s"$out/$k.parquet")
+      assert(df.schema == schema, k)
+      assert(df.count() == 0, k)
+    }
+    assert(rowsOf(out, "good.json") == Seq("[g,Ng,US,30]"))
+    assert(rowsOf(out, "good2.json") == Seq("[g2,Ng2,US,30]"))
+    // a batch whose only object has no rows at all still completes
+    writeObject(objects, "zero2.json", "")
+    Streaming.convertNotificationBatch(notificationBatch("zero2.json"), 1L, objects, out)
+    assert(spark.read.parquet(s"$out/zero2.json.parquet").schema == schema)
+  }
+
+  test("notification batch counts rows in, corrupt rows dropped and ages nulled in its one pass") {
+    val objects = tmpDir("count_objects")
+    val out = tmpDir("count_out")
+    writeObject(objects, "one.json", person("1"))
+    // a multi-line array object: two rows, one age out of int8 range
+    writeObject(objects, "two.json", s"[${person("2")}, ${person("3", 300)}]")
+    writeObject(objects, "bad.json", person("4", "\"unknown\""))
+    writeObject(objects, "cut.json", person("5").take(10))
+    val s = Streaming.convertNotificationBatch(
+      notificationBatch("one.json", "two.json", "bad.json", "cut.json"), 3L, objects, out)
+    assert(s == Convert.ConvertStats(rowsIn = 5, corruptDropped = 2, agesNulled = 1))
+    assert(rowsOf(out, "two.json") == Seq("[2,N2,US,30]", "[3,N3,US,null]"))
+  }
+
+  test("notification batch with a missing object fails naming the key; the replay converts it") {
+    val notify = tmpDir("missing_notify")
+    val objects = tmpDir("missing_objects")
+    val out = tmpDir("missing_out")
+    val ckpt = tmpDir("missing_ckpt")
+    writeObject(objects, "here.json", person("h"))
+    val e = intercept[RuntimeException](Streaming.convertNotificationBatch(
+      notificationBatch("here.json", "gone.json"), 0L, objects, out))
+    assert(e.getMessage.contains("gone.json") && !e.getMessage.contains("here.json"))
+    // the keys that exist still convert
+    assert(rowsOf(out, "here.json") == Seq("[h,Nh,US,30]"))
+    // in the stream, the failed batch does not commit; a restart re-runs it
+    Files.writeString(Paths.get(notify, "n.json"),
+      notificationBatch("here.json", "gone.json").collect()(0).getString(0))
+    val q = Streaming.notificationDrivenStream(spark, notify, objects, out, ckpt)
+    intercept[Exception](q.processAllAvailable())
+    q.stop()
+    assert(!Files.exists(Paths.get(ckpt, "commits", "0")))
+    writeObject(objects, "gone.json", person("g"))
+    val q2 = Streaming.notificationDrivenStream(spark, notify, objects, out, ckpt)
+    try q2.processAllAvailable() finally q2.stop()
+    assert(Files.exists(Paths.get(ckpt, "commits", "0")))
+    assert(rowsOf(out, "gone.json") == Seq("[g,Ng,US,30]"))
+    assert(outputKeys(out) == Set("here.json", "gone.json"))
+  }
+
+  test("notification batch replays idempotently and clears a killed attempt's staging") {
+    val objects = tmpDir("replay_objects")
+    val out = tmpDir("replay_out")
+    val keys = Seq("a.json", "b.json", "sub/c.json", "bad.json")
+    keys.init.zipWithIndex.foreach { case (k, i) => writeObject(objects, k, person(s"r$i", 20 + i)) }
+    writeObject(objects, "bad.json", "{ not json")
+    // what a batch killed mid-write leaves: a partial staging directory
+    val stale = Paths.get(out, "_staging", "7", "key_index=0")
+    Files.createDirectories(stale)
+    Files.writeString(stale.resolve("part-stale.parquet"), "junk")
+    val batch = notificationBatch(keys: _*)
+    Streaming.convertNotificationBatch(batch, 7L, objects, out)
+    val first = keys.map(rowsOf(out, _))
+    assert(!Files.exists(Paths.get(out, "_staging", "7")))
+    Streaming.convertNotificationBatch(batch, 7L, objects, out)
+    assert(keys.map(rowsOf(out, _)) == first)
+    assert(first == Seq(Seq("[r0,Nr0,US,20]"), Seq("[r1,Nr1,US,21]"),
+      Seq("[r2,Nr2,US,22]"), Nil))
+    assert(!Files.exists(Paths.get(out, "_staging", "7")))
+    // no output exists for a key no notification named
+    assert(outputKeys(out) == keys.toSet)
   }
 
   test("foreachBatch keyed upsert: inserts, updates, and idempotent replay") {
