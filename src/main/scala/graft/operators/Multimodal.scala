@@ -202,6 +202,59 @@ final case class DecodedOgg(
   */
 object Multimodal {
 
+  // ------------------------------------------------------- byte order
+  // The readers and writers every container walk and encoder shares.
+  // Readers are unchecked: each format bounds its reads against its own
+  // declared sizes (the JPEG path reads through the checked [[jU8]]).
+  private def u8(b: Array[Byte], o: Int): Int = b(o) & 0xff
+  private def be16(b: Array[Byte], o: Int): Int = u8(b, o) << 8 | u8(b, o + 1)
+  private def be24(b: Array[Byte], o: Int): Int = u8(b, o) << 16 | be16(b, o + 1)
+  private def be32(b: Array[Byte], o: Int): Int = be16(b, o) << 16 | be16(b, o + 2)
+  private def le16(b: Array[Byte], o: Int): Int = u8(b, o) | u8(b, o + 1) << 8
+  private def le32(b: Array[Byte], o: Int): Int = le16(b, o) | le16(b, o + 2) << 16
+  /** Unsigned 32-bit reads, for size fields past Int.MaxValue. */
+  private def be32u(b: Array[Byte], o: Int): Long = be32(b, o) & 0xffffffffL
+  private def le32u(b: Array[Byte], o: Int): Long = le32(b, o) & 0xffffffffL
+
+  private def putBe16(out: java.io.OutputStream, v: Int): Unit = {
+    out.write(v >> 8); out.write(v)
+  }
+  private def putBe24(out: java.io.OutputStream, v: Int): Unit = {
+    out.write(v >> 16); putBe16(out, v)
+  }
+  private def putBe32(out: java.io.OutputStream, v: Int): Unit = {
+    putBe16(out, v >> 16); putBe16(out, v)
+  }
+  private def putLe16(out: java.io.OutputStream, v: Int): Unit = {
+    out.write(v); out.write(v >> 8)
+  }
+  private def putLe32(out: java.io.OutputStream, v: Int): Unit = {
+    putLe16(out, v); putLe16(out, v >> 16)
+  }
+  /** Consecutive big- / little-endian 32-bit words. */
+  private def beWords(vs: Int*): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    vs.foreach(putBe32(out, _))
+    out.toByteArray
+  }
+  private def leWords(vs: Int*): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    vs.foreach(putLe32(out, _))
+    out.toByteArray
+  }
+  /** RIFF chunk: fourcc, little-endian size, payload, even padding. */
+  private def riffChunk(id: String, payload: Array[Byte]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    out.write(id.getBytes("US-ASCII")); putLe32(out, payload.length)
+    out.write(payload)
+    if ((payload.length & 1) == 1) out.write(0)
+    out.toByteArray
+  }
+  /** RIFF container (`tag` RIFF or LIST): tag, size, form type, body. */
+  private def riffList(tag: String, kind: String, body: Array[Byte]): Array[Byte] =
+    tag.getBytes("US-ASCII") ++ leWords(body.length + 4) ++
+      kind.getBytes("US-ASCII") ++ body
+
   /** Minimal real PPM (P6) encoder — fixture generator for the decode
     * path. Emits a comment line so the decoder's header handling is
     * exercised by every fixture, not just hand-built edge cases. */
@@ -228,29 +281,28 @@ object Multimodal {
     val rowBytes = ((w * 3 + 3) / 4) * 4
     val dataOff = 54
     val size = dataOff + rowBytes * h
-    val b = new Array[Byte](size)
-    def le32(o: Int, v: Int): Unit = {
-      b(o) = (v & 0xff).toByte; b(o + 1) = ((v >> 8) & 0xff).toByte
-      b(o + 2) = ((v >> 16) & 0xff).toByte; b(o + 3) = ((v >> 24) & 0xff).toByte
-    }
-    b(0) = 'B'; b(1) = 'M'
-    le32(2, size); le32(10, dataOff)
-    le32(14, 40) // BITMAPINFOHEADER
-    le32(18, w); le32(22, if (topDown) -h else h)
-    b(26) = 1 // planes
-    b(28) = 24 // bpp
-    le32(30, 0) // BI_RGB (uncompressed)
+    val out = new java.io.ByteArrayOutputStream(size)
+    out.write('B'); out.write('M')
+    putLe32(out, size); putLe32(out, 0); putLe32(out, dataOff)
+    putLe32(out, 40) // BITMAPINFOHEADER
+    putLe32(out, w); putLe32(out, if (topDown) -h else h)
+    putLe16(out, 1) // planes
+    putLe16(out, 24) // bpp
+    putLe32(out, 0) // BI_RGB (uncompressed)
+    out.write(new Array[Byte](dataOff - 34)) // sizes, resolution, palette: 0
+    val row = new Array[Byte](rowBytes) // zero tail = the row padding
     var r = 0
     while (r < h) {
       val lr = if (topDown) r else h - 1 - r
       var c = 0
       while (c < w * 3) {
-        b(dataOff + r * rowBytes + c) = (pix(lr * w * 3 + c) & 0xff).toByte
+        row(c) = (pix(lr * w * 3 + c) & 0xff).toByte
         c += 1
       }
+      out.write(row)
       r += 1
     }
-    b
+    out.toByteArray
   }
 
   /** Real PPM (P6) parse: header (whitespace + `#` comments per the
@@ -287,9 +339,6 @@ object Multimodal {
     (w, h, maxv, s)
   }
 
-  /** Real BMP parse (BITMAPINFOHEADER, 24bpp uncompressed): little-endian
-    * header fields → dimensions and pixel-array offset, then an exact sum
-    * over the pixel bytes, skipping each row's 4-byte-alignment padding. */
   /** Real BMP parse: little-endian BITMAPINFOHEADER (SIGNED height —
     * negative means top-down per the spec), 24bpp BI_RGB, padded rows.
     * Returns (w, h, topDown, pix_sum, wsum) with BOTH checksums over
@@ -298,14 +347,11 @@ object Multimodal {
     * decoder that ignores the height sign or walks rows in file order. */
   def decodeBmp(b: Array[Byte]): (Int, Int, Boolean, Long, Long) = {
     require(b.length >= 54 && b(0) == 'B' && b(1) == 'M', "not a BMP")
-    def le32(o: Int): Int = (b(o) & 0xff) | (b(o + 1) & 0xff) << 8 |
-      (b(o + 2) & 0xff) << 16 | (b(o + 3) & 0xff) << 24
-    val dataOff = le32(10)
-    val w = le32(18); val rawH = le32(22)
+    val dataOff = le32(b, 10)
+    val w = le32(b, 18); val rawH = le32(b, 22)
     val topDown = rawH < 0
     val h = math.abs(rawH)
-    val bpp = (b(28) & 0xff) | (b(29) & 0xff) << 8
-    require(bpp == 24 && le32(30) == 0, "only 24bpp uncompressed BMP")
+    require(le16(b, 28) == 24 && le32(b, 30) == 0, "only 24bpp uncompressed BMP")
     val rowBytes = ((w * 3 + 3) / 4) * 4
     require(dataOff + rowBytes * h <= b.length, "truncated BMP pixel data")
     var s = 0L
@@ -672,17 +718,17 @@ object Multimodal {
     defl.end()
     val z = zbuf.toByteArray
     val out = new java.io.ByteArrayOutputStream()
-    def be32(v: Int): Array[Byte] = Array(
-      (v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
     def chunk(tag: String, data: Array[Byte]): Unit = {
       val t = tag.getBytes("US-ASCII")
-      out.write(be32(data.length)); out.write(t); out.write(data)
+      putBe32(out, data.length); out.write(t); out.write(data)
       val crc = new CRC32(); crc.update(t); crc.update(data)
-      out.write(be32(crc.getValue.toInt))
+      putBe32(out, crc.getValue.toInt)
     }
     out.write(PngSig)
-    chunk("IHDR", be32(w) ++ be32(h) ++
-      Array[Byte](8, 2, 0, 0, if (interlace) 1 else 0))
+    val ihdr = new java.io.ByteArrayOutputStream()
+    putBe32(ihdr, w); putBe32(ihdr, h)
+    ihdr.write(Array[Byte](8, 2, 0, 0, if (interlace) 1 else 0))
+    chunk("IHDR", ihdr.toByteArray)
     var off = 0
     while (off < z.length) { // stream IDAT in small chunks
       val n = math.min(64, z.length - off)
@@ -719,8 +765,6 @@ object Multimodal {
     import java.util.zip.{CRC32, Inflater}
     require(b.length >= 8 && PngSig.indices.forall(i => b(i) == PngSig(i)),
       "not a PNG")
-    def be32(o: Int): Int = (b(o) & 0xff) << 24 | (b(o + 1) & 0xff) << 16 |
-      (b(o + 2) & 0xff) << 8 | (b(o + 3) & 0xff)
     var o = 8
     var w = 0; var h = 0
     var interlaced = false
@@ -728,17 +772,17 @@ object Multimodal {
     var sawIhdr = false; var sawEnd = false
     while (!sawEnd) {
       require(o + 8 <= b.length, "truncated PNG chunk header")
-      val len = be32(o)
+      val len = be32(b, o)
       val tag = new String(b, o + 4, 4, "US-ASCII")
       // length is attacker-controlled: bound-check in Long before indexing
       require(len >= 0 && o + 12L + len <= b.length,
         s"truncated or malformed $tag chunk (len=$len)")
       val crc = new CRC32(); crc.update(b, o + 4, 4 + len)
-      require(crc.getValue.toInt == be32(o + 8 + len), s"$tag CRC mismatch")
+      require(crc.getValue.toInt == be32(b, o + 8 + len), s"$tag CRC mismatch")
       tag match {
         case "IHDR" =>
           require(len == 13, "malformed IHDR")
-          w = be32(o + 8); h = be32(o + 12)
+          w = be32(b, o + 8); h = be32(b, o + 12)
           require(w > 0 && h > 0, s"bad dimensions ${w}x$h")
           require(b(o + 16) == 8 && b(o + 17) == 2,
             "only 8-bit truecolor PNG")
@@ -808,108 +852,18 @@ object Multimodal {
     (w, h, interlaced, raw)
   }
 
-  /** Structurally-valid JPEG shell encoder — fixture generator for the
-    * header-sniff path. Emits the real marker sequence (SOI, APP0/JFIF,
-    * a COM the sniffer must skip, DQT, SOF0 or SOF2, DHT, SOS +
-    * byte-stuffed entropy data, EOI) with true dimensions in the SOF.
-    * The entropy payload is deterministic filler (not a decodable
-    * image — that needs a codec library); every marker/length field is
-    * spec-correct, which is exactly what a dimension sniffer exercises. */
-  def encodeJpegShell(w: Int, h: Int, progressive: Boolean,
-      entropy: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def b(v: Int): Unit = out.write(v & 0xff)
-    def be16(v: Int): Unit = { b(v >> 8); b(v) }
-    def seg(marker: Int, payload: Array[Byte]): Unit = {
-      b(0xff); b(marker); be16(payload.length + 2); out.write(payload)
-    }
-    b(0xff); b(0xd8) // SOI
-    seg(0xe0, "JFIF ".getBytes("US-ASCII") ++
-      Array[Byte](1, 1, 0, 0, 1, 0, 1, 0, 0))
-    seg(0xfe, "graft fixture".getBytes("US-ASCII")) // COM: must be skipped
-    seg(0xdb, Array.tabulate[Byte](65)(i => if (i == 0) 0 else 16)) // DQT
-    val sof = new java.io.ByteArrayOutputStream()
-    sof.write(8) // precision
-    sof.write(h >> 8); sof.write(h & 0xff)
-    sof.write(w >> 8); sof.write(w & 0xff)
-    sof.write(3) // components
-    for (c <- 1 to 3) { sof.write(c); sof.write(0x11); sof.write(0) }
-    seg(if (progressive) 0xc2 else 0xc0, sof.toByteArray)
-    seg(0xc4, Array.tabulate[Byte](17 + 1)(i => if (i == 0) 0 else 1)) // DHT
-    val sos = new java.io.ByteArrayOutputStream()
-    sos.write(3)
-    for (c <- 1 to 3) { sos.write(c); sos.write(0) }
-    sos.write(0); sos.write(63); sos.write(0)
-    seg(0xda, sos.toByteArray)
-    // entropy-coded filler, 0xFF byte-stuffed per the spec (FF 00)
-    entropy.foreach { v =>
-      b(v); if ((v & 0xff) == 0xff) b(0x00)
-    }
-    b(0xff); b(0xd9) // EOI
-    out.toByteArray
-  }
-
-  /** Real JPEG header sniff (ITU T.81 §B): marker walk — variable-length
-    * segments skipped by their declared big-endian size, fill bytes and
-    * standalone markers handled, SOS entropy data scanned with
-    * byte-stuffing (FF 00) and restart markers (FF D0–D7) honored —
-    * until a SOF marker yields (width, height, progressive?, n_comp).
-    * Throws on non-JPEG, truncated segments, or a missing SOF. */
-  def decodeJpegDims(b: Array[Byte]): (Int, Int, Boolean, Int) = {
-    require(b.length >= 4 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8,
-      "not a JPEG")
-    var i = 2
-    def u8(o: Int): Int = b(o) & 0xff
-    def be16(o: Int): Int = u8(o) << 8 | u8(o + 1)
-    while (i + 1 < b.length) {
-      // fill bytes: any number of FFs may pad before a marker
-      while (i < b.length && u8(i) == 0xff && i + 1 < b.length
-        && u8(i + 1) == 0xff) i += 1
-      require(i + 1 < b.length && u8(i) == 0xff, "marker expected")
-      val m = u8(i + 1)
-      i += 2
-      m match {
-        case 0xd9 => // EOI without SOF
-          throw new IllegalArgumentException("no SOF marker before EOI")
-        case _ if m == 0x01 || (m >= 0xd0 && m <= 0xd7) =>
-        // standalone markers: no length field
-        case 0xda => // SOS: scan entropy data for the next true marker
-          require(i + 2 <= b.length, "truncated SOS header")
-          i += be16(i)
-          var done = false
-          while (!done) {
-            require(i + 1 < b.length, "truncated entropy data")
-            if (u8(i) == 0xff && u8(i + 1) != 0x00
-              && !(u8(i + 1) >= 0xd0 && u8(i + 1) <= 0xd7)) done = true
-            else i += 1
-          }
-        case sof if (sof >= 0xc0 && sof <= 0xcf)
-            && sof != 0xc4 && sof != 0xc8 && sof != 0xcc =>
-          require(i + 2 <= b.length && i + be16(i) <= b.length,
-            "truncated SOF")
-          val h = be16(i + 3); val w = be16(i + 5)
-          val nc = u8(i + 7)
-          require(w > 0 && h > 0 && nc > 0, s"bad SOF ${w}x$h/$nc")
-          return (w, h, sof == 0xc2, nc)
-        case _ => // variable-length segment: skip by declared size
-          require(i + 2 <= b.length, s"truncated marker 0x${m.toHexString}")
-          val len = be16(i)
-          require(len >= 2 && i + len <= b.length,
-            s"truncated segment 0x${m.toHexString} (len=$len)")
-          i += len
-      }
-    }
-    throw new IllegalArgumentException("no SOF marker found")
-  }
-
   // ------------------------------------------------------------- JPEG
-  // Baseline sequential JPEG CODEC (ITU T.81) in pure JVM — closes the
-  // last image-family decodeStub route the sandbox permits: DQT/DHT/
-  // SOF0/DRI/SOS parse, canonical Huffman (Annex C), byte-stuffed
-  // entropy decode with restart markers, dequantize, inverse zigzag,
-  // IDCT (A.3.3), level shift, clamp, partial-MCU crop. Progressive
-  // (SOF2) and subsampled streams stay rejected — the decoder's scope
-  // is the baseline 8-bit 1×1-sampling profile, stated loudly below.
+  // Pure-JVM JPEG codec (ITU T.81): the header sniff [[decodeJpegDims]],
+  // the sequential (SOF0/SOF1, [[decodeJpegBaseline]]), progressive
+  // (SOF2, [[decodeJpegProgressive]]) and lossless (SOF3,
+  // [[decodeJpegLossless]]) decoders, and a fixture encoder for each.
+  // One bitstream core serves all of them: [[JpegWalk]] (marker walk,
+  // DQT/DHT/DRI parse, SOFn routing), [[JBitR]] (stuffed entropy
+  // reader, Huffman symbols, EXTEND, RSTn resync), [[jReconstruct]]
+  // (the DCT back half) and [[JWriter]] (the encoders' segments and
+  // entropy data). Scope: 8-bit precision, luma sampling 1-2 per axis
+  // with 1×1 chroma (4:4:4, 4:2:2, 4:4:0, 4:2:0, grayscale); the
+  // differential and arithmetic-coded frame types are rejected by name.
   //
   // Oracle-exactness trick: the q_multimodal_jpeg_decode fixture uses
   // PER-BLOCK-CONSTANT images with Q(0,0) = 8. A constant block c has
@@ -923,6 +877,15 @@ object Multimodal {
   // The AC path (runs, ZRL, EOB mid-block), restart resync, and damage
   // modes are MultimodalSpec's job — AC reconstruction is irrational
   // (cos π/16) and must not cross the engine boundary.
+
+  /** Bounds-checked JPEG reads: a truncation anywhere in a stream
+    * surfaces as this require, never an index exception. */
+  private def jU8(b: Array[Byte], o: Int): Int = {
+    require(o >= 0 && o < b.length, s"truncated JPEG at $o")
+    b(o) & 0xff
+  }
+  private def jBe16(b: Array[Byte], o: Int): Int =
+    jU8(b, o) << 8 | jU8(b, o + 1)
 
   /** Zigzag index k → natural (row-major) position (T.81 Figure 5). */
   private val jZigzag: Array[Int] = Array(
@@ -938,15 +901,40 @@ object Multimodal {
   private[graft] val jQChroma: Array[Int] =
     Array.tabulate(64)(k => if (k == 0) 8 else 24)
 
-  /** T.81 Annex K Huffman table specs: (bits per code length 1..16,
-    * symbol values in code order). */
-  private val jDcLumaSpec = (
+  /** A canonical Huffman table (Annex C: within a code length codes
+    * count up; stepping to the next length shifts left once), built
+    * from its DHT form — code counts per length 1..16 and the symbols
+    * in code order. Decoders read MINCODE / MAXCODE / VALPTR by code
+    * length (F.2.2.3; MAXCODE = −1 where a length has no codes);
+    * encoders read `code` / `len` by symbol (len 0: no such symbol). */
+  private final class JHuff(val bits: Array[Int], val vals: Array[Int]) {
+    val minCode = new Array[Int](17)
+    val maxCode = Array.fill(17)(-1)
+    val valPtr = new Array[Int](17)
+    val code = new Array[Int](256); val len = new Array[Int](256)
+    locally {
+      var c = 0; var k = 0
+      for (l <- 1 to 16) {
+        val n = bits(l - 1)
+        if (n > 0) { valPtr(l) = k; minCode(l) = c; maxCode(l) = c + n - 1 }
+        var i = 0
+        while (i < n) {
+          code(vals(k)) = c; len(vals(k)) = l
+          c += 1; k += 1; i += 1
+        }
+        c <<= 1
+      }
+    }
+  }
+
+  /** T.81 Annex K Huffman tables, the fixture encoders' DHTs. */
+  private val jDcLuma = new JHuff(
     Array(0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0),
     (0 to 11).toArray)
-  private val jDcChromaSpec = (
+  private val jDcChroma = new JHuff(
     Array(0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0),
     (0 to 11).toArray)
-  private val jAcLumaSpec = (
+  private val jAcLuma = new JHuff(
     Array(0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7d),
     Array(
       0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31, 0x41,
@@ -964,7 +952,7 @@ object Multimodal {
       0xca, 0xd2, 0xd3, 0xd4, 0xd5, 0xd6, 0xd7, 0xd8, 0xd9, 0xda, 0xe1,
       0xe2, 0xe3, 0xe4, 0xe5, 0xe6, 0xe7, 0xe8, 0xe9, 0xea, 0xf1, 0xf2,
       0xf3, 0xf4, 0xf5, 0xf6, 0xf7, 0xf8, 0xf9, 0xfa))
-  private val jAcChromaSpec = (
+  private val jAcChroma = new JHuff(
     Array(0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77),
     Array(
       0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21, 0x31, 0x06, 0x12,
@@ -983,10 +971,7 @@ object Multimodal {
       0xda, 0xe2, 0xe3, 0xe4, 0xe5, 0xe6, 0xe7, 0xe8, 0xe9, 0xea, 0xf2,
       0xf3, 0xf4, 0xf5, 0xf6, 0xf7, 0xf8, 0xf9, 0xfa))
 
-  /** Canonical Huffman codes per Annex C: within a length codes count
-    * up; stepping to the next length left-shifts once. Returns
-    * value → (code, length) for the encoder. */
-  /** AC Huffman spec for the PROGRESSIVE encoder: the Annex K tables
+  /** AC Huffman table for the PROGRESSIVE encoder: the Annex K tables
     * carry only EOB0 (0x00) + ZRL (0xf0) in the (r<<4)|0 family, but
     * progressive EOB-run coding needs EOBn symbols 0x10..0xE0 — real
     * encoders ship custom tables in the DHT, so this one does too:
@@ -995,48 +980,328 @@ object Multimodal {
     * the all-ones padding code point stays unused (codes 0..175 of
     * 511). The decoder is table-driven off the DHT segment, so it
     * needs no knowledge of this table. */
-  private val jAcProgSpec: (Array[Int], Array[Int]) = (
+  private val jAcProg = new JHuff(
     Array(0, 0, 0, 0, 0, 0, 0, 0, 176, 0, 0, 0, 0, 0, 0, 0),
     (0 to 255).filter(sym => (sym & 15) <= 10).toArray)
 
-  private def jHuffCodes(spec: (Array[Int], Array[Int]))
-      : Map[Int, (Int, Int)] = {
-    val (bits, vals) = spec
-    val m = scala.collection.mutable.Map.empty[Int, (Int, Int)]
-    var code = 0; var k = 0
-    for (len <- 1 to 16) {
-      var i = 0
-      while (i < bits(len - 1)) {
-        m(vals(k)) = (code, len); code += 1; k += 1; i += 1
-      }
-      code <<= 1
-    }
-    m.toMap
+  /** A DCT frame's components (sampling H<<4|V and quant table each)
+    * and the block geometry every DCT path derives from them: the MCU
+    * grid; each component's padded block grid (the interleaved scans'
+    * data units, A.2.3), its A.1.1-cropped sample dims
+    * (ceil(dim·sampling/max)), and its own ceil block grid (the data
+    * units of a single-component scan, A.2.2). */
+  private final class JFrame(val w: Int, val h: Int,
+      val samp: Array[Int], val tq: Array[Int]) {
+    val nComp = samp.length
+    val sH = samp.map(_ >> 4); val sV = samp.map(_ & 0x0f)
+    val hmax = sH.max; val vmax = sV.max
+    val mcusX = (w + 8 * hmax - 1) / (8 * hmax)
+    val mcusY = (h + 8 * vmax - 1) / (8 * vmax)
+    val padW = Array.tabulate(nComp)(c => mcusX * sH(c))
+    val padH = Array.tabulate(nComp)(c => mcusY * sV(c))
+    val cw = Array.tabulate(nComp)(c => (w * sH(c) + hmax - 1) / hmax)
+    val ch = Array.tabulate(nComp)(c => (h * sV(c) + vmax - 1) / vmax)
+    val bW = cw.map(n => (n + 7) / 8); val bH = ch.map(n => (n + 7) / 8)
+    /** Quantized coefficients per component: padded grid × 64, zigzag. */
+    def newCoefs(): Array[Array[Int]] =
+      Array.tabulate(nComp)(c => new Array[Int](padW(c) * padH(c) * 64))
   }
 
-  /** Decoder tables per F.2.2.3: MINCODE/MAXCODE/VALPTR indexed by code
-    * length (MAXCODE = −1 where a length has no codes). */
-  private final class JHuffDec(bits: Array[Int], val vals: Array[Int]) {
-    val minCode = new Array[Int](17)
-    val maxCode = Array.fill(17)(-1)
-    val valPtr = new Array[Int](17)
-    locally {
-      var code = 0; var k = 0
-      for (len <- 1 to 16) {
-        if (bits(len - 1) > 0) {
-          valPtr(len) = k
-          minCode(len) = code
-          code += bits(len - 1); k += bits(len - 1)
-          maxCode(len) = code - 1
+  /** The DCT decoders' SOF0/1/2 header at `at` (its length field),
+    * within their scope: 8-bit precision, luma sampling 1-2 per axis,
+    * chroma 1×1. */
+  private def jDctFrame(b: Array[Byte], at: Int, decoder: String): JFrame = {
+    require(jU8(b, at + 2) == 8, "only 8-bit precision")
+    val h = jBe16(b, at + 3); val w = jBe16(b, at + 5)
+    val n = jU8(b, at + 7)
+    require(w > 0 && h > 0, s"bad dims ${w}x$h")
+    require(n > 0, "frame without components")
+    val samp = Array.tabulate(n)(c => jU8(b, at + 9 + 3 * c))
+    val h0 = samp(0) >> 4; val v0 = samp(0) & 0x0f
+    require(h0 >= 1 && h0 <= 2 && v0 >= 1 && v0 <= 2,
+      s"luma sampling ${h0}x$v0: $decoder decoder supports 1-2 in each axis")
+    require(samp.drop(1).forall(_ == 0x11),
+      "chroma sampling beyond 1x1: needs the codec-library route")
+    new JFrame(w, h, samp, Array.tabulate(n)(c => jU8(b, at + 10 + 3 * c)))
+  }
+
+  /** The SOFn routing (Table B.1): the decoder that owns a frame type.
+    * The rest of the family (differential, arithmetic-coded) rejects by
+    * name rather than falling through the length-skip into a misleading
+    * "SOS before SOF". */
+  private def jSofRoute(sof: Int): String = sof match {
+    case 0xc0 | 0xc1 => "sequential JPEG: use decodeJpegBaseline"
+    case 0xc2 => "progressive JPEG: use decodeJpegProgressive"
+    case 0xc3 => "lossless JPEG: use decodeJpegLossless"
+    case _ =>
+      f"unsupported JPEG frame type SOF${sof - 0xc0}%d " +
+        f"(marker 0xff$sof%02x): extended-sequential/" +
+        "arithmetic streams need the codec-library route"
+  }
+
+  /** The JPEG marker walk (T.81 B.1.1–B.2.4) every decoder shares: SOI
+    * check, fill bytes, standalone markers, declared-length checks,
+    * DQT / DHT / DRI parsed into the tables below, every other segment
+    * skipped by its length, and the SOFn routing — a frame type
+    * `accepts` refuses throws naming its decoder. Reads are
+    * bounds-checked, so a truncation surfaces as
+    * IllegalArgumentException. */
+  private final class JpegWalk(b: Array[Byte], accepts: Int => Boolean) {
+    require(b.length >= 4 && jU8(b, 0) == 0xff && jU8(b, 1) == 0xd8,
+      "not a JPEG")
+    val qt = new Array[Array[Int]](16)
+    val dcT = new Array[JHuff](16); val acT = new Array[JHuff](16)
+    var ri = 0
+    /** Length field of the SOFn or SOS segment [[next]] last returned. */
+    var seg = -1
+    /** Where the walk resumes: past a SOFn segment, or at a scan's
+      * entropy data until the caller moves it past the scan. */
+    var at = 2
+
+    /** Walks to the next accepted SOFn, SOS or EOI; returns its marker. */
+    def next(): Int = {
+      var m = -1
+      while (m < 0) {
+        // fill bytes: any number of FFs may pad before a marker
+        while (at + 1 < b.length && jU8(b, at) == 0xff &&
+          jU8(b, at + 1) == 0xff) at += 1
+        require(at + 1 < b.length && jU8(b, at) == 0xff, "marker expected")
+        val mk = jU8(b, at + 1)
+        at += 2
+        if (mk == 0xd9) m = mk
+        else if (mk != 0x01 && (mk < 0xd0 || mk > 0xd7)) { // TEM, RSTn: no length
+          val len = jBe16(b, at)
+          require(len >= 2 && at + len <= b.length,
+            f"truncated segment 0x$mk%02x (len=$len)")
+          seg = at; at += len
+          mk match {
+            case 0xdb => dqt()
+            case 0xc4 => dht()
+            case 0xdd => ri = jBe16(b, seg + 2)
+            case 0xda => m = mk
+            // 0xc4 / 0xc8 / 0xcc are DHT / JPG / DAC, not frame types
+            case sof if sof >= 0xc0 && sof <= 0xcf && sof != 0xc8 &&
+                sof != 0xcc =>
+              if (!accepts(sof)) throw new IllegalArgumentException(jSofRoute(sof))
+              m = sof
+            case _ => // APPn, COM, ...
+          }
         }
-        code <<= 1
+      }
+      m
+    }
+
+    /** DQT (B.2.4.1): one or more tables, 8- or 16-bit entries. */
+    private def dqt(): Unit = {
+      var o = seg + 2
+      while (o < at) {
+        val pq = jU8(b, o) >> 4; val id = jU8(b, o) & 0x0f
+        require(pq <= 1, s"quant table precision $pq")
+        qt(id) = Array.tabulate(64)(k =>
+          if (pq == 0) jU8(b, o + 1 + k) else jBe16(b, o + 1 + 2 * k))
+        o += 1 + 64 * (pq + 1)
+      }
+    }
+
+    /** DHT (B.2.4.2): one or more tables, class 0 = DC, 1 = AC. */
+    private def dht(): Unit = {
+      var o = seg + 2
+      while (o < at) {
+        val cls = jU8(b, o) >> 4; val id = jU8(b, o) & 0x0f
+        val bits = Array.tabulate(16)(k => jU8(b, o + 1 + k))
+        val n = bits.sum
+        val t = new JHuff(bits, Array.tabulate(n)(k => jU8(b, o + 17 + k)))
+        if (cls == 0) dcT(id) = t else acT(id) = t
+        o += 17 + n
       }
     }
   }
 
-  /** MSB-first bit writer with FF→FF 00 stuffing (B.1.1.5). */
-  private final class JBitW(out: java.io.ByteArrayOutputStream) {
-    private var acc = 0; private var nb = 0
+  /** The JPEG entropy-coded-data reader every decoder shares: MSB-first
+    * bits over FF 00 byte stuffing (F.2.2.5; any other marker inside
+    * the data is damage), canonical-Huffman symbols (F.2.2.3),
+    * RECEIVE + EXTEND (F.2.2.1) and the byte-aligned RSTn resync. */
+  private final class JBitR(b: Array[Byte], var pos: Int) {
+    private var acc = 0; private var nb = 0; private var rst = 0
+
+    def bit(): Int = {
+      if (nb == 0) {
+        require(pos < b.length, "truncated entropy data")
+        val v = b(pos) & 0xff; pos += 1
+        if (v == 0xff) {
+          require(pos < b.length, "truncated after FF")
+          val nxt = b(pos) & 0xff
+          require(nxt == 0x00,
+            f"marker 0xff$nxt%02x inside entropy-coded data")
+          pos += 1
+        }
+        acc = v; nb = 8
+      }
+      nb -= 1; (acc >> nb) & 1
+    }
+
+    def bits(n: Int): Int = {
+      var v = 0; var k = 0
+      while (k < n) { v = (v << 1) | bit(); k += 1 }
+      v
+    }
+
+    def decodeSym(t: JHuff): Int = {
+      var code = bit(); var len = 1
+      while (!(t.maxCode(len) >= 0 && code <= t.maxCode(len))) {
+        require(len < 16, "invalid Huffman code")
+        code = (code << 1) | bit(); len += 1
+      }
+      t.vals(t.valPtr(len) + code - t.minCode(len))
+    }
+
+    /** RECEIVE(t) then EXTEND: t magnitude bits → the signed value. */
+    def extend(t: Int): Int = {
+      val v = bits(t)
+      if (t == 0) 0 else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
+    }
+
+    /** Byte-aligns (B.2.1.2) and steps over all-ones pad bytes, which
+      * are emitted STUFFED (FF 00), so `pos` lands on the next marker. */
+    def align(): Unit = {
+      nb = 0
+      while (pos + 1 < b.length && (b(pos) & 0xff) == 0xff &&
+        b(pos + 1) == 0) pos += 2
+    }
+
+    /** Restart resync: align, then RSTn must follow in sequence. */
+    def restart(): Unit = {
+      align()
+      require(pos + 1 < b.length && (b(pos) & 0xff) == 0xff &&
+        (b(pos + 1) & 0xff) == 0xd0 + rst, f"expected RST$rst%d at $pos")
+      pos += 2
+      rst = (rst + 1) % 8
+    }
+  }
+
+  private val jCos = Array.tabulate(8, 8)((x, u) =>
+    math.cos((2 * x + 1) * u * math.Pi / 16))
+  private val jCu =
+    Array.tabulate(8)(u => if (u == 0) 1.0 / math.sqrt(2.0) else 1.0)
+
+  /** The DCT decoders' back half: every block of the coefficient store
+    * (see [[JFrame]]) is dequantized, inverse-zigzagged, float-IDCT'd
+    * (A.3.3), level-shifted by +128 and clamped into its component's
+    * cropped plane — the padding blocks of a partial MCU are decoded,
+    * as the spec requires, then fall outside the crop — and subsampled
+    * planes are upsampled to w×h by sample replication (the
+    * nearest-neighbor reconstruction JFIF implies when no filter is
+    * specified). */
+  private def jReconstruct(f: JFrame, qt: Array[Array[Int]],
+      coefs: Array[Array[Int]], ri: Int): DecodedJpeg = {
+    val blk = new Array[Int](64)
+    val sub = Array.tabulate(f.nComp) { c =>
+      val q = if (f.tq(c) < qt.length) qt(f.tq(c)) else null
+      require(q != null, s"missing quant table ${f.tq(c)}")
+      val zz = coefs(c); val cw = f.cw(c); val ch = f.ch(c)
+      val plane = new Array[Int](cw * ch)
+      for (by <- 0 until f.padH(c); bx <- 0 until f.padW(c)) {
+        val off = (by * f.padW(c) + bx) * 64
+        java.util.Arrays.fill(blk, 0)
+        var k = 0
+        while (k < 64) {
+          val v = zz(off + k)
+          if (v != 0) blk(jZigzag(k)) = v * q(k)
+          k += 1
+        }
+        val x0 = bx * 8; val y0 = by * 8
+        var y = 0
+        while (y < 8 && y0 + y < ch) {
+          var x = 0
+          while (x < 8 && x0 + x < cw) {
+            var s = 0.0
+            var u = 0
+            while (u < 8) {
+              var v = 0
+              while (v < 8) {
+                val fv = blk(v * 8 + u)
+                if (fv != 0)
+                  s += jCu(u) * jCu(v) * fv * jCos(x)(u) * jCos(y)(v)
+                v += 1
+              }
+              u += 1
+            }
+            val p = math.round(s / 4.0 + 128.0).toInt
+            plane((y0 + y) * cw + (x0 + x)) = math.max(0, math.min(255, p))
+            x += 1
+          }
+          y += 1
+        }
+      }
+      plane
+    }
+    val planes = Array.tabulate(f.nComp) { c =>
+      if (f.cw(c) == f.w && f.ch(c) == f.h) sub(c)
+      else {
+        val out = new Array[Int](f.w * f.h)
+        val sx = f.hmax / f.sH(c); val sy = f.vmax / f.sV(c)
+        var y = 0
+        while (y < f.h) {
+          var x = 0
+          while (x < f.w) {
+            out(y * f.w + x) = sub(c)((y / sy) * f.cw(c) + (x / sx))
+            x += 1
+          }
+          y += 1
+        }
+        out
+      }
+    }
+    DecodedJpeg(f.w, f.h, f.nComp, ri, planes)
+  }
+
+  /** The JPEG writer every encoder shares: marker segments (B.1.1.4)
+    * and the entropy-coded data between them — MSB-first bits with
+    * FF → FF 00 stuffing (B.1.1.5), Huffman symbols, and
+    * category-plus-magnitude values. */
+  private final class JWriter {
+    private val out = new java.io.ByteArrayOutputStream()
+    private var acc = 0; private var nb = 0; private var rst = 0
+
+    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
+    def seg(m: Int, payload: Array[Byte]): Unit = {
+      marker(m); putBe16(out, payload.length + 2); out.write(payload)
+    }
+    /** SOI, then the JFIF APP0 segment (version 1.1, 1:1 aspect). */
+    def start(): Unit = {
+      marker(0xd8)
+      seg(0xe0, "JFIF".getBytes("US-ASCII") ++
+        Array[Byte](0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
+    }
+    /** One DQT per table, table id = position, 8-bit zigzag entries. */
+    def dqt(qTabs: Array[Array[Int]]): Unit =
+      qTabs.zipWithIndex.foreach { case (q, id) =>
+        seg(0xdb, id.toByte +: q.map(_.toByte))
+      }
+    /** Frame header: 8-bit precision, components 1..n with sampling
+      * `samp(c)` (H<<4|V) and quant table `tq(c)`. */
+    def sof(m: Int, w: Int, h: Int, samp: Array[Int], tq: Array[Int]): Unit = {
+      val p = new java.io.ByteArrayOutputStream()
+      p.write(8); putBe16(p, h); putBe16(p, w); p.write(samp.length)
+      for (c <- samp.indices) { p.write(c + 1); p.write(samp(c)); p.write(tq(c)) }
+      seg(m, p.toByteArray)
+    }
+    def dht(cls: Int, id: Int, t: JHuff): Unit =
+      seg(0xc4, ((cls << 4) | id).toByte +: (t.bits ++ t.vals).map(_.toByte))
+    def dri(ri: Int): Unit =
+      if (ri > 0) seg(0xdd, Array((ri >> 8).toByte, ri.toByte))
+    /** Scan header: components `comps` (0-based) with table selectors
+      * `sel(c)` (Td<<4|Ta), then Ss, Se and Ah<<4|Al. */
+    def sos(comps: Seq[Int], sel: Int => Int, ss: Int, se: Int,
+        ahAl: Int): Unit = {
+      val p = new java.io.ByteArrayOutputStream()
+      p.write(comps.length)
+      comps.foreach { c => p.write(c + 1); p.write(sel(c)) }
+      p.write(ss); p.write(se); p.write(ahAl)
+      seg(0xda, p.toByteArray)
+      rst = 0
+    }
+
     def put(v: Int, n: Int): Unit = {
       var i = n - 1
       while (i >= 0) {
@@ -1051,34 +1316,81 @@ object Multimodal {
     }
     /** 1-fill to the byte boundary (B.2.1.1 segment padding). */
     def pad(): Unit = while (nb != 0) put(1, 1)
+    /** Pads, then RSTn in sequence (the count restarts at each SOS). */
+    def restart(): Unit = { pad(); marker(0xd0 + rst); rst = (rst + 1) % 8 }
+    def sym(t: JHuff, s: Int): Unit = {
+      require(t.len(s) > 0, f"no Huffman code for symbol 0x$s%02x")
+      put(t.code(s), t.len(s))
+    }
+    /** Category-plus-magnitude coding (F.1.2.1): the symbol
+      * `run << 4 | size(v)`, then the size(v) low bits of v (of v − 1
+      * when negative). DC differences and lossless residuals use run 0. */
+    def value(t: JHuff, run: Int, v: Int): Unit = {
+      val size = 32 - Integer.numberOfLeadingZeros(math.abs(v))
+      sym(t, (run << 4) | size)
+      if (size > 0) put(if (v < 0) v + (1 << size) - 1 else v, size)
+    }
+    /** Pads the entropy data, writes EOI and returns the stream. */
+    def finish(): Array[Byte] = { pad(); marker(0xd9); out.toByteArray }
   }
 
-  /** Encode one quantized block (zigzag order): DC difference category
-    * + magnitude bits (F.1.2.1), then AC (run, size) symbols with ZRL
-    * for 16-zero runs and EOB closing any trailing zero tail. */
-  private def jEncodeBlock(w: JBitW, zz: Array[Int], pred: Int,
-      dc: Map[Int, (Int, Int)], ac: Map[Int, (Int, Int)]): Int = {
-    def mag(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    def putVal(v: Int, t: Int): Unit =
-      if (t > 0) w.put(if (v < 0) v + (1 << t) - 1 else v, t)
-    val diff = zz(0) - pred
-    val t = mag(diff)
-    val (c0, l0) = dc(t)
-    w.put(c0, l0); putVal(diff, t)
-    var k = 1; var run = 0
-    while (k < 64) {
-      if (zz(k) == 0) run += 1
-      else {
-        while (run > 15) { val (c, l) = ac(0xf0); w.put(c, l); run -= 16 }
-        val sz = mag(zz(k))
-        val (c, l) = ac((run << 4) | sz)
-        w.put(c, l); putVal(zz(k), sz)
-        run = 0
-      }
-      k += 1
+  /** The DCT encoders' frame: `sampling` null = all 1×1; luma uses
+    * quant table 0, chroma table 1 when there is one. */
+  private def jEncFrame(w: Int, h: Int, nComp: Int, sampling: Array[Int],
+      qTabs: Array[Array[Int]]): JFrame = {
+    require(nComp == 1 || nComp == 3, s"nComp=$nComp")
+    new JFrame(w, h,
+      if (sampling == null) Array.fill(nComp)(0x11) else sampling,
+      Array.tabulate(nComp)(c => if (c == 0) 0 else math.min(1, qTabs.length - 1)))
+  }
+
+  /** Structurally-valid JPEG shell encoder — fixture generator for the
+    * header-sniff path. Emits the real marker sequence (SOI, APP0/JFIF,
+    * a COM the sniffer must skip, DQT, SOF0 or SOF2, DHT, SOS +
+    * byte-stuffed entropy data, EOI) with true dimensions in the SOF.
+    * The entropy payload is deterministic filler (not a decodable
+    * image — that needs a codec library); every marker/length field is
+    * spec-correct, which is exactly what a dimension sniffer exercises. */
+  def encodeJpegShell(w: Int, h: Int, progressive: Boolean,
+      entropy: Array[Byte]): Array[Byte] = {
+    val out = new JWriter
+    out.start()
+    out.seg(0xfe, "graft fixture".getBytes("US-ASCII")) // COM: must be skipped
+    out.dqt(Array(Array.fill(64)(16)))
+    out.sof(if (progressive) 0xc2 else 0xc0, w, h, Array.fill(3)(0x11),
+      new Array[Int](3))
+    out.seg(0xc4, Array.tabulate[Byte](17 + 1)(i => if (i == 0) 0 else 1)) // DHT
+    out.sos(0 until 3, _ => 0, 0, 63, 0)
+    // entropy-coded filler, 0xFF byte-stuffed per the spec (FF 00)
+    entropy.foreach(v => out.put(v & 0xff, 8))
+    out.finish()
+  }
+
+  /** Real JPEG header sniff (ITU T.81 §B): the shared marker walk —
+    * segments skipped by their declared big-endian size, fill bytes and
+    * standalone markers handled, SOS entropy data scanned with
+    * byte-stuffing (FF 00) and restart markers (FF D0–D7) honored —
+    * until any SOFn yields (width, height, progressive?, n_comp).
+    * Throws on non-JPEG, truncated segments, or a missing SOF. */
+  def decodeJpegDims(b: Array[Byte]): (Int, Int, Boolean, Int) = {
+    val walk = new JpegWalk(b, _ => true)
+    var m = walk.next()
+    while (m == 0xda) {
+      // entropy data: runs to the next marker that is not FF 00 or RSTn
+      var i = walk.at
+      while ({
+        require(i + 1 < b.length, "truncated entropy data")
+        val nx = b(i + 1) & 0xff
+        (b(i) & 0xff) != 0xff || nx == 0x00 || (nx >= 0xd0 && nx <= 0xd7)
+      }) i += 1
+      walk.at = i
+      m = walk.next()
     }
-    if (run > 0) { val (c, l) = ac(0x00); w.put(c, l) } // EOB
-    zz(0)
+    require(m != 0xd9, "no SOF marker before EOI")
+    val h = jBe16(b, walk.seg + 3); val w = jBe16(b, walk.seg + 5)
+    val nc = jU8(b, walk.seg + 7)
+    require(w > 0 && h > 0 && nc > 0, s"bad SOF ${w}x$h/$nc")
+    (w, h, m == 0xc2, nc)
   }
 
   /** Baseline JFIF encoder over QUANTIZED-COEFFICIENT blocks: the
@@ -1095,323 +1407,111 @@ object Multimodal {
       coefs: (Int, Int, Int) => Array[Int],
       sampling: Array[Int] = null,
       sofMarker: Int = 0xc0): Array[Byte] = {
-    require(nComp == 1 || nComp == 3, s"nComp=$nComp")
+    val f = jEncFrame(w, h, nComp, sampling, qTabs)
     // SOF1 (extended sequential, Huffman) at 8 bits is byte-compatible
     // with baseline apart from the frame marker — the fixture rotates
     // it in so the decoder's SOF1 route is exercised cross-engine
     require(sofMarker == 0xc0 || sofMarker == 0xc1, f"SOF 0x$sofMarker%02x")
-    val samp = if (sampling == null) Array.fill(nComp)(0x11) else sampling
-    val sH = samp.map(_ >> 4); val sV = samp.map(_ & 0x0f)
-    val hmax = sH.max; val vmax = sV.max
-    val out = new java.io.ByteArrayOutputStream()
-    def b(v: Int): Unit = out.write(v & 0xff)
-    def be16(v: Int): Unit = { b(v >> 8); b(v) }
-    def seg(marker: Int, payload: Array[Byte]): Unit = {
-      b(0xff); b(marker); be16(payload.length + 2); out.write(payload)
-    }
-    b(0xff); b(0xd8)
-    seg(0xe0, "JFIF ".getBytes("US-ASCII") ++
-      Array[Byte](1, 1, 0, 0, 1, 0, 1, 0, 0))
-    qTabs.zipWithIndex.foreach { case (q, id) =>
-      seg(0xdb, Array[Byte](id.toByte) ++ q.map(_.toByte))
-    }
-    val sof = new java.io.ByteArrayOutputStream()
-    sof.write(8); sof.write(h >> 8); sof.write(h & 0xff)
-    sof.write(w >> 8); sof.write(w & 0xff); sof.write(nComp)
-    for (c <- 0 until nComp) {
-      sof.write(c + 1); sof.write(samp(c))
-      sof.write(if (c == 0) 0 else math.min(1, qTabs.length - 1))
-    }
-    seg(sofMarker, sof.toByteArray)
-    def dht(cls: Int, id: Int, spec: (Array[Int], Array[Int])): Unit =
-      seg(0xc4, Array[Byte](((cls << 4) | id).toByte) ++
-        spec._1.map(_.toByte) ++ spec._2.map(_.toByte))
-    dht(0, 0, jDcLumaSpec); dht(1, 0, jAcLumaSpec)
-    if (nComp > 1) { dht(0, 1, jDcChromaSpec); dht(1, 1, jAcChromaSpec) }
-    if (restartInterval > 0)
-      seg(0xdd, Array[Byte]((restartInterval >> 8).toByte,
-        restartInterval.toByte))
-    val sos = new java.io.ByteArrayOutputStream()
-    sos.write(nComp)
-    for (c <- 0 until nComp) {
-      sos.write(c + 1); sos.write(if (c == 0) 0x00 else 0x11)
-    }
-    sos.write(0); sos.write(63); sos.write(0)
-    seg(0xda, sos.toByteArray)
-    val dcC = jHuffCodes(jDcLumaSpec); val acC = jHuffCodes(jAcLumaSpec)
-    val dcK = jHuffCodes(jDcChromaSpec); val acK = jHuffCodes(jAcChromaSpec)
-    val mcusX = (w + 8 * hmax - 1) / (8 * hmax)
-    val mcusY = (h + 8 * vmax - 1) / (8 * vmax)
-    val wtr = new JBitW(out)
+    val out = new JWriter
+    out.start(); out.dqt(qTabs); out.sof(sofMarker, w, h, f.samp, f.tq)
+    out.dht(0, 0, jDcLuma); out.dht(1, 0, jAcLuma)
+    if (nComp > 1) { out.dht(0, 1, jDcChroma); out.dht(1, 1, jAcChroma) }
+    out.dri(restartInterval)
+    out.sos(0 until nComp, c => if (c == 0) 0x00 else 0x11, 0, 63, 0)
     val preds = new Array[Int](nComp)
-    var mcu = 0; var rst = 0
-    for (my <- 0 until mcusY; mx <- 0 until mcusX) {
+    var mcu = 0
+    for (my <- 0 until f.mcusY; mx <- 0 until f.mcusX) {
       if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-        wtr.pad()
-        b(0xff); b(0xd0 + rst)
-        rst = (rst + 1) % 8
-        java.util.Arrays.fill(preds, 0)
+        out.restart(); java.util.Arrays.fill(preds, 0)
       }
-      for (c <- 0 until nComp; bv <- 0 until sV(c); bu <- 0 until sH(c))
-        preds(c) = jEncodeBlock(wtr,
-          coefs(c, mx * sH(c) + bu, my * sV(c) + bv), preds(c),
-          if (c == 0) dcC else dcK, if (c == 0) acC else acK)
+      // one block: DC difference, then AC (run, size) symbols with ZRL
+      // for 16-zero runs and EOB closing any trailing zero tail
+      for (c <- 0 until nComp; bv <- 0 until f.sV(c); bu <- 0 until f.sH(c)) {
+        val zz = coefs(c, mx * f.sH(c) + bu, my * f.sV(c) + bv)
+        val ac = if (c == 0) jAcLuma else jAcChroma
+        out.value(if (c == 0) jDcLuma else jDcChroma, 0, zz(0) - preds(c))
+        preds(c) = zz(0)
+        var k = 1; var run = 0
+        while (k < 64) {
+          if (zz(k) == 0) run += 1
+          else {
+            while (run > 15) { out.sym(ac, 0xf0); run -= 16 }
+            out.value(ac, run, zz(k))
+            run = 0
+          }
+          k += 1
+        }
+        if (run > 0) out.sym(ac, 0x00) // EOB
+      }
       mcu += 1
     }
-    wtr.pad()
-    b(0xff); b(0xd9)
-    out.toByteArray
+    out.finish()
   }
 
-  /** Decoded baseline JPEG: true dims, restart interval as parsed from
-    * DRI (0 = none), one w·h pixel plane (0..255) per component —
+  /** Decoded JPEG: true dims, restart interval as parsed from DRI
+    * (0 = none), one w·h pixel plane (0..255) per component —
     * subsampled chroma planes are upsampled to full resolution by
-    * sample replication (the nearest-neighbor reconstruction JFIF
-    * implies when no fancy upsampling filter is specified). */
+    * sample replication (see [[jReconstruct]]). */
   case class DecodedJpeg(w: Int, h: Int, nComp: Int, ri: Int,
       planes: Array[Array[Int]])
 
-  /** Baseline sequential JPEG DECODER (scope: 8-bit precision; luma
-    * sampling 1×1 / 2×1 / 1×2 / 2×2 with 1×1 chroma — i.e. 4:4:4,
-    * 4:2:2, 4:4:0, 4:2:0, and grayscale; progressive streams are
-    * rejected loudly, they need the codec-library route). Full
-    * pipeline: marker walk collecting DQT (multi-table
-    * segments)/DHT/DRI/SOF0, canonical-Huffman entropy decode through
-    * the byte-stuffed reader, interleaved MCU order (A.2.3: each MCU
-    * carries Hc×Vc data units per component), RSTn resync
-    * (byte-aligned, DC predictors reset, marker sequence checked), DC
-    * prediction, EXTEND sign recovery (F.2.2.1), dequantize + inverse
-    * zigzag, float IDCT (A.3.3), +128 level shift, clamp, per-component
-    * crop to the A.1.1 subsampled dims, and replication upsampling. */
+  /** Sequential JPEG DECODER (SOF0 baseline and SOF1 extended
+    * sequential at 8 bits; scope as in the codec header — progressive
+    * and lossless streams are rejected by name). The shared marker
+    * walk collects DQT/DHT/DRI and the frame; one interleaved scan is
+    * entropy-decoded in MCU order (A.2.3: each MCU carries Hc×Vc data
+    * units per component) with DC prediction, EXTEND sign recovery and
+    * RSTn resync (DC predictors reset), into the coefficient store the
+    * shared back half reconstructs. */
   def decodeJpegBaseline(bytes: Array[Byte]): DecodedJpeg = {
-    def u8(o: Int): Int = bytes(o) & 0xff
-    def be16(o: Int): Int = u8(o) << 8 | u8(o + 1)
-    require(bytes.length >= 4 && u8(0) == 0xff && u8(1) == 0xd8,
-      "not a JPEG")
-    val qt = new Array[Array[Int]](4)
-    val dcT = new Array[JHuffDec](4); val acT = new Array[JHuffDec](4)
-    var w = -1; var h = -1; var nComp = 0; var ri = 0
-    var compQ: Array[Int] = null
-    var compH: Array[Int] = null; var compV: Array[Int] = null
-    var compDc: Array[Int] = null; var compAc: Array[Int] = null
-    var i = 2
-    var sosAt = -1
-    while (sosAt < 0) {
-      require(i + 1 < bytes.length && u8(i) == 0xff, "marker expected")
-      val m = u8(i + 1); i += 2
-      m match {
-        case 0xd9 => throw new IllegalArgumentException("EOI before SOS")
-        case 0xdb =>
-          val end = i + be16(i); var o = i + 2
-          while (o < end) {
-            require((u8(o) >> 4) == 0, "only 8-bit quant tables")
-            val id = u8(o) & 0x0f
-            qt(id) = Array.tabulate(64)(k => u8(o + 1 + k))
-            o += 65
-          }
-          i = end
-        case 0xc4 =>
-          val end = i + be16(i); var o = i + 2
-          while (o < end) {
-            val cls = u8(o) >> 4; val id = u8(o) & 0x0f
-            val bits = Array.tabulate(16)(k => u8(o + 1 + k))
-            val n = bits.sum
-            val vals = Array.tabulate(n)(k => u8(o + 17 + k))
-            val t = new JHuffDec(bits, vals)
-            if (cls == 0) dcT(id) = t else acT(id) = t
-            o += 17 + n
-          }
-          i = end
-        // SOF1 (extended sequential, Huffman) differs from baseline
-        // only in the limits it lifts — 12-bit precision (rejected
-        // below, same as SOF0's 8-bit gate) and a 4-table budget the
-        // table arrays here already hold — so the 8-bit profile
-        // decodes on the exact SOF0 path
-        case 0xc0 | 0xc1 =>
-          require(u8(i + 2) == 8, "only 8-bit precision")
-          h = be16(i + 3); w = be16(i + 5); nComp = u8(i + 7)
-          require(w > 0 && h > 0, s"bad dims ${w}x$h")
-          compQ = new Array[Int](nComp)
-          compH = new Array[Int](nComp); compV = new Array[Int](nComp)
-          for (c <- 0 until nComp) {
-            val samp = u8(i + 9 + 3 * c)
-            compH(c) = samp >> 4; compV(c) = samp & 0x0f
-            if (c == 0) require(compH(0) >= 1 && compH(0) <= 2 &&
-              compV(0) >= 1 && compV(0) <= 2,
-              s"luma sampling ${compH(0)}x${compV(0)}: baseline decoder " +
-                "supports 1-2 in each axis")
-            else require(samp == 0x11,
-              "chroma sampling beyond 1x1: needs the codec-library route")
-            compQ(c) = u8(i + 10 + 3 * c)
-          }
-          i += be16(i)
-        case 0xc2 =>
-          throw new IllegalArgumentException(
-            "progressive JPEG: use decodeJpegProgressive")
-        case 0xc3 =>
-          throw new IllegalArgumentException(
-            "lossless JPEG: use decodeJpegLossless")
-        // the REST of the SOFn family (extended sequential,
-        // differential, arithmetic-coded — 0xc1, 0xc5-0xc7,
-        // 0xc9-0xcb, 0xcd-0xcf) must reject BY NAME, not fall through
-        // the length-skip arm into a misleading "SOS before SOF" (r9
-        // ADVICE); 0xc4/0xc8/0xcc are DHT/JPG/DAC, not frame types
-        case sof if sof >= 0xc1 && sof <= 0xcf &&
-          sof != 0xc4 && sof != 0xc8 && sof != 0xcc =>
-          throw new IllegalArgumentException(
-            f"unsupported JPEG frame type SOF${sof - 0xc0}%d " +
-              f"(marker 0xff$sof%02x): extended-sequential/" +
-              "arithmetic streams need the codec-library route")
-        case 0xdd => ri = be16(i + 2); i += be16(i)
-        case 0xda =>
-          require(nComp > 0, "SOS before SOF")
-          val ns = u8(i + 2)
-          require(ns == nComp, "partial scans unsupported")
-          compDc = new Array[Int](nComp); compAc = new Array[Int](nComp)
-          for (c <- 0 until ns) {
-            compDc(c) = u8(i + 4 + 2 * c) >> 4
-            compAc(c) = u8(i + 4 + 2 * c) & 0x0f
-          }
-          sosAt = i + be16(i)
-          i = sosAt
-        case _ if m == 0x01 || (m >= 0xd0 && m <= 0xd7) =>
-        case _ => i += be16(i)
-      }
+    // SOF1 differs from baseline only in the limits it lifts — 12-bit
+    // precision (rejected, same as SOF0's 8-bit gate) and a 4-table
+    // budget the walk's tables already hold — so the 8-bit profile
+    // decodes on the exact SOF0 path
+    val walk = new JpegWalk(bytes, m => m == 0xc0 || m == 0xc1)
+    var f: JFrame = null
+    var m = walk.next()
+    while (m != 0xda) {
+      require(m != 0xd9, "EOI before SOS")
+      f = jDctFrame(bytes, walk.seg, "baseline")
+      m = walk.next()
     }
-    // entropy decode
-    var pos = sosAt
-    var acc = 0; var nb = 0
-    def bit(): Int = {
-      if (nb == 0) {
-        require(pos < bytes.length, "truncated entropy data")
-        val v = u8(pos); pos += 1
-        if (v == 0xff) {
-          require(pos < bytes.length, "truncated after FF")
-          val nxt = u8(pos)
-          require(nxt == 0x00,
-            f"marker 0xff$nxt%02x inside entropy-coded data")
-          pos += 1
-        }
-        acc = v; nb = 8
+    require(f != null, "SOS before SOF")
+    val ns = jU8(bytes, walk.seg + 2)
+    require(ns == f.nComp, "partial scans unsupported")
+    val sel = Array.tabulate(ns)(c => jU8(bytes, walk.seg + 4 + 2 * c))
+    val dcs = sel.map(s => walk.dcT(s >> 4))
+    val acs = sel.map(s => walk.acT(s & 0x0f))
+    require(!dcs.contains(null) && !acs.contains(null), "missing Huffman table")
+    val coefs = f.newCoefs()
+    val in = new JBitR(bytes, walk.at)
+    val preds = new Array[Int](ns)
+    var mcu = 0
+    for (my <- 0 until f.mcusY; mx <- 0 until f.mcusX) {
+      if (walk.ri > 0 && mcu > 0 && mcu % walk.ri == 0) {
+        in.restart(); java.util.Arrays.fill(preds, 0)
       }
-      nb -= 1; (acc >> nb) & 1
-    }
-    def bits(n: Int): Int = { var v = 0; var k = 0
-      while (k < n) { v = (v << 1) | bit(); k += 1 }; v }
-    def decodeSym(t: JHuffDec): Int = {
-      var code = bit(); var len = 1
-      while (!(t.maxCode(len) >= 0 && code <= t.maxCode(len))) {
-        require(len < 16, "invalid Huffman code")
-        code = (code << 1) | bit(); len += 1
-      }
-      t.vals(t.valPtr(len) + code - t.minCode(len))
-    }
-    def extend(v: Int, t: Int): Int =
-      if (t == 0) 0 else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
-    val cosT = Array.tabulate(8, 8)((x, u) =>
-      math.cos((2 * x + 1) * u * math.Pi / 16))
-    val cu = Array.tabulate(8)(u => if (u == 0) 1.0 / math.sqrt(2.0) else 1.0)
-    val hmax = compH.max; val vmax = compV.max
-    // per-component subsampled dims (A.1.1: ceil(dim·sampling/max))
-    val cw = Array.tabulate(nComp)(c => (w * compH(c) + hmax - 1) / hmax)
-    val ch = Array.tabulate(nComp)(c => (h * compV(c) + vmax - 1) / vmax)
-    val sub = Array.tabulate(nComp)(c => new Array[Int](cw(c) * ch(c)))
-    val mcusX = (w + 8 * hmax - 1) / (8 * hmax)
-    val mcusY = (h + 8 * vmax - 1) / (8 * vmax)
-    val preds = new Array[Int](nComp)
-    val blk = new Array[Int](64)
-    var mcu = 0; var rstExpect = 0
-    for (my <- 0 until mcusY; mx <- 0 until mcusX) {
-      if (ri > 0 && mcu > 0 && mcu % ri == 0) {
-        nb = 0 // byte-align (B.2.1.2)
-        // an all-ones pad byte is emitted STUFFED (FF 00) — step over
-        // it so the restart check sees the marker, not the stuffing
-        while (pos + 1 < bytes.length && u8(pos) == 0xff &&
-          u8(pos + 1) == 0x00) pos += 2
-        require(pos + 1 < bytes.length && u8(pos) == 0xff &&
-          u8(pos + 1) == 0xd0 + rstExpect,
-          f"expected RST$rstExpect%d at $pos")
-        pos += 2
-        rstExpect = (rstExpect + 1) % 8
-        java.util.Arrays.fill(preds, 0)
-      }
-      // interleaved data-unit order (A.2.3): Hc×Vc blocks per
-      // component per MCU, components in SOF order
-      for (c <- 0 until nComp; bv <- 0 until compV(c);
-           bu <- 0 until compH(c)) {
-        val q = qt(compQ(c))
-        require(q != null, s"missing quant table ${compQ(c)}")
-        val dct = dcT(compDc(c)); val act = acT(compAc(c))
-        require(dct != null && act != null, "missing Huffman table")
-        java.util.Arrays.fill(blk, 0)
-        val t = decodeSym(dct)
-        preds(c) += extend(bits(t), t)
-        blk(jZigzag(0)) = preds(c) * q(0)
+      for (c <- 0 until ns; bv <- 0 until f.sV(c); bu <- 0 until f.sH(c)) {
+        val zz = coefs(c)
+        val off = ((my * f.sV(c) + bv) * f.padW(c) + mx * f.sH(c) + bu) * 64
+        preds(c) += in.extend(in.decodeSym(dcs(c)))
+        zz(off) = preds(c)
         var k = 1
-        var eob = false
-        while (k < 64 && !eob) {
-          val sym = decodeSym(act)
-          if (sym == 0x00) eob = true
-          else if (sym == 0xf0) k += 16
+        while (k < 64) {
+          val sym = in.decodeSym(acs(c))
+          if (sym == 0x00) k = 64 // EOB
+          else if (sym == 0xf0) k += 16 // ZRL
           else {
             k += sym >> 4
             require(k < 64, "AC run past block end")
-            blk(jZigzag(k)) = extend(bits(sym & 0x0f), sym & 0x0f) * q(k)
+            zz(off + k) = in.extend(sym & 0x0f)
             k += 1
           }
-        }
-        // IDCT + level shift + clamp into the component's SUBSAMPLED
-        // plane, cropped to its A.1.1 dims (edge-padding blocks of a
-        // partial MCU are decoded — the spec requires it — then fall
-        // outside the crop)
-        val x0 = (mx * compH(c) + bu) * 8
-        val y0 = (my * compV(c) + bv) * 8
-        val plane = sub(c)
-        var y = 0
-        while (y < 8 && y0 + y < ch(c)) {
-          var x = 0
-          while (x < 8 && x0 + x < cw(c)) {
-            var s = 0.0
-            var u = 0
-            while (u < 8) {
-              var v = 0
-              while (v < 8) {
-                val f = blk(v * 8 + u)
-                if (f != 0) s += cu(u) * cu(v) * f * cosT(x)(u) * cosT(y)(v)
-                v += 1
-              }
-              u += 1
-            }
-            val p = math.round(s / 4.0 + 128.0).toInt
-            plane((y0 + y) * cw(c) + (x0 + x)) =
-              math.max(0, math.min(255, p))
-            x += 1
-          }
-          y += 1
         }
       }
       mcu += 1
     }
-    // replication upsampling to full resolution (identity when the
-    // component is full-rate)
-    val planes = Array.tabulate(nComp) { c =>
-      if (cw(c) == w && ch(c) == h) sub(c)
-      else {
-        val out = new Array[Int](w * h)
-        val sx = hmax / compH(c); val sy = vmax / compV(c)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            out(y * w + x) = sub(c)((y / sy) * cw(c) + (x / sx))
-            x += 1
-          }
-          y += 1
-        }
-        out
-      }
-    }
-    DecodedJpeg(w, h, nComp, ri, planes)
+    jReconstruct(f, walk.qt, coefs, walk.ri)
   }
 
   /** q_multimodal_jpeg_decode's fixture: a real baseline JPEG whose
@@ -1485,120 +1585,60 @@ object Multimodal {
       restartInterval: Int, qTabs: Array[Array[Int]],
       coefs: (Int, Int, Int) => Array[Int],
       sampling: Array[Int] = null): Array[Byte] = {
-    require(nComp == 1 || nComp == 3, s"nComp=$nComp")
-    val samp = if (sampling == null) Array.fill(nComp)(0x11) else sampling
-    val sH = samp.map(_ >> 4); val sV = samp.map(_ & 0x0f)
-    val hmax = sH.max; val vmax = sV.max
-    val mcusX = (w + 8 * hmax - 1) / (8 * hmax)
-    val mcusY = (h + 8 * vmax - 1) / (8 * vmax)
+    val f = jEncFrame(w, h, nComp, sampling, qTabs)
     // materialize every block once (padded MCU grid — scans re-read)
-    val padW = Array.tabulate(nComp)(c => mcusX * sH(c))
-    val padH = Array.tabulate(nComp)(c => mcusY * sV(c))
     val blks = Array.tabulate(nComp)(c =>
-      Array.tabulate(padH(c) * padW(c))(i =>
-        coefs(c, i % padW(c), i / padW(c))))
-    // subsampled dims + ceil block grid (the AC-scan walk, A.2.2)
-    val cw = Array.tabulate(nComp)(c => (w * sH(c) + hmax - 1) / hmax)
-    val ch = Array.tabulate(nComp)(c => (h * sV(c) + vmax - 1) / vmax)
-    val bW = Array.tabulate(nComp)(c => (cw(c) + 7) / 8)
-    val bH = Array.tabulate(nComp)(c => (ch(c) + 7) / 8)
-    val out = new java.io.ByteArrayOutputStream()
-    def b(v: Int): Unit = out.write(v & 0xff)
-    def be16(v: Int): Unit = { b(v >> 8); b(v) }
-    def seg(marker: Int, payload: Array[Byte]): Unit = {
-      b(0xff); b(marker); be16(payload.length + 2); out.write(payload)
-    }
-    b(0xff); b(0xd8)
-    seg(0xe0, "JFIF ".getBytes("US-ASCII") ++
-      Array[Byte](1, 1, 0, 0, 1, 0, 1, 0, 0))
-    qTabs.zipWithIndex.foreach { case (q, id) =>
-      seg(0xdb, Array[Byte](id.toByte) ++ q.map(_.toByte))
-    }
-    val sof = new java.io.ByteArrayOutputStream()
-    sof.write(8); sof.write(h >> 8); sof.write(h & 0xff)
-    sof.write(w >> 8); sof.write(w & 0xff); sof.write(nComp)
-    for (c <- 0 until nComp) {
-      sof.write(c + 1); sof.write(samp(c))
-      sof.write(if (c == 0) 0 else math.min(1, qTabs.length - 1))
-    }
-    seg(0xc2, sof.toByteArray)
-    def dht(cls: Int, id: Int, spec: (Array[Int], Array[Int])): Unit =
-      seg(0xc4, Array[Byte](((cls << 4) | id).toByte) ++
-        spec._1.map(_.toByte) ++ spec._2.map(_.toByte))
+      Array.tabulate(f.padH(c) * f.padW(c))(i =>
+        coefs(c, i % f.padW(c), i / f.padW(c))))
+    val out = new JWriter
+    out.start(); out.dqt(qTabs); out.sof(0xc2, w, h, f.samp, f.tq)
     // DC tables per Annex K (unchanged from baseline); ONE shared
     // progressive AC table (id 0) carrying the EOBn symbol family
-    dht(0, 0, jDcLumaSpec)
-    if (nComp > 1) dht(0, 1, jDcChromaSpec)
-    dht(1, 0, jAcProgSpec)
-    if (restartInterval > 0)
-      seg(0xdd, Array[Byte]((restartInterval >> 8).toByte,
-        restartInterval.toByte))
-    val dcC = jHuffCodes(jDcLumaSpec); val dcK = jHuffCodes(jDcChromaSpec)
-    val acC = jHuffCodes(jAcProgSpec); val acK = acC
-    def mag(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    def sosHeader(comps: Seq[Int], ss: Int, se: Int,
-        ah: Int, al: Int): Unit = {
-      val p = new java.io.ByteArrayOutputStream()
-      p.write(comps.length)
-      comps.foreach { c =>
-        p.write(c + 1)
-        val td = if (c == 0) 0 else 1
-        p.write((td << 4) | 0) // Ta = 0: the shared progressive AC table
-      }
-      p.write(ss); p.write(se); p.write((ah << 4) | al)
-      seg(0xda, p.toByteArray)
-    }
-    var rst = 0
-    def restart(wtr: JBitW): Unit = {
-      wtr.pad(); b(0xff); b(0xd0 + rst); rst = (rst + 1) % 8
-    }
+    out.dht(0, 0, jDcLuma)
+    if (nComp > 1) out.dht(0, 1, jDcChroma)
+    out.dht(1, 0, jAcProg)
+    out.dri(restartInterval)
+    def sos(comps: Seq[Int], ss: Int, se: Int, ah: Int, al: Int): Unit =
+      out.sos(comps, c => if (c == 0) 0x00 else 0x10, ss, se, (ah << 4) | al)
+    def restartDue(unit: Int): Boolean =
+      restartInterval > 0 && unit > 0 && unit % restartInterval == 0
     // ---- scan 1 + 4: DC, interleaved MCU order --------------------
     def dcScan(ah: Int, al: Int): Unit = {
-      sosHeader(0 until nComp, 0, 0, ah, al)
-      val wtr = new JBitW(out)
+      sos(0 until nComp, 0, 0, ah, al)
       val preds = new Array[Int](nComp)
       var mcu = 0
-      rst = 0
-      for (my <- 0 until mcusY; mx <- 0 until mcusX) {
-        if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-          restart(wtr); java.util.Arrays.fill(preds, 0)
-        }
-        for (c <- 0 until nComp; bv <- 0 until sV(c); bu <- 0 until sH(c)) {
-          val zz0 = blks(c)((my * sV(c) + bv) * padW(c) + mx * sH(c) + bu)(0)
+      for (my <- 0 until f.mcusY; mx <- 0 until f.mcusX) {
+        if (restartDue(mcu)) { out.restart(); java.util.Arrays.fill(preds, 0) }
+        for (c <- 0 until nComp; bv <- 0 until f.sV(c); bu <- 0 until f.sH(c)) {
+          val zz0 =
+            blks(c)((my * f.sV(c) + bv) * f.padW(c) + mx * f.sH(c) + bu)(0)
           if (ah == 0) {
             val v = zz0 >> al // arithmetic point transform (G.1.2.1)
-            val diff = v - preds(c); preds(c) = v
-            val t = mag(diff)
-            val (c0, l0) = (if (c == 0) dcC else dcK)(t)
-            wtr.put(c0, l0)
-            if (t > 0)
-              wtr.put(if (diff < 0) diff + (1 << t) - 1 else diff, t)
+            out.value(if (c == 0) jDcLuma else jDcChroma, 0, v - preds(c))
+            preds(c) = v
           } else {
-            wtr.put((zz0 >> al) & 1, 1) // one refinement bit per block
+            out.put((zz0 >> al) & 1, 1) // one refinement bit per block
           }
         }
         mcu += 1
       }
-      wtr.pad()
+      out.pad()
     }
     // ---- AC scans: single component, ceil block grid --------------
+    // EOBn: the run's bit length as the symbol, then its low bits
+    def eobRun(n: Int): Unit = {
+      val nbits = 31 - Integer.numberOfLeadingZeros(n)
+      out.sym(jAcProg, nbits << 4)
+      if (nbits > 0) out.put(n & ((1 << nbits) - 1), nbits)
+    }
     def acFirstScan(c: Int, ss: Int, se: Int, al: Int): Unit = {
-      sosHeader(Seq(c), ss, se, 0, al)
-      val wtr = new JBitW(out)
-      val ac = if (c == 0) acC else acK
+      sos(Seq(c), ss, se, 0, al)
       var eobrun = 0
-      def emitEobrun(): Unit = if (eobrun > 0) {
-        val nbits = 31 - Integer.numberOfLeadingZeros(eobrun)
-        val (cd, ln) = ac(nbits << 4); wtr.put(cd, ln)
-        if (nbits > 0) wtr.put(eobrun & ((1 << nbits) - 1), nbits)
-        eobrun = 0
-      }
+      def emitEobrun(): Unit = if (eobrun > 0) { eobRun(eobrun); eobrun = 0 }
       var unit = 0
-      rst = 0
-      for (by <- 0 until bH(c); bx <- 0 until bW(c)) {
-        if (restartInterval > 0 && unit > 0 &&
-          unit % restartInterval == 0) { emitEobrun(); restart(wtr) }
-        val zz = blks(c)(by * padW(c) + bx)
+      for (by <- 0 until f.bH(c); bx <- 0 until f.bW(c)) {
+        if (restartDue(unit)) { emitEobrun(); out.restart() }
+        val zz = blks(c)(by * f.padW(c) + bx)
         var r = 0
         var k = ss
         while (k <= se) {
@@ -1607,11 +1647,8 @@ object Multimodal {
           if (v == 0) r += 1
           else {
             emitEobrun()
-            while (r > 15) { val (cd, ln) = ac(0xf0); wtr.put(cd, ln); r -= 16 }
-            val sz = mag(v)
-            val (cd, ln) = ac((r << 4) | sz)
-            wtr.put(cd, ln)
-            wtr.put(if (v < 0) v + (1 << sz) - 1 else v, sz)
+            while (r > 15) { out.sym(jAcProg, 0xf0); r -= 16 }
+            out.value(jAcProg, r, v)
             r = 0
           }
           k += 1
@@ -1620,28 +1657,21 @@ object Multimodal {
         unit += 1
       }
       emitEobrun()
-      wtr.pad()
+      out.pad()
     }
     def acRefineScan(c: Int, ss: Int, se: Int, al: Int): Unit = {
-      sosHeader(Seq(c), ss, se, al + 1, al)
-      val wtr = new JBitW(out)
-      val ac = if (c == 0) acC else acK
+      sos(Seq(c), ss, se, al + 1, al)
       var eobrun = 0
       val pendingBE = scala.collection.mutable.ArrayBuffer.empty[Int]
       def emitEobrun(): Unit = if (eobrun > 0) {
-        val nbits = 31 - Integer.numberOfLeadingZeros(eobrun)
-        val (cd, ln) = ac(nbits << 4); wtr.put(cd, ln)
-        if (nbits > 0) wtr.put(eobrun & ((1 << nbits) - 1), nbits)
-        eobrun = 0
-        pendingBE.foreach(bb => wtr.put(bb, 1)); pendingBE.clear()
+        eobRun(eobrun); eobrun = 0
+        pendingBE.foreach(bb => out.put(bb, 1)); pendingBE.clear()
       }
       var unit = 0
-      rst = 0
       val absv = new Array[Int](64)
-      for (by <- 0 until bH(c); bx <- 0 until bW(c)) {
-        if (restartInterval > 0 && unit > 0 &&
-          unit % restartInterval == 0) { emitEobrun(); restart(wtr) }
-        val zz = blks(c)(by * padW(c) + bx)
+      for (by <- 0 until f.bH(c); bx <- 0 until f.bW(c)) {
+        if (restartDue(unit)) { emitEobrun(); out.restart() }
+        val zz = blks(c)(by * f.padW(c) + bx)
         var eobIdx = 0 // last newly-nonzero index (|v|>>Al == 1)
         var k = ss
         while (k <= se) {
@@ -1652,7 +1682,7 @@ object Multimodal {
         }
         var r = 0
         val br = scala.collection.mutable.ArrayBuffer.empty[Int]
-        def flushBr(): Unit = { br.foreach(bb => wtr.put(bb, 1)); br.clear() }
+        def flushBr(): Unit = { br.foreach(bb => out.put(bb, 1)); br.clear() }
         k = ss
         while (k <= se) {
           val a = absv(k)
@@ -1661,14 +1691,15 @@ object Multimodal {
             // ZRLs only when they can't fold into the trailing EOB
             while (r > 15 && k <= eobIdx) {
               emitEobrun()
-              val (cd, ln) = ac(0xf0); wtr.put(cd, ln); r -= 16
+              out.sym(jAcProg, 0xf0); r -= 16
               flushBr()
             }
             if (a > 1) br += (a & 1) // history-nonzero: correction bit
             else {
               emitEobrun()
-              val (cd, ln) = ac((r << 4) | 1); wtr.put(cd, ln)
-              wtr.put(if (zz(k) < 0) 0 else 1, 1)
+              // newly nonzero: magnitude 1 after the point transform,
+              // so category 1 with the sign as its one bit
+              out.value(jAcProg, r, if (zz(k) < 0) -1 else 1)
               flushBr()
               r = 0
             }
@@ -1682,387 +1713,190 @@ object Multimodal {
         unit += 1
       }
       emitEobrun()
-      wtr.pad()
+      out.pad()
     }
     dcScan(0, 1)
     for (c <- 0 until nComp) acFirstScan(c, 1, 5, 1)
     for (c <- 0 until nComp) acFirstScan(c, 6, 63, 1)
     dcScan(1, 0)
     for (c <- 0 until nComp) acRefineScan(c, 1, 63, 0)
-    b(0xff); b(0xd9)
-    out.toByteArray
+    out.finish()
   }
 
-  /** PROGRESSIVE JPEG decoder (SOF2) — the spectral-selection +
-    * successive-approximation passes over the baseline decoder's
-    * Huffman/IDCT machinery (r9 VERDICT task 5, closing the last
-    * image-family stub route): quantized coefficients accumulate in
-    * per-component block stores across every scan (DC first/refine,
-    * interleaved or single-component; AC first with EOB-run coding;
-    * AC refine with the correction-bit advance walk — T.81 G.2 /
-    * libjpeg's decode_mcu_AC_refine shape), tables may be redefined
-    * between scans, restarts reset DC predictors AND the EOB run, and
-    * the back half (dequant, inverse zigzag, IDCT, A.1.1 crop,
-    * replication upsampling) is byte-identical in contract to
-    * [[decodeJpegBaseline]] — MultimodalSpec pins plane-for-plane
-    * equality between a progressive encode and a baseline encode of
-    * the SAME coefficient blocks, including irrational AC values.
-    * Scope matches baseline: 8-bit, luma 1-2×1-2, chroma 1×1; other
-    * SOFn frame types are rejected loudly by marker name. */
+  /** PROGRESSIVE JPEG decoder (SOF2) — spectral selection + successive
+    * approximation over the shared walk, entropy reader and back half:
+    * quantized coefficients accumulate in the per-component store
+    * across every scan ([[jProgressiveScan]]), tables may be redefined
+    * between scans, and reconstruction is [[decodeJpegBaseline]]'s —
+    * MultimodalSpec pins plane-for-plane equality between a
+    * progressive encode and a baseline encode of the SAME coefficient
+    * blocks, including irrational AC values. Scope matches baseline;
+    * other SOFn frame types are rejected by name. */
   def decodeJpegProgressive(bytes: Array[Byte]): DecodedJpeg = {
-    // bounds-checked reads: a truncation anywhere (marker length
-    // fields included — the multi-scan walk reads far more headers
-    // than baseline) must surface as the loud require, never an
-    // ArrayIndexOutOfBoundsException
-    def u8(o: Int): Int = {
-      require(o >= 0 && o < bytes.length, s"truncated JPEG at $o")
-      bytes(o) & 0xff
+    val walk = new JpegWalk(bytes, _ == 0xc2)
+    var f: JFrame = null
+    var coefs: Array[Array[Int]] = null
+    var m = walk.next()
+    while (m != 0xd9) {
+      if (m == 0xda) {
+        require(f != null, "SOS before SOF")
+        walk.at = jProgressiveScan(bytes, walk, f, coefs)
+      } else {
+        f = jDctFrame(bytes, walk.seg, "progressive")
+        coefs = f.newCoefs()
+      }
+      m = walk.next()
     }
-    def be16(o: Int): Int = u8(o) << 8 | u8(o + 1)
-    require(bytes.length >= 4 && u8(0) == 0xff && u8(1) == 0xd8,
-      "not a JPEG")
-    val qt = new Array[Array[Int]](4)
-    val dcT = new Array[JHuffDec](4); val acT = new Array[JHuffDec](4)
-    var w = -1; var h = -1; var nComp = 0; var ri = 0
-    var compQ: Array[Int] = null
-    var compH: Array[Int] = null; var compV: Array[Int] = null
-    var coefs: Array[Array[Int]] = null // per comp, padded grid × 64 (zigzag)
-    var padW: Array[Int] = null; var padH: Array[Int] = null
-    var bWs: Array[Int] = null; var bHs: Array[Int] = null
-    var cw: Array[Int] = null; var ch: Array[Int] = null
-    var mcusX = 0; var mcusY = 0
-    val preds = new Array[Int](4)
-    var i = 2
-    var sawEoi = false
-    while (!sawEoi) {
-      require(i + 1 < bytes.length && u8(i) == 0xff, "marker expected")
-      // B.1.1.2 fill bytes: any number of FFs may precede the marker
-      while (i + 2 < bytes.length && u8(i + 1) == 0xff) i += 1
-      val m = u8(i + 1); i += 2
-      m match {
-        case 0xd9 => sawEoi = true
-        case 0xdb =>
-          val end = i + be16(i); var o = i + 2
-          while (o < end) {
-            require((u8(o) >> 4) == 0, "only 8-bit quant tables")
-            val id = u8(o) & 0x0f
-            qt(id) = Array.tabulate(64)(k => u8(o + 1 + k))
-            o += 65
-          }
-          i = end
-        case 0xc4 =>
-          val end = i + be16(i); var o = i + 2
-          while (o < end) {
-            val cls = u8(o) >> 4; val id = u8(o) & 0x0f
-            val bits = Array.tabulate(16)(k => u8(o + 1 + k))
-            val n = bits.sum
-            val vals = Array.tabulate(n)(k => u8(o + 17 + k))
-            val t = new JHuffDec(bits, vals)
-            if (cls == 0) dcT(id) = t else acT(id) = t
-            o += 17 + n
-          }
-          i = end
-        case 0xc2 =>
-          require(u8(i + 2) == 8, "only 8-bit precision")
-          h = be16(i + 3); w = be16(i + 5); nComp = u8(i + 7)
-          require(w > 0 && h > 0, s"bad dims ${w}x$h")
-          compQ = new Array[Int](nComp)
-          compH = new Array[Int](nComp); compV = new Array[Int](nComp)
-          for (c <- 0 until nComp) {
-            val samp = u8(i + 9 + 3 * c)
-            compH(c) = samp >> 4; compV(c) = samp & 0x0f
-            if (c == 0) require(compH(0) >= 1 && compH(0) <= 2 &&
-              compV(0) >= 1 && compV(0) <= 2,
-              s"luma sampling ${compH(0)}x${compV(0)}: progressive " +
-                "decoder supports 1-2 in each axis")
-            else require(samp == 0x11,
-              "chroma sampling beyond 1x1: needs the codec-library route")
-            compQ(c) = u8(i + 10 + 3 * c)
-          }
-          val hmax = compH.max; val vmax = compV.max
-          mcusX = (w + 8 * hmax - 1) / (8 * hmax)
-          mcusY = (h + 8 * vmax - 1) / (8 * vmax)
-          padW = Array.tabulate(nComp)(c => mcusX * compH(c))
-          padH = Array.tabulate(nComp)(c => mcusY * compV(c))
-          cw = Array.tabulate(nComp)(c => (w * compH(c) + hmax - 1) / hmax)
-          ch = Array.tabulate(nComp)(c => (h * compV(c) + vmax - 1) / vmax)
-          bWs = Array.tabulate(nComp)(c => (cw(c) + 7) / 8)
-          bHs = Array.tabulate(nComp)(c => (ch(c) + 7) / 8)
-          coefs = Array.tabulate(nComp)(c =>
-            new Array[Int](padW(c) * padH(c) * 64))
-          i += be16(i)
-        case 0xc0 | 0xc1 =>
-          throw new IllegalArgumentException(
-            "sequential JPEG: use decodeJpegBaseline")
-        case 0xc3 =>
-          throw new IllegalArgumentException(
-            "lossless JPEG: use decodeJpegLossless")
-        case sof if sof >= 0xc1 && sof <= 0xcf &&
-          sof != 0xc4 && sof != 0xc8 && sof != 0xcc =>
-          throw new IllegalArgumentException(
-            f"unsupported JPEG frame type SOF${sof - 0xc0}%d " +
-              f"(marker 0xff$sof%02x): extended-sequential/" +
-              "arithmetic streams need the codec-library route")
-        case 0xdd => ri = be16(i + 2); i += be16(i)
-        case 0xda =>
-          require(nComp > 0, "SOS before SOF")
-          val ns = u8(i + 2)
-          val scanComps = new Array[Int](ns)
-          val scanDc = new Array[Int](ns); val scanAc = new Array[Int](ns)
+    require(f != null, "no SOF2 frame before EOI")
+    jReconstruct(f, walk.qt, coefs, walk.ri)
+  }
+
+  /** One progressive scan into `coefs`: DC first / refine over the
+    * interleaved MCU grid or one component's block grid; AC first with
+    * EOB-run coding; AC refine with the correction-bit advance walk
+    * (T.81 G.2 / libjpeg's decode_mcu_AC_refine shape). Restarts reset
+    * the DC predictors AND the EOB run. Returns the offset of the
+    * marker after the scan's entropy data. */
+  private def jProgressiveScan(b: Array[Byte], walk: JpegWalk, f: JFrame,
+      coefs: Array[Array[Int]]): Int = {
+    val at = walk.seg
+    val ns = jU8(b, at + 2)
+    require(ns > 0, "scan without components")
+    val comps = Array.tabulate(ns) { j =>
+      val id = jU8(b, at + 3 + 2 * j)
+      require(id >= 1 && id <= f.nComp, s"unknown component $id")
+      id - 1
+    }
+    val sel = Array.tabulate(ns)(j => jU8(b, at + 4 + 2 * j))
+    val ss = jU8(b, at + 3 + 2 * ns)
+    val se = jU8(b, at + 4 + 2 * ns)
+    val ah = jU8(b, at + 5 + 2 * ns) >> 4; val al = jU8(b, at + 5 + 2 * ns) & 0x0f
+    require(if (ss == 0) se == 0 else ns == 1,
+      "progressive scan: DC scans have Se=0, AC scans one component")
+    require(se < 64 && ss <= se, s"bad spectral band $ss..$se")
+    val in = new JBitR(b, walk.at)
+    val ri = walk.ri
+    val preds = new Array[Int](ns)
+    var eobrun = 0
+    def restartIfDue(unit: Int): Unit =
+      if (ri > 0 && unit > 0 && unit % ri == 0) {
+        in.restart(); java.util.Arrays.fill(preds, 0); eobrun = 0
+      }
+    if (ss == 0) {
+      // DC scan — interleaved MCU order, or one component's grid
+      val dcs = sel.map(s => walk.dcT(s >> 4))
+      require(ah != 0 || !dcs.contains(null), "missing DC Huffman table")
+      def dcBlock(j: Int, c: Int, off: Int): Unit =
+        if (ah == 0) {
+          preds(j) += in.extend(in.decodeSym(dcs(j)))
+          coefs(c)(off) = preds(j) << al
+        } else if (in.bit() == 1) coefs(c)(off) |= (1 << al)
+      var mcu = 0
+      if (ns > 1) {
+        for (my <- 0 until f.mcusY; mx <- 0 until f.mcusX) {
+          restartIfDue(mcu)
           for (j <- 0 until ns) {
-            val id = u8(i + 3 + 2 * j)
-            val c = (0 until nComp).find(_ + 1 == id).getOrElse(
-              throw new IllegalArgumentException(s"unknown component $id"))
-            scanComps(j) = c
-            scanDc(j) = u8(i + 4 + 2 * j) >> 4
-            scanAc(j) = u8(i + 4 + 2 * j) & 0x0f
+            val c = comps(j)
+            for (bv <- 0 until f.sV(c); bu <- 0 until f.sH(c))
+              dcBlock(j, c,
+                ((my * f.sV(c) + bv) * f.padW(c) + mx * f.sH(c) + bu) * 64)
           }
-          val ss = u8(i + 3 + 2 * ns)
-          val se = u8(i + 4 + 2 * ns)
-          val ahAl = u8(i + 5 + 2 * ns)
-          val ah = ahAl >> 4; val al = ahAl & 0x0f
-          require(if (ss == 0) se == 0 else ns == 1,
-            "progressive scan: DC scans have Se=0, AC scans one component")
-          require(se < 64 && ss <= se, s"bad spectral band $ss..$se")
-          var pos = i + be16(i)
-          // entropy reader (stuffed bytes, B.1.1.5)
-          var acc = 0; var nb = 0
-          def bit(): Int = {
-            if (nb == 0) {
-              require(pos < bytes.length, "truncated entropy data")
-              val v = u8(pos); pos += 1
-              if (v == 0xff) {
-                require(pos < bytes.length, "truncated after FF")
-                val nxt = u8(pos)
-                require(nxt == 0x00,
-                  f"marker 0xff$nxt%02x inside entropy-coded data")
-                pos += 1
-              }
-              acc = v; nb = 8
-            }
-            nb -= 1; (acc >> nb) & 1
-          }
-          def bits(n: Int): Int = { var v = 0; var k = 0
-            while (k < n) { v = (v << 1) | bit(); k += 1 }; v }
-          def decodeSym(t: JHuffDec): Int = {
-            var code = bit(); var len = 1
-            while (!(t.maxCode(len) >= 0 && code <= t.maxCode(len))) {
-              require(len < 16, "invalid Huffman code")
-              code = (code << 1) | bit(); len += 1
-            }
-            t.vals(t.valPtr(len) + code - t.minCode(len))
-          }
-          def extend(v: Int, t: Int): Int =
-            if (t == 0) 0
-            else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
-          var eobrun = 0
-          var rstExpect = 0
-          def expectRst(): Unit = {
-            nb = 0 // byte-align (B.2.1.2)
-            while (pos + 1 < bytes.length && u8(pos) == 0xff &&
-              u8(pos + 1) == 0x00) pos += 2
-            require(pos + 1 < bytes.length && u8(pos) == 0xff &&
-              u8(pos + 1) == 0xd0 + rstExpect,
-              f"expected RST$rstExpect%d at $pos")
-            pos += 2
-            rstExpect = (rstExpect + 1) % 8
-            java.util.Arrays.fill(preds, 0)
-            eobrun = 0
-          }
-          def dcDecodeBlock(c: Int, j: Int, blkOff: Int): Unit = {
-            val zz = coefs(c)
-            if (ah == 0) {
-              val dct = dcT(scanDc(j))
-              require(dct != null, "missing DC Huffman table")
-              val t = decodeSym(dct)
-              preds(j) += extend(bits(t), t)
-              zz(blkOff) = preds(j) << al
-            } else {
-              if (bit() == 1) zz(blkOff) |= (1 << al)
-            }
-          }
-          if (ss == 0) {
-            // DC scan — interleaved MCU order, or one component's grid
-            var mcu = 0
-            java.util.Arrays.fill(preds, 0)
-            if (ns > 1) {
-              for (my <- 0 until mcusY; mx <- 0 until mcusX) {
-                if (ri > 0 && mcu > 0 && mcu % ri == 0) expectRst()
-                for (j <- 0 until ns) {
-                  val c = scanComps(j)
-                  for (bv <- 0 until compV(c); bu <- 0 until compH(c))
-                    dcDecodeBlock(c, j,
-                      ((my * compV(c) + bv) * padW(c)
-                        + mx * compH(c) + bu) * 64)
-                }
-                mcu += 1
-              }
-            } else {
-              val c = scanComps(0)
-              for (by <- 0 until bHs(c); bx <- 0 until bWs(c)) {
-                if (ri > 0 && mcu > 0 && mcu % ri == 0) expectRst()
-                dcDecodeBlock(c, 0, (by * padW(c) + bx) * 64)
-                mcu += 1
-              }
-            }
-          } else {
-            // AC scan — one component, ceil block grid (A.2.2)
-            val c = scanComps(0)
-            val act = acT(scanAc(0))
-            require(act != null, "missing AC Huffman table")
-            val zz = coefs(c)
-            val p1 = 1 << al; val m1 = -(1 << al)
-            var unit = 0
-            for (by <- 0 until bHs(c); bx <- 0 until bWs(c)) {
-              if (ri > 0 && unit > 0 && unit % ri == 0) expectRst()
-              val off = (by * padW(c) + bx) * 64
-              if (ah == 0) {
-                // AC first pass (G.2.1 / decode_mcu_AC_first)
-                if (eobrun > 0) eobrun -= 1
-                else {
-                  var k = ss
-                  while (k <= se) {
-                    val sym = decodeSym(act)
-                    val r = sym >> 4; val sz = sym & 0x0f
-                    if (sz != 0) {
-                      k += r
-                      require(k <= se, "AC run past band end")
-                      zz(off + k) = extend(bits(sz), sz) << al
-                      k += 1
-                    } else if (r == 15) k += 16 // ZRL
-                    else {
-                      eobrun = (1 << r) + (if (r > 0) bits(r) else 0) - 1
-                      k = se + 1
-                    }
-                  }
-                }
-              } else {
-                // AC refinement pass (G.2.2 / decode_mcu_AC_refine)
-                var k = ss
-                if (eobrun == 0) {
-                  var atEob = false
-                  while (k <= se && !atEob) {
-                    val sym = decodeSym(act)
-                    var r = sym >> 4; val sz = sym & 0x0f
-                    var newVal = 0
-                    if (sz == 0) {
-                      if (r != 15) {
-                        eobrun = (1 << r) + (if (r > 0) bits(r) else 0)
-                        atEob = true
-                      } // r == 15: ZRL — 16 zero-history skips below
-                    } else {
-                      require(sz == 1, s"refine symbol size $sz")
-                      newVal = if (bit() == 1) p1 else m1
-                    }
-                    if (!atEob) {
-                      // advance walk: correction bits for nonzero-
-                      // history coefficients passed, r zero-history
-                      // skips, then place the new value (if any)
-                      var placed = false
-                      while (k <= se && !placed) {
-                        val cv = zz(off + k)
-                        if (cv != 0) {
-                          if (bit() == 1 && (cv & p1) == 0)
-                            zz(off + k) = cv + (if (cv >= 0) p1 else m1)
-                        } else {
-                          if (r == 0) {
-                            if (newVal != 0) zz(off + k) = newVal
-                            placed = true
-                          } else r -= 1
-                        }
-                        k += 1
-                      }
-                    }
-                  }
-                }
-                if (eobrun > 0) {
-                  // EOB-run tail: correction bits only, rest of band
-                  while (k <= se) {
-                    val cv = zz(off + k)
-                    if (cv != 0 && bit() == 1 && (cv & p1) == 0)
-                      zz(off + k) = cv + (if (cv >= 0) p1 else m1)
-                    k += 1
-                  }
-                  eobrun -= 1
-                }
-              }
-              unit += 1
-            }
-          }
-          // step over trailing stuffed pad bytes to the next marker
-          while (pos + 1 < bytes.length && u8(pos) == 0xff &&
-            u8(pos + 1) == 0x00) pos += 2
-          i = pos
-        case _ if m == 0x01 || (m >= 0xd0 && m <= 0xd7) =>
-        case _ => i += be16(i)
+          mcu += 1
+        }
+      } else {
+        val c = comps(0)
+        for (by <- 0 until f.bH(c); bx <- 0 until f.bW(c)) {
+          restartIfDue(mcu)
+          dcBlock(0, c, (by * f.padW(c) + bx) * 64)
+          mcu += 1
+        }
       }
-    }
-    require(coefs != null, "no SOF2 frame before EOI")
-    // back half — dequant + inverse zigzag + IDCT + crop + upsample,
-    // the baseline contract verbatim
-    val cosT = Array.tabulate(8, 8)((x, u) =>
-      math.cos((2 * x + 1) * u * math.Pi / 16))
-    val cu = Array.tabulate(8)(u => if (u == 0) 1.0 / math.sqrt(2.0) else 1.0)
-    val hmax = compH.max; val vmax = compV.max
-    val sub = Array.tabulate(nComp)(c => new Array[Int](cw(c) * ch(c)))
-    val blk = new Array[Int](64)
-    for (c <- 0 until nComp) {
-      val q = qt(compQ(c))
-      require(q != null, s"missing quant table ${compQ(c)}")
+    } else {
+      // AC scan — one component, ceil block grid (A.2.2)
+      val c = comps(0)
+      val act = walk.acT(sel(0) & 0x0f)
+      require(act != null, "missing AC Huffman table")
       val zz = coefs(c)
-      for (by <- 0 until padH(c); bx <- 0 until padW(c)) {
-        val off = (by * padW(c) + bx) * 64
-        java.util.Arrays.fill(blk, 0)
-        var k = 0
-        while (k < 64) {
-          val v = zz(off + k)
-          if (v != 0) blk(jZigzag(k)) = v * q(k)
-          k += 1
-        }
-        val x0 = bx * 8; val y0 = by * 8
-        val plane = sub(c)
-        var y = 0
-        while (y < 8 && y0 + y < ch(c)) {
-          var x = 0
-          while (x < 8 && x0 + x < cw(c)) {
-            var s = 0.0
-            var u = 0
-            while (u < 8) {
-              var v = 0
-              while (v < 8) {
-                val f = blk(v * 8 + u)
-                if (f != 0) s += cu(u) * cu(v) * f * cosT(x)(u) * cosT(y)(v)
-                v += 1
+      val p1 = 1 << al; val m1 = -(1 << al)
+      var unit = 0
+      for (by <- 0 until f.bH(c); bx <- 0 until f.bW(c)) {
+        restartIfDue(unit)
+        val off = (by * f.padW(c) + bx) * 64
+        if (ah == 0) {
+          // AC first pass (G.2.1 / decode_mcu_AC_first)
+          if (eobrun > 0) eobrun -= 1
+          else {
+            var k = ss
+            while (k <= se) {
+              val sym = in.decodeSym(act)
+              val r = sym >> 4; val sz = sym & 0x0f
+              if (sz != 0) {
+                k += r
+                require(k <= se, "AC run past band end")
+                zz(off + k) = in.extend(sz) << al
+                k += 1
+              } else if (r == 15) k += 16 // ZRL
+              else {
+                eobrun = (1 << r) + in.bits(r) - 1
+                k = se + 1
               }
-              u += 1
             }
-            val p = math.round(s / 4.0 + 128.0).toInt
-            plane((y0 + y) * cw(c) + (x0 + x)) =
-              math.max(0, math.min(255, p))
-            x += 1
           }
-          y += 1
+        } else {
+          // AC refinement pass (G.2.2 / decode_mcu_AC_refine)
+          var k = ss
+          if (eobrun == 0) {
+            var atEob = false
+            while (k <= se && !atEob) {
+              val sym = in.decodeSym(act)
+              var r = sym >> 4; val sz = sym & 0x0f
+              var newVal = 0
+              if (sz == 0) {
+                if (r != 15) {
+                  eobrun = (1 << r) + in.bits(r)
+                  atEob = true
+                } // r == 15: ZRL — 16 zero-history skips below
+              } else {
+                require(sz == 1, s"refine symbol size $sz")
+                newVal = if (in.bit() == 1) p1 else m1
+              }
+              if (!atEob) {
+                // advance walk: correction bits for nonzero-history
+                // coefficients passed, r zero-history skips, then
+                // place the new value (if any)
+                var placed = false
+                while (k <= se && !placed) {
+                  val cv = zz(off + k)
+                  if (cv != 0) {
+                    if (in.bit() == 1 && (cv & p1) == 0)
+                      zz(off + k) = cv + (if (cv >= 0) p1 else m1)
+                  } else {
+                    if (r == 0) {
+                      if (newVal != 0) zz(off + k) = newVal
+                      placed = true
+                    } else r -= 1
+                  }
+                  k += 1
+                }
+              }
+            }
+          }
+          if (eobrun > 0) {
+            // EOB-run tail: correction bits only, rest of band
+            while (k <= se) {
+              val cv = zz(off + k)
+              if (cv != 0 && in.bit() == 1 && (cv & p1) == 0)
+                zz(off + k) = cv + (if (cv >= 0) p1 else m1)
+              k += 1
+            }
+            eobrun -= 1
+          }
         }
+        unit += 1
       }
     }
-    val planes = Array.tabulate(nComp) { c =>
-      if (cw(c) == w && ch(c) == h) sub(c)
-      else {
-        val out = new Array[Int](w * h)
-        val sx = hmax / compH(c); val sy = vmax / compV(c)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            out(y * w + x) = sub(c)((y / sy) * cw(c) + (x / sx))
-            x += 1
-          }
-          y += 1
-        }
-        out
-      }
-    }
-    DecodedJpeg(w, h, nComp, ri, planes)
+    in.align() // step over trailing stuffed pad bytes to the next marker
+    in.pos
   }
 
   /** T.81 Annex H lossless prediction: neighbors a (left), b (above),
@@ -2099,37 +1933,12 @@ object Multimodal {
     require(nComp == 1 || nComp == 3, s"nComp=$nComp")
     require(predictor >= 1 && predictor <= 7, s"predictor=$predictor")
     require(pt >= 0 && pt < 8, s"point transform $pt")
-    val out = new java.io.ByteArrayOutputStream()
-    def b(v: Int): Unit = out.write(v & 0xff)
-    def be16(v: Int): Unit = { b(v >> 8); b(v) }
-    def seg(marker: Int, payload: Array[Byte]): Unit = {
-      b(0xff); b(marker); be16(payload.length + 2); out.write(payload)
-    }
-    b(0xff); b(0xd8)
-    seg(0xe0, "JFIF ".getBytes("US-ASCII") ++
-      Array[Byte](1, 1, 0, 0, 1, 0, 1, 0, 0))
-    val sof = new java.io.ByteArrayOutputStream()
-    sof.write(8); sof.write(h >> 8); sof.write(h & 0xff)
-    sof.write(w >> 8); sof.write(w & 0xff); sof.write(nComp)
-    for (c <- 0 until nComp) {
-      sof.write(c + 1); sof.write(0x11); sof.write(0) // Tq unused (H.1)
-    }
-    seg(0xc3, sof.toByteArray)
-    def dht(cls: Int, id: Int, spec: (Array[Int], Array[Int])): Unit =
-      seg(0xc4, Array[Byte](((cls << 4) | id).toByte) ++
-        spec._1.map(_.toByte) ++ spec._2.map(_.toByte))
-    dht(0, 0, jDcLumaSpec)
-    if (nComp > 1) dht(0, 1, jDcChromaSpec)
-    val sos = new java.io.ByteArrayOutputStream()
-    sos.write(nComp)
-    for (c <- 0 until nComp) {
-      sos.write(c + 1); sos.write(if (c == 0) 0x00 else 0x10)
-    }
-    sos.write(predictor); sos.write(0); sos.write(pt)
-    seg(0xda, sos.toByteArray)
-    val dcC = jHuffCodes(jDcLumaSpec); val dcK = jHuffCodes(jDcChromaSpec)
-    def mag(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    val wtr = new JBitW(out)
+    val out = new JWriter
+    out.start()
+    out.sof(0xc3, w, h, Array.fill(nComp)(0x11), new Array[Int](nComp)) // Tq unused (H.1)
+    out.dht(0, 0, jDcLuma)
+    if (nComp > 1) out.dht(0, 1, jDcChroma)
+    out.sos(0 until nComp, c => if (c == 0) 0x00 else 0x10, predictor, 0, pt)
     val prev = Array.ofDim[Int](nComp, w)
     val cur = Array.ofDim[Int](nComp, w)
     for (y <- 0 until h) {
@@ -2140,139 +1949,64 @@ object Multimodal {
         val cc = if (x > 0 && y > 0) prev(c)(x - 1) else 0
         val px = jPredict(a, bb, cc, x, y, predictor, 8, pt)
         cur(c)(x) = s
-        val diff = s - px
-        val t = mag(diff)
-        val (cd, ln) = (if (c == 0) dcC else dcK)(t)
-        wtr.put(cd, ln)
-        if (t > 0) wtr.put(if (diff < 0) diff + (1 << t) - 1 else diff, t)
+        out.value(if (c == 0) jDcLuma else jDcChroma, 0, s - px)
       }
       for (c <- 0 until nComp) Array.copy(cur(c), 0, prev(c), 0, w)
     }
-    wtr.pad()
-    b(0xff); b(0xd9)
-    out.toByteArray
+    out.finish()
   }
 
   /** LOSSLESS JPEG decoder (SOF3) — predictive reconstruction per
     * T.81 Annex H over the shared [[jPredict]] rules, residuals
-    * through the same canonical-Huffman/EXTEND machinery as the DC
-    * path, mod-2¹⁶ reconstruction, point-transform upscale on output.
-    * By definition EXACT: every decoded sample equals the encoder's
-    * input bit-for-bit, so the cross-engine oracle can pin ARBITRARY
-    * pixel content, not just the DCT fixtures' per-block constants.
-    * Scope: 8-bit precision, 1×1 sampling, single interleaved scan,
-    * no restarts (a DRI in a lossless stream rejects loudly — the
-    * spec's restart-reset rules for lossless are a codec-library
-    * corner this sandbox has no fixture source for). */
+    * through the shared entropy reader (the DC path's
+    * canonical-Huffman/EXTEND machinery), mod-2¹⁶ reconstruction,
+    * point-transform upscale on output. By definition EXACT: every
+    * decoded sample equals the encoder's input bit-for-bit, so the
+    * cross-engine oracle can pin ARBITRARY pixel content, not just the
+    * DCT fixtures' per-block constants. Scope: 8-bit precision, 1×1
+    * sampling, single interleaved scan, no restarts (a DRI in a
+    * lossless stream rejects loudly — the spec's restart-reset rules
+    * for lossless are a codec-library corner this sandbox has no
+    * fixture source for). */
   def decodeJpegLossless(bytes: Array[Byte]): DecodedJpeg = {
-    def u8(o: Int): Int = {
-      require(o >= 0 && o < bytes.length, s"truncated JPEG at $o")
-      bytes(o) & 0xff
+    val walk = new JpegWalk(bytes, _ == 0xc3)
+    var w = -1; var h = -1; var nComp = 0
+    var m = walk.next()
+    while (m != 0xda) {
+      require(m != 0xd9, "EOI before SOS")
+      val at = walk.seg
+      val prec = jU8(bytes, at + 2)
+      require(prec == 8, s"only 8-bit lossless (precision $prec)")
+      h = jBe16(bytes, at + 3); w = jBe16(bytes, at + 5)
+      nComp = jU8(bytes, at + 7)
+      require(w > 0 && h > 0, s"bad dims ${w}x$h")
+      for (c <- 0 until nComp)
+        require(jU8(bytes, at + 9 + 3 * c) == 0x11,
+          "lossless decoder supports 1x1 sampling only")
+      m = walk.next()
     }
-    def be16(o: Int): Int = u8(o) << 8 | u8(o + 1)
-    require(bytes.length >= 4 && u8(0) == 0xff && u8(1) == 0xd8,
-      "not a JPEG")
-    val dcT = new Array[JHuffDec](4)
-    var w = -1; var h = -1; var nComp = 0; var prec = -1
-    var i = 2
-    var sosAt = -1
-    var scanDc: Array[Int] = null
-    var psel = -1; var pt = -1
-    while (sosAt < 0) {
-      require(i + 1 < bytes.length && u8(i) == 0xff, "marker expected")
-      while (i + 2 < bytes.length && u8(i + 1) == 0xff) i += 1
-      val m = u8(i + 1); i += 2
-      m match {
-        case 0xd9 => throw new IllegalArgumentException("EOI before SOS")
-        case 0xc4 =>
-          val end = i + be16(i); var o = i + 2
-          while (o < end) {
-            val cls = u8(o) >> 4; val id = u8(o) & 0x0f
-            val bits = Array.tabulate(16)(k => u8(o + 1 + k))
-            val n = bits.sum
-            val vals = Array.tabulate(n)(k => u8(o + 17 + k))
-            if (cls == 0) dcT(id) = new JHuffDec(bits, vals)
-            o += 17 + n
-          }
-          i = end
-        case 0xc3 =>
-          prec = u8(i + 2)
-          require(prec == 8, s"only 8-bit lossless (precision $prec)")
-          h = be16(i + 3); w = be16(i + 5); nComp = u8(i + 7)
-          require(w > 0 && h > 0, s"bad dims ${w}x$h")
-          for (c <- 0 until nComp)
-            require(u8(i + 9 + 3 * c) == 0x11,
-              "lossless decoder supports 1x1 sampling only")
-          i += be16(i)
-        case 0xc0 | 0xc1 | 0xc2 =>
-          throw new IllegalArgumentException(
-            "DCT JPEG: use decodeJpegBaseline/decodeJpegProgressive")
-        case sof if sof >= 0xc1 && sof <= 0xcf &&
-          sof != 0xc4 && sof != 0xc8 && sof != 0xcc =>
-          throw new IllegalArgumentException(
-            f"unsupported JPEG frame type SOF${sof - 0xc0}%d " +
-              f"(marker 0xff$sof%02x): extended-sequential/" +
-              "arithmetic streams need the codec-library route")
-        case 0xdd =>
-          throw new IllegalArgumentException(
-            "restart intervals in lossless JPEG: codec-library route")
-        case 0xda =>
-          require(nComp > 0, "SOS before SOF")
-          val ns = u8(i + 2)
-          require(ns == nComp, "lossless decoder expects one full scan")
-          scanDc = new Array[Int](ns)
-          for (c <- 0 until ns) scanDc(c) = u8(i + 4 + 2 * c) >> 4
-          psel = u8(i + 3 + 2 * ns)
-          pt = u8(i + 5 + 2 * ns) & 0x0f
-          require(psel >= 1 && psel <= 7, s"predictor $psel")
-          sosAt = i + be16(i)
-          i = sosAt
-        case _ if m == 0x01 || (m >= 0xd0 && m <= 0xd7) =>
-        case _ => i += be16(i)
-      }
-    }
-    var pos = sosAt
-    var acc = 0; var nb = 0
-    def bit(): Int = {
-      if (nb == 0) {
-        require(pos < bytes.length, "truncated entropy data")
-        val v = u8(pos); pos += 1
-        if (v == 0xff) {
-          require(pos < bytes.length, "truncated after FF")
-          val nxt = u8(pos)
-          require(nxt == 0x00,
-            f"marker 0xff$nxt%02x inside entropy-coded data")
-          pos += 1
-        }
-        acc = v; nb = 8
-      }
-      nb -= 1; (acc >> nb) & 1
-    }
-    def bits(n: Int): Int = { var v = 0; var k = 0
-      while (k < n) { v = (v << 1) | bit(); k += 1 }; v }
-    def decodeSym(t: JHuffDec): Int = {
-      var code = bit(); var len = 1
-      while (!(t.maxCode(len) >= 0 && code <= t.maxCode(len))) {
-        require(len < 16, "invalid Huffman code")
-        code = (code << 1) | bit(); len += 1
-      }
-      t.vals(t.valPtr(len) + code - t.minCode(len))
-    }
-    def extend(v: Int, t: Int): Int =
-      if (t == 0) 0
-      else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
+    require(nComp > 0, "SOS before SOF")
+    require(walk.ri == 0,
+      "restart intervals in lossless JPEG: codec-library route")
+    val at = walk.seg
+    val ns = jU8(bytes, at + 2)
+    require(ns == nComp, "lossless decoder expects one full scan")
+    val dcs = Array.tabulate(ns)(c => walk.dcT(jU8(bytes, at + 4 + 2 * c) >> 4))
+    require(!dcs.contains(null), "missing Huffman table")
+    val psel = jU8(bytes, at + 3 + 2 * ns)
+    val pt = jU8(bytes, at + 5 + 2 * ns) & 0x0f
+    require(psel >= 1 && psel <= 7, s"predictor $psel")
+    val in = new JBitR(bytes, walk.at)
     val planes = Array.fill(nComp)(new Array[Int](w * h))
     val prev = Array.ofDim[Int](nComp, w)
     val cur = Array.ofDim[Int](nComp, w)
     val maxV = (1 << (8 - pt)) - 1
     for (y <- 0 until h) {
       for (x <- 0 until w; c <- 0 until nComp) {
-        val dct = dcT(scanDc(c))
-        require(dct != null, "missing Huffman table")
-        val t = decodeSym(dct)
+        val t = in.decodeSym(dcs(c))
         // category 16 (16-bit profiles) carries no magnitude bits and
         // means +32768 (H.1.2.2); unreachable at 8-bit but spec-true
-        val diff = if (t == 16) 32768 else extend(bits(t), t)
+        val diff = if (t == 16) 32768 else in.extend(t)
         val a = if (x > 0) cur(c)(x - 1) else 0
         val bb = if (y > 0) prev(c)(x) else 0
         val cc = if (x > 0 && y > 0) prev(c)(x - 1) else 0
@@ -2327,11 +2061,6 @@ object Multimodal {
       })
   }
 
-  /** Minimal structurally-valid GIF shell (GIF89a): signature, logical
-    * screen descriptor with true dimensions, a 2-entry global color
-    * table, an image descriptor, a token LZW data block, trailer. Like
-    * the JPEG shell: every header field is spec-correct (the sniffing
-    * surface); the pixel stream is filler (full LZW needs a codec). */
   /** GIF-variant LZW compression of an index stream (the real thing:
     * variable-width codes starting at m+1 bits, clear prefix, EOI
     * suffix, dictionary growth to 4096 then freeze, LSB-first bit
@@ -2475,24 +2204,25 @@ object Multimodal {
     * header-only shell, this round-trips through a full decode. */
   def encodeGif(w: Int, h: Int, idx: Int => Int): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def b(v: Int): Unit = out.write(v & 0xff)
-    def le16(v: Int): Unit = { b(v); b(v >> 8) }
     out.write("GIF89a".getBytes("US-ASCII"))
-    le16(w); le16(h)
-    b(0x81) // GCT present, 2 bits/pixel → 4 entries
-    b(0); b(0)
-    (0 until 4).foreach { j => b(j * 40 + 5); b(j * 40 + 10); b(j * 40 + 15) }
-    b(0x2c)
-    le16(0); le16(0); le16(w); le16(h); b(0) // no LCT, not interlaced
-    b(2) // LZW minimum code size
+    putLe16(out, w); putLe16(out, h)
+    out.write(0x81) // GCT present, 2 bits/pixel → 4 entries
+    out.write(0); out.write(0)
+    (0 until 4).foreach { j =>
+      out.write(j * 40 + 5); out.write(j * 40 + 10); out.write(j * 40 + 15)
+    }
+    out.write(0x2c)
+    putLe16(out, 0); putLe16(out, 0); putLe16(out, w); putLe16(out, h)
+    out.write(0) // no LCT, not interlaced
+    out.write(2) // LZW minimum code size
     val lzw = lzwCompress(Array.tabulate(w * h)(idx), 2)
     var o = 0
     while (o < lzw.length) {
       val n = math.min(255, lzw.length - o)
-      b(n); out.write(lzw, o, n); o += n
+      out.write(n); out.write(lzw, o, n); o += n
     }
-    b(0) // block terminator
-    b(0x3b)
+    out.write(0) // block terminator
+    out.write(0x3b)
     out.toByteArray
   }
 
@@ -2508,8 +2238,7 @@ object Multimodal {
     require(bytes.length >= 13, "truncated GIF")
     val magic = new String(bytes, 0, 6, "US-ASCII")
     require(magic == "GIF89a" || magic == "GIF87a", s"not a GIF: $magic")
-    def le16(o: Int): Int = (bytes(o) & 0xff) | (bytes(o + 1) & 0xff) << 8
-    val w = le16(6); val h = le16(8)
+    val w = le16(bytes, 6); val h = le16(bytes, 8)
     val packed = bytes(10) & 0xff
     var o = 13
     var palette: Array[Int] = Array.empty
@@ -2528,7 +2257,7 @@ object Multimodal {
       o += 1
     }
     require((bytes(o) & 0xff) == 0x2c, "no image descriptor")
-    val iw = le16(o + 5); val ih = le16(o + 7)
+    val iw = le16(bytes, o + 5); val ih = le16(bytes, o + 7)
     val ipacked = bytes(o + 9) & 0xff
     require((ipacked & 0x80) == 0, "local color tables unsupported here")
     require((ipacked & 0x40) == 0, "interlaced GIFs unsupported here")
@@ -2552,21 +2281,25 @@ object Multimodal {
     (w, h, idx.length.toLong, iSum, rgbSum)
   }
 
+  /** Minimal structurally-valid GIF shell (GIF89a): signature, logical
+    * screen descriptor with true dimensions, a 2-entry global color
+    * table, an image descriptor, a token LZW data block, trailer. Like
+    * the JPEG shell: every header field is spec-correct (the sniffing
+    * surface); the pixel stream is filler (full LZW needs a codec). */
   def encodeGifShell(w: Int, h: Int): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def b(v: Int): Unit = out.write(v & 0xff)
-    def le16(v: Int): Unit = { b(v); b(v >> 8) }
     out.write("GIF89a".getBytes("US-ASCII"))
-    le16(w); le16(h) // logical screen descriptor
-    b(0x80) // GCT present, 1 bit/pixel → 2 entries
-    b(0); b(0) // background color, aspect
-    (0 until 2 * 3).foreach(_ => b(0)) // global color table
-    b(0x2c) // image descriptor
-    le16(0); le16(0); le16(w); le16(h); b(0)
-    b(2) // LZW minimum code size
-    b(1); b(0x44) // one token data sub-block
-    b(0) // block terminator
-    b(0x3b) // trailer
+    putLe16(out, w); putLe16(out, h) // logical screen descriptor
+    out.write(0x80) // GCT present, 1 bit/pixel → 2 entries
+    out.write(0); out.write(0) // background color, aspect
+    (0 until 2 * 3).foreach(_ => out.write(0)) // global color table
+    out.write(0x2c) // image descriptor
+    putLe16(out, 0); putLe16(out, 0); putLe16(out, w); putLe16(out, h)
+    out.write(0)
+    out.write(2) // LZW minimum code size
+    out.write(1); out.write(0x44) // one token data sub-block
+    out.write(0) // block terminator
+    out.write(0x3b) // trailer
     out.toByteArray
   }
 
@@ -2576,8 +2309,7 @@ object Multimodal {
     require(b.length >= 10, "truncated GIF")
     val sig = new String(b, 0, 6, "US-ASCII")
     require(sig == "GIF89a" || sig == "GIF87a", "not a GIF")
-    val w = (b(6) & 0xff) | (b(7) & 0xff) << 8
-    val h = (b(8) & 0xff) | (b(9) & 0xff) << 8
+    val w = le16(b, 6); val h = le16(b, 8)
     require(w > 0 && h > 0, s"bad GIF dimensions ${w}x$h")
     (w, h)
   }
@@ -2588,13 +2320,11 @@ object Multimodal {
     import java.util.zip.CRC32
     require(b.length >= 33 && PngSig.indices.forall(i => b(i) == PngSig(i)),
       "not a PNG")
-    def be32(o: Int): Int = (b(o) & 0xff) << 24 | (b(o + 1) & 0xff) << 16 |
-      (b(o + 2) & 0xff) << 8 | (b(o + 3) & 0xff)
-    require(be32(8) == 13 &&
+    require(be32(b, 8) == 13 &&
       new String(b, 12, 4, "US-ASCII") == "IHDR", "IHDR must lead")
     val crc = new CRC32(); crc.update(b, 12, 17)
-    require(crc.getValue.toInt == be32(29), "IHDR CRC mismatch")
-    val w = be32(16); val h = be32(20)
+    require(crc.getValue.toInt == be32(b, 29), "IHDR CRC mismatch")
+    val w = be32(b, 16); val h = be32(b, 20)
     require(w > 0 && h > 0, s"bad dimensions ${w}x$h")
     (w, h)
   }
@@ -2651,28 +2381,19 @@ object Multimodal {
     val listPayload = "INFOgraft fixture ".getBytes("US-ASCII") // even length
     val dataBytes = samples.length * 2
     val riffSize = 4 + (8 + 16) + (8 + listPayload.length) + (8 + dataBytes)
-    val b = new Array[Byte](8 + riffSize)
-    var o = 0
-    def ascii(t: String): Unit = { t.getBytes("US-ASCII").foreach { c => b(o) = c; o += 1 } }
-    def le32(v: Int): Unit = {
-      b(o) = (v & 0xff).toByte; b(o + 1) = ((v >> 8) & 0xff).toByte
-      b(o + 2) = ((v >> 16) & 0xff).toByte; b(o + 3) = ((v >> 24) & 0xff).toByte
-      o += 4
-    }
-    def le16(v: Int): Unit = {
-      b(o) = (v & 0xff).toByte; b(o + 1) = ((v >> 8) & 0xff).toByte; o += 2
-    }
-    ascii("RIFF"); le32(riffSize); ascii("WAVE")
-    ascii("fmt "); le32(16)
-    le16(1) // PCM
-    le16(channels); le32(rate)
-    le32(rate * channels * 2) // byte rate
-    le16(channels * 2) // block align
-    le16(16) // bits per sample
-    ascii("LIST"); le32(listPayload.length); listPayload.foreach { c => b(o) = c; o += 1 }
-    ascii("data"); le32(dataBytes)
-    samples.foreach(v => le16(v & 0xffff))
-    b
+    val out = new java.io.ByteArrayOutputStream(8 + riffSize)
+    def ascii(t: String): Unit = out.write(t.getBytes("US-ASCII"))
+    ascii("RIFF"); putLe32(out, riffSize); ascii("WAVE")
+    ascii("fmt "); putLe32(out, 16)
+    putLe16(out, 1) // PCM
+    putLe16(out, channels); putLe32(out, rate)
+    putLe32(out, rate * channels * 2) // byte rate
+    putLe16(out, channels * 2) // block align
+    putLe16(out, 16) // bits per sample
+    ascii("LIST"); putLe32(out, listPayload.length); out.write(listPayload)
+    ascii("data"); putLe32(out, dataBytes)
+    samples.foreach(v => putLe16(out, v))
+    out.toByteArray
   }
 
   /** The same RIFF/PCM16 chunk walk as [[decodeWav]], returning the raw
@@ -2683,28 +2404,25 @@ object Multimodal {
   def wavSamples(b: Array[Byte]): Array[Int] = {
     require(b.length >= 12, "truncated WAV")
     def tag(o: Int): String = new String(b, o, 4, "US-ASCII")
-    def le32(o: Int): Int = (b(o) & 0xff) | (b(o + 1) & 0xff) << 8 |
-      (b(o + 2) & 0xff) << 16 | (b(o + 3) & 0xff) << 24
-    def le16(o: Int): Int = (b(o) & 0xff) | (b(o + 1) & 0xff) << 8
     require(tag(0) == "RIFF" && tag(8) == "WAVE", "not a RIFF/WAVE file")
     var o = 12
     var sawFmt = false
     val out = Array.newBuilder[Int]
     while (o + 8 <= b.length) {
-      val id = tag(o); val size = le32(o + 4)
+      val id = tag(o); val size = le32(b, o + 4)
       val body = o + 8
       require(size >= 0 && body.toLong + size <= b.length,
         s"truncated or malformed $id chunk (size=$size)")
       id match {
         case "fmt " =>
-          require(le16(body) == 1 && le16(body + 14) == 16, "only PCM16 WAV")
+          require(le16(b, body) == 1 && le16(b, body + 14) == 16, "only PCM16 WAV")
           sawFmt = true
         case "data" =>
           require(sawFmt, "data chunk before fmt")
           var k = 0
           val nChunk = size / 2
           while (k < nChunk) {
-            out += (le16(body + 2 * k) << 16) >> 16 // sign-extend int16
+            out += (le16(b, body + 2 * k) << 16) >> 16 // sign-extend int16
             k += 1
           }
         case _ => // skip by declared size
@@ -2721,16 +2439,13 @@ object Multimodal {
   def decodeWav(b: Array[Byte]): DecodedAudio = {
     require(b.length >= 12, "truncated WAV")
     def tag(o: Int): String = new String(b, o, 4, "US-ASCII")
-    def le32(o: Int): Int = (b(o) & 0xff) | (b(o + 1) & 0xff) << 8 |
-      (b(o + 2) & 0xff) << 16 | (b(o + 3) & 0xff) << 24
-    def le16(o: Int): Int = (b(o) & 0xff) | (b(o + 1) & 0xff) << 8
     require(tag(0) == "RIFF" && tag(8) == "WAVE", "not a RIFF/WAVE file")
     var o = 12
     var rate = 0; var channels = 0
     var sum = 0L; var peak = 0; var nInterleaved = 0
     var sawFmt = false; var sawData = false
     while (o + 8 <= b.length) {
-      val id = tag(o); val size = le32(o + 4)
+      val id = tag(o); val size = le32(b, o + 4)
       val body = o + 8
       // size is attacker-controlled: a negative or huge value must fail
       // here, not loop forever (o += negative) or index past the array
@@ -2739,9 +2454,9 @@ object Multimodal {
         s"truncated or malformed $id chunk (size=$size)")
       id match {
         case "fmt " =>
-          require(le16(body) == 1 && le16(body + 14) == 16, "only PCM16 WAV")
-          channels = le16(body + 2)
-          rate = le32(body + 4)
+          require(le16(b, body) == 1 && le16(b, body + 14) == 16, "only PCM16 WAV")
+          channels = le16(b, body + 2)
+          rate = le32(b, body + 4)
           require(channels > 0 && rate > 0,
             s"malformed fmt chunk (channels=$channels, rate=$rate)")
           sawFmt = true
@@ -2752,7 +2467,7 @@ object Multimodal {
           val nChunk = size / 2
           var k = 0
           while (k < nChunk) {
-            val v = (le16(body + 2 * k) << 16) >> 16 // sign-extend int16
+            val v = (le16(b, body + 2 * k) << 16) >> 16 // sign-extend int16
             sum += v
             val a = math.abs(v)
             if (a > peak) peak = a
@@ -2778,17 +2493,15 @@ object Multimodal {
   def encodeMp4Shell(brand: String, timescale: Long, duration: Long,
       mdatLen: Int): Array[Byte] = {
     require(brand.length == 4, "brand is a 4CC")
-    def u32(v: Long): Array[Byte] = Array(
-      (v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
     def cc(t: String): Array[Byte] = t.getBytes("US-ASCII")
     def box(typ: String, body: Array[Byte]): Array[Byte] =
-      u32(8L + body.length) ++ cc(typ) ++ body
-    val ftyp = box("ftyp", cc("isom") ++ u32(0) ++ cc(brand))
+      beWords(8 + body.length) ++ cc(typ) ++ body
+    val ftyp = box("ftyp", cc("isom") ++ beWords(0) ++ cc(brand))
     val free = box("free", new Array[Byte](12))
     // mvhd v0: version/flags, creation, modification, then timescale
     // and duration at their spec offsets (12 and 16 into the body)
     val mvhd = box("mvhd",
-      u32(0) ++ u32(0) ++ u32(0) ++ u32(timescale) ++ u32(duration))
+      beWords(0, 0, 0, timescale.toInt, duration.toInt))
     val udta = box("udta", Array.fill(4)(7.toByte))
     val moov = box("moov", mvhd ++ udta)
     val mdat = box("mdat",
@@ -2804,8 +2517,6 @@ object Multimodal {
     * starting with ftyp, a zero/negative box size, a truncated box, or
     * a moov without mvhd. */
   def decodeMp4Meta(b: Array[Byte]): DecodedMp4 = {
-    def u32(o: Int): Long = ((b(o) & 0xff).toLong << 24) |
-      ((b(o + 1) & 0xff) << 16) | ((b(o + 2) & 0xff) << 8) | (b(o + 3) & 0xff)
     def cc(o: Int): String = new String(b, o, 4, "US-ASCII")
     require(b.length >= 16 && cc(4) == "ftyp", "not an ISO-BMFF file")
     var o = 0
@@ -2814,7 +2525,7 @@ object Multimodal {
     var mdatBytes = -1
     while (o < b.length) {
       require(o + 8 <= b.length, "truncated box header")
-      val size = u32(o)
+      val size = be32u(b, o)
       val typ = cc(o + 4)
       require(size >= 8 && o + size <= b.length,
         s"bad $typ box size $size at $o")
@@ -2832,12 +2543,12 @@ object Multimodal {
           // child walk within [o+8, o+size)
           var c = o + 8
           while (c < o + size) {
-            val cs = u32(c)
+            val cs = be32u(b, c)
             require(cs >= 8 && c + cs <= o + size,
               s"bad moov child size $cs at $c")
             if (cc(c + 4) == "mvhd") {
-              timescale = u32(c + 8 + 12)
-              duration = u32(c + 8 + 16)
+              timescale = be32u(b, c + 8 + 12)
+              duration = be32u(b, c + 8 + 16)
             }
             c += cs.toInt
           }
@@ -2888,20 +2599,17 @@ object Multimodal {
     * declared sizes. No java.util.zip on the read side. Throws on a
     * missing EOCD, a signature mismatch, or a truncated record. */
   def decodeZipDirectory(b: Array[Byte]): DecodedZip = {
-    def u16(o: Int): Int = (b(o) & 0xff) | (b(o + 1) & 0xff) << 8
-    def u32(o: Int): Long = ((b(o) & 0xff) | (b(o + 1) & 0xff) << 8 |
-      (b(o + 2) & 0xff) << 16 | (b(o + 3) & 0xff) << 24) & 0xffffffffL
     // EOCD is at least 22 bytes and within 64 KiB + 22 of the end
     var eocd = -1
     var o = b.length - 22
     val floor = math.max(0, b.length - 22 - 0xffff)
     while (eocd < 0 && o >= floor) {
-      if (u32(o) == 0x06054b50L) eocd = o else o -= 1
+      if (le32u(b, o) == 0x06054b50L) eocd = o else o -= 1
     }
     require(eocd >= 0, "no end-of-central-directory record")
-    val nEntries = u16(eocd + 10)
-    val cdSize = u32(eocd + 12)
-    val cdOff = u32(eocd + 16)
+    val nEntries = le16(b, eocd + 10)
+    val cdSize = le32u(b, eocd + 12)
+    val cdOff = le32u(b, eocd + 16)
     require(cdOff + cdSize <= eocd,
       s"central directory [$cdOff, +$cdSize) overlaps the EOCD at $eocd")
     var p = cdOff.toInt
@@ -2910,13 +2618,13 @@ object Multimodal {
     var nameChars = 0L
     var allStored = true
     while (seen < nEntries) {
-      require(p + 46 <= b.length && u32(p) == 0x02014b50L,
+      require(p + 46 <= b.length && le32u(b, p) == 0x02014b50L,
         s"bad central-directory record at $p")
-      val method = u16(p + 10)
-      val unc = u32(p + 24)
-      val nameLen = u16(p + 28)
-      val extraLen = u16(p + 30)
-      val commentLen = u16(p + 32)
+      val method = le16(b, p + 10)
+      val unc = le32u(b, p + 24)
+      val nameLen = le16(b, p + 28)
+      val extraLen = le16(b, p + 30)
+      val commentLen = le16(b, p + 32)
       if (method != 0) allStored = false
       totalUnc += unc
       nameChars += nameLen
@@ -2936,21 +2644,16 @@ object Multimodal {
     val nEntries = 6
     val ifdBytes = 2 + nEntries * 12 + 4
     val stripOff = 8 + ifdBytes
-    val b = new Array[Byte](stripOff + stripLen)
-    var o = 0
-    def put(v: Int): Unit = { b(o) = v.toByte; o += 1 }
-    def u16(v: Int): Unit =
-      if (bigEndian) { put(v >> 8); put(v & 0xff) }
-      else { put(v & 0xff); put(v >> 8) }
-    def u32(v: Int): Unit =
-      if (bigEndian) { put(v >>> 24); put((v >> 16) & 0xff); put((v >> 8) & 0xff); put(v & 0xff) }
-      else { put(v & 0xff); put((v >> 8) & 0xff); put((v >> 16) & 0xff); put(v >>> 24) }
+    val out = new java.io.ByteArrayOutputStream(stripOff + stripLen)
+    // the file's byte order picks the shared writers once
+    val u16: Int => Unit = if (bigEndian) putBe16(out, _) else putLe16(out, _)
+    val u32: Int => Unit = if (bigEndian) putBe32(out, _) else putLe32(out, _)
     // SHORT values sit left-justified in the 4-byte value field, in the
     // file's own byte order (the TIFF 6.0 packing rule)
     def entryShort(tag: Int, v: Int): Unit = { u16(tag); u16(3); u32(1); u16(v); u16(0) }
     def entryLong(tag: Int, v: Int): Unit = { u16(tag); u16(4); u32(1); u32(v) }
     val magic = if (bigEndian) "MM" else "II"
-    magic.getBytes("US-ASCII").foreach(c => put(c))
+    out.write(magic.getBytes("US-ASCII"))
     u16(42); u32(8) // IFD offset
     u16(nEntries)
     entryLong(256, w) // ImageWidth
@@ -2960,8 +2663,8 @@ object Multimodal {
     entryLong(273, stripOff) // StripOffsets
     entryLong(279, stripLen) // StripByteCounts
     u32(0) // next IFD: none
-    (0 until stripLen).foreach(k => put(k * 11 + 3))
-    b
+    (0 until stripLen).foreach(k => out.write(k * 11 + 3))
+    out.toByteArray
   }
 
   /** Real TIFF IFD walk handling BOTH byte orders: II/MM dispatch, the
@@ -2974,14 +2677,8 @@ object Multimodal {
     val magic = new String(b, 0, 2, "US-ASCII")
     require(magic == "II" || magic == "MM", "not a TIFF file")
     val be = magic == "MM"
-    def u16(o: Int): Int =
-      if (be) (b(o) & 0xff) << 8 | (b(o + 1) & 0xff)
-      else (b(o) & 0xff) | (b(o + 1) & 0xff) << 8
-    def u32(o: Int): Int =
-      if (be) (b(o) & 0xff) << 24 | (b(o + 1) & 0xff) << 16 |
-        (b(o + 2) & 0xff) << 8 | (b(o + 3) & 0xff)
-      else (b(o) & 0xff) | (b(o + 1) & 0xff) << 8 |
-        (b(o + 2) & 0xff) << 16 | (b(o + 3) & 0xff) << 24
+    val u16: Int => Int = if (be) be16(b, _) else le16(b, _)
+    val u32: Int => Int = if (be) be32(b, _) else le32(b, _)
     require(u16(2) == 42, s"bad TIFF version word ${u16(2)}")
     val ifd = u32(4)
     require(ifd >= 8 && ifd + 2 <= b.length, "IFD offset out of bounds")
@@ -3020,29 +2717,24 @@ object Multimodal {
   def encodeFlacShell(rate: Int, channels: Int, bits: Int,
       totalSamples: Long, audioLen: Int): Array[Byte] = {
     val app = "grftFLAC".getBytes("US-ASCII")
-    val b = new Array[Byte](4 + (4 + 34) + (4 + 4) + (4 + app.length)
-      + audioLen)
-    var o = 0
-    def put(v: Int): Unit = { b(o) = v.toByte; o += 1 }
-    def be24(v: Int): Unit = { put(v >> 16); put((v >> 8) & 0xff); put(v & 0xff) }
-    def be16(v: Int): Unit = { put(v >> 8); put(v & 0xff) }
-    "fLaC".getBytes("US-ASCII").foreach(c => put(c))
+    val out = new java.io.ByteArrayOutputStream()
+    out.write("fLaC".getBytes("US-ASCII"))
     // STREAMINFO (type 0, not last), length 34
-    put(0x00); be24(34)
-    be16(4096); be16(4096) // min/max block size
-    be24(0); be24(0) // min/max frame size (0 = unknown)
+    out.write(0x00); putBe24(out, 34)
+    putBe16(out, 4096); putBe16(out, 4096) // min/max block size
+    putBe24(out, 0); putBe24(out, 0) // min/max frame size (0 = unknown)
     // [rate:20][channels-1:3][bps-1:5][total:36] big-endian
     val packed = (rate.toLong << 44) | ((channels - 1).toLong << 41) |
       ((bits - 1).toLong << 36) | totalSamples
-    (7 to 0 by -1).foreach(k => put(((packed >> (8 * k)) & 0xff).toInt))
-    (0 until 16).foreach(_ => put(0)) // MD5 placeholder
+    putBe32(out, (packed >> 32).toInt); putBe32(out, packed.toInt)
+    out.write(new Array[Byte](16)) // MD5 placeholder
     // PADDING (type 1, not last)
-    put(0x01); be24(4); (0 until 4).foreach(_ => put(0))
+    out.write(0x01); putBe24(out, 4); out.write(new Array[Byte](4))
     // APPLICATION (type 2, LAST)
-    put(0x80 | 0x02); be24(app.length); app.foreach(c => put(c))
+    out.write(0x80 | 0x02); putBe24(out, app.length); out.write(app)
     // frame filler
-    (0 until audioLen).foreach(k => put(k * 7 + 1))
-    b
+    (0 until audioLen).foreach(k => out.write(k * 7 + 1))
+    out.toByteArray
   }
 
   /** Real FLAC STREAMINFO parse: magic check, metadata-block walk
@@ -3054,8 +2746,6 @@ object Multimodal {
   def decodeFlacStreamInfo(b: Array[Byte]): DecodedFlac = {
     require(b.length >= 4 + 4 + 34, "truncated FLAC")
     require(new String(b, 0, 4, "US-ASCII") == "fLaC", "not a FLAC file")
-    def be24(o: Int): Int = (b(o) & 0xff) << 16 | (b(o + 1) & 0xff) << 8 |
-      (b(o + 2) & 0xff)
     var o = 4
     var nBlocks = 0
     var last = false
@@ -3065,7 +2755,7 @@ object Multimodal {
       val hdr = b(o) & 0xff
       last = (hdr & 0x80) != 0
       val typ = hdr & 0x7f
-      val len = be24(o + 1)
+      val len = be24(b, o + 1)
       val body = o + 4
       require(body.toLong + len <= b.length,
         s"truncated or malformed block type=$typ (len=$len)")
@@ -3202,29 +2892,24 @@ object Multimodal {
       val nSeg = ((id + k) % 3).toInt + 1
       val lacing = Array.tabulate(nSeg)(j => ((id + k + j) % 20).toInt + 5)
       val bodyLen = lacing.sum
-      val page = new Array[Byte](27 + nSeg + bodyLen)
-      "OggS".getBytes("US-ASCII").copyToArray(page, 0)
-      page(4) = 0 // stream structure version
+      val out = new java.io.ByteArrayOutputStream(27 + nSeg + bodyLen)
+      out.write("OggS".getBytes("US-ASCII"))
+      out.write(0) // stream structure version
       // BOS and EOS are independent bits, not an either/or: a one-page
       // stream must carry BOS|EOS = 0x06 per RFC 3533 §6 (an else-if
       // chain here would emit BOS only and decodeOggMeta would reject
       // the encoder's own nPages=1 output with "no EOS page")
-      page(5) = ((if (k == 0) 0x02 else 0x00) |
-        (if (k == nPages - 1) 0x04 else 0x00)).toByte
+      out.write((if (k == 0) 0x02 else 0x00) |
+        (if (k == nPages - 1) 0x04 else 0x00))
       val granule = (k + 1) * 100L + id % 50
-      var o = 6
-      def le(v: Long, n: Int): Unit = {
-        var i = 0
-        while (i < n) { page(o) = ((v >> (8 * i)) & 0xff).toByte; o += 1; i += 1 }
-      }
-      le(granule, 8)
-      le(id & 0x7fffffffL, 4) // serial
-      le(k.toLong, 4) // page sequence number
-      le(0L, 4) // CRC placeholder
-      page(o) = nSeg.toByte; o += 1
-      lacing.foreach { s => page(o) = s.toByte; o += 1 }
-      var j = 0
-      while (j < bodyLen) { page(o + j) = ((j * 11 + k) & 0xff).toByte; j += 1 }
+      out.write(leWords(granule.toInt, (granule >> 32).toInt,
+        (id & 0x7fffffffL).toInt, // serial
+        k, // page sequence number
+        0)) // CRC placeholder
+      out.write(nSeg)
+      lacing.foreach(out.write(_))
+      (0 until bodyLen).foreach(j => out.write((j * 11 + k) & 0xff))
+      val page = out.toByteArray
       val crc = oggCrc(page, 0, page.length)
       page(22) = crc.toByte; page(23) = (crc >> 8).toByte
       page(24) = (crc >> 16).toByte; page(25) = (crc >> 24).toByte
@@ -3247,11 +2932,6 @@ object Multimodal {
     var serial = -1L
     var nSegs = 0; var bodyBytes = 0; var granule = -1L
     var sawEos = false
-    def le(off: Int, n: Int): Long = {
-      var v = 0L; var i = 0
-      while (i < n) { v |= (b(off + i) & 0xffL) << (8 * i); i += 1 }
-      v
-    }
     while (o < b.length) {
       require(!sawEos, "pages after the EOS page")
       require(o + 27 <= b.length, s"truncated page header at $o")
@@ -3259,10 +2939,10 @@ object Multimodal {
         s"lost capture pattern at $o")
       require(b(o + 4) == 0, "unknown stream structure version")
       val htype = b(o + 5) & 0xff
-      val s = le(o + 14, 4)
+      val s = le32u(b, o + 14)
       if (page == 0) serial = s
       else require(s == serial, "serial changed mid-stream")
-      require(le(o + 18, 4) == page, s"page sequence broken at $page")
+      require(le32u(b, o + 18) == page, s"page sequence broken at $page")
       require(((htype & 0x02) != 0) == (page == 0), "misplaced BOS flag")
       if ((htype & 0x04) != 0) sawEos = true
       val nSeg = b(o + 26) & 0xff
@@ -3273,12 +2953,12 @@ object Multimodal {
       val total = 27 + nSeg + bl
       require(o + total <= b.length, s"truncated page body at $page")
       // CRC: recompute with the field zeroed (RFC 3533 §6)
-      val declared = le(o + 22, 4)
+      val declared = le32u(b, o + 22)
       val tmp = java.util.Arrays.copyOfRange(b, o, o + total)
       tmp(22) = 0; tmp(23) = 0; tmp(24) = 0; tmp(25) = 0
       require((oggCrc(tmp, 0, total) & 0xffffffffL) == declared,
         s"CRC mismatch on page $page")
-      granule = le(o + 6, 8)
+      granule = le32u(b, o + 6) | le32u(b, o + 10) << 32
       nSegs += nSeg; bodyBytes += bl; page += 1
       o += total
     }
@@ -3306,11 +2986,10 @@ object Multimodal {
   def decodeRle8Frame(
       d: Array[Byte], w: Int, h: Int, buf: Array[Byte]): Unit = {
     require(buf.length == w * h, "reference buffer size mismatch")
-    def u8(i: Int): Int = d(i) & 0xff
     var x = 0; var y = 0; var i = 0; var eob = false
     while (!eob) {
       require(i + 2 <= d.length, s"truncated RLE opcode at $i")
-      val c = u8(i); val v = u8(i + 1); i += 2
+      val c = u8(d, i); val v = u8(d, i + 1); i += 2
       if (c > 0) {
         require(y < h && x + c <= w, s"run overflows row at ($x,$y)")
         var k = 0
@@ -3322,7 +3001,7 @@ object Multimodal {
         case 1 => eob = true
         case 2 =>
           require(i + 2 <= d.length, "truncated delta escape")
-          x += u8(i); y += u8(i + 1); i += 2
+          x += u8(d, i); y += u8(d, i + 1); i += 2
           require(x <= w && y <= h, s"delta escape out of bounds ($x,$y)")
         case k => // absolute mode, k >= 3 literal pixels, word-padded
           require(i + k + (k & 1) <= d.length,
@@ -3386,96 +3065,51 @@ object Multimodal {
     * index semantic MJPEG never needed). */
   def encodeAviRle8(w: Int, h: Int, rate: Int,
       frames: Seq[Array[Byte]], withIndex: Boolean = true): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def b(v: Int): Unit = out.write(v & 0xff)
-    def le32(v: Long): Unit = { b(v.toInt); b((v >> 8).toInt)
-      b((v >> 16).toInt); b((v >> 24).toInt) }
-    def fcc(s: String): Unit = out.write(s.getBytes("US-ASCII"))
     val maxFrame = if (frames.isEmpty) 0 else frames.map(_.length).max
-    def words(o: java.io.ByteArrayOutputStream)
-        : (Long => Unit, Int => Unit) = {
-      val l = (v: Long) => { o.write(v.toInt & 0xff)
-        o.write((v >> 8).toInt & 0xff); o.write((v >> 16).toInt & 0xff)
-        o.write((v >> 24).toInt & 0xff) }
-      val s2 = (v: Int) => { o.write(v & 0xff); o.write((v >> 8) & 0xff) }
-      (l, s2)
-    }
-    val avih = {
-      val o = new java.io.ByteArrayOutputStream()
-      val (l, _) = words(o)
-      l(1000000L / rate); l(0); l(0)
-      l(if (withIndex) 0x10L else 0L)
-      l(frames.length.toLong); l(0); l(1); l(maxFrame.toLong)
-      l(w.toLong); l(h.toLong); l(0); l(0); l(0); l(0)
-      o.toByteArray
-    }
+    val avih = leWords(1000000 / rate, 0, 0, if (withIndex) 0x10 else 0,
+      frames.length, 0, 1, maxFrame, w, h, 0, 0, 0, 0)
     val strh = {
       val o = new java.io.ByteArrayOutputStream()
-      val (l, s2) = words(o)
       o.write("vids".getBytes("US-ASCII"))
       o.write("MRLE".getBytes("US-ASCII"))
-      l(0); s2(0); s2(0); l(0)
-      l(1); l(rate.toLong); l(0); l(frames.length.toLong)
-      l(maxFrame.toLong); l(0xffffffffL); l(0)
-      s2(0); s2(0); s2(w); s2(h)
+      putLe32(o, 0); putLe16(o, 0); putLe16(o, 0); putLe32(o, 0)
+      o.write(leWords(1, rate, 0, frames.length, maxFrame, -1, 0))
+      putLe16(o, 0); putLe16(o, 0); putLe16(o, w); putLe16(o, h)
       o.toByteArray
     }
     val strf = {
       val o = new java.io.ByteArrayOutputStream()
-      val (l, s2) = words(o)
-      l(40); l(w.toLong); l(h.toLong); s2(1); s2(8) // 8 bpp
-      l(1L) // biCompression = BI_RLE8
-      l(w.toLong * h); l(0); l(0); l(256L); l(0) // biClrUsed = 256
+      o.write(leWords(40, w, h)); putLe16(o, 1); putLe16(o, 8) // 8 bpp
+      putLe32(o, 1) // biCompression = BI_RLE8
+      o.write(leWords(w * h, 0, 0, 256, 0)) // biClrUsed = 256
       var i = 0
       while (i < 256) { // identity gray palette: (b, g, r, 0)
         o.write(i); o.write(i); o.write(i); o.write(0); i += 1
       }
       o.toByteArray
     }
-    def list(kind: String, body: Array[Byte]): Array[Byte] = {
-      val o = new java.io.ByteArrayOutputStream()
-      o.write("LIST".getBytes("US-ASCII"))
-      val sz = body.length + 4
-      o.write(sz & 0xff); o.write((sz >> 8) & 0xff)
-      o.write((sz >> 16) & 0xff); o.write((sz >> 24) & 0xff)
-      o.write(kind.getBytes("US-ASCII")); o.write(body)
-      o.toByteArray
-    }
-    def bare(id: String, payload: Array[Byte]): Array[Byte] = {
-      val o = new java.io.ByteArrayOutputStream()
-      o.write(id.getBytes("US-ASCII"))
-      o.write(payload.length & 0xff); o.write((payload.length >> 8) & 0xff)
-      o.write((payload.length >> 16) & 0xff)
-      o.write((payload.length >> 24) & 0xff)
-      o.write(payload)
-      if ((payload.length & 1) == 1) o.write(0)
-      o.toByteArray
-    }
-    val hdrl = list("hdrl",
-      bare("avih", avih) ++ list("strl",
-        bare("strh", strh) ++ bare("strf", strf)))
+    val hdrl = riffList("LIST", "hdrl",
+      riffChunk("avih", avih) ++ riffList("LIST", "strl",
+        riffChunk("strh", strh) ++ riffChunk("strf", strf)))
     val moviBody = new java.io.ByteArrayOutputStream()
     val offsets = frames.map { f =>
       val at = 4 + moviBody.size()
-      moviBody.write(bare("00dc", f))
+      moviBody.write(riffChunk("00dc", f))
       at
     }
-    val movi = list("movi", moviBody.toByteArray)
+    val movi = riffList("LIST", "movi", moviBody.toByteArray)
     val idx1 = if (!withIndex) Array.emptyByteArray else {
       val o = new java.io.ByteArrayOutputStream()
-      val (l, _) = words(o)
       frames.zip(offsets).zipWithIndex.foreach { case ((f, at), fi) =>
         o.write("00dc".getBytes("US-ASCII"))
-        l(if (fi == 0) 0x10L else 0L) // keyframe flag: frame 0 ONLY
-        l(at.toLong); l(f.length.toLong)
+        // keyframe flag: frame 0 ONLY
+        o.write(leWords(if (fi == 0) 0x10 else 0, at, f.length))
       }
-      bare("idx1", o.toByteArray)
+      riffChunk("idx1", o.toByteArray)
     }
-    val form = hdrl ++ movi ++ idx1
-    fcc("RIFF"); le32(form.length + 4L); fcc("AVI ")
-    out.write(form)
-    out.toByteArray
+    riffList("RIFF", "AVI ", hdrl ++ movi ++ idx1)
   }
+
 
   /** One decoded RLE8 frame\u2019s exact-integer pixel statistics over
     * the RECONSTRUCTED frame (reference bands included — the proof the
@@ -3489,16 +3123,13 @@ object Multimodal {
     * per-frame RLE decode CARRYING the frame buffer — delta frames
     * start from what the previous frame left. */
   def decodeAviRle8(bytes: Array[Byte]): Vector[DecodedRleFrame] = {
-    def u8(o: Int): Int = bytes(o) & 0xff
-    def le32(o: Int): Long = u8(o) | u8(o + 1).toLong << 8 |
-      u8(o + 2).toLong << 16 | u8(o + 3).toLong << 24
     def fcc(o: Int): String = {
       require(o + 4 <= bytes.length, s"truncated fourcc at $o")
       new String(bytes, o, 4, "US-ASCII")
     }
     require(bytes.length >= 12 && fcc(0) == "RIFF", "not a RIFF file")
-    require(le32(4) == bytes.length - 8,
-      s"RIFF size ${le32(4)} != content ${bytes.length - 8} (truncated?)")
+    require(le32u(bytes, 4) == bytes.length - 8,
+      s"RIFF size ${le32u(bytes, 4)} != content ${bytes.length - 8} (truncated?)")
     require(fcc(8) == "AVI ", s"RIFF form is not AVI")
     var w = -1; var h = -1; var rate = -1; var total = -1
     var hasIndex = false
@@ -3509,7 +3140,7 @@ object Multimodal {
     var o = 12
     while (o < bytes.length) {
       require(o + 8 <= bytes.length, s"truncated chunk header at $o")
-      val id = fcc(o); val sz = le32(o + 4)
+      val id = fcc(o); val sz = le32u(bytes, o + 4)
       require(o + 8 + sz <= bytes.length, s"truncated chunk at $o")
       id match {
         case "LIST" =>
@@ -3518,36 +3149,36 @@ object Multimodal {
               var p = o + 12
               val end = o + 8 + sz.toInt
               while (p < end) {
-                val cid = fcc(p); val csz = le32(p + 4).toInt
+                val cid = fcc(p); val csz = le32u(bytes, p + 4).toInt
                 cid match {
                   case "avih" =>
-                    hasIndex = (le32(p + 8 + 12) & 0x10L) != 0
-                    total = le32(p + 8 + 16).toInt
-                    w = le32(p + 8 + 32).toInt
-                    h = le32(p + 8 + 36).toInt
+                    hasIndex = (le32u(bytes, p + 8 + 12) & 0x10L) != 0
+                    total = le32u(bytes, p + 8 + 16).toInt
+                    w = le32u(bytes, p + 8 + 32).toInt
+                    h = le32u(bytes, p + 8 + 36).toInt
                   case "LIST" if fcc(p + 8) == "strl" =>
                     var q = p + 12
                     val send = p + 8 + csz
                     while (q < send) {
-                      val sid = fcc(q); val ssz = le32(q + 4).toInt
+                      val sid = fcc(q); val ssz = le32u(bytes, q + 4).toInt
                       sid match {
                         case "strh" =>
                           require(fcc(q + 8) == "vids", "not vids")
                           require(fcc(q + 12) == "MRLE",
                             s"handler is not MRLE")
-                          rate = le32(q + 8 + 24).toInt
+                          rate = le32u(bytes, q + 8 + 24).toInt
                         case "strf" =>
-                          require(le32(q + 8) == 40, "bad strf")
-                          require(le32(q + 20) == 0x00080001L, // planes=1, bpp=8
+                          require(le32u(bytes, q + 8) == 40, "bad strf")
+                          require(le32u(bytes, q + 20) == 0x00080001L, // planes=1, bpp=8
                             "not 8-bpp single-plane")
-                          require(le32(q + 24) == 1,
+                          require(le32u(bytes, q + 24) == 1,
                             "biCompression is not BI_RLE8")
-                          require(le32(q + 40) == 256, "palette size")
+                          require(le32u(bytes, q + 40) == 256, "palette size")
                           var pi = 0
                           while (pi < 256) { // identity palette pin
-                            require(u8(q + 48 + pi * 4) == pi &&
-                              u8(q + 48 + pi * 4 + 1) == pi &&
-                              u8(q + 48 + pi * 4 + 2) == pi,
+                            require(u8(bytes, q + 48 + pi * 4) == pi &&
+                              u8(bytes, q + 48 + pi * 4 + 1) == pi &&
+                              u8(bytes, q + 48 + pi * 4 + 2) == pi,
                               s"palette entry $pi is not identity gray")
                             pi += 1
                           }
@@ -3566,7 +3197,7 @@ object Multimodal {
               var p = o + 12
               val end = o + 8 + sz.toInt
               while (p < end) {
-                val cid = fcc(p); val csz = le32(p + 4).toInt
+                val cid = fcc(p); val csz = le32u(bytes, p + 4).toInt
                 require(cid == "00dc", s"unexpected movi chunk")
                 require(p + 8 + csz <= end, "frame overruns movi")
                 offsets :+= (p - (o + 8)).toLong
@@ -3585,14 +3216,14 @@ object Multimodal {
           while (e < n) {
             val base = o + 8 + e * 16
             require(fcc(base) == "00dc", "idx1 id mismatch")
-            val flags = le32(base + 4)
+            val flags = le32u(bytes, base + 4)
             // THE inter-frame index semantic: only frame 0 is a
             // seekable keyframe; a flagged delta frame would promise
             // decode-from-here and deliver garbage
             require(((flags & 0x10L) != 0) == (e == 0),
               s"idx1 keyframe flag wrong on frame $e")
-            require(le32(base + 8) == offsets(e), "idx1 offset mismatch")
-            require(le32(base + 12) == frames(e).length.toLong,
+            require(le32u(bytes, base + 8) == offsets(e), "idx1 offset mismatch")
+            require(le32u(bytes, base + 12) == frames(e).length.toLong,
               "idx1 size mismatch")
             e += 1
           }
@@ -3667,104 +3298,58 @@ object Multimodal {
     * 4 — the convention AVI readers expect). */
   def encodeAviMjpeg(w: Int, h: Int, rate: Int,
       frames: Seq[Array[Byte]], withIndex: Boolean = true): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def b(v: Int): Unit = out.write(v & 0xff)
-    def le32(v: Long): Unit = { b(v.toInt); b((v >> 8).toInt)
-      b((v >> 16).toInt); b((v >> 24).toInt) }
-    def le16(v: Int): Unit = { b(v); b(v >> 8) }
-    def fcc(s: String): Unit = out.write(s.getBytes("US-ASCII"))
-    def chunk(id: String, payload: Array[Byte]): Unit = {
-      fcc(id); le32(payload.length.toLong); out.write(payload)
-      if ((payload.length & 1) == 1) b(0) // RIFF even padding
-    }
     val maxFrame = if (frames.isEmpty) 0 else frames.map(_.length).max
-    val avih = {
-      val o = new java.io.ByteArrayOutputStream()
-      def l(v: Long): Unit = { o.write(v.toInt & 0xff)
-        o.write((v >> 8).toInt & 0xff); o.write((v >> 16).toInt & 0xff)
-        o.write((v >> 24).toInt & 0xff) }
-      l(1000000L / rate) // dwMicroSecPerFrame
-      l(0); l(0) // dwMaxBytesPerSec, dwPaddingGranularity
-      l(if (withIndex) 0x10L else 0L) // dwFlags: AVIF_HASINDEX
-      l(frames.length.toLong); l(0) // dwTotalFrames, dwInitialFrames
-      l(1); l(maxFrame.toLong) // dwStreams, dwSuggestedBufferSize
-      l(w.toLong); l(h.toLong)
-      l(0); l(0); l(0); l(0) // dwReserved
-      o.toByteArray
-    }
+    val avih = leWords(
+      1000000 / rate, // dwMicroSecPerFrame
+      0, 0, // dwMaxBytesPerSec, dwPaddingGranularity
+      if (withIndex) 0x10 else 0, // dwFlags: AVIF_HASINDEX
+      frames.length, 0, // dwTotalFrames, dwInitialFrames
+      1, maxFrame, // dwStreams, dwSuggestedBufferSize
+      w, h,
+      0, 0, 0, 0) // dwReserved
     val strh = {
       val o = new java.io.ByteArrayOutputStream()
-      def l(v: Long): Unit = { o.write(v.toInt & 0xff)
-        o.write((v >> 8).toInt & 0xff); o.write((v >> 16).toInt & 0xff)
-        o.write((v >> 24).toInt & 0xff) }
-      def s2(v: Int): Unit = { o.write(v & 0xff); o.write((v >> 8) & 0xff) }
       o.write("vids".getBytes("US-ASCII"))
       o.write("MJPG".getBytes("US-ASCII"))
-      l(0); s2(0); s2(0); l(0) // flags, priority, language, initial
-      l(1); l(rate.toLong) // dwScale, dwRate: fps = rate/scale
-      l(0); l(frames.length.toLong) // dwStart, dwLength (frames)
-      l(maxFrame.toLong); l(0xffffffffL); l(0) // suggBuf, quality, sampleSize
-      s2(0); s2(0); s2(w); s2(h) // rcFrame
+      // flags, priority, language, initial
+      putLe32(o, 0); putLe16(o, 0); putLe16(o, 0); putLe32(o, 0)
+      o.write(leWords(
+        1, rate, // dwScale, dwRate: fps = rate/scale
+        0, frames.length, // dwStart, dwLength (frames)
+        maxFrame, -1, 0)) // suggBuf, quality, sampleSize
+      putLe16(o, 0); putLe16(o, 0); putLe16(o, w); putLe16(o, h) // rcFrame
       o.toByteArray
     }
     val strf = {
       val o = new java.io.ByteArrayOutputStream()
-      def l(v: Long): Unit = { o.write(v.toInt & 0xff)
-        o.write((v >> 8).toInt & 0xff); o.write((v >> 16).toInt & 0xff)
-        o.write((v >> 24).toInt & 0xff) }
-      def s2(v: Int): Unit = { o.write(v & 0xff); o.write((v >> 8) & 0xff) }
-      l(40); l(w.toLong); l(h.toLong); s2(1); s2(24) // BITMAPINFOHEADER
+      o.write(leWords(40, w, h)); putLe16(o, 1); putLe16(o, 24) // BITMAPINFOHEADER
       o.write("MJPG".getBytes("US-ASCII")) // biCompression
-      l(3L * w * h); l(0); l(0); l(0); l(0)
+      o.write(leWords(3 * w * h, 0, 0, 0, 0))
       o.toByteArray
     }
-    def list(kind: String, body: Array[Byte]): Array[Byte] = {
-      val o = new java.io.ByteArrayOutputStream()
-      o.write("LIST".getBytes("US-ASCII"))
-      val sz = body.length + 4
-      o.write(sz & 0xff); o.write((sz >> 8) & 0xff)
-      o.write((sz >> 16) & 0xff); o.write((sz >> 24) & 0xff)
-      o.write(kind.getBytes("US-ASCII")); o.write(body)
-      o.toByteArray
-    }
-    def bare(id: String, payload: Array[Byte]): Array[Byte] = {
-      val o = new java.io.ByteArrayOutputStream()
-      o.write(id.getBytes("US-ASCII"))
-      o.write(payload.length & 0xff); o.write((payload.length >> 8) & 0xff)
-      o.write((payload.length >> 16) & 0xff)
-      o.write((payload.length >> 24) & 0xff)
-      o.write(payload)
-      if ((payload.length & 1) == 1) o.write(0)
-      o.toByteArray
-    }
-    val hdrl = list("hdrl",
-      bare("avih", avih) ++ list("strl",
-        bare("strh", strh) ++ bare("strf", strf)))
+    val hdrl = riffList("LIST", "hdrl",
+      riffChunk("avih", avih) ++ riffList("LIST", "strl",
+        riffChunk("strh", strh) ++ riffChunk("strf", strf)))
     // movi body; record each chunk's offset relative to the 'movi' fourcc
     val moviBody = new java.io.ByteArrayOutputStream()
     val offsets = frames.map { f =>
       val at = 4 + moviBody.size() // 'movi' fourcc occupies offsets 0..3
-      moviBody.write(bare("00dc", f))
+      moviBody.write(riffChunk("00dc", f))
       at
     }
-    val movi = list("movi", moviBody.toByteArray)
+    val movi = riffList("LIST", "movi", moviBody.toByteArray)
     val idx1 = if (!withIndex) Array.emptyByteArray else {
       val o = new java.io.ByteArrayOutputStream()
-      def l(v: Long): Unit = { o.write(v.toInt & 0xff)
-        o.write((v >> 8).toInt & 0xff); o.write((v >> 16).toInt & 0xff)
-        o.write((v >> 24).toInt & 0xff) }
       frames.zip(offsets).foreach { case (f, at) =>
         o.write("00dc".getBytes("US-ASCII"))
-        l(0x10L) // AVIIF_KEYFRAME: every MJPEG frame is one
-        l(at.toLong); l(f.length.toLong)
+        // AVIIF_KEYFRAME: every MJPEG frame is one
+        o.write(leWords(0x10, at, f.length))
       }
-      bare("idx1", o.toByteArray)
+      riffChunk("idx1", o.toByteArray)
     }
-    val form = hdrl ++ movi ++ idx1
-    fcc("RIFF"); le32(form.length + 4L); fcc("AVI ")
-    out.write(form)
-    out.toByteArray
+    riffList("RIFF", "AVI ", hdrl ++ movi ++ idx1)
   }
+
 
   /** Decoded MJPEG-in-AVI container: declared dims/rate/frame count
     * from the headers, whether an idx1 index was present (and
@@ -3786,16 +3371,13 @@ object Multimodal {
     * strh dwLength, and — when AVIF_HASINDEX is set — an idx1 whose
     * per-frame offsets/sizes match the movi walk exactly. */
   def decodeAviMjpeg(bytes: Array[Byte]): DecodedAvi = {
-    def u8(o: Int): Int = bytes(o) & 0xff
-    def le32(o: Int): Long = u8(o) | u8(o + 1).toLong << 8 |
-      u8(o + 2).toLong << 16 | u8(o + 3).toLong << 24
     def fcc(o: Int): String = {
       require(o + 4 <= bytes.length, s"truncated fourcc at $o")
       new String(bytes, o, 4, "US-ASCII")
     }
     require(bytes.length >= 12 && fcc(0) == "RIFF", "not a RIFF file")
-    require(le32(4) == bytes.length - 8,
-      s"RIFF size ${le32(4)} != content ${bytes.length - 8} (truncated?)")
+    require(le32u(bytes, 4) == bytes.length - 8,
+      s"RIFF size ${le32u(bytes, 4)} != content ${bytes.length - 8} (truncated?)")
     require(fcc(8) == "AVI ", s"RIFF form '${fcc(8)}' is not AVI")
     var w = -1; var h = -1; var rate = -1; var total = -1
     var hasIndex = false
@@ -3806,7 +3388,7 @@ object Multimodal {
     var o = 12
     while (o < bytes.length) {
       require(o + 8 <= bytes.length, s"truncated chunk header at $o")
-      val id = fcc(o); val sz = le32(o + 4)
+      val id = fcc(o); val sz = le32u(bytes, o + 4)
       require(o + 8 + sz <= bytes.length, s"truncated '$id' chunk at $o")
       id match {
         case "LIST" =>
@@ -3817,35 +3399,35 @@ object Multimodal {
               var p = o + 12
               val end = o + 8 + sz.toInt
               while (p < end) {
-                val cid = fcc(p); val csz = le32(p + 4).toInt
+                val cid = fcc(p); val csz = le32u(bytes, p + 4).toInt
                 cid match {
                   case "avih" =>
                     require(csz >= 56, "short avih")
-                    hasIndex = (le32(p + 8 + 12) & 0x10L) != 0
-                    total = le32(p + 8 + 16).toInt
-                    require(le32(p + 8 + 24) == 1,
-                      s"expected 1 stream, got ${le32(p + 8 + 24)}")
-                    w = le32(p + 8 + 32).toInt
-                    h = le32(p + 8 + 36).toInt
+                    hasIndex = (le32u(bytes, p + 8 + 12) & 0x10L) != 0
+                    total = le32u(bytes, p + 8 + 16).toInt
+                    require(le32u(bytes, p + 8 + 24) == 1,
+                      s"expected 1 stream, got ${le32u(bytes, p + 8 + 24)}")
+                    w = le32u(bytes, p + 8 + 32).toInt
+                    h = le32u(bytes, p + 8 + 36).toInt
                   case "LIST" if fcc(p + 8) == "strl" =>
                     var q = p + 12
                     val send = p + 8 + csz
                     while (q < send) {
-                      val sid = fcc(q); val ssz = le32(q + 4).toInt
+                      val sid = fcc(q); val ssz = le32u(bytes, q + 4).toInt
                       sid match {
                         case "strh" =>
                           require(fcc(q + 8) == "vids",
                             s"stream type '${fcc(q + 8)}' is not vids")
                           require(fcc(q + 12) == "MJPG",
                             s"handler '${fcc(q + 12)}' is not MJPG")
-                          require(le32(q + 8 + 20) == 1, "dwScale != 1")
-                          rate = le32(q + 8 + 24).toInt
-                          sLen = le32(q + 8 + 32).toInt
+                          require(le32u(bytes, q + 8 + 20) == 1, "dwScale != 1")
+                          rate = le32u(bytes, q + 8 + 24).toInt
+                          sLen = le32u(bytes, q + 8 + 32).toInt
                         case "strf" =>
-                          require(le32(q + 8) == 40, "strf is not a " +
+                          require(le32u(bytes, q + 8) == 40, "strf is not a " +
                             "BITMAPINFOHEADER")
-                          sW = le32(q + 12).toInt
-                          sH = le32(q + 16).toInt
+                          sW = le32u(bytes, q + 12).toInt
+                          sH = le32u(bytes, q + 16).toInt
                           require(fcc(q + 8 + 16) == "MJPG",
                             s"biCompression '${fcc(q + 8 + 16)}'")
                         case other =>
@@ -3863,7 +3445,7 @@ object Multimodal {
               var p = o + 12
               val end = o + 8 + sz.toInt
               while (p < end) {
-                val cid = fcc(p); val csz = le32(p + 4).toInt
+                val cid = fcc(p); val csz = le32u(bytes, p + 4).toInt
                 require(cid == "00dc", s"unexpected movi chunk '$cid'")
                 require(p + 8 + csz <= end, s"frame overruns movi at $p")
                 offsets :+= (p - (o + 8)).toLong // relative to 'movi' fourcc
@@ -3882,11 +3464,11 @@ object Multimodal {
           for (i <- 0 until n) {
             val e = o + 8 + 16 * i
             require(fcc(e) == "00dc", s"idx1 entry $i ckid '${fcc(e)}'")
-            require((le32(e + 4) & 0x10L) != 0,
+            require((le32u(bytes, e + 4) & 0x10L) != 0,
               s"MJPEG frame $i not flagged keyframe")
-            require(le32(e + 8) == offsets(i),
-              s"idx1 offset ${le32(e + 8)} != movi walk ${offsets(i)}")
-            require(le32(e + 12) == frames(i).length.toLong,
+            require(le32u(bytes, e + 8) == offsets(i),
+              s"idx1 offset ${le32u(bytes, e + 8)} != movi walk ${offsets(i)}")
+            require(le32u(bytes, e + 12) == frames(i).length.toLong,
               s"idx1 size mismatch on frame $i")
           }
           idxOk = true

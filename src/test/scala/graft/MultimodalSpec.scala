@@ -856,7 +856,8 @@ class MultimodalSpec extends SparkSpec {
   test("progressive and baseline JPEG decoders reject each other's " +
     "frames and name unsupported SOFn types") {
     import graft.operators.Multimodal.{decodeJpegBaseline,
-      decodeJpegProgressive, jpegFixture, jpegFixtureProg}
+      decodeJpegLossless, decodeJpegProgressive, jpegFixture,
+      jpegFixtureLossless, jpegFixtureProg}
     val baseBytes = jpegFixture(5L)
     val progBytes = jpegFixtureProg(5L)
     // cross-feeding: each decoder names the other
@@ -895,6 +896,23 @@ class MultimodalSpec extends SparkSpec {
     val e5 = intercept[IllegalArgumentException](
       decodeJpegProgressive(arith))
     assert(e5.getMessage.contains("SOF10"), e5.getMessage)
+    // the full routing table: each decoder fed the other two decoders'
+    // fixtures and both patched frame types names the owner or SOFn
+    val losslessBytes = jpegFixtureLossless(5L)
+    val decoders = Seq[(String, Array[Byte] => Any, Array[Byte])](
+      ("decodeJpegBaseline", decodeJpegBaseline, baseBytes),
+      ("decodeJpegProgressive", decodeJpegProgressive, progBytes),
+      ("decodeJpegLossless", decodeJpegLossless, losslessBytes))
+    for ((name, decode, _) <- decoders) {
+      val foreign = decoders.collect {
+        case (owner, _, bytes) if owner != name => (bytes, owner)
+      }
+      for ((bytes, expect) <- foreign :+ ((diffSeq, "SOF5")) :+
+          ((arith, "SOF10"))) {
+        val e = intercept[IllegalArgumentException](decode(bytes))
+        assert(e.getMessage.contains(expect), s"$name: ${e.getMessage}")
+      }
+    }
     // truncated mid-scan entropy data
     val cut = java.util.Arrays.copyOfRange(progBytes, 0,
       progBytes.length - 8)
@@ -913,6 +931,34 @@ class MultimodalSpec extends SparkSpec {
       decodeJpegProgressive(reseq))
     assert(e6.getMessage.contains("RST") || e6.getMessage.contains("marker"),
       e6.getMessage)
+  }
+
+  test("JPEG decoders reject every truncation with " +
+    "IllegalArgumentException or decode it unchanged") {
+    import graft.operators.Multimodal._
+    // every cut 0..n-1 of each decoder's fixtures (restarts, 4:2:0,
+    // multi-scan, lossless prediction) must surface as the typed
+    // rejection, or (a cut inside the final EOI) decode to the full
+    // stream's planes; any other exception type fails the test
+    val cases = Seq[(Array[Byte], Array[Byte] => DecodedJpeg)](
+      (jpegFixture(7L), decodeJpegBaseline),
+      (jpegFixture(12L), decodeJpegBaseline),
+      (jpegFixture420(9L), decodeJpegBaseline),
+      (jpegFixtureProg(6L), decodeJpegProgressive),
+      (jpegFixtureProg(5L), decodeJpegProgressive),
+      (jpegFixtureLossless(3L), decodeJpegLossless))
+    for (((bytes, decode), ci) <- cases.zipWithIndex) {
+      val full = decode(bytes)
+      for (n <- 0 until bytes.length) {
+        try {
+          val d = decode(java.util.Arrays.copyOfRange(bytes, 0, n))
+          assert((d.w, d.h, d.nComp, d.ri) == ((full.w, full.h, full.nComp,
+            full.ri)) && d.planes.indices.forall(c =>
+            java.util.Arrays.equals(d.planes(c), full.planes(c))),
+            s"case $ci cut at $n decoded to different planes")
+        } catch { case _: IllegalArgumentException => }
+      }
+    }
   }
 
   test("lossless JPEG round-trips every Annex H predictor exactly, " +
