@@ -35,9 +35,10 @@ object Bench {
       (shufWrite.get, shufRead.get, spillMem.get, spillDisk.get)
   }
 
-  /** The bench session contract, shared with Profile so a profile is
-    * taken under EXACTLY the session being benched (same master, same
-    * shuffle partitions, same window-buffer thresholds — ADVICE r14).
+  /** The one session builder in the program, shared with Profile,
+    * Verify and PlanAudit so a profile or a correctness check runs under
+    * EXACTLY the session being benched (same master, same shuffle
+    * partitions, same window-buffer thresholds — ADVICE r14).
     * Reads $SPARK_GRAFT_CPUS (driver contract: the driver re-runs the
     * bench at a lower core count to measure scaling) and the local
     * SPARK_GRAFT_WINBUF iteration knob. */

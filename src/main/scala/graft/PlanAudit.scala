@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inventory over every `SparkEntry.queries` entry — the audit the
   * 100 TB review asks for, emitted as a markdown table (PLAN_AUDIT.md):
   * per query, how many exchanges the plan runs, which join strategies it
@@ -22,18 +20,11 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.drop(1).headOption.getOrElse("PLAN_AUDIT.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-plan-audit")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // static audit: with AQE on, the un-executed plan is a bare
-      // AdaptiveSparkPlan wrapper and codegen spans don't exist yet —
-      // the audit reads the fully prepared non-adaptive plan instead
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.buildSession("4")
+    // static audit: with AQE on, the un-executed plan is a bare
+    // AdaptiveSparkPlan wrapper and codegen spans don't exist yet —
+    // the audit reads the fully prepared non-adaptive plan instead
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
 
     def count(p: String, token: String): Int = token.r.findAllIn(p).length

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Num, QueryDef}
+import graft.sources.DirTable
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
@@ -136,7 +137,8 @@ object Convert {
     * under a wrong key); one write partitioned by that index into
     * `<outDir>/_staging/<batchId>`; then the driver moves each index's
     * directory to its key's output (delete, then rename; a FALSE rename
-    * throws). A key with no surviving rows gets a zero-row file. Every
+    * or delete throws) and removes the staging directory once it is
+    * empty. A key with no surviving rows gets a zero-row file. Every
     * move overwrites, so a replayed batch id is idempotent. Missing
     * objects are skipped, the rest converted, then the call throws
     * naming them, so the caller's batch does not commit. */
@@ -172,15 +174,16 @@ object Convert {
           raise_error(concat(lit("no key names input file "), file)))))
       for (((k, _), i) <- files.zipWithIndex) {
         val dst = new Path(s"$outDir/$k.parquet")
-        if (!fs.delete(dst, true) && fs.exists(dst))
-          throw new java.io.IOException(s"FileSystem.delete($dst) returned false")
+        DirTable.delete(fs, dst, s"batch $batchId")
         fs.mkdirs(dst.getParent)
         val part = new Path(stage, s"$KeyIndex=$i")
         if (!fs.exists(part)) writeEmptyParquet(spark, new Path(dst, "part-00000.parquet"))
-        else if (!fs.rename(part, dst)) throw new java.io.IOException(
-          s"FileSystem.rename($part -> $dst) returned false; batch not committed")
+        else DirTable.rename(fs, part, dst, s"batch $batchId")
       }
-      fs.delete(stage, true)
+      DirTable.delete(fs, stage, s"batch $batchId")
+      val staging = stage.getParent
+      if (fs.exists(staging) && fs.listStatus(staging).isEmpty)
+        DirTable.delete(fs, staging, s"batch $batchId")
       s
     } catch { case e: Exception =>
       throw new RuntimeException(s"batch $batchId left ${keys.length} " +

@@ -425,12 +425,9 @@ object Similarity {
     val a = assign.localCheckpoint()
     val liveCells = a.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).sorted
-    val conf = a.sparkSession.sessionState.newHadoopConf()
     liveCells.zipWithIndex.foreach { case (c, k) =>
       val id = firstId + k
-      val committed = new org.apache.hadoop.fs.Path(
-        s"$idx/zones/batch=$id")
-      if (!waved || !committed.getFileSystem(conf).exists(committed)) {
+      if (!waved || !graft.sources.ZoneMapCommit.committed(idx, id)) {
         val cellRows = a.filter(col("cell") === c)
           .select(col("vec_id").as("rid"),
             col("cell").cast("long").as("a"), col("vec_id").as("b"))

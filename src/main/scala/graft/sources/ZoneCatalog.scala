@@ -107,14 +107,16 @@ class ZoneCatalog extends TableCatalog with ProcedureCatalog
     throw new UnsupportedOperationException(
       "zone-map tables are append-only with a fixed (rid, a, b) schema")
 
-  override def dropTable(ident: Identifier): Boolean =
-    tableExists(ident) && fs.delete(new Path(dirOf(ident)), true)
+  override def dropTable(ident: Identifier): Boolean = tableExists(ident) && {
+    DirTable.delete(fs, new Path(dirOf(ident)), "dropTable")
+    true
+  }
 
   override def renameTable(from: Identifier, to: Identifier): Unit = {
     if (!tableExists(from)) throw new NoSuchTableException(from)
     if (tableExists(to)) throw new TableAlreadyExistsException(to)
-    require(fs.rename(new Path(dirOf(from)), new Path(dirOf(to))),
-      s"rename ${dirOf(from)} -> ${dirOf(to)} failed")
+    DirTable.rename(fs, new Path(dirOf(from)), new Path(dirOf(to)),
+      "renameTable")
   }
 
   // --------------------------------------------------------------------
@@ -171,7 +173,8 @@ class ZoneCatalog extends TableCatalog with ProcedureCatalog
     if (!namespaceExists(ns)) throw new NoSuchNamespaceException(ns)
     if (!cascade && fs.listStatus(nsPath(ns)).nonEmpty)
       throw new NonEmptyNamespaceException(ns)
-    fs.delete(nsPath(ns), true)
+    DirTable.delete(fs, nsPath(ns), "dropNamespace")
+    true
   }
 
   // --------------------------------------------------------------------
@@ -203,11 +206,10 @@ class ZoneCatalog extends TableCatalog with ProcedureCatalog
         override def run(dotted: String): Array[InternalRow] = {
           val dir = tableDir(dotted)
           val spark = SparkSession.active
-          val before = graft.streaming.Streaming
-            .zoneVisibleParts(spark, dir, "zones").size.toLong
+          def parts = DirTable.visible(spark, s"$dir/zones", "opt").size.toLong
+          val before = parts
           graft.streaming.Streaming.zoneOptimize(spark, dir)
-          val after = graft.streaming.Streaming
-            .zoneVisibleParts(spark, dir, "zones").size.toLong
+          val after = parts
           Array(new GenericInternalRow(Array[Any](before, after)))
         }
       }

@@ -104,19 +104,6 @@ private[graft] object ZoneMapSource {
   private def hadoopConf(): Configuration =
     SparkSession.active.sessionState.newHadoopConf()
 
-  /** Newest `opt=K` + `batch>K` under `dir/sub` — the zone table's
-    * visibility rule, shared with the streaming maintainer. An `asOf`
-    * horizon pins the snapshot to batches <= asOf instead (TIME
-    * TRAVEL; throws if OPTIMIZE already compacted that snapshot
-    * away). */
-  def visibleParts(dir: String, sub: String,
-      asOf: Option[Long] = None): Seq[String] = asOf match {
-    case Some(h) => graft.streaming.Streaming.zoneVisiblePartsAsOf(
-      SparkSession.active, dir, sub, h)
-    case None => graft.streaming.Streaming.zoneVisibleParts(
-      SparkSession.active, dir, sub)
-  }
-
   /** The `asof` read option — a batch-id snapshot horizon. */
   def asOfOf(options: CaseInsensitiveStringMap): Option[Long] = {
     val v = options.get("asof")
@@ -169,9 +156,8 @@ private[graft] object ZoneMapSource {
   /** Zone rows for the (from, to] change feed. */
   def zoneRowsBetween(dir: String, from: Long, to: Long): Seq[ZoneRow] = {
     val conf = hadoopConf()
-    graft.streaming.Streaming.zoneVisiblePartsBetween(
-      SparkSession.active, dir, "zones", from, to)
-      .flatMap(part => readZonePart(dir, part, conf))
+    DirTable.visible(SparkSession.active, s"$dir/zones", "opt", from, to)
+      .flatMap(part => readZonePart(part.path, conf))
   }
 
   /** Leaf parquet part-files under a visible data part name. */
@@ -217,8 +203,8 @@ private[graft] object ZoneMapSource {
   }
 
   def dataSchema(dir: String): StructType = {
-    val first = visibleParts(dir, "data").iterator
-      .flatMap(p => partFiles(dir, p).headOption)
+    val first = DirTable.visible(SparkSession.active, s"$dir/data", "opt")
+      .iterator.flatMap(p => partFiles(dir, p.name).headOption)
       .toSeq.headOption.getOrElse {
         readSchemaMeta(dir) match {
           case Some(st) => return st
@@ -247,16 +233,17 @@ private[graft] object ZoneMapSource {
   }
 
   /** The zone rows (file, la, ha, lb, hb, n) for every visible file,
-    * read directly on the driver — one tiny row per file, no job. */
+    * read directly on the driver — one tiny row per file, no job. An
+    * `asOf` horizon pins the snapshot to batches <= asOf (TIME TRAVEL;
+    * throws if OPTIMIZE already compacted that snapshot away). */
   def zoneRows(dir: String, asOf: Option[Long] = None): Seq[ZoneRow] = {
     val conf = hadoopConf()
-    visibleParts(dir, "zones", asOf)
-      .flatMap(part => readZonePart(dir, part, conf))
+    DirTable.visible(SparkSession.active, s"$dir/zones", "opt",
+      to = asOf.getOrElse(Long.MaxValue))
+      .flatMap(part => readZonePart(part.path, conf))
   }
 
-  private def readZonePart(
-      dir: String, part: String, conf: Configuration): Seq[ZoneRow] = {
-    val p = new Path(s"$dir/zones/$part")
+  private def readZonePart(p: Path, conf: Configuration): Seq[ZoneRow] = {
     val fs = p.getFileSystem(conf)
     val files = fs.listFiles(p, true)
     val out = ArrayBuffer.empty[ZoneRow]
@@ -320,14 +307,11 @@ private[graft] object ZoneMapSource {
           try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
           finally in.close()
         val planned = if (txt == "none") None else Some(txt.toLong)
-        if (planned.forall(id => ZoneMapCommit.committed(dir, id))) {
+        // a batch that never became visible aborts the whole operation
+        if (planned.forall(id => ZoneMapCommit.committed(dir, id)))
           graft.streaming.Streaming.dvPublish(spark, dir,
             spark.read.parquet(s"$pend/dv"))
-          require(fs.delete(pend, true), s"heal: cannot clear $pend")
-        } else {
-          // the batch never became visible: abort the whole operation
-          require(fs.delete(pend, true), s"heal: cannot abort $pend")
-        }
+        DirTable.delete(fs, pend, "healRowLevelPending")
       }
   }
 
@@ -743,8 +727,7 @@ private[graft] class ZoneMapDeltaWrite(
     val inserts = msgs.flatMap(_.insert).filter(_.n > 0)
     val deletes = msgs.flatMap(_.deletes)
     if (inserts.isEmpty && deletes.isEmpty) return // no-op operation
-    val fs = new Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
+    val (fs, _) = DirTable.fs(spark, path)
     import spark.implicits._
     val fresh = spark.createDataset(deletes)
       .toDF("file", "bucket", "word")
@@ -758,14 +741,14 @@ private[graft] class ZoneMapDeltaWrite(
     //    marker rename makes the pending commit recoverable
     val tmp = new Path(s"$path/.rlo_tmp_$queryId")
     val pend = new Path(s"$path/.rlo_pending_$queryId")
-    if (fs.exists(tmp)) require(fs.delete(tmp, true), s"stale $tmp")
+    DirTable.delete(fs, tmp, "row-level commit(stale staging)")
     folded.coalesce(1).write.mode("overwrite")
       .parquet(s"$tmp/dv")
     val out = fs.create(new Path(tmp, "batch"), true)
     out.write(batchId.map(_.toString).getOrElse("none")
       .getBytes("UTF-8"))
     out.close()
-    require(fs.rename(tmp, pend), s"cannot stage pending commit $pend")
+    DirTable.rename(fs, tmp, pend, "row-level commit(pending marker)")
     // 2. the insert batch (its zone row is its commit point)
     batchId.foreach { id =>
       require(!ZoneMapCommit.committed(path, id),
@@ -775,14 +758,14 @@ private[graft] class ZoneMapDeltaWrite(
     // 3. the dv generation LAST, then the marker drops
     graft.streaming.Streaming.dvPublish(spark, path,
       spark.read.parquet(s"$pend/dv"))
-    require(fs.delete(pend, true), s"cannot clear $pend")
+    DirTable.delete(fs, pend, "row-level commit(clear marker)")
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     ZoneMapCommit.dropStaging(staging)
-    val fs = new Path(path).getFileSystem(
-      SparkSession.active.sessionState.newHadoopConf())
-    fs.delete(new Path(s"$path/.rlo_tmp_$queryId"), true)
+    val (fs, _) = DirTable.fs(SparkSession.active, path)
+    DirTable.delete(fs, new Path(s"$path/.rlo_tmp_$queryId"),
+      "row-level abort")
   }
 }
 
@@ -897,20 +880,16 @@ private[sources] class ZoneMapWriteBuilder(
   * into `data/batch=<id>`, then publish the folded zone row LAST (the
   * commit point). An orphan `data/batch=<id>` WITHOUT its zone row is
   * a crash leftover — invisible, so it is deleted and re-published. */
-private[sources] object ZoneMapCommit {
+private[graft] object ZoneMapCommit {
   def publish(path: String, batchId: Long, staging: String,
       messages: Array[WriterCommitMessage], uid: String): Unit = {
     val spark = SparkSession.active
-    val fs = new Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
+    val (fs, _) = DirTable.fs(spark, path)
     val target = new Path(s"$path/data/batch=$batchId")
-    if (fs.exists(target)) {
-      // data landed but the zone row (the commit point) did not: a
-      // crash between the two renames — the leftover was never
-      // visible, so clean and publish fresh
-      require(fs.delete(target, true),
-        s"commit: cannot clear crash leftover $target")
-    }
+    // data landed but the zone row (the commit point) did not: a crash
+    // between the two renames — the leftover was never visible, so
+    // clean and publish fresh
+    DirTable.delete(fs, target, "zone commit(crash leftover)")
     val msgs = messages.toSeq.flatMap {
       case m: ZoneWriteMsg => Seq(m)
       case b: ZoneBucketedMsg => b.files
@@ -922,11 +901,10 @@ private[sources] object ZoneMapCommit {
     require(fs.mkdirs(dataStage), s"cannot create $dataStage")
     msgs.foreach { m =>
       val src = new Path(staging, m.file)
-      require(fs.rename(src, new Path(dataStage, m.file)),
-        s"commit: rename $src failed with all copies intact")
+      DirTable.rename(fs, src, new Path(dataStage, m.file),
+        "zone commit(task file)")
     }
-    require(fs.rename(dataStage, target),
-      s"commit: publishing $target failed with staging intact")
+    DirTable.rename(fs, dataStage, target, "zone commit(data)")
     // the batch zone row publishes LAST — it is the commit point
     import spark.implicits._
     val zoneStage = s"$path/.z_staging_$uid"
@@ -940,11 +918,10 @@ private[sources] object ZoneMapCommit {
       fold(_.skr), fold(_.ska), fold(_.skb)))
       .toDF("file", "la", "ha", "lb", "hb", "n", "skr", "ska", "skb")
       .coalesce(1).write.mode("overwrite").parquet(zoneStage)
-    require(fs.rename(new Path(zoneStage),
-      new Path(s"$path/zones/batch=$batchId")),
-      s"commit: publishing zones/batch=$batchId failed; data staged " +
-        "but invisible (re-run or clean .commit leftovers)")
-    fs.delete(new Path(staging), true)
+    // a failure here leaves the data staged but invisible
+    DirTable.rename(fs, new Path(zoneStage),
+      new Path(s"$path/zones/batch=$batchId"), "zone commit(zone row)")
+    DirTable.delete(fs, new Path(staging), "zone commit(staging)")
   }
 
   def committed(path: String, batchId: Long): Boolean = {
@@ -954,9 +931,8 @@ private[sources] object ZoneMapCommit {
   }
 
   def dropStaging(staging: String): Unit = {
-    val p = new Path(staging)
-    p.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
-      .delete(p, true)
+    val (fs, p) = DirTable.fs(SparkSession.active, staging)
+    DirTable.delete(fs, p, "zone write(drop staging)")
   }
 }
 
@@ -1104,7 +1080,8 @@ private[sources] class ZoneMapBucketedWriter(
     writers.foreach(w => if (w != null) w.close())
     val fs = new Path(staging).getFileSystem(new Configuration())
     (0 until buckets).foreach { k =>
-      fs.delete(new Path(s"$staging/${fileName(k)}"), false)
+      DirTable.delete(fs, new Path(s"$staging/${fileName(k)}"),
+        "zone task abort")
     }
   }
 
@@ -1170,7 +1147,7 @@ private[sources] class ZoneMapDataWriter(
   override def abort(): Unit = {
     writer.close()
     val p = new Path(s"$staging/$fileName")
-    p.getFileSystem(new Configuration()).delete(p, false)
+    DirTable.delete(p.getFileSystem(new Configuration()), p, "zone task abort")
   }
 
   override def close(): Unit = ()

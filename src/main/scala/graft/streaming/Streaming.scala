@@ -1,11 +1,10 @@
 package graft.streaming
 
-import java.io.IOException
-
 import graft.{Num, QueryDef, Tables}
 import graft.operators.{Convert, Dedup}
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SaveMode, SparkSession}
+import graft.sources.DirTable
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, MapState, OutputMode,
@@ -148,7 +147,7 @@ object Streaming {
     // leftover from a crash after the second rename — stale, dropped
     // inside the swap.)
     recoverFromAside(s, tablePath)
-    val (fs, tableP) = tableFs(s, tablePath)
+    val (fs, tableP) = DirTable.fs(s, tablePath)
     val existing =
       if (fs.exists(tableP)) s.read.parquet(tablePath)
       else s.createDataFrame(s.sparkContext.emptyRDD[Row], batch.schema)
@@ -160,7 +159,8 @@ object Streaming {
       .drop("__prio", "__rn")
     merged.write.mode(SaveMode.Overwrite)
       .parquet(tablePath + ".tmp")
-    asideSwap(s, tablePath)
+    DirTable.publish(fs, new Path(tablePath + ".tmp"), tableP,
+      new Path(tablePath + ".old"), "upsertBatch")
   }
 
   /** CDC changelog apply — the STREAMING twin of the batch
@@ -200,7 +200,7 @@ object Streaming {
       key: String = "user_id"): Unit = {
     val s = batch.sparkSession
     recoverFromAside(s, tablePath)
-    val (fs, tableP) = tableFs(s, tablePath)
+    val (fs, tableP) = DirTable.fs(s, tablePath)
     val existing =
       if (fs.exists(tableP)) s.read.parquet(tablePath)
       else s.createDataFrame(s.sparkContext.emptyRDD[Row], batch.schema)
@@ -212,7 +212,8 @@ object Streaming {
       .drop("__rn")
     merged.write.mode(SaveMode.Overwrite)
       .parquet(tablePath + ".tmp")
-    asideSwap(s, tablePath)
+    DirTable.publish(fs, new Path(tablePath + ".tmp"), tableP,
+      new Path(tablePath + ".old"), "cdcApplyBatch")
   }
 
   /** Read side of [[cdcApplyBatch]]: the live keys — tombstoned keys
@@ -221,77 +222,20 @@ object Streaming {
   def cdcLive(s: SparkSession, tablePath: String): DataFrame =
     s.read.parquet(tablePath).filter(col("op") === "U").drop("op")
 
-  /** Hadoop `FileSystem` + `Path` for a table location, resolved from
-    * the session's Hadoop conf — so the swap helpers below work on ANY
-    * Spark-writable filesystem (local, HDFS, S3A object stores), not
-    * just `java.io`-visible local disk (ADVICE r8). */
-  private def tableFs(s: SparkSession, tablePath: String)
-      : (FileSystem, Path) = {
-    val p = new Path(tablePath)
-    (p.getFileSystem(s.sessionState.newHadoopConf()), p)
-  }
-
-  /** Hadoop `FileSystem.rename` signals failure by RETURNING FALSE, not
-    * by throwing (HDFS semantics; S3A's non-atomic directory rename is
-    * the textbook producer of the false branch). A swap step that
-    * shrugs at `false` can reach the aside-delete with the only
-    * surviving table copy still at `.old` — silent data loss (ADVICE
-    * r9). Every rename in the swap protocol goes through this check. */
-  private def renameOrThrow(
-      fs: FileSystem, from: Path, to: Path, step: String): Unit = {
-    if (!fs.rename(from, to))
-      throw new IOException(
-        s"$step: FileSystem.rename($from -> $to) returned false; " +
-          "table swap aborted with all existing copies left in place")
-  }
-
   /** Crash-recovery half of the aside-swap contract shared by
-    * [[upsertBatch]] and [[componentIngestBatch]]: if the table is
-    * absent but `.old` survives, a crash happened between the swap's
-    * two renames — restore the aside copy before reading. A FALSE
-    * rename here must throw, not fall through: proceeding would read
-    * an empty table and silently rebuild from the batch alone — the
+    * [[upsertBatch]], [[cdcApplyBatch]] and [[componentIngestBatch]]:
+    * each publishes `<table>.tmp` with the old table moved aside to
+    * `.old` ([[DirTable.publish]]). If the table is absent but `.old`
+    * survives, a crash happened between the publish's two renames —
+    * restore the aside copy before reading.
+    * A FALSE rename here must throw, not fall through: proceeding would
+    * read an empty table and silently rebuild from the batch alone — the
     * exact data-loss mode this recovery exists to prevent. */
   private def recoverFromAside(s: SparkSession, tablePath: String): Unit = {
-    val (fs, p) = tableFs(s, tablePath)
+    val (fs, p) = DirTable.fs(s, tablePath)
     val aside = new Path(tablePath + ".old")
     if (!fs.exists(p) && fs.exists(aside))
-      renameOrThrow(fs, aside, p, "recoverFromAside")
-  }
-
-  /** Swap half: move the freshly-written `<table>.tmp` into place.
-    * Rename order matters for the redelivery contract: the OLD table
-    * moves ASIDE (never deleted first), so at every instant a full copy
-    * of the pre- or post-merge table exists on disk; the entry-point
-    * [[recoverFromAside]] closes the one window (between the two
-    * renames) where that copy lives at `.old` rather than the table
-    * path. `FileSystem.delete` on a missing path is a no-op `false`,
-    * never an NPE — unlike `File.listFiles`, which the previous local
-    * implementation could NPE on. SINGLE-WRITER contract (one
-    * streaming query owns one table — the foreachBatch execution
-    * model): a concurrent READER between the two renames can observe
-    * the table briefly absent; a concurrent second WRITER is undefined
-    * behavior, exactly as it is for any non-transactional parquet
-    * directory. */
-  private def asideSwap(s: SparkSession, tablePath: String): Unit = {
-    val (fs, p) = tableFs(s, tablePath)
-    val aside = new Path(tablePath + ".old")
-    val tmp = new Path(tablePath + ".tmp")
-    if (fs.exists(p)) {
-      // A stale `.old` (crash after the final rename of a previous
-      // swap) must clear before the current table can move aside. A
-      // FALSE delete of an EXISTING aside would make the next rename
-      // fail or merge-into — stop here with both copies intact.
-      if (fs.exists(aside) && !fs.delete(aside, true))
-        throw new IOException(
-          s"asideSwap: FileSystem.delete($aside) returned false; " +
-            "swap aborted before touching the live table")
-      renameOrThrow(fs, p, aside, "asideSwap(old->aside)")
-    }
-    renameOrThrow(fs, tmp, p, "asideSwap(tmp->table)")
-    // Belt over the rename's braces: only retire the aside copy once
-    // the new table is VERIFIED present at the target path.
-    if (fs.exists(p)) fs.delete(aside, true)
+      DirTable.rename(fs, aside, p, "recoverFromAside")
   }
 
   /** One micro-batch of incremental corpus ingestion with CROSS-BATCH
@@ -326,31 +270,12 @@ object Streaming {
         Window.partitionBy(col("h"), when(col("h").isNull, col("doc_id")))
         .orderBy(col("doc_id"))))
       .filter(col("__rn") === 1).drop("__rn")
-    // Read every EARLIER batch's hashes — excluding this batch's own
-    // subdirectory: on a replay it already exists on disk, and letting
-    // the batch "see" its own previous attempt would dedup the rows
-    // against themselves and overwrite the output with nothing.
-    // Listing goes through the Hadoop FileSystem of the state path (a
-    // java.io.File listing would silently return nothing on hdfs://
-    // or s3a:// and disable cross-batch dedup entirely), and the read
-    // pins the known schema: an earlier batch whose rows were all
-    // deduplicated away leaves a part-file-less directory that schema
-    // inference would refuse.
-    val stateSchema = StructType(Seq(StructField("h", StringType)))
-    val statePath = new Path(stateDir)
-    val fs = statePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val earlier =
-      if (fs.exists(statePath))
-        fs.listStatus(statePath).toSeq
-          .filter(st => st.isDirectory &&
-            st.getPath.getName.startsWith("batch=") &&
-            st.getPath.getName != s"batch=$batchId")
-          .map(_.getPath.toString)
-      else Seq.empty
-    val seen =
-      if (earlier.nonEmpty)
-        s.read.schema(stateSchema).parquet(earlier: _*).select(col("h"))
-      else s.createDataFrame(s.sparkContext.emptyRDD[Row], stateSchema)
+    // Read every EARLIER batch's hashes (ids < batchId): on a replay
+    // this batch's own partial already exists on disk, and letting the
+    // batch "see" its previous attempt would dedup the rows against
+    // themselves and overwrite the output with nothing.
+    val seen = DirTable.partialsBefore(s, stateDir, batchId,
+      StructType(Seq(StructField("h", StringType))))
     val fresh = hashed.join(seen, Seq("h"), "left_anti").cache()
     try {
       fresh.drop("h").write
@@ -395,30 +320,16 @@ object Streaming {
     * uses, so stored state and batch semantics cannot drift. Documents
     * under 3 tokens have no shingles → no bands → always admitted.
     * Exactly-once exactly as dedupIngestBatch: deterministic
-    * `batch=<id>` overwrite, state read excludes the batch's own
-    * partition so a replay never dedups against its previous attempt. */
+    * `batch=<id>` overwrite, state read takes only earlier ids so a
+    * replay never dedups against its previous attempt. */
   def nearDupIngestBatch(
       batch: DataFrame, batchId: Long,
       corpusDir: String, bandsDir: String): Unit = {
     val s = batch.sparkSession
     val bands = Dedup.minhashBandKeys(Dedup.minhashSignatures(batch)).cache()
     try {
-      val stateSchema = StructType(Seq(
-        StructField("band", IntegerType), StructField("band_key", StringType)))
-      val statePath = new Path(bandsDir)
-      val fs = statePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val earlier =
-        if (fs.exists(statePath))
-          fs.listStatus(statePath).toSeq
-            .filter(st => st.isDirectory &&
-              st.getPath.getName.startsWith("batch=") &&
-              st.getPath.getName != s"batch=$batchId")
-            .map(_.getPath.toString)
-        else Seq.empty
-      val seen =
-        if (earlier.nonEmpty)
-          s.read.schema(stateSchema).parquet(earlier: _*)
-        else s.createDataFrame(s.sparkContext.emptyRDD[Row], stateSchema)
+      val seen = DirTable.partialsBefore(s, bandsDir, batchId, StructType(Seq(
+        StructField("band", IntegerType), StructField("band_key", StringType))))
       val dupCross = bands
         .join(seen, Seq("band", "band_key"), "left_semi")
         .select(col("doc_id"))
@@ -470,7 +381,7 @@ object Streaming {
   def componentIngestBatch(pairs: DataFrame, compDir: String): Unit = {
     val s = pairs.sparkSession
     recoverFromAside(s, compDir)
-    val (fs, compP) = tableFs(s, compDir)
+    val (fs, compP) = DirTable.fs(s, compDir)
     val oldEdges =
       if (fs.exists(compP))
         s.read.parquet(compDir)
@@ -479,7 +390,8 @@ object Streaming {
     val merged = Dedup.connectedComponents(
       pairs.select(col("id_a"), col("id_b")).unionByName(oldEdges))
     merged.write.mode(SaveMode.Overwrite).parquet(compDir + ".tmp")
-    asideSwap(s, compDir)
+    DirTable.publish(fs, new Path(compDir + ".tmp"), compP,
+      new Path(compDir + ".old"), "componentIngestBatch")
   }
 
   /** Read side of [[componentIngestBatch]]: the current (node,
@@ -661,16 +573,6 @@ object Streaming {
         min(col("key_lo")).as("key_lo"), max(col("key_hi")).as("key_hi"),
         bit_xor(col("checksum")).as("checksum"))
 
-  /** One micro-batch of incremental document-frequency maintenance —
-    * the streaming half of the tf-idf vocabulary: per-token document
-    * frequency plus the batch's doc count as append-only `batch=<id>`
-    * partials (idempotent overwrite, the sketch/manifest pattern).
-    * Both are count monoids, so the table folds batch-order-free; idf
-    * is deliberately NOT stored — [[dfTable]] derives it at read time
-    * from the folded (df, N), the drift-monitor discipline (store
-    * monoids, derive the statistic). The corpus doc count rides under
-    * the reserved NULL token — real tokens are never NULL because
-    * split() yields strings — so one table carries both monoids. */
   /** One micro-batch of SPAN-TABLE maintenance for exact-substring
     * dedup (q_dedup_substr's 100 TB incremental story): derive the
     * batch's distinct (doc, span-hash) pairs through the SAME
@@ -697,29 +599,11 @@ object Streaming {
       .parquet(s"$spanDir/batch=$batchId")
   }
 
-  /** The span table's live part directories: the NEWEST compacted base
-    * (if any) plus every batch partial beyond it. Leftover source dirs
-    * from a crash mid-[[spanCompact]] (batches ≤ the base, older
-    * compact dirs) are INVISIBLE to readers rather than double-counted
-    * — the property that makes compaction idempotent. */
-  private def spanPartDirs(
-      spark: SparkSession, spanDir: String): Seq[String] = {
-    val (fs, root) = tableFs(spark, spanDir)
-    val st = fs.listStatus(root)
-    def ids(prefix: String) = st.toSeq
-      .filter(_.getPath.getName.startsWith(prefix))
-      .map(s => s.getPath.getName.drop(prefix.length).toLong -> s.getPath)
-    val compacts = ids("compact=")
-    val base = compacts.sortBy(-_._1).headOption
-    val k = base.map(_._1).getOrElse(Long.MinValue)
-    (base.map(_._2).toSeq ++
-      ids("batch=").filter(_._1 > k).map(_._2)).map(_.toString)
-  }
-
   /** Read side of [[spanIngestBatch]]: the duplicated-span set (spans
     * in ≥2 distinct documents across every ingested batch). */
   def dupSpanTable(spark: SparkSession, spanDir: String): DataFrame =
-    spark.read.parquet(spanPartDirs(spark, spanDir): _*)
+    spark.read.parquet(DirTable.visible(spark, spanDir, "compact")
+        .map(_.path.toString): _*)
       .groupBy(col("sid")).agg(sum(col("n_docs")).as("nd"))
       .filter(col("nd") >= 2).select(col("sid"))
 
@@ -735,86 +619,51 @@ object Streaming {
     *
     * Crash safety via the idempotent-directory pattern: fold the
     * current base plus batch partials ≤ `upToBatch` into a hidden
-    * staging dir, RENAME it to `compact=<upToBatch>` (checked — the
-    * asideSwap rename discipline), and only then delete the folded
-    * sources. A crash at ANY point leaves a readable table:
-    * [[spanPartDirs]] reads the newest base plus newer batches only,
-    * so un-deleted sources are invisible, and re-running the
-    * compaction folds exactly the visible inputs again (sums are
-    * associative — bit-identical result). Single-writer contract, as
+    * staging dir, publish it as `compact=<upToBatch>`
+    * ([[DirTable.publish]]'s checked renames), and only then delete the
+    * folded sources. A crash at ANY point leaves a readable table:
+    * readers take the newest base plus newer batches only
+    * ([[DirTable.visible]]), so un-deleted sources are invisible, and
+    * re-running the compaction folds exactly the visible inputs again
+    * (sums are associative — bit-identical result). Single-writer contract, as
     * for every non-transactional directory table here. */
   def spanCompact(
       spark: SparkSession, spanDir: String, upToBatch: Long): Unit = {
-    val (fs, root) = tableFs(spark, spanDir)
-    val live = spanPartDirs(spark, spanDir)
+    val (fs, _) = DirTable.fs(spark, spanDir)
+    val live = DirTable.visible(spark, spanDir, "compact")
     // a base newer than the requested horizon would be orphaned by the
     // source deletes below while still being what readers prefer —
     // compaction horizons must only move forward
-    live.map(p => new Path(p).getName)
-      .filter(_.startsWith("compact=")).map(_.drop(8).toLong)
-      .foreach(k => require(upToBatch >= k,
-        s"spanCompact: horizon $upToBatch behind existing base $k"))
-    val inputs = live.filter { p =>
-      val name = new Path(p).getName
-      !name.startsWith("batch=") || name.drop(6).toLong <= upToBatch
-    }
+    live.filter(_.kind == "compact").foreach(b => require(upToBatch >= b.id,
+      s"spanCompact: horizon $upToBatch behind existing base ${b.id}"))
+    val inputs = live.filter(p => p.kind != "batch" || p.id <= upToBatch)
     val target = new Path(spanDir, s"compact=$upToBatch")
-    // compare by dir NAME — listStatus paths are fs-qualified
-    // (file:/...), target is the raw spelling
-    val inputNames = inputs.map(p => new Path(p).getName)
-    if (inputNames == Seq(target.getName)) {
+    val staged = new Path(spanDir, ".compact_staging")
+    if (inputs.nonEmpty) {
       // Re-folding a lone base is the identity: a run at a horizon equal
       // to the newest base (including the re-run after a crash that
       // completed the stage->base rename but not the source deletes)
-      // would fold compact=<horizon> into itself. The old spelling
-      // deleted that ONLY live copy before renaming its replacement in,
-      // so a crash in between lost all compacted history (ADVICE r10).
-      // Skip the fold entirely — the base already IS the fold — and fall
-      // through to the supersede sweep, which completes any pending
-      // source deletes a crashed run left behind.
-    } else if (inputs.nonEmpty) {
-      val staged = new Path(spanDir, ".compact_staging")
-      spark.read.parquet(inputs: _*)
-        .groupBy(col("sid")).agg(sum(col("n_docs")).as("n_docs"))
-        .write.mode(SaveMode.Overwrite).parquet(staged.toString)
-      // Never delete a live copy before its replacement is in place: a
-      // pre-existing target moves ASIDE, staging renames in, THEN the
-      // aside drops. Under the single-writer contract an existing
-      // compact=<horizon> is always the newest base and takes the
-      // short-circuit above, so this branch expects no target — but a
-      // violated contract should degrade to a recoverable aside swap,
-      // never to deleting the only copy.
-      val aside = new Path(spanDir, ".compact_aside")
-      if (fs.exists(aside) && !fs.delete(aside, true))
-        throw new IOException(
-          s"spanCompact: could not clear stale aside $aside")
-      if (fs.exists(target))
-        renameOrThrow(fs, target, aside, "spanCompact(base->aside)")
-      renameOrThrow(fs, staged, target, "spanCompact(stage->base)")
-      if (fs.exists(aside) && !fs.delete(aside, true))
-        throw new IOException(
-          s"spanCompact: superseded aside $aside not deleted")
-    }
-    if (inputs.nonEmpty) {
-      // retire EVERYTHING the new base supersedes LAST — batch partials
-      // ≤ horizon and older bases, including already-invisible crash
-      // leftovers (correctness never depends on these deletes — readers
-      // ignore the dirs — but leaving them silently would hide the
-      // space win, so a false delete is loud). Strict `<` on compact
-      // ids keeps the just-written target out of its own delete list
-      // when a horizon is re-run.
-      fs.listStatus(root).foreach { s =>
-        val name = s.getPath.getName
-        val stale =
-          (name.startsWith("batch=") && name.drop(6).toLong <= upToBatch) ||
-            (name.startsWith("compact=") && name.drop(8).toLong < upToBatch)
-        if (stale && !fs.delete(s.getPath, true))
-          throw new IOException(
-            s"spanCompact: superseded ${s.getPath} not deleted")
+      // would fold compact=<horizon> into itself, so it skips straight
+      // to the supersede sweep, which completes any pending source
+      // deletes a crashed run left behind (ADVICE r10).
+      if (inputs.map(_.name) != Seq(target.getName)) {
+        spark.read.parquet(inputs.map(_.path.toString): _*)
+          .groupBy(col("sid")).agg(sum(col("n_docs")).as("n_docs"))
+          .write.mode(SaveMode.Overwrite).parquet(staged.toString)
+        // under the single-writer contract an existing compact=<horizon>
+        // is always the newest base and takes the skip above; a violated
+        // contract degrades to the publish's recoverable aside move
+        DirTable.publish(fs, staged, target,
+          new Path(spanDir, ".compact_aside"), "spanCompact")
       }
+      // retire EVERYTHING the new base supersedes LAST, including
+      // already-invisible crash leftovers (readers ignore them, so this
+      // only reclaims space; a false delete is loud)
+      DirTable.sweep(spark, spanDir, "spanCompact")(
+        DirTable.superseded("compact", upToBatch))
     }
     // root-level listing junk (_SUCCESS markers from staged writes)
-    fs.delete(new Path(spanDir, ".compact_staging"), true)
+    DirTable.delete(fs, staged, "spanCompact")
   }
 
   // --------------------------------------------------------------------
@@ -836,96 +685,13 @@ object Streaming {
   //                      zones/batch=<id>, zones/opt=<K>
   // zones/ is the SOURCE OF TRUTH for visibility (optimize renames
   // data first, zones second, deletes last — so a zones/opt=K entry
-  // always points at complete data).
-
-  /** Visible part names under `dir/$sub`: newest `opt=K` + `batch>K`
-    * (the [[spanPartDirs]] rule, shared by data/ and zones/). */
-  private[graft] def zoneVisibleParts(
-      spark: SparkSession, dir: String, sub: String): Seq[String] = {
-    val (fs, root) = tableFs(spark, s"$dir/$sub")
-    if (!fs.exists(root)) return Nil
-    val st = fs.listStatus(root).toSeq.map(_.getPath.getName)
-    val opts = st.filter(_.startsWith("opt="))
-      .map(n => n.drop(4).toLong -> n)
-    val base = opts.sortBy(-_._1).headOption
-    val k = base.map(_._1).getOrElse(Long.MinValue)
-    base.map(_._2).toSeq ++
-      st.filter(n => n.startsWith("batch=") && n.drop(6).toLong > k)
-  }
-
-  /** TIME TRAVEL visibility: the parts covering exactly batches ≤ `h`
-    * — the newest `opt=K` with K ≤ h plus `batch=` parts in (K, h].
-    * OPTIMIZE compacts raw batches into its generation and deletes
-    * them, so a horizon OLDER than the newest generation is gone —
-    * throw rather than silently serve the wrong snapshot (the same
-    * contract as a vacuumed lakehouse snapshot). */
-  private[graft] def zoneVisiblePartsAsOf(
-      spark: SparkSession, dir: String, sub: String,
-      h: Long): Seq[String] = {
-    val (fs, root) = tableFs(spark, s"$dir/$sub")
-    if (!fs.exists(root)) return Nil
-    val st = fs.listStatus(root).toSeq.map(_.getPath.getName)
-    val opts = st.filter(_.startsWith("opt="))
-      .map(n => n.drop(4).toLong -> n)
-    opts.sortBy(-_._1).headOption.foreach { case (newest, _) =>
-      require(newest <= h,
-        s"zone table $dir: snapshot asof=$h was compacted away by " +
-          s"OPTIMIZE (newest generation covers batches <= $newest)")
-    }
-    val base = opts.filter(_._1 <= h).sortBy(-_._1).headOption
-    val k = base.map(_._1).getOrElse(Long.MinValue)
-    base.map(_._2).toSeq ++
-      st.filter { n =>
-        n.startsWith("batch=") && {
-          val b = n.drop(6).toLong; b > k && b <= h
-        }
-      }
-  }
-
-  /** CHANGE-FEED visibility: the parts covering exactly batches in
-    * (from, to] — the incremental consumer's resume protocol. With
-    * the newest generation opt=K: K <= from means the delta is pure
-    * raw batches; from == -1 (a fresh consumer) reads the generation
-    * plus everything after it (batch ids are non-negative, so opt=K
-    * covers exactly (-1, K]); anything else means OPTIMIZE compacted
-    * part of the requested delta away — throw, never serve a wrong
-    * delta. */
-  private[graft] def zoneVisiblePartsBetween(
-      spark: SparkSession, dir: String, sub: String,
-      from: Long, to: Long): Seq[String] = {
-    val (fs, root) = tableFs(spark, s"$dir/$sub")
-    if (!fs.exists(root)) return Nil
-    val st = fs.listStatus(root).toSeq.map(_.getPath.getName)
-    val opts = st.filter(_.startsWith("opt="))
-      .map(n => n.drop(4).toLong -> n)
-    val newest = opts.sortBy(-_._1).headOption
-    val k = newest.map(_._1).getOrElse(Long.MinValue)
-    val base =
-      if (k <= from) Nil
-      else if (from == -1L) newest.map(_._2).toSeq
-      else throw new IllegalArgumentException(
-        s"zone table $dir: the delta ($from, $to] was compacted away " +
-          s"by OPTIMIZE (newest generation covers batches <= $k)")
-    base ++ st.filter { n =>
-      n.startsWith("batch=") && {
-        val b = n.drop(6).toLong
-        b > math.max(from, k) && b <= to
-      }
-    }
-  }
+  // always points at complete data). Both follow [[DirTable.visible]]
+  // with `opt` as the base.
 
   /** Newest visible batch id (the change-feed high watermark): the
     * newest generation's horizon or any raw batch beyond it. */
-  private[graft] def zoneLatestBatch(
-      spark: SparkSession, dir: String): Long = {
-    val (fs, root) = tableFs(spark, s"$dir/zones")
-    if (!fs.exists(root)) return -1L
-    val ids = fs.listStatus(root).toSeq.map(_.getPath.getName).collect {
-      case n if n.startsWith("opt=") => n.drop(4).toLong
-      case n if n.startsWith("batch=") => n.drop(6).toLong
-    }
-    if (ids.isEmpty) -1L else ids.max
-  }
+  private[graft] def zoneLatestBatch(spark: SparkSession, dir: String): Long =
+    DirTable.latest(spark, s"$dir/zones", "opt", "batch")
 
   /** One micro-batch of zone-map-indexed ingest. `batch` must carry
     * (rid, a, b); the data file and its stats row commit under the
@@ -936,33 +702,38 @@ object Streaming {
     rows.write.mode(SaveMode.Overwrite)
       .parquet(s"$dir/data/batch=$batchId")
     // stats from the JUST-WRITTEN file, not the input frame: the row
-    // the index serves must describe the bytes a scan would read.
-    // Beside min/max/count, each zone row carries per-column NDV
-    // register blobs (graft_hll_regs, 4 KiB each) — register max is
-    // order-free and idempotent, so the scan can union them over ANY
-    // pruned file subset and report distinct counts to the planner
-    // (SupportsReportStatistics.columnStats → CBO join estimation).
-    val spark = batch.sparkSession
-    graft.functions.HllSketch.register(spark)
-    spark.read.parquet(s"$dir/data/batch=$batchId")
+    // the index serves must describe the bytes a scan would read
+    zoneStats(batch.sparkSession.read.parquet(s"$dir/data/batch=$batchId"),
+      lit(s"batch=$batchId"))
+      .write.mode(SaveMode.Overwrite)
+      .parquet(s"$dir/zones/batch=$batchId")
+  }
+
+  /** The zone stats rows of `data`, one per `by` group (one in all
+    * without): (file, la, ha, lb, hb, n, skr, ska, skb). Beside
+    * min/max/count, each row carries per-column NDV register blobs
+    * (graft_hll_regs, 4 KiB each) — register max is order-free and
+    * idempotent, so the scan can union them over ANY pruned file subset
+    * and report distinct counts to the planner
+    * (SupportsReportStatistics.columnStats → CBO join estimation). */
+  private def zoneStats(data: DataFrame, file: Column, by: Column*)
+      : DataFrame = {
+    graft.functions.HllSketch.register(data.sparkSession)
+    data.groupBy(by: _*)
       .agg(min(col("a")).as("la"), max(col("a")).as("ha"),
         min(col("b")).as("lb"), max(col("b")).as("hb"),
         count(lit(1)).as("n"),
         expr("graft_hll_regs(rid)").as("skr"),
         expr("graft_hll_regs(a)").as("ska"),
         expr("graft_hll_regs(b)").as("skb"))
-      .select(lit(s"batch=$batchId").as("file"), col("la"), col("ha"),
-        col("lb"), col("hb"), col("n"), col("skr"), col("ska"),
-        col("skb"))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$dir/zones/batch=$batchId")
+      .select(file.as("file"), col("la"), col("ha"), col("lb"), col("hb"),
+        col("n"), col("skr"), col("ska"), col("skb"))
   }
 
   /** The visible zone-map index (one row per readable file). */
   def zoneTable(spark: SparkSession, dir: String): DataFrame = {
-    val parts = zoneVisibleParts(spark, dir, "zones")
-      .map(n => s"$dir/zones/$n")
-    spark.read.parquet(parts: _*)
+    spark.read.parquet(DirTable.visible(spark, s"$dir/zones", "opt")
+      .map(_.path.toString): _*)
   }
 
   /** Box scan THROUGH the index: prune files whose [min,max] rectangle
@@ -987,9 +758,9 @@ object Streaming {
         // so a visible part exists whenever the zone table is
         // non-empty; a table with no parts at all keeps the empty
         // zoneTable-shaped frame below, where no row can ever exist).
-        zoneVisibleParts(spark, dir, "data").headOption match {
+        DirTable.visible(spark, s"$dir/data", "opt").headOption match {
           case Some(part) =>
-            spark.read.parquet(s"$dir/data/$part")
+            spark.read.parquet(part.path.toString)
               .select(col("rid"), col("a"), col("b"))
               .limit(0).filter(lit(false))
           case None =>
@@ -1010,7 +781,7 @@ object Streaming {
     * leaves a readable table; a re-run at an unchanged horizon is a
     * checked NO-OP (never fold the only live generation into itself). */
   def zoneOptimize(spark: SparkSession, dir: String): Unit = {
-    val (fs, _) = tableFs(spark, dir)
+    val (fs, _) = DirTable.fs(spark, dir)
     // OPTIMIZE rewrites files, which would silently RESURRECT rows the
     // deletion vectors removed (DVs are keyed by the old file names).
     // A real compaction materializes deletions first — so must callers.
@@ -1018,104 +789,57 @@ object Streaming {
       dvDeletedCount(spark, dir) == 0,
       s"zoneOptimize($dir): live deletion vectors exist; run " +
         "dvMaterialize first (optimize would resurrect deleted rows)")
-    val visible = zoneVisibleParts(spark, dir, "zones")
+    val visible = DirTable.visible(spark, s"$dir/zones", "opt")
     if (visible.isEmpty) return
-    val batchIds = visible.filter(_.startsWith("batch="))
-      .map(_.drop(6).toLong)
-    if (batchIds.isEmpty) {
-      // nothing newer than the current generation: re-optimizing would
-      // fold opt=K into itself — short-circuit, then finish any
-      // supersede deletes a crashed prior run left behind
-      val k = visible.head.drop(4).toLong
-      zoneRetire(spark, dir, k)
-      return
-    }
-    val horizon = batchIds.max
-    val dataParts = zoneVisibleParts(spark, dir, "data")
-      .map(n => s"$dir/data/$n")
-    // recursive lookup, not partition discovery: a visible part may be
-    // a flat batch dir or a tile-partitioned opt generation — mixing
-    // the two trips CONFLICTING_DIRECTORY_STRUCTURES, and the tile
-    // column is re-derived from fresh bounds anyway
-    val rows = spark.read.option("recursiveFileLookup", "true")
-      .parquet(dataParts: _*)
-    val bounds = rows.agg(
-      min(col("a")).as("amin"), max(col("a")).as("amax"),
-      min(col("b")).as("bmin"), max(col("b")).as("bmax"))
-    val tiled = rows.crossJoin(broadcast(bounds))
-      .withColumn("ba", expr("((a - amin) * 256) div (amax - amin + 1)"))
-      .withColumn("bb", expr("((b - bmin) * 256) div (bmax - bmin + 1)"))
-      .withColumn("tile", shiftright(
-        graft.operators.Analytics.zInterleave8(col("ba"), col("bb")), 10))
-      .select(col("rid"), col("a"), col("b"), col("tile"))
-    val dataStage = new Path(dir, ".opt_data_staging")
-    val zoneStage = new Path(dir, ".opt_zone_staging")
-    Seq(dataStage, zoneStage).foreach { p =>
-      if (fs.exists(p) && !fs.delete(p, true))
-        throw new IOException(s"zoneOptimize: stale staging $p")
-    }
-    // Cluster by tile BEFORE the dynamic-partition write: without it,
-    // every input task writes into every tile dir it touches — 6 scan
-    // tasks × 64 tiles ≈ 384 near-empty files whose per-file writer
-    // open/commit dominated the rewrite (1.57 s stage, r15 profile) and
-    // whose count the staged stats scan then pays again. One conf-width
-    // exchange lands one file per (partition, tile) ≈ one per tile
-    // (guide §6 file sizing). Parallelism is capped by the 8×8 tiling's
-    // 64 tiles — a table constant, fine for a maintenance rewrite.
-    tiled.repartition(graft.Tables.sp(spark), col("tile"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("tile").parquet(dataStage.toString)
-    // stats from the staged files (tile= partition dirs), one row each —
-    // incl. the per-column NDV register blobs every zone row carries
-    graft.functions.HllSketch.register(spark)
-    spark.read.parquet(dataStage.toString)
-      .groupBy(col("tile"))
-      .agg(min(col("a")).as("la"), max(col("a")).as("ha"),
-        min(col("b")).as("lb"), max(col("b")).as("hb"),
-        count(lit(1)).as("n"),
-        expr("graft_hll_regs(rid)").as("skr"),
-        expr("graft_hll_regs(a)").as("ska"),
-        expr("graft_hll_regs(b)").as("skb"))
-      .select(concat(lit(s"opt=$horizon/tile="), col("tile")).as("file"),
-        col("la"), col("ha"), col("lb"), col("hb"), col("n"),
-        col("skr"), col("ska"), col("skb"))
-      .write.mode(SaveMode.Overwrite).parquet(zoneStage.toString)
-    // swap: data first, zones second — zones/opt=K implies complete data
-    def swapIn(stage: Path, sub: String): Unit = {
-      val target = new Path(s"$dir/$sub", s"opt=$horizon")
-      val aside = new Path(s"$dir/$sub", s".opt_aside")
-      if (fs.exists(aside) && !fs.delete(aside, true))
-        throw new IOException(s"zoneOptimize: stale aside $aside")
-      if (fs.exists(target)) // contract-violating leftover: move aside,
-        renameOrThrow(fs, target, aside, "zoneOptimize(target->aside)")
-      renameOrThrow(fs, stage, target, s"zoneOptimize(stage->$sub)")
-      if (fs.exists(aside) && !fs.delete(aside, true))
-        throw new IOException(
-          s"zoneOptimize: superseded aside $aside not deleted")
-    }
-    swapIn(dataStage, "data")
-    swapIn(zoneStage, "zones")
-    zoneRetire(spark, dir, horizon)
-  }
-
-  /** Supersede sweep: drop `batch≤K` and `opt<K` under both subdirs —
-    * readers already ignore them (newest-generation rule), so this
-    * only reclaims space; a false delete is loud. */
-  private def zoneRetire(
-      spark: SparkSession, dir: String, horizon: Long): Unit = {
-    val (fs, _) = tableFs(spark, dir)
-    Seq("data", "zones").foreach { sub =>
-      val root = new Path(s"$dir/$sub")
-      if (fs.exists(root)) fs.listStatus(root).foreach { s =>
-        val n = s.getPath.getName
-        val stale =
-          (n.startsWith("batch=") && n.drop(6).toLong <= horizon) ||
-            (n.startsWith("opt=") && n.drop(4).toLong < horizon)
-        if (stale && !fs.delete(s.getPath, true))
-          throw new IOException(
-            s"zoneOptimize: superseded ${s.getPath} not deleted")
+    val batchIds = visible.filter(_.kind == "batch").map(_.id)
+    // nothing newer than the current generation: re-optimizing would
+    // fold opt=K into itself — skip the rewrite, then finish any
+    // supersede deletes a crashed prior run left behind
+    val horizon = batchIds.maxOption.getOrElse(visible.head.id)
+    if (batchIds.nonEmpty) {
+      // recursive lookup, not partition discovery: a visible part may be
+      // a flat batch dir or a tile-partitioned opt generation — mixing
+      // the two trips CONFLICTING_DIRECTORY_STRUCTURES, and the tile
+      // column is re-derived from fresh bounds anyway
+      val rows = spark.read.option("recursiveFileLookup", "true")
+        .parquet(DirTable.visible(spark, s"$dir/data", "opt")
+          .map(_.path.toString): _*)
+      val bounds = rows.agg(
+        min(col("a")).as("amin"), max(col("a")).as("amax"),
+        min(col("b")).as("bmin"), max(col("b")).as("bmax"))
+      val tiled = rows.crossJoin(broadcast(bounds))
+        .withColumn("ba", expr("((a - amin) * 256) div (amax - amin + 1)"))
+        .withColumn("bb", expr("((b - bmin) * 256) div (bmax - bmin + 1)"))
+        .withColumn("tile", shiftright(
+          graft.operators.Analytics.zInterleave8(col("ba"), col("bb")), 10))
+        .select(col("rid"), col("a"), col("b"), col("tile"))
+      val dataStage = new Path(dir, ".opt_data_staging")
+      val zoneStage = new Path(dir, ".opt_zone_staging")
+      Seq(dataStage, zoneStage).foreach(
+        DirTable.delete(fs, _, "zoneOptimize(stale staging)"))
+      // Cluster by tile BEFORE the dynamic-partition write: without it,
+      // every input task writes into every tile dir it touches — 6 scan
+      // tasks × 64 tiles ≈ 384 near-empty files whose per-file writer
+      // open/commit dominated the rewrite (1.57 s stage, r15 profile) and
+      // whose count the staged stats scan then pays again. One conf-width
+      // exchange lands one file per (partition, tile) ≈ one per tile
+      // (guide §6 file sizing). Parallelism is capped by the 8×8 tiling's
+      // 64 tiles — a table constant, fine for a maintenance rewrite.
+      tiled.repartition(graft.Tables.sp(spark), col("tile"))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("tile").parquet(dataStage.toString)
+      // stats from the staged files (tile= partition dirs), one row each
+      zoneStats(spark.read.parquet(dataStage.toString),
+        concat(lit(s"opt=$horizon/tile="), col("tile")), col("tile"))
+        .write.mode(SaveMode.Overwrite).parquet(zoneStage.toString)
+      // data first, zones second — zones/opt=K implies complete data
+      Seq(dataStage -> "data", zoneStage -> "zones").foreach { case (st, sub) =>
+        DirTable.publish(fs, st, new Path(s"$dir/$sub", s"opt=$horizon"),
+          new Path(s"$dir/$sub", ".opt_aside"), s"zoneOptimize($sub)")
       }
     }
+    Seq("data", "zones").foreach(sub => DirTable.sweep(spark, s"$dir/$sub",
+      "zoneOptimize")(DirTable.superseded("opt", horizon)))
   }
 
   // --------------------------------------------------------------------
@@ -1155,13 +879,8 @@ object Streaming {
   // --------------------------------------------------------------------
 
   /** Highest complete dv generation id under `dir/dv`, or -1. */
-  private[graft] def dvVisibleGen(spark: SparkSession, dir: String): Long = {
-    val (fs, root) = tableFs(spark, s"$dir/dv")
-    if (!fs.exists(root)) return -1L
-    val gens = fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("gen=")).map(_.drop(4).toLong)
-    if (gens.isEmpty) -1L else gens.max
-  }
+  private[graft] def dvVisibleGen(spark: SparkSession, dir: String): Long =
+    DirTable.latest(spark, s"$dir/dv", "gen")
 
   /** The visible deletion-vector rows (file, bucket, word); empty
     * frame with the right schema when nothing was ever deleted. */
@@ -1185,8 +904,8 @@ object Streaming {
   def dvDelete(spark: SparkSession, dir: String,
       pred: (Long, Long, Long) => Boolean): Unit = {
     import spark.implicits._
-    val files = zoneVisibleParts(spark, dir, "data")
-      .flatMap(p => graft.sources.ZoneMapSource.partFiles(dir, p)
+    val files = DirTable.visible(spark, s"$dir/data", "opt")
+      .flatMap(p => graft.sources.ZoneMapSource.partFiles(dir, p.name)
         .map(_._1))
       .map(graft.sources.ZoneMapSource.relPath)
     val dirB = dir
@@ -1223,10 +942,9 @@ object Streaming {
     * dvVisibleGen) and overwritten by the retry. */
   private[graft] def dvPublish(
       spark: SparkSession, dir: String, rows: DataFrame): Unit = {
-    val (fs, _) = tableFs(spark, dir)
+    val (fs, _) = DirTable.fs(spark, dir)
     val stage = new Path(dir, "dv/.dv_staging")
-    if (fs.exists(stage) && !fs.delete(stage, true))
-      throw new IOException(s"dvPublish: stale staging $stage")
+    DirTable.delete(fs, stage, "dvPublish(stale staging)")
     rows.coalesce(1).write.mode(SaveMode.Overwrite).parquet(stage.toString)
     val next = dvVisibleGen(spark, dir) + 1
     // the generation delta, computed against the STILL-VISIBLE old
@@ -1234,8 +952,7 @@ object Streaming {
     val cur = dvTable(spark, dir)
       .select(col("file"), col("bucket"), col("word").as("oldw"))
     val logStage = new Path(dir, "dv_log/.staging")
-    if (fs.exists(logStage) && !fs.delete(logStage, true))
-      throw new IOException(s"dvPublish: stale staging $logStage")
+    DirTable.delete(fs, logStage, "dvPublish(stale staging)")
     spark.read.parquet(stage.toString)
       .join(cur, Seq("file", "bucket"), "left")
       .select(col("file"), col("bucket"),
@@ -1244,19 +961,13 @@ object Streaming {
       .coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(logStage.toString)
     val logTarget = new Path(dir, s"dv_log/gen=$next")
-    if (fs.exists(logTarget) && !fs.delete(logTarget, true))
-      throw new IOException(s"dvPublish: orphan log $logTarget")
-    renameOrThrow(fs, logStage, logTarget, "dvPublish(log)")
-    val target = new Path(dir, s"dv/gen=$next")
-    renameOrThrow(fs, stage, target, "dvPublish(stage->gen)")
+    DirTable.delete(fs, logTarget, "dvPublish(orphan log)")
+    DirTable.rename(fs, logStage, logTarget, "dvPublish(log)")
+    DirTable.rename(fs, stage, new Path(dir, s"dv/gen=$next"),
+      "dvPublish(stage->gen)")
     // retire superseded generations; readers already ignore them
-    val root = new Path(s"$dir/dv")
-    fs.listStatus(root).foreach { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("gen=") && n.drop(4).toLong < next &&
-          !fs.delete(s.getPath, true))
-        throw new IOException(s"dvPublish: superseded ${s.getPath} not deleted")
-    }
+    DirTable.sweep(spark, s"$dir/dv", "dvPublish")(
+      p => p.kind == "gen" && p.id < next)
   }
 
   /** Count of deleted positions in the visible generation. */
@@ -1280,45 +991,28 @@ object Streaming {
     * to [[zoneOptimize]] on a table with live deletions. */
   def dvMaterialize(spark: SparkSession, dir: String): Unit = {
     if (dvVisibleGen(spark, dir) < 0) return
-    val (fs, _) = tableFs(spark, dir)
-    val gen = zoneVisibleParts(spark, dir, "data")
-      .map(n => if (n.startsWith("batch=")) n.drop(6).toLong
-        else n.drop(4).toLong).max + 1
+    val (fs, _) = DirTable.fs(spark, dir)
+    val gen = DirTable.visible(spark, s"$dir/data", "opt").map(_.id).max + 1
     val kept = spark.read.format("graft.sources.ZoneMapSource").load(dir)
       .select(col("rid"), col("a"), col("b"))
     val dataStage = new Path(dir, ".dv_mat_data")
     val zoneStage = new Path(dir, ".dv_mat_zones")
-    Seq(dataStage, zoneStage).foreach { p =>
-      if (fs.exists(p) && !fs.delete(p, true))
-        throw new IOException(s"dvMaterialize: stale staging $p")
-    }
+    Seq(dataStage, zoneStage).foreach(
+      DirTable.delete(fs, _, "dvMaterialize(stale staging)"))
     kept.write.mode(SaveMode.Overwrite).parquet(dataStage.toString)
-    graft.functions.HllSketch.register(spark)
-    spark.read.parquet(dataStage.toString)
-      .agg(min(col("a")).as("la"), max(col("a")).as("ha"),
-        min(col("b")).as("lb"), max(col("b")).as("hb"),
-        count(lit(1)).as("n"),
-        expr("graft_hll_regs(rid)").as("skr"),
-        expr("graft_hll_regs(a)").as("ska"),
-        expr("graft_hll_regs(b)").as("skb"))
-      .select(lit(s"opt=$gen").as("file"), col("la"), col("ha"),
-        col("lb"), col("hb"), col("n"),
-        col("skr"), col("ska"), col("skb"))
+    zoneStats(spark.read.parquet(dataStage.toString), lit(s"opt=$gen"))
       .write.mode(SaveMode.Overwrite).parquet(zoneStage.toString)
-    renameOrThrow(fs, dataStage, new Path(s"$dir/data", s"opt=$gen"),
+    DirTable.rename(fs, dataStage, new Path(s"$dir/data", s"opt=$gen"),
       "dvMaterialize(data)")
-    renameOrThrow(fs, zoneStage, new Path(s"$dir/zones", s"opt=$gen"),
+    DirTable.rename(fs, zoneStage, new Path(s"$dir/zones", s"opt=$gen"),
       "dvMaterialize(zones)") // visibility flips here, atomically
-    zoneRetire(spark, dir, gen)
-    val dvRoot = new Path(s"$dir/dv")
-    if (fs.exists(dvRoot) && !fs.delete(dvRoot, true))
-      throw new IOException("dvMaterialize: dv table not cleared")
+    Seq("data", "zones").foreach(sub => DirTable.sweep(spark, s"$dir/$sub",
+      "dvMaterialize")(DirTable.superseded("opt", gen)))
+    DirTable.delete(fs, new Path(s"$dir/dv"), "dvMaterialize(dv)")
     // the retraction journal resets with the generations it indexes:
     // a feed consumer straddling a materialize must recompute (the
     // same contract as a compacted-away batch delta)
-    val logRoot = new Path(s"$dir/dv_log")
-    if (fs.exists(logRoot) && !fs.delete(logRoot, true))
-      throw new IOException("dvMaterialize: dv_log not cleared")
+    DirTable.delete(fs, new Path(s"$dir/dv_log"), "dvMaterialize(dv_log)")
   }
 
   /** CHANGE FEED WITH RETRACTIONS — the composition of the batch
@@ -1360,7 +1054,7 @@ object Streaming {
       .withColumn("op", lit(1))
     val gens = (fromDvGen + 1) to toGen
     if (gens.isEmpty) return inserts
-    val (fs, _) = tableFs(spark, dir)
+    val (fs, _) = DirTable.fs(spark, dir)
     // every published generation journals (possibly empty) — a missing
     // dir inside the window means the journal was vacuumed past the
     // consumer's watermark (or predates the journal): loud recompute,
@@ -1375,11 +1069,7 @@ object Streaming {
     }
     // journal bits for the window, OR-folded per (file, bucket), kept
     // only where they hit batches the consumer already has
-    def batchOf(rel: String): Long = {
-      val seg = rel.takeWhile(_ != '/')
-      seg.dropWhile(!_.isDigit).takeWhile(_.isDigit).toLong
-    }
-    val batchOfUdf = udf(batchOf _)
+    val batchOfUdf = udf((rel: String) => DirTable.idOf(rel.takeWhile(_ != '/')))
     val hits = spark.read.parquet(logParts: _*)
       .filter(batchOfUdf(col("file")) <= fromBatch)
       .groupBy(col("file"), col("bucket"))
@@ -1420,24 +1110,9 @@ object Streaming {
     require(retain >= 0, s"retain must be >= 0, got $retain")
     val visible = dvVisibleGen(spark, dir)
     val horizon = visible - retain // keep gens > horizon, <= visible
-    var removed = 0L
-    var kept = 0L
-    val (fs, root) = tableFs(spark, s"$dir/dv_log")
-    if (fs.exists(root)) {
-      fs.listStatus(root).foreach { st =>
-        val n = st.getPath.getName
-        val drop =
-          if (n.startsWith("gen=")) {
-            val g = n.drop(4).toLong
-            g <= horizon || g > visible // aged out, or orphan
-          } else n.startsWith(".") // stale staging
-        if (drop) {
-          if (!fs.delete(st.getPath, true))
-            throw new IOException(s"vacuum: ${st.getPath} stuck")
-          removed += 1
-        } else if (n.startsWith("gen=")) kept += 1
-      }
-    }
+    val removed = DirTable.sweep(spark, s"$dir/dv_log", "dvLogVacuum")(
+      p => p.kind == "gen" && (p.id <= horizon || p.id > visible))
+    val kept = DirTable.list(spark, s"$dir/dv_log").count(_.kind == "gen")
     // superseded CUMULATIVE dv generations age out under the same
     // horizon: readers only ever consult the newest generation (every
     // read path goes through dvVisibleGen → max), so generations below
@@ -1449,20 +1124,13 @@ object Streaming {
     // post-vacuum time travel read returns byte-identical rows
     // (spec-pinned), and horizons that predate OPTIMIZE retention
     // keep their own loud "compacted away" error.
-    val (dfs, droot) = tableFs(spark, s"$dir/dv")
-    if (dfs.exists(droot)) {
-      dfs.listStatus(droot).foreach { st =>
-        val n = st.getPath.getName
-        val drop =
-          if (n.startsWith("gen=")) {
-            val g = n.drop(4).toLong
-            g <= horizon && g < visible
-          } else n.startsWith(".") // stale staging
-        if (drop && !dfs.delete(st.getPath, true))
-          throw new IOException(s"vacuum: ${st.getPath} stuck")
-      }
-    }
-    (removed, kept)
+    DirTable.sweep(spark, s"$dir/dv", "dvLogVacuum")(
+      p => p.kind == "gen" && p.id <= horizon && p.id < visible)
+    // stale staging of a crashed dvPublish
+    val (fs, _) = DirTable.fs(spark, dir)
+    Seq("dv_log/.staging", "dv/.dv_staging").foreach(st =>
+      DirTable.delete(fs, new Path(dir, st), "dvLogVacuum(stale staging)"))
+    (removed.toLong, kept.toLong)
   }
 
   // --------------------------------------------------------------------
@@ -1490,27 +1158,16 @@ object Streaming {
   /** One micro-batch of join-view maintenance. */
   def ivmIngestBatch(spark: SparkSession, dA: DataFrame, dB: DataFrame,
       batchId: Long, dir: String): Unit = {
-    def stored(sub: String): Option[DataFrame] = {
-      val (fs, root) = tableFs(spark, s"$dir/$sub")
-      if (!fs.exists(root)) None
-      else {
-        val parts = fs.listStatus(root).toSeq.map(_.getPath)
-          .filter(p => p.getName.startsWith("batch=") &&
-            p.getName.drop(6).toLong < batchId)
-        if (parts.isEmpty) None
-        else Some(spark.read.parquet(parts.map(_.toString): _*))
-      }
-    }
     val cols = Seq(col("k"), col("av"), col("bv"))
     val da = dA.select(col("k"), col("av"))
     val db = dB.select(col("k"), col("bv"))
-    val terms =
-      stored("b").map(bOld => da.join(bOld, "k").select(cols: _*)).toSeq ++
-        stored("a").map(aOld => db.join(aOld, "k").select(cols: _*)) ++
-        Seq(da.join(db, "k").select(cols: _*))
+    def stored(side: DataFrame, sub: String) =
+      DirTable.partialsBefore(spark, s"$dir/$sub", batchId, side.schema)
+    val terms = Seq(da.join(stored(db, "b"), "k"),
+      db.join(stored(da, "a"), "k"), da.join(db, "k")).map(_.select(cols: _*))
     // deterministic per-batch overwrites: the delta view is a pure
     // function of (ΔA_k, ΔB_k, state < k), so replay rewrites the same
-    // bytes; the <k filter above makes write order irrelevant
+    // bytes; reading only ids < k makes write order irrelevant
     terms.reduce(_ unionAll _).write.mode(SaveMode.Overwrite)
       .parquet(s"$dir/v/batch=$batchId")
     da.write.mode(SaveMode.Overwrite).parquet(s"$dir/a/batch=$batchId")
@@ -1550,6 +1207,16 @@ object Streaming {
         .groupBy(col("bucket"))
         .agg(sum(col("ct")).as("ct"), sum(col("cr")).as("cr")))
 
+  /** One micro-batch of incremental document-frequency maintenance —
+    * the streaming half of the tf-idf vocabulary: per-token document
+    * frequency plus the batch's doc count as append-only `batch=<id>`
+    * partials (idempotent overwrite, the sketch/manifest pattern).
+    * Both are count monoids, so the table folds batch-order-free; idf
+    * is deliberately NOT stored — [[dfTable]] derives it at read time
+    * from the folded (df, N), the drift-monitor discipline (store
+    * monoids, derive the statistic). The corpus doc count rides under
+    * the reserved NULL token — real tokens are never NULL because
+    * split() yields strings — so one table carries both monoids. */
   def dfIngestBatch(
       batch: DataFrame, batchId: Long, tableDir: String): Unit = {
     val toks = batch

@@ -12,9 +12,9 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 /** A local filesystem that FAILS renames into paths matching a suffix
   * by returning FALSE — Hadoop `FileSystem.rename`'s real failure mode
   * (S3A non-atomic directory renames, HDFS lease conflicts). Registered
-  * under the `graftfail:` scheme so upsertBatch's table-swap protocol
-  * can be driven through a rename failure at each swap step (the r9
-  * ADVICE data-loss scenario). Targeting by DESTINATION suffix leaves
+  * under the `graftfail:` scheme so every directory-table publisher can
+  * be driven through a rename failure at each swap step (the r9 ADVICE
+  * data-loss scenario). Targeting by DESTINATION suffix leaves
   * the parquet committer's own renames (into `.tmp/...`) untouched. */
 class FlakyRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "graftfail"
@@ -25,6 +25,13 @@ class FlakyRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
     if (suffix != null && dst.toString.endsWith(suffix)) false
     else super.rename(src, dst)
   }
+  // plain statuses: the local ones load their permissions through a
+  // `file:` URI, which a `graftfail:` path is not (listFiles needs them)
+  override def listStatus(
+      f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] =
+    super.listStatus(f).map(st => new org.apache.hadoop.fs.FileStatus(
+      st.getLen, st.isDirectory, st.getReplication, st.getBlockSize,
+      st.getModificationTime, st.getPath))
 }
 object FlakyRenameFs {
   val failDstSuffix =
@@ -262,11 +269,13 @@ class StreamingSpec extends SparkSpec {
     Streaming.convertNotificationBatch(batch, 7L, objects, out)
     val first = keys.map(rowsOf(out, _))
     assert(!Files.exists(Paths.get(out, "_staging", "7")))
+    assert(!Files.exists(Paths.get(out, "_staging")))
     Streaming.convertNotificationBatch(batch, 7L, objects, out)
     assert(keys.map(rowsOf(out, _)) == first)
     assert(first == Seq(Seq("[r0,Nr0,US,20]"), Seq("[r1,Nr1,US,21]"),
       Seq("[r2,Nr2,US,22]"), Nil))
     assert(!Files.exists(Paths.get(out, "_staging", "7")))
+    assert(!Files.exists(Paths.get(out, "_staging")))
     // no output exists for a key no notification named
     assert(outputKeys(out) == keys.toSet)
   }
@@ -1470,6 +1479,56 @@ class StreamingSpec extends SparkSpec {
         Seq((3L, "c")).toDF("id", "name"), table, "id")
       assert(names == Set(1L, 2L, 3L), "recovery lost pre-crash keys")
       assert(!NF.exists(NP.get(local + ".old")), "stale .old left behind")
+
+      // every other publisher: a FALSE rename onto its target throws,
+      // leaves the visible rows unchanged, and a retry succeeds
+      def failsOnce[T](suffix: String, visible: => T)(publish: => Unit): Unit = {
+        val before = visible
+        FlakyRenameFs.failDstSuffix.set(suffix)
+        val e = try intercept[java.io.IOException](publish)
+          finally FlakyRenameFs.failDstSuffix.set(null)
+        assert(e.getMessage.contains("rename"), e.getMessage)
+        assert(visible == before, s"failed publish onto $suffix changed reads")
+        publish
+      }
+      val docs = Tables(spark, sfDir, "documents")
+        .select(col("doc_id"), col("text"))
+      val spans = "graftfail:" + tmpDir("span_flaky")
+      (0 until 2).foreach(w => Streaming.spanIngestBatch(
+        docs.filter(col("doc_id") % 2 === w), w.toLong, spans))
+      def dupSpans = Streaming.dupSpanTable(spark, spans)
+        .collect().map(_.getLong(0)).toSet
+      val dupBefore = dupSpans
+      failsOnce("compact=1", dupSpans)(
+        Streaming.spanCompact(spark, spans, upToBatch = 1L))
+      assert(dupSpans == dupBefore)
+      assert(NF.exists(NP.get(spans.stripPrefix("graftfail:") + "/compact=1")))
+
+      val zt = "graftfail:" + tmpDir("zone_flaky")
+      val zrows = Tables(spark, sfDir, "lineitem").selectExpr(
+        "l_orderkey * 10 + l_linenumber AS rid",
+        "l_partkey AS a", "l_suppkey AS b")
+      def sorted(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
+      (0 until 2).foreach(w => Streaming.zoneIngestBatch(
+        zrows.filter(col("rid") % 2 === w), w.toLong, zt))
+      def visibleRows = sorted(spark.read.format("graft.sources.ZoneMapSource")
+        .load(zt).select(col("rid"), col("a"), col("b")))
+      val all = sorted(zrows)
+      assert(visibleRows == all)
+      failsOnce("opt=1", visibleRows)(Streaming.zoneOptimize(spark, zt))
+      assert(visibleRows == all)
+      assert(Streaming.zoneTable(spark, zt).collect()
+        .forall(_.getAs[String]("file").startsWith("opt=1/")))
+      failsOnce("gen=0", visibleRows)(
+        Streaming.dvDelete(spark, zt, (rid, _, _) => rid % 5 == 0))
+      val kept = all.filter(_._1 % 5 != 0)
+      assert(visibleRows == kept)
+      val more = (0L until 20L).map(i => (1000000000L + i, i % 17, i % 23))
+      failsOnce("batch=5", visibleRows)(more.toDF("rid", "a", "b").write
+        .format("graft.sources.ZoneMapSource").option("batch", 5L)
+        .mode("append").save(zt))
+      assert(visibleRows == (kept ++ more).sorted)
     } finally {
       FlakyRenameFs.failDstSuffix.set(null)
       spark.sparkContext.hadoopConfiguration.unset("fs.graftfail.impl")
@@ -2089,8 +2148,8 @@ class StreamingSpec extends SparkSpec {
         "old generation not retired")
       // crash leftover below the horizon stays invisible to readers
       NF.createDirectories(NP.get(s"$table/zones/batch=3"))
-      assert(Streaming.zoneVisibleParts(spark, table, "zones")
-        .forall(n => n == "opt=7"))
+      assert(graft.sources.DirTable.visible(spark, s"$table/zones", "opt")
+        .map(_.name).forall(n => n == "opt=7"))
     } finally rows.unpersist()
   }
 
