@@ -205,7 +205,8 @@ object Multimodal {
   // ------------------------------------------------------- byte order
   // The readers and writers every container walk and encoder shares.
   // Readers are unchecked: each format bounds its reads against its own
-  // declared sizes (the JPEG path reads through the checked [[jU8]]).
+  // declared sizes (the JPEG path reads through the checked [[jU8]],
+  // the WAV and AVI paths through [[RiffChunk]]).
   private def u8(b: Array[Byte], o: Int): Int = b(o) & 0xff
   private def be16(b: Array[Byte], o: Int): Int = u8(b, o) << 8 | u8(b, o + 1)
   private def be24(b: Array[Byte], o: Int): Int = u8(b, o) << 16 | be16(b, o + 1)
@@ -254,6 +255,61 @@ object Multimodal {
   private def riffList(tag: String, kind: String, body: Array[Byte]): Array[Byte] =
     tag.getBytes("US-ASCII") ++ leWords(body.length + 4) ++
       kind.getBytes("US-ASCII") ++ body
+
+  // ------------------------------------------------------------- RIFF
+  // The one chunk walk under the WAV and AVI codecs. [[riffWalk]]
+  // checks every declared size against the enclosing span (in Long, so
+  // a corrupt size can neither overrun the array nor step backwards)
+  // before a [[RiffChunk]] exists, and a chunk's field reads are
+  // checked against its own size: damage anywhere is an
+  // IllegalArgumentException naming the chunk.
+
+  /** One walked chunk: fourcc `id`, body offset and declared size. */
+  private final class RiffChunk(b: Array[Byte], val id: String,
+      val body: Int, val size: Int) {
+    private def at(off: Int, n: Int): Int = {
+      require(off + n <= size,
+        s"'$id' chunk too short ($size bytes) for a field at $off")
+      body + off
+    }
+    def byte(off: Int): Int = b(at(off, 1)) & 0xff
+    def u16(off: Int): Int = le16(b, at(off, 2))
+    def u32(off: Int): Long = le32u(b, at(off, 4))
+    def tag(off: Int): String = new String(b, at(off, 4), 4, "US-ASCII")
+    def bytes: Array[Byte] =
+      java.util.Arrays.copyOfRange(b, body, body + size)
+    /** A LIST chunk's form type and its walked children. */
+    def list: (String, Vector[RiffChunk]) = {
+      val kind = tag(0)
+      (kind, riffWalk(b, body + 4, body + size, s"LIST '$kind'"))
+    }
+  }
+
+  /** The chunks of `b[from, to)` in order, each size checked against
+    * the span (`in` names it), stepping to word-aligned offsets. */
+  private def riffWalk(b: Array[Byte], from: Int, to: Int, in: String)
+      : Vector[RiffChunk] = {
+    val out = Vector.newBuilder[RiffChunk]
+    var o = from
+    while (o < to) {
+      require(o + 8L <= to, s"truncated chunk header at $o in $in")
+      val id = new String(b, o, 4, "US-ASCII"); val size = le32u(b, o + 4)
+      require(o + 8L + size <= to,
+        s"truncated or malformed '$id' chunk at $o in $in (size=$size)")
+      out += new RiffChunk(b, id, o + 8, size.toInt)
+      o += 8 + size.toInt + (size.toInt & 1)
+    }
+    out.result()
+  }
+
+  /** The top-level chunks of a RIFF file of form type `form`. */
+  private def riffForm(b: Array[Byte], form: String): Vector[RiffChunk] = {
+    require(b.length >= 12 && new String(b, 0, 4, "US-ASCII") == "RIFF",
+      "not a RIFF file")
+    val kind = new String(b, 8, 4, "US-ASCII")
+    require(kind == form, s"RIFF form '$kind' is not $form")
+    riffWalk(b, 12, b.length, s"RIFF '$form'")
+  }
 
   /** Minimal real PPM (P6) encoder — fixture generator for the decode
     * path. Emits a comment line so the decoder's header handling is
@@ -568,6 +624,27 @@ object Multimodal {
   private val PngSig: Array[Byte] =
     Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
 
+  /** CRC-32 of `b[from, from + len)`: the PNG chunk checksum. */
+  private def pngCrc(b: Array[Byte], from: Int, len: Int): Int = {
+    val crc = new java.util.zip.CRC32()
+    crc.update(b, from, len)
+    crc.getValue.toInt
+  }
+
+  /** The PNG chunk at `o`, checked: its length bound (in Long — the
+    * length is attacker-controlled), then its CRC. Returns (tag, data
+    * offset, length). */
+  private def pngChunk(b: Array[Byte], o: Int): (String, Int, Int) = {
+    require(o + 8 <= b.length, "truncated PNG chunk header")
+    val len = be32(b, o)
+    val tag = new String(b, o + 4, 4, "US-ASCII")
+    require(len >= 0 && o + 12L + len <= b.length,
+      s"truncated or malformed $tag chunk (len=$len)")
+    require(pngCrc(b, o + 4, 4 + len) == be32(b, o + 8 + len),
+      s"$tag CRC mismatch")
+    (tag, o + 8, len)
+  }
+
   /** PNG scanline predictor (RFC 2083 §6.6): nearest of left/up/upper-left
     * by the Paeth heuristic, ties broken left → up → upper-left. */
   private def paeth(a: Int, b: Int, c: Int): Int = {
@@ -708,7 +785,7 @@ object Multimodal {
     * CRC-32 on every chunk. */
   private def pngContainer(w: Int, h: Int, interlace: Boolean,
       filtered: Array[Byte]): Array[Byte] = {
-    import java.util.zip.{CRC32, Deflater}
+    import java.util.zip.Deflater
     // zlib-wrap (Deflater's default framing is exactly PNG's stream format)
     val defl = new Deflater()
     defl.setInput(filtered); defl.finish()
@@ -719,10 +796,9 @@ object Multimodal {
     val z = zbuf.toByteArray
     val out = new java.io.ByteArrayOutputStream()
     def chunk(tag: String, data: Array[Byte]): Unit = {
-      val t = tag.getBytes("US-ASCII")
-      putBe32(out, data.length); out.write(t); out.write(data)
-      val crc = new CRC32(); crc.update(t); crc.update(data)
-      putBe32(out, crc.getValue.toInt)
+      val td = tag.getBytes("US-ASCII") ++ data
+      putBe32(out, data.length); out.write(td)
+      putBe32(out, pngCrc(td, 0, td.length))
     }
     out.write(PngSig)
     val ihdr = new java.io.ByteArrayOutputStream()
@@ -762,7 +838,7 @@ object Multimodal {
     * bytes). Throws on bad signature, CRC mismatch, unsupported color
     * layout, or truncated / over-long compressed data. */
   def decodePngPixels(b: Array[Byte]): (Int, Int, Boolean, Array[Byte]) = {
-    import java.util.zip.{CRC32, Inflater}
+    import java.util.zip.Inflater
     require(b.length >= 8 && PngSig.indices.forall(i => b(i) == PngSig(i)),
       "not a PNG")
     var o = 8
@@ -771,32 +847,25 @@ object Multimodal {
     val idat = new java.io.ByteArrayOutputStream()
     var sawIhdr = false; var sawEnd = false
     while (!sawEnd) {
-      require(o + 8 <= b.length, "truncated PNG chunk header")
-      val len = be32(b, o)
-      val tag = new String(b, o + 4, 4, "US-ASCII")
-      // length is attacker-controlled: bound-check in Long before indexing
-      require(len >= 0 && o + 12L + len <= b.length,
-        s"truncated or malformed $tag chunk (len=$len)")
-      val crc = new CRC32(); crc.update(b, o + 4, 4 + len)
-      require(crc.getValue.toInt == be32(b, o + 8 + len), s"$tag CRC mismatch")
+      val (tag, d, len) = pngChunk(b, o)
       tag match {
         case "IHDR" =>
           require(len == 13, "malformed IHDR")
-          w = be32(b, o + 8); h = be32(b, o + 12)
+          w = be32(b, d); h = be32(b, d + 4)
           require(w > 0 && h > 0, s"bad dimensions ${w}x$h")
-          require(b(o + 16) == 8 && b(o + 17) == 2,
+          require(b(d + 8) == 8 && b(d + 9) == 2,
             "only 8-bit truecolor PNG")
-          require(b(o + 20) == 0 || b(o + 20) == 1,
-            s"unknown interlace method ${b(o + 20)}")
-          interlaced = b(o + 20) == 1
+          require(b(d + 12) == 0 || b(d + 12) == 1,
+            s"unknown interlace method ${b(d + 12)}")
+          interlaced = b(d + 12) == 1
           sawIhdr = true
         case "IDAT" =>
           require(sawIhdr, "IDAT before IHDR")
-          idat.write(b, o + 8, len)
+          idat.write(b, d, len)
         case "IEND" => sawEnd = true
         case _ => // ancillary chunks (tEXt, ...): skip, CRC still checked
       }
-      o += 12 + len
+      o = d + len + 4
     }
     require(sawIhdr, "no IHDR chunk")
     // non-empty passes with their reduced dimensions (the whole image
@@ -2235,38 +2304,42 @@ object Multimodal {
     * images (not in this fixture family), size mismatches, or
     * truncation. */
   def decodeGif(bytes: Array[Byte]): (Int, Int, Long, Long, Long) = {
+    // every read is bounds-checked: a cut anywhere is a typed rejection
+    def u(o: Int): Int = {
+      require(o < bytes.length, s"truncated GIF at byte $o")
+      bytes(o) & 0xff
+    }
+    def u16(o: Int): Int = u(o) | u(o + 1) << 8
     require(bytes.length >= 13, "truncated GIF")
     val magic = new String(bytes, 0, 6, "US-ASCII")
     require(magic == "GIF89a" || magic == "GIF87a", s"not a GIF: $magic")
     val w = le16(bytes, 6); val h = le16(bytes, 8)
-    val packed = bytes(10) & 0xff
+    val packed = u(10)
     var o = 13
     var palette: Array[Int] = Array.empty
     if ((packed & 0x80) != 0) {
       val n = 1 << ((packed & 7) + 1)
-      palette = Array.tabulate(n) { j =>
-        (bytes(o + 3 * j) & 0xff) + (bytes(o + 3 * j + 1) & 0xff) +
-          (bytes(o + 3 * j + 2) & 0xff)
-      }
+      palette = Array.tabulate(n)(j => u(o + 3 * j) + u(o + 3 * j + 1) +
+        u(o + 3 * j + 2))
       o += 3 * n
     }
     // walk blocks to the first image descriptor
-    while ((bytes(o) & 0xff) == 0x21) { // extension: label + sub-blocks
+    while (u(o) == 0x21) { // extension: label + sub-blocks
       o += 2
-      while ((bytes(o) & 0xff) != 0) o += 1 + (bytes(o) & 0xff)
+      while (u(o) != 0) o += 1 + u(o)
       o += 1
     }
-    require((bytes(o) & 0xff) == 0x2c, "no image descriptor")
-    val iw = le16(bytes, o + 5); val ih = le16(bytes, o + 7)
-    val ipacked = bytes(o + 9) & 0xff
+    require(u(o) == 0x2c, "no image descriptor")
+    val iw = u16(o + 5); val ih = u16(o + 7)
+    val ipacked = u(o + 9)
     require((ipacked & 0x80) == 0, "local color tables unsupported here")
     require((ipacked & 0x40) == 0, "interlaced GIFs unsupported here")
     require(iw == w && ih == h, "frame does not fill the screen")
     o += 10
-    val m = bytes(o) & 0xff; o += 1
+    val m = u(o); o += 1
     val data = new java.io.ByteArrayOutputStream()
-    while ({ require(o < bytes.length, "truncated GIF data"); (bytes(o) & 0xff) != 0 }) {
-      val n = bytes(o) & 0xff
+    while (u(o) != 0) {
+      val n = u(o)
       require(o + 1 + n <= bytes.length, "truncated GIF sub-block")
       data.write(bytes, o + 1, n); o += 1 + n
     }
@@ -2317,14 +2390,11 @@ object Multimodal {
   /** PNG dimension SNIFF — IHDR only, CRC-verified, no inflate: the
     * cheap header pass ([[decodePng]] is the full decode). */
   def sniffPngDims(b: Array[Byte]): (Int, Int) = {
-    import java.util.zip.CRC32
-    require(b.length >= 33 && PngSig.indices.forall(i => b(i) == PngSig(i)),
+    require(b.length >= 8 && PngSig.indices.forall(i => b(i) == PngSig(i)),
       "not a PNG")
-    require(be32(b, 8) == 13 &&
-      new String(b, 12, 4, "US-ASCII") == "IHDR", "IHDR must lead")
-    val crc = new CRC32(); crc.update(b, 12, 17)
-    require(crc.getValue.toInt == be32(b, 29), "IHDR CRC mismatch")
-    val w = be32(b, 16); val h = be32(b, 20)
+    val (tag, d, len) = pngChunk(b, 8)
+    require(tag == "IHDR" && len == 13, "IHDR must lead")
+    val w = be32(b, d); val h = be32(b, d + 4)
     require(w > 0 && h > 0, s"bad dimensions ${w}x$h")
     (w, h)
   }
@@ -2378,109 +2448,62 @@ object Multimodal {
     * emits a LIST chunk before `data` so the decoder's unknown-chunk
     * skipping is exercised by every fixture. */
   def encodeWav(rate: Int, channels: Int, samples: Array[Short]): Array[Byte] = {
-    val listPayload = "INFOgraft fixture ".getBytes("US-ASCII") // even length
-    val dataBytes = samples.length * 2
-    val riffSize = 4 + (8 + 16) + (8 + listPayload.length) + (8 + dataBytes)
-    val out = new java.io.ByteArrayOutputStream(8 + riffSize)
-    def ascii(t: String): Unit = out.write(t.getBytes("US-ASCII"))
-    ascii("RIFF"); putLe32(out, riffSize); ascii("WAVE")
-    ascii("fmt "); putLe32(out, 16)
-    putLe16(out, 1) // PCM
-    putLe16(out, channels); putLe32(out, rate)
-    putLe32(out, rate * channels * 2) // byte rate
-    putLe16(out, channels * 2) // block align
-    putLe16(out, 16) // bits per sample
-    ascii("LIST"); putLe32(out, listPayload.length); out.write(listPayload)
-    ascii("data"); putLe32(out, dataBytes)
-    samples.foreach(v => putLe16(out, v))
-    out.toByteArray
+    val fmt = leWords(1 | channels << 16, rate, // PCM, channels, rate
+      rate * channels * 2, channels * 2 | 16 << 16) // byte rate, align, bits
+    val data = new java.io.ByteArrayOutputStream(samples.length * 2)
+    samples.foreach(v => putLe16(data, v))
+    riffList("RIFF", "WAVE", riffChunk("fmt ", fmt) ++
+      riffChunk("LIST", "INFOgraft fixture ".getBytes("US-ASCII")) ++
+      riffChunk("data", data.toByteArray))
   }
 
-  /** The same RIFF/PCM16 chunk walk as [[decodeWav]], returning the raw
-    * interleaved int16 samples instead of whole-file statistics — the
-    * extraction step under frame-level feature kernels
-    * (q_multimodal_audio_frames). Same validation contract: throws on
-    * non-RIFF/WAVE, non-PCM16, or truncated/malformed chunk sizes. */
-  def wavSamples(b: Array[Byte]): Array[Int] = {
-    require(b.length >= 12, "truncated WAV")
-    def tag(o: Int): String = new String(b, o, 4, "US-ASCII")
-    require(tag(0) == "RIFF" && tag(8) == "WAVE", "not a RIFF/WAVE file")
-    var o = 12
-    var sawFmt = false
-    val out = Array.newBuilder[Int]
-    while (o + 8 <= b.length) {
-      val id = tag(o); val size = le32(b, o + 4)
-      val body = o + 8
-      require(size >= 0 && body.toLong + size <= b.length,
-        s"truncated or malformed $id chunk (size=$size)")
-      id match {
-        case "fmt " =>
-          require(le16(b, body) == 1 && le16(b, body + 14) == 16, "only PCM16 WAV")
-          sawFmt = true
-        case "data" =>
-          require(sawFmt, "data chunk before fmt")
-          var k = 0
-          val nChunk = size / 2
-          while (k < nChunk) {
-            out += (le16(b, body + 2 * k) << 16) >> 16 // sign-extend int16
-            k += 1
-          }
-        case _ => // skip by declared size
-      }
-      o = body + size + (size & 1)
-    }
-    out.result()
-  }
-
-  /** Real WAV (RIFF/PCM16) parse: chunk walk — `fmt ` → (rate, channels,
-    * bits), unknown chunks (LIST, ...) skipped by their declared size —
-    * then exact integer statistics over the `data` samples. Throws on
-    * non-RIFF/WAVE, non-PCM16, or truncated payloads. */
-  def decodeWav(b: Array[Byte]): DecodedAudio = {
-    require(b.length >= 12, "truncated WAV")
-    def tag(o: Int): String = new String(b, o, 4, "US-ASCII")
-    require(tag(0) == "RIFF" && tag(8) == "WAVE", "not a RIFF/WAVE file")
-    var o = 12
+  /** The WAV (RIFF/PCM16) chunk walk [[decodeWav]] and [[wavSamples]]
+    * share: `fmt ` → (rate, channels), unknown chunks (LIST, ...)
+    * skipped by their declared size, and the interleaved int16 samples
+    * of every `data` chunk in file order (a multi-data-chunk file keeps
+    * n_frames consistent with the sum/peak population). Throws on
+    * non-RIFF/WAVE, non-PCM16, a zero rate or channel count, a missing
+    * data chunk, or truncated/malformed chunk sizes. */
+  private def wavWalk(b: Array[Byte]): (Int, Int, Array[Int]) = {
     var rate = 0; var channels = 0
-    var sum = 0L; var peak = 0; var nInterleaved = 0
     var sawFmt = false; var sawData = false
-    while (o + 8 <= b.length) {
-      val id = tag(o); val size = le32(b, o + 4)
-      val body = o + 8
-      // size is attacker-controlled: a negative or huge value must fail
-      // here, not loop forever (o += negative) or index past the array
-      // (body + size overflowing int) — compare in Long
-      require(size >= 0 && body.toLong + size <= b.length,
-        s"truncated or malformed $id chunk (size=$size)")
-      id match {
+    val out = Array.newBuilder[Int]
+    riffForm(b, "WAVE").foreach { c =>
+      c.id match {
         case "fmt " =>
-          require(le16(b, body) == 1 && le16(b, body + 14) == 16, "only PCM16 WAV")
-          channels = le16(b, body + 2)
-          rate = le32(b, body + 4)
+          require(c.u16(0) == 1 && c.u16(14) == 16, "only PCM16 WAV")
+          channels = c.u16(2)
+          rate = c.u32(4).toInt
           require(channels > 0 && rate > 0,
             s"malformed fmt chunk (channels=$channels, rate=$rate)")
           sawFmt = true
         case "data" =>
           require(sawFmt, "data chunk before fmt")
-          // accumulate: a multi-data-chunk file must keep n_frames
-          // consistent with the sum/peak population, not last-chunk-wins
-          val nChunk = size / 2
           var k = 0
-          while (k < nChunk) {
-            val v = (le16(b, body + 2 * k) << 16) >> 16 // sign-extend int16
-            sum += v
-            val a = math.abs(v)
-            if (a > peak) peak = a
+          while (k < c.size / 2) {
+            out += (c.u16(2 * k) << 16) >> 16 // sign-extend int16
             k += 1
           }
-          nInterleaved += nChunk
           sawData = true
-        case _ => // LIST and friends: skip by declared size
+        case _ => // skip by declared size
       }
-      o = body + size + (size & 1) // RIFF chunks are word-aligned
     }
     require(sawData, "no data chunk")
-    val nFrames = nInterleaved / channels
+    (rate, channels, out.result())
+  }
+
+  /** The raw interleaved int16 samples of a WAV file ([[wavWalk]]),
+    * instead of whole-file statistics — the extraction step under
+    * frame-level feature kernels (q_multimodal_audio_frames). */
+  def wavSamples(b: Array[Byte]): Array[Int] = wavWalk(b)._3
+
+  /** Real WAV (RIFF/PCM16) parse: [[wavWalk]], then exact integer
+    * statistics over the `data` samples. */
+  def decodeWav(b: Array[Byte]): DecodedAudio = {
+    val (rate, channels, samples) = wavWalk(b)
+    var sum = 0L; var peak = 0
+    samples.foreach { v => sum += v; peak = math.max(peak, math.abs(v)) }
+    val nFrames = samples.length / channels
     DecodedAudio(0L, "wav", rate, channels, nFrames.toLong,
       nFrames.toLong * 1000L / rate, sum, peak)
   }
@@ -2967,6 +2990,142 @@ object Multimodal {
     DecodedOgg(0L, "ogg", serial.toInt, page, nSegs, bodyBytes, granule)
   }
 
+  // --------------------------------------------------------------- AVI
+  // One AVI 1.0 reader and writer for both video codecs (MJPEG and
+  // MS-RLE8): the `RIFF AVI ` form holding `hdrl` (the main header
+  // avih, then LIST strl with one `vids` stream's strh and its
+  // BITMAPINFOHEADER strf), a `movi` list of `00dc` frame chunks, and
+  // optionally the `idx1` index. Chunks pad to even offsets per RIFF;
+  // idx1 offsets are relative to the start of the `movi` fourcc
+  // (offset 0 = the fourcc itself, first chunk at 4 — the convention
+  // AVI readers expect). The codecs differ only in their [[AviCodec]].
+
+  /** A video codec's AVI shape: the strh handler fourcc, the strf bit
+    * depth and biCompression, and which frames idx1 flags
+    * AVIIF_KEYFRAME (a flagged frame promises decode-from-here). */
+  private final case class AviCodec(handler: String, bpp: Int,
+      compression: Int, keyframe: Int => Boolean)
+
+  /** AVI writer: `palette` follows the strf BITMAPINFOHEADER (its
+    * 4-byte entry count is biClrUsed). */
+  private def aviWrite(codec: AviCodec, w: Int, h: Int, rate: Int,
+      palette: Array[Byte], frames: Seq[Array[Byte]],
+      withIndex: Boolean): Array[Byte] = {
+    val maxFrame = if (frames.isEmpty) 0 else frames.map(_.length).max
+    val avih = leWords(
+      1000000 / rate, // dwMicroSecPerFrame
+      0, 0, // dwMaxBytesPerSec, dwPaddingGranularity
+      if (withIndex) 0x10 else 0, // dwFlags: AVIF_HASINDEX
+      frames.length, 0, // dwTotalFrames, dwInitialFrames
+      1, maxFrame, // dwStreams, dwSuggestedBufferSize
+      w, h,
+      0, 0, 0, 0) // dwReserved
+    val strh = ("vids" + codec.handler).getBytes("US-ASCII") ++ leWords(
+      0, 0, 0, // flags, priority + language, initial frames
+      1, rate, // dwScale, dwRate: fps = rate/scale
+      0, frames.length, // dwStart, dwLength (frames)
+      maxFrame, -1, 0, // suggBuf, quality, sampleSize
+      0, w | h << 16) // rcFrame
+    val strf = leWords(40, w, h, 1 | codec.bpp << 16, // planes, bit depth
+      codec.compression, w * h * codec.bpp / 8, 0, 0,
+      palette.length / 4, 0) ++ palette
+    val hdrl = riffList("LIST", "hdrl",
+      riffChunk("avih", avih) ++ riffList("LIST", "strl",
+        riffChunk("strh", strh) ++ riffChunk("strf", strf)))
+    val moviBody = new java.io.ByteArrayOutputStream()
+    val offsets = frames.map { f =>
+      val at = 4 + moviBody.size() // 'movi' fourcc occupies offsets 0..3
+      moviBody.write(riffChunk("00dc", f))
+      at
+    }
+    val movi = riffList("LIST", "movi", moviBody.toByteArray)
+    val idx1 = if (!withIndex) Array.emptyByteArray
+      else riffChunk("idx1", frames.indices.toArray.flatMap { i =>
+        "00dc".getBytes("US-ASCII") ++ leWords(
+          if (codec.keyframe(i)) 0x10 else 0, offsets(i), frames(i).length)
+      })
+    riffList("RIFF", "AVI ", hdrl ++ movi ++ idx1)
+  }
+
+  /** AVI reader: every container check both video decoders share,
+    * returning the header view and frames plus the strf chunk for the
+    * codec's own checks. Strict on structure (a damaged container must
+    * fail loudly, not yield silent garbage): the declared RIFF size
+    * against the actual length, exactly one `vids` stream of the
+    * codec's handler with dwScale 1, strf dims, bit depth and
+    * compression agreeing with avih and the codec, `00dc` chunks only
+    * inside `movi`, frame count == dwTotalFrames == strh dwLength,
+    * AVIF_HASINDEX set exactly when idx1 is present, and an idx1 whose
+    * per-frame ids, keyframe flags, offsets and sizes match the movi
+    * walk. */
+  private def aviRead(b: Array[Byte], codec: AviCodec)
+      : (DecodedAvi, RiffChunk) = {
+    val top = riffForm(b, "AVI ")
+    require(le32u(b, 4) == b.length - 8,
+      s"RIFF size ${le32u(b, 4)} != content ${b.length - 8} (truncated?)")
+    var avih, strh, strf, idx1: RiffChunk = null
+    var frames = Vector.empty[Array[Byte]]
+    var offsets = Vector.empty[Long] // movi-relative, for the idx1 check
+    // `in` is the enclosing form or LIST type, `at` its body offset
+    def visit(in: String, at: Int)(c: RiffChunk): Unit = (in, c.id) match {
+      case ("AVI ", "idx1") => idx1 = c
+      case ("hdrl", "avih") => avih = c
+      case ("strl", "strh") => strh = c
+      case ("strl", "strf") => strf = c
+      case ("movi", "00dc") =>
+        offsets :+= (c.body - 8 - at).toLong
+        frames :+= c.bytes
+      case (_, "LIST") =>
+        val (kind, children) = c.list
+        require(Set(("AVI ", "hdrl"), ("AVI ", "movi"), ("hdrl", "strl"))
+          .contains((in, kind)), s"unexpected LIST '$kind' in '$in'")
+        children.foreach(visit(kind, c.body))
+      case (_, id) =>
+        throw new IllegalArgumentException(s"unexpected '$in' chunk '$id'")
+    }
+    top.foreach(visit("AVI ", 8))
+    require(avih != null && strh != null && strf != null,
+      "missing or incomplete hdrl")
+    val hasIndex = (avih.u32(12) & 0x10L) != 0
+    require(avih.u32(24) == 1, s"expected 1 stream, got ${avih.u32(24)}")
+    val w = avih.u32(32).toInt; val h = avih.u32(36).toInt
+    require(strh.tag(0) == "vids", s"stream type '${strh.tag(0)}' is not vids")
+    require(strh.tag(4) == codec.handler,
+      s"handler '${strh.tag(4)}' is not ${codec.handler}")
+    require(strh.u32(20) == 1, "dwScale != 1")
+    val rate = strh.u32(24).toInt
+    require(w > 0 && h > 0 && rate > 0, "missing or incomplete hdrl")
+    require(strf.u32(0) == 40, "strf is not a BITMAPINFOHEADER")
+    require(strf.u32(4) == w && strf.u32(8) == h,
+      s"strf dims (${strf.u32(4)}x${strf.u32(8)}) disagree with avih (${w}x$h)")
+    require(strf.u32(12) == (1 | codec.bpp << 16),
+      s"not ${codec.bpp}-bpp single-plane")
+    require(strf.u32(16) == (codec.compression & 0xffffffffL),
+      s"biCompression does not match handler ${codec.handler}")
+    require(frames.length == avih.u32(16) && frames.length == strh.u32(32),
+      s"found ${frames.length} frames, avih declares ${avih.u32(16)}, " +
+        s"strh ${strh.u32(32)}")
+    require(hasIndex == (idx1 != null),
+      if (hasIndex) "AVIF_HASINDEX set but no idx1 present"
+      else "idx1 present but AVIF_HASINDEX not set")
+    if (idx1 != null) {
+      require(idx1.size % 16 == 0, "idx1 size not a multiple of 16")
+      require(idx1.size / 16 == frames.length,
+        s"idx1 has ${idx1.size / 16} entries for ${frames.length} frames")
+      frames.indices.foreach { i =>
+        val e = 16 * i
+        require(idx1.tag(e) == "00dc", s"idx1 entry $i ckid '${idx1.tag(e)}'")
+        require(((idx1.u32(e + 4) & 0x10L) != 0) == codec.keyframe(i),
+          s"idx1 keyframe flag wrong on frame $i")
+        require(idx1.u32(e + 8) == offsets(i),
+          s"idx1 offset ${idx1.u32(e + 8)} != movi walk ${offsets(i)}")
+        require(idx1.u32(e + 12) == frames(i).length,
+          s"idx1 size mismatch on frame $i")
+      }
+    }
+    (DecodedAvi(w, h, rate, frames.length, hasIndex, frames), strf)
+  }
+
   // --------------------------------------------------------------------
   // MS-RLE8 VIDEO — the INTER-frame codec the stub no longer covers:
   // BI_RLE8 delta frames position themselves with escape opcodes and
@@ -3057,186 +3216,42 @@ object Multimodal {
     out.toByteArray
   }
 
-  /** MS-RLE8-in-AVI writer: the MJPEG container with the 8-bit
-    * palettized stream shape — handler MRLE, biCompression=1
-    * (BI_RLE8), biBitCount=8, a 256-entry identity gray palette after
+  /** MS-RLE8-in-AVI: the 8-bit palettized stream shape — handler MRLE,
+    * biCompression=1 (BI_RLE8), a 256-entry identity gray palette after
     * the BITMAPINFOHEADER, and an idx1 whose AVIIF_KEYFRAME flag marks
     * ONLY frame 0 (delta frames are not seekable entry points — the
     * index semantic MJPEG never needed). */
+  private val Rle8Avi = AviCodec("MRLE", 8, 1, _ == 0)
+  /** The identity gray palette, (b, g, r, 0) per entry. */
+  private val GrayPalette: Array[Byte] =
+    Array.tabulate(1024)(k => if (k % 4 == 3) 0 else (k / 4).toByte)
+
+  /** MS-RLE8-in-AVI writer ([[aviWrite]]). */
   def encodeAviRle8(w: Int, h: Int, rate: Int,
-      frames: Seq[Array[Byte]], withIndex: Boolean = true): Array[Byte] = {
-    val maxFrame = if (frames.isEmpty) 0 else frames.map(_.length).max
-    val avih = leWords(1000000 / rate, 0, 0, if (withIndex) 0x10 else 0,
-      frames.length, 0, 1, maxFrame, w, h, 0, 0, 0, 0)
-    val strh = {
-      val o = new java.io.ByteArrayOutputStream()
-      o.write("vids".getBytes("US-ASCII"))
-      o.write("MRLE".getBytes("US-ASCII"))
-      putLe32(o, 0); putLe16(o, 0); putLe16(o, 0); putLe32(o, 0)
-      o.write(leWords(1, rate, 0, frames.length, maxFrame, -1, 0))
-      putLe16(o, 0); putLe16(o, 0); putLe16(o, w); putLe16(o, h)
-      o.toByteArray
-    }
-    val strf = {
-      val o = new java.io.ByteArrayOutputStream()
-      o.write(leWords(40, w, h)); putLe16(o, 1); putLe16(o, 8) // 8 bpp
-      putLe32(o, 1) // biCompression = BI_RLE8
-      o.write(leWords(w * h, 0, 0, 256, 0)) // biClrUsed = 256
-      var i = 0
-      while (i < 256) { // identity gray palette: (b, g, r, 0)
-        o.write(i); o.write(i); o.write(i); o.write(0); i += 1
-      }
-      o.toByteArray
-    }
-    val hdrl = riffList("LIST", "hdrl",
-      riffChunk("avih", avih) ++ riffList("LIST", "strl",
-        riffChunk("strh", strh) ++ riffChunk("strf", strf)))
-    val moviBody = new java.io.ByteArrayOutputStream()
-    val offsets = frames.map { f =>
-      val at = 4 + moviBody.size()
-      moviBody.write(riffChunk("00dc", f))
-      at
-    }
-    val movi = riffList("LIST", "movi", moviBody.toByteArray)
-    val idx1 = if (!withIndex) Array.emptyByteArray else {
-      val o = new java.io.ByteArrayOutputStream()
-      frames.zip(offsets).zipWithIndex.foreach { case ((f, at), fi) =>
-        o.write("00dc".getBytes("US-ASCII"))
-        // keyframe flag: frame 0 ONLY
-        o.write(leWords(if (fi == 0) 0x10 else 0, at, f.length))
-      }
-      riffChunk("idx1", o.toByteArray)
-    }
-    riffList("RIFF", "AVI ", hdrl ++ movi ++ idx1)
-  }
+      frames: Seq[Array[Byte]], withIndex: Boolean = true): Array[Byte] =
+    aviWrite(Rle8Avi, w, h, rate, GrayPalette, frames, withIndex)
 
-
-  /** One decoded RLE8 frame\u2019s exact-integer pixel statistics over
+  /** One decoded RLE8 frame’s exact-integer pixel statistics over
     * the RECONSTRUCTED frame (reference bands included — the proof the
     * inter-frame carry happened). */
   case class DecodedRleFrame(doc_id: Long, frame: Int, w: Int, h: Int,
       rate: Int, has_index: Boolean, n_px: Long, sum_px: Long,
       sum_sq: Long, wsum: Long)
 
-  /** MS-RLE8-in-AVI decode: container walk (headers, palette,
-    * BI_RLE8 contract, idx1 keyframe-flag semantics), then sequential
-    * per-frame RLE decode CARRYING the frame buffer — delta frames
-    * start from what the previous frame left. */
+  /** MS-RLE8-in-AVI decode: the container ([[aviRead]]) and the
+    * identity palette, then sequential per-frame RLE decode CARRYING
+    * the frame buffer — delta frames start from what the previous frame
+    * left. */
   def decodeAviRle8(bytes: Array[Byte]): Vector[DecodedRleFrame] = {
-    def fcc(o: Int): String = {
-      require(o + 4 <= bytes.length, s"truncated fourcc at $o")
-      new String(bytes, o, 4, "US-ASCII")
+    val (avi, strf) = aviRead(bytes, Rle8Avi)
+    require(strf.u32(32) == 256, "palette size")
+    (0 until 256).foreach { i => // stats read indices: pin the palette
+      require((0 until 3).forall(ch => strf.byte(40 + 4 * i + ch) == i),
+        s"palette entry $i is not identity gray")
     }
-    require(bytes.length >= 12 && fcc(0) == "RIFF", "not a RIFF file")
-    require(le32u(bytes, 4) == bytes.length - 8,
-      s"RIFF size ${le32u(bytes, 4)} != content ${bytes.length - 8} (truncated?)")
-    require(fcc(8) == "AVI ", s"RIFF form is not AVI")
-    var w = -1; var h = -1; var rate = -1; var total = -1
-    var hasIndex = false
-    var frames = Vector.empty[Array[Byte]]
-    var offsets = Vector.empty[Long]
-    var idxOk = !false
-    var sawIdx = false
-    var o = 12
-    while (o < bytes.length) {
-      require(o + 8 <= bytes.length, s"truncated chunk header at $o")
-      val id = fcc(o); val sz = le32u(bytes, o + 4)
-      require(o + 8 + sz <= bytes.length, s"truncated chunk at $o")
-      id match {
-        case "LIST" =>
-          fcc(o + 8) match {
-            case "hdrl" =>
-              var p = o + 12
-              val end = o + 8 + sz.toInt
-              while (p < end) {
-                val cid = fcc(p); val csz = le32u(bytes, p + 4).toInt
-                cid match {
-                  case "avih" =>
-                    hasIndex = (le32u(bytes, p + 8 + 12) & 0x10L) != 0
-                    total = le32u(bytes, p + 8 + 16).toInt
-                    w = le32u(bytes, p + 8 + 32).toInt
-                    h = le32u(bytes, p + 8 + 36).toInt
-                  case "LIST" if fcc(p + 8) == "strl" =>
-                    var q = p + 12
-                    val send = p + 8 + csz
-                    while (q < send) {
-                      val sid = fcc(q); val ssz = le32u(bytes, q + 4).toInt
-                      sid match {
-                        case "strh" =>
-                          require(fcc(q + 8) == "vids", "not vids")
-                          require(fcc(q + 12) == "MRLE",
-                            s"handler is not MRLE")
-                          rate = le32u(bytes, q + 8 + 24).toInt
-                        case "strf" =>
-                          require(le32u(bytes, q + 8) == 40, "bad strf")
-                          require(le32u(bytes, q + 20) == 0x00080001L, // planes=1, bpp=8
-                            "not 8-bpp single-plane")
-                          require(le32u(bytes, q + 24) == 1,
-                            "biCompression is not BI_RLE8")
-                          require(le32u(bytes, q + 40) == 256, "palette size")
-                          var pi = 0
-                          while (pi < 256) { // identity palette pin
-                            require(u8(bytes, q + 48 + pi * 4) == pi &&
-                              u8(bytes, q + 48 + pi * 4 + 1) == pi &&
-                              u8(bytes, q + 48 + pi * 4 + 2) == pi,
-                              s"palette entry $pi is not identity gray")
-                            pi += 1
-                          }
-                        case other =>
-                          throw new IllegalArgumentException(
-                            s"unexpected strl chunk: " + other)
-                      }
-                      q += 8 + ssz + (ssz & 1)
-                    }
-                  case other => throw new IllegalArgumentException(
-                    s"unexpected hdrl chunk: " + other)
-                }
-                p += 8 + csz + (csz & 1)
-              }
-            case "movi" =>
-              var p = o + 12
-              val end = o + 8 + sz.toInt
-              while (p < end) {
-                val cid = fcc(p); val csz = le32u(bytes, p + 4).toInt
-                require(cid == "00dc", s"unexpected movi chunk")
-                require(p + 8 + csz <= end, "frame overruns movi")
-                offsets :+= (p - (o + 8)).toLong
-                frames :+= java.util.Arrays.copyOfRange(
-                  bytes, p + 8, p + 8 + csz)
-                p += 8 + csz + (csz & 1)
-              }
-            case other => throw new IllegalArgumentException(
-              s"unexpected LIST: " + other)
-          }
-        case "idx1" =>
-          sawIdx = true
-          val n = (sz / 16).toInt
-          require(n == frames.length, "idx1 entry count mismatch")
-          var e = 0
-          while (e < n) {
-            val base = o + 8 + e * 16
-            require(fcc(base) == "00dc", "idx1 id mismatch")
-            val flags = le32u(bytes, base + 4)
-            // THE inter-frame index semantic: only frame 0 is a
-            // seekable keyframe; a flagged delta frame would promise
-            // decode-from-here and deliver garbage
-            require(((flags & 0x10L) != 0) == (e == 0),
-              s"idx1 keyframe flag wrong on frame $e")
-            require(le32u(bytes, base + 8) == offsets(e), "idx1 offset mismatch")
-            require(le32u(bytes, base + 12) == frames(e).length.toLong,
-              "idx1 size mismatch")
-            e += 1
-          }
-        case other => throw new IllegalArgumentException(
-          s"unexpected top-level chunk: " + other)
-      }
-      o += 8 + sz.toInt + (sz.toInt & 1)
-    }
-    require(w > 0 && h > 0 && rate > 0, "missing headers")
-    require(frames.length == total, "frame count mismatch")
-    require(hasIndex == sawIdx, "index flag vs idx1 presence mismatch")
+    val (w, h) = (avi.w, avi.h)
     val buf = new Array[Byte](w * h)
-    frames.zipWithIndex.map { case (f, fi) =>
+    avi.frames.zipWithIndex.map { case (f, fi) =>
       decodeRle8Frame(f, w, h, buf) // buf carries frame fi-1 into fi
       var sum = 0L; var sq = 0L; var ws = 0L
       var y = 0
@@ -3249,7 +3264,7 @@ object Multimodal {
         }
         y += 1
       }
-      DecodedRleFrame(0L, fi, w, h, rate, sawIdx,
+      DecodedRleFrame(0L, fi, w, h, avi.rate, avi.hasIndex,
         w.toLong * h, sum, sq, ws)
     }.toVector
   }
@@ -3287,69 +3302,17 @@ object Multimodal {
     }
   }
 
-  /** MJPEG-in-AVI writer (RIFF 1.0, the `AVI ` form Microsoft's
-    * original spec and every capture tool emit): `hdrl` with the main
-    * header + one `vids/MJPG` stream (strh + BITMAPINFOHEADER strf),
-    * a `movi` list of `00dc` frame chunks (each an independent
-    * baseline JPEG — MJPEG is exactly "every frame is a keyframe
-    * JPEG"), and optionally the `idx1` keyframe index. Chunks pad to
-    * even offsets per RIFF; idx1 offsets are relative to the start of
-    * the `movi` fourcc (offset 0 = the fourcc itself, first chunk at
-    * 4 — the convention AVI readers expect). */
-  def encodeAviMjpeg(w: Int, h: Int, rate: Int,
-      frames: Seq[Array[Byte]], withIndex: Boolean = true): Array[Byte] = {
-    val maxFrame = if (frames.isEmpty) 0 else frames.map(_.length).max
-    val avih = leWords(
-      1000000 / rate, // dwMicroSecPerFrame
-      0, 0, // dwMaxBytesPerSec, dwPaddingGranularity
-      if (withIndex) 0x10 else 0, // dwFlags: AVIF_HASINDEX
-      frames.length, 0, // dwTotalFrames, dwInitialFrames
-      1, maxFrame, // dwStreams, dwSuggestedBufferSize
-      w, h,
-      0, 0, 0, 0) // dwReserved
-    val strh = {
-      val o = new java.io.ByteArrayOutputStream()
-      o.write("vids".getBytes("US-ASCII"))
-      o.write("MJPG".getBytes("US-ASCII"))
-      // flags, priority, language, initial
-      putLe32(o, 0); putLe16(o, 0); putLe16(o, 0); putLe32(o, 0)
-      o.write(leWords(
-        1, rate, // dwScale, dwRate: fps = rate/scale
-        0, frames.length, // dwStart, dwLength (frames)
-        maxFrame, -1, 0)) // suggBuf, quality, sampleSize
-      putLe16(o, 0); putLe16(o, 0); putLe16(o, w); putLe16(o, h) // rcFrame
-      o.toByteArray
-    }
-    val strf = {
-      val o = new java.io.ByteArrayOutputStream()
-      o.write(leWords(40, w, h)); putLe16(o, 1); putLe16(o, 24) // BITMAPINFOHEADER
-      o.write("MJPG".getBytes("US-ASCII")) // biCompression
-      o.write(leWords(3 * w * h, 0, 0, 0, 0))
-      o.toByteArray
-    }
-    val hdrl = riffList("LIST", "hdrl",
-      riffChunk("avih", avih) ++ riffList("LIST", "strl",
-        riffChunk("strh", strh) ++ riffChunk("strf", strf)))
-    // movi body; record each chunk's offset relative to the 'movi' fourcc
-    val moviBody = new java.io.ByteArrayOutputStream()
-    val offsets = frames.map { f =>
-      val at = 4 + moviBody.size() // 'movi' fourcc occupies offsets 0..3
-      moviBody.write(riffChunk("00dc", f))
-      at
-    }
-    val movi = riffList("LIST", "movi", moviBody.toByteArray)
-    val idx1 = if (!withIndex) Array.emptyByteArray else {
-      val o = new java.io.ByteArrayOutputStream()
-      frames.zip(offsets).foreach { case (f, at) =>
-        o.write("00dc".getBytes("US-ASCII"))
-        // AVIIF_KEYFRAME: every MJPEG frame is one
-        o.write(leWords(0x10, at, f.length))
-      }
-      riffChunk("idx1", o.toByteArray)
-    }
-    riffList("RIFF", "AVI ", hdrl ++ movi ++ idx1)
-  }
+  /** MJPEG-in-AVI: one `vids/MJPG` stream whose frames are each an
+    * independent baseline JPEG — MJPEG is exactly "every frame is a
+    * keyframe JPEG". */
+  private val MjpegAvi =
+    AviCodec("MJPG", 24, le32("MJPG".getBytes("US-ASCII"), 0), _ => true)
 
+  /** MJPEG-in-AVI writer ([[aviWrite]]), optionally with the idx1
+    * keyframe index. */
+  def encodeAviMjpeg(w: Int, h: Int, rate: Int,
+      frames: Seq[Array[Byte]], withIndex: Boolean = true): Array[Byte] =
+    aviWrite(MjpegAvi, w, h, rate, Array.emptyByteArray, frames, withIndex)
 
   /** Decoded MJPEG-in-AVI container: declared dims/rate/frame count
     * from the headers, whether an idx1 index was present (and
@@ -3358,133 +3321,14 @@ object Multimodal {
   case class DecodedAvi(w: Int, h: Int, rate: Int, nFrames: Int,
       hasIndex: Boolean, frames: Vector[Array[Byte]])
 
-  /** MJPEG-in-AVI container walk + frame extraction — retires the
-    * video decodeStub route: MJPEG is intra-only (each `00dc` chunk is
-    * a complete baseline JPEG), so the repo's own T.81 decoder
-    * finishes the job per frame; only INTER-frame codecs (H.26x/VPx/
-    * AV1 motion compensation + arithmetic coding) remain genuinely
-    * library-bound. Strict on structure (a damaged container must
-    * fail loudly, not yield silent garbage): RIFF/AVI magics, the
-    * declared RIFF size against the actual length, exactly one
-    * `vids/MJPG` stream whose strh/strf/avih dims agree, even-padded
-    * `00dc` chunks only inside `movi`, frame count == dwTotalFrames ==
-    * strh dwLength, and — when AVIF_HASINDEX is set — an idx1 whose
-    * per-frame offsets/sizes match the movi walk exactly. */
-  def decodeAviMjpeg(bytes: Array[Byte]): DecodedAvi = {
-    def fcc(o: Int): String = {
-      require(o + 4 <= bytes.length, s"truncated fourcc at $o")
-      new String(bytes, o, 4, "US-ASCII")
-    }
-    require(bytes.length >= 12 && fcc(0) == "RIFF", "not a RIFF file")
-    require(le32u(bytes, 4) == bytes.length - 8,
-      s"RIFF size ${le32u(bytes, 4)} != content ${bytes.length - 8} (truncated?)")
-    require(fcc(8) == "AVI ", s"RIFF form '${fcc(8)}' is not AVI")
-    var w = -1; var h = -1; var rate = -1; var total = -1
-    var hasIndex = false
-    var sW = -1; var sH = -1; var sLen = -1
-    var frames = Vector.empty[Array[Byte]]
-    var offsets = Vector.empty[Long] // movi-relative, for idx1 check
-    var idxOk = false
-    var o = 12
-    while (o < bytes.length) {
-      require(o + 8 <= bytes.length, s"truncated chunk header at $o")
-      val id = fcc(o); val sz = le32u(bytes, o + 4)
-      require(o + 8 + sz <= bytes.length, s"truncated '$id' chunk at $o")
-      id match {
-        case "LIST" =>
-          val kind = fcc(o + 8)
-          kind match {
-            case "hdrl" =>
-              // avih directly, then LIST strl { strh, strf }
-              var p = o + 12
-              val end = o + 8 + sz.toInt
-              while (p < end) {
-                val cid = fcc(p); val csz = le32u(bytes, p + 4).toInt
-                cid match {
-                  case "avih" =>
-                    require(csz >= 56, "short avih")
-                    hasIndex = (le32u(bytes, p + 8 + 12) & 0x10L) != 0
-                    total = le32u(bytes, p + 8 + 16).toInt
-                    require(le32u(bytes, p + 8 + 24) == 1,
-                      s"expected 1 stream, got ${le32u(bytes, p + 8 + 24)}")
-                    w = le32u(bytes, p + 8 + 32).toInt
-                    h = le32u(bytes, p + 8 + 36).toInt
-                  case "LIST" if fcc(p + 8) == "strl" =>
-                    var q = p + 12
-                    val send = p + 8 + csz
-                    while (q < send) {
-                      val sid = fcc(q); val ssz = le32u(bytes, q + 4).toInt
-                      sid match {
-                        case "strh" =>
-                          require(fcc(q + 8) == "vids",
-                            s"stream type '${fcc(q + 8)}' is not vids")
-                          require(fcc(q + 12) == "MJPG",
-                            s"handler '${fcc(q + 12)}' is not MJPG")
-                          require(le32u(bytes, q + 8 + 20) == 1, "dwScale != 1")
-                          rate = le32u(bytes, q + 8 + 24).toInt
-                          sLen = le32u(bytes, q + 8 + 32).toInt
-                        case "strf" =>
-                          require(le32u(bytes, q + 8) == 40, "strf is not a " +
-                            "BITMAPINFOHEADER")
-                          sW = le32u(bytes, q + 12).toInt
-                          sH = le32u(bytes, q + 16).toInt
-                          require(fcc(q + 8 + 16) == "MJPG",
-                            s"biCompression '${fcc(q + 8 + 16)}'")
-                        case other =>
-                          throw new IllegalArgumentException(
-                            s"unexpected strl chunk '$other'")
-                      }
-                      q += 8 + ssz + (ssz & 1)
-                    }
-                  case other => throw new IllegalArgumentException(
-                    s"unexpected hdrl chunk '$other'")
-                }
-                p += 8 + csz + (csz & 1)
-              }
-            case "movi" =>
-              var p = o + 12
-              val end = o + 8 + sz.toInt
-              while (p < end) {
-                val cid = fcc(p); val csz = le32u(bytes, p + 4).toInt
-                require(cid == "00dc", s"unexpected movi chunk '$cid'")
-                require(p + 8 + csz <= end, s"frame overruns movi at $p")
-                offsets :+= (p - (o + 8)).toLong // relative to 'movi' fourcc
-                frames :+= java.util.Arrays.copyOfRange(
-                  bytes, p + 8, p + 8 + csz)
-                p += 8 + csz + (csz & 1)
-              }
-            case other => throw new IllegalArgumentException(
-              s"unexpected LIST '$other'")
-          }
-        case "idx1" =>
-          require(sz % 16 == 0, "idx1 size not a multiple of 16")
-          val n = (sz / 16).toInt
-          require(n == frames.length,
-            s"idx1 has $n entries for ${frames.length} frames")
-          for (i <- 0 until n) {
-            val e = o + 8 + 16 * i
-            require(fcc(e) == "00dc", s"idx1 entry $i ckid '${fcc(e)}'")
-            require((le32u(bytes, e + 4) & 0x10L) != 0,
-              s"MJPEG frame $i not flagged keyframe")
-            require(le32u(bytes, e + 8) == offsets(i),
-              s"idx1 offset ${le32u(bytes, e + 8)} != movi walk ${offsets(i)}")
-            require(le32u(bytes, e + 12) == frames(i).length.toLong,
-              s"idx1 size mismatch on frame $i")
-          }
-          idxOk = true
-        case other =>
-          throw new IllegalArgumentException(s"unexpected chunk '$other'")
-      }
-      o += 8 + sz.toInt + (sz.toInt & 1)
-    }
-    require(w > 0 && h > 0 && rate > 0, "missing or incomplete hdrl")
-    require(sW == w && sH == h,
-      s"strf dims (${sW}x$sH) disagree with avih (${w}x$h)")
-    require(frames.length == total && frames.length == sLen,
-      s"found ${frames.length} frames, avih declares $total, strh $sLen")
-    require(!hasIndex || idxOk, "AVIF_HASINDEX set but no idx1 present")
-    DecodedAvi(w, h, rate, frames.length, hasIndex, frames)
-  }
+  /** MJPEG-in-AVI container walk ([[aviRead]]) + frame extraction —
+    * retires the video decodeStub route: MJPEG is intra-only (each
+    * `00dc` chunk is a complete baseline JPEG), so the repo's own T.81
+    * decoder finishes the job per frame; only INTER-frame codecs
+    * (H.26x/VPx/AV1 motion compensation + arithmetic coding) remain
+    * genuinely library-bound. */
+  def decodeAviMjpeg(bytes: Array[Byte]): DecodedAvi =
+    aviRead(bytes, MjpegAvi)._1
 
   /** q_multimodal_mjpeg's fixture: an AVI holding (id mod 3)+2 MJPEG
     * frames, every frame a per-block-constant baseline JPEG under the

@@ -8,10 +8,11 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.api.ReadSupport
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.example.data.Group
+import org.apache.parquet.schema.MessageType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
 import org.apache.spark.sql.SparkSession
@@ -175,11 +176,6 @@ private[graft] object ZoneMapSource {
     out.toSeq.sortBy(_._1)
   }
 
-  /** Data schema from the first visible part-file's parquet footer —
-    * the source serves whatever the ingest wrote (the r11 zoneScan
-    * schema lesson, applied from day one here). Supported leaf types:
-    * INT32/INT64/DOUBLE/BINARY-UTF8, which covers the zone table's
-    * numeric contract plus string payloads. */
   /** Declared-schema sidecar written by the catalog's CREATE TABLE —
     * the fallback that lets an EMPTY created table be loaded before
     * its first insert. */
@@ -202,6 +198,11 @@ private[graft] object ZoneMapSource {
     } finally in.close()
   }
 
+  /** Data schema from the first visible part-file's parquet footer —
+    * the source serves whatever the ingest wrote (the r11 zoneScan
+    * schema lesson, applied from day one here). Supported leaf types:
+    * INT32/INT64/DOUBLE/BINARY-UTF8, which covers the zone table's
+    * numeric contract plus string payloads. */
   def dataSchema(dir: String): StructType = {
     val first = DirTable.visible(SparkSession.active, s"$dir/data", "opt")
       .iterator.flatMap(p => partFiles(dir, p.name).headOption)
@@ -384,21 +385,6 @@ private[graft] object ZoneMapSource {
       f -> (sorted.map(_._2).toArray, sorted.map(_._3).toArray)
     }
   }
-
-  /** Parquet read-schema string for a projected Spark schema — this is
-    * what makes column pruning reach the PARQUET reader, not just the
-    * row conversion. */
-  def parquetProjection(schema: StructType): String =
-    schema.fields.map { f =>
-      val t = f.dataType match {
-        case IntegerType => "int32"
-        case LongType => "int64"
-        case DoubleType => "double"
-        case StringType => "binary"
-        case other => throw new IllegalArgumentException(other.toString)
-      }
-      s"  optional $t ${f.name};"
-    }.mkString("message graft_zonemap {\n", "\n", "\n}")
 }
 
 private[graft] final case class ZoneRow(
@@ -899,12 +885,20 @@ private[graft] object ZoneMapCommit {
     // wholesale, which may hold orphans from retried tasks
     val dataStage = new Path(s"$path/.commit_staging_$uid")
     require(fs.mkdirs(dataStage), s"cannot create $dataStage")
-    msgs.foreach { m =>
-      val src = new Path(staging, m.file)
-      DirTable.rename(fs, src, new Path(dataStage, m.file),
-        "zone commit(task file)")
+    try {
+      msgs.foreach { m =>
+        val src = new Path(staging, m.file)
+        DirTable.rename(fs, src, new Path(dataStage, m.file),
+          "zone commit(task file)")
+      }
+      DirTable.rename(fs, dataStage, target, "zone commit(data)")
+    } catch {
+      case e: java.io.IOException =>
+        // the failed attempt's files go with it: a retry writes fresh
+        // task files under a new uid, so nothing would remove these
+        DirTable.delete(fs, dataStage, "zone commit(drop data stage)")
+        throw e
     }
-    DirTable.rename(fs, dataStage, target, "zone commit(data)")
     // the batch zone row publishes LAST — it is the commit point
     import spark.implicits._
     val zoneStage = s"$path/.z_staging_$uid"
@@ -1738,6 +1732,20 @@ private[sources] class ZoneMapReaderFactory(required: StructType)
     }
 }
 
+/** Group reads of the named columns, clipped from each file's own
+  * footer schema: a column keeps the repetition its writer declared
+  * (`required` from a non-nullable source, `optional` otherwise), so
+  * column pruning reaches the PARQUET reader whatever the ingest
+  * wrote. */
+private[sources] class ClippedReadSupport(names: Seq[String])
+    extends GroupReadSupport {
+  override def init(ctx: InitContext): ReadSupport.ReadContext = {
+    val file = ctx.getFileSchema
+    new ReadSupport.ReadContext(new MessageType(file.getName,
+      names.map(n => file.getType(file.getFieldIndex(n))).asJava))
+  }
+}
+
 /** Executor-side reader: one parquet part-file, projected columns
   * only (the read schema reaches the parquet reader, so unprojected
   * columns are never decoded). A zero-column projection (count(*))
@@ -1776,11 +1784,9 @@ private[sources] class ZoneMapPartitionReader(
   private val readSchema =
     if (dataSchema.isEmpty) StructType(Seq(StructField("rid", LongType)))
     else dataSchema
-  conf.set(ReadSupport.PARQUET_READ_SCHEMA,
-    ZoneMapSource.parquetProjection(readSchema))
-
   private val reader: ParquetReader[Group] = ParquetReader
-    .builder(new GroupReadSupport(), new Path(file))
+    .builder(new ClippedReadSupport(readSchema.fieldNames.toSeq),
+      new Path(file))
     .withConf(conf).build()
 
   private var cur: Group = _

@@ -2,10 +2,35 @@ package graft
 
 import graft.operators.Multimodal
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.{Seconds, Span}
 
 /** Multimodal plumbing: the binary-column batch shape and the stubbed
   * per-partition decode kernel. */
-class MultimodalSpec extends SparkSpec {
+class MultimodalSpec extends SparkSpec with TimeLimits {
+
+  /** `body` on its own daemon thread, failed after 30 s: a decoder
+    * that loops on corrupt input fails its test at the limit instead of
+    * stalling the suite (the stuck thread cannot be stopped, only left,
+    * so it gets a thread of its own rather than a shared pool's). */
+  private def bounded[T](body: => T): T = {
+    import scala.concurrent.{Await, Promise}
+    import scala.concurrent.duration.Duration
+    implicit val signaler: Signaler = ThreadSignaler
+    val result = Promise[T]()
+    val t = new Thread(() => result.complete(scala.util.Try(body)))
+    t.setDaemon(true); t.start()
+    failAfter(Span(30, Seconds))(Await.result(result.future, Duration.Inf))
+  }
+
+  /** `b` with the 32-bit size field at `at` set to 0xFFFFFFF8 (-8 as
+    * an Int: a step of 8 + size would never move forward). */
+  private def sizeMinus8(b: Array[Byte], at: Int): Array[Byte] = {
+    val c = b.clone()
+    c(at) = 0xf8.toByte; c(at + 1) = 0xff.toByte
+    c(at + 2) = 0xff.toByte; c(at + 3) = 0xff.toByte
+    c
+  }
 
   test("decode stub preserves ids, is deterministic, and batches per partition") {
     import spark.implicits._
@@ -1101,6 +1126,12 @@ class MultimodalSpec extends SparkSpec {
       decodeAviMjpeg(noIdx)
     }
     assert(e5.getMessage.contains("HASINDEX"), e5.getMessage)
+    // an inner size that overruns its parent: the strl LIST's size
+    // field sits just before its form type
+    val strl = good.indexOfSlice("strl".getBytes("US-ASCII")) - 4
+    val e6 = intercept[IllegalArgumentException](
+      bounded(decodeAviMjpeg(sizeMinus8(good, strl))))
+    assert(e6.getMessage.contains("malformed"), e6.getMessage)
   }
 
   test("MS-RLE8 inter-frame decode: delta frames repaint only their " +
@@ -1179,5 +1210,46 @@ class MultimodalSpec extends SparkSpec {
     avi2(strf + 8 + 40 + 17 * 4) = 99 // palette entry 17, blue channel
     val e6 = intercept[IllegalArgumentException](decodeAviRle8(avi2))
     assert(e6.getMessage.contains("identity"), e6.getMessage)
+    // inner sizes that overrun their parent: the strl LIST (size field
+    // just before its form type) and the avih chunk (just after its id)
+    val avi3 = encodeAviRle8(w, h, 15, Seq(key, delta))
+    val strl = avi3.indexOfSlice("strl".getBytes("US-ASCII")) - 4
+    val avih = avi3.indexOfSlice("avih".getBytes("US-ASCII")) + 4
+    for (at <- Seq(strl, avih)) {
+      val e7 = intercept[IllegalArgumentException](
+        bounded(decodeAviRle8(sizeMinus8(avi3, at))))
+      assert(e7.getMessage.contains("malformed"), e7.getMessage)
+    }
+  }
+
+  test("RIFF and GIF decoders reject every truncation with " +
+    "IllegalArgumentException or decode it unchanged") {
+    import graft.operators.Multimodal._
+    // every cut 0..n-1 must surface as the typed rejection or decode to
+    // the full file's result; another exception type, another result or
+    // a hang past the limit fails the test
+    def sweep(bytes: Array[Byte], decode: Array[Byte] => Any): Unit =
+      bounded {
+        val full = decode(bytes)
+        for (n <- 0 until bytes.length) {
+          try {
+            val d = decode(java.util.Arrays.copyOfRange(bytes, 0, n))
+            assert(d == full, s"cut at $n decoded to $d, not $full")
+          } catch { case _: IllegalArgumentException => }
+        }
+      }
+    val wav = encodeWav(8000, 2, Array.tabulate[Short](50)(k =>
+      (k * 1237 - 30000).toShort))
+    sweep(wav, decodeWav)
+    sweep(wav, wavSamples(_).toSeq)
+    sweep(encodeGif(7, 5, _ % 4), decodeGif)
+    sweep(aviFixture(1L), b => {
+      val d = decodeAviMjpeg(b)
+      (d.w, d.h, d.rate, d.hasIndex, d.frames.map(_.toSeq))
+    })
+    val (w, h) = (9, 6)
+    sweep(encodeAviRle8(w, h, 15, Seq(
+      encodeRle8Key(w, h, (x, y) => (y * 7 + x * 3) % 256),
+      encodeRle8Delta(w, 2, (x, y) => (x + y) % 256))), decodeAviRle8)
   }
 }

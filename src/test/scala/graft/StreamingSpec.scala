@@ -1482,13 +1482,15 @@ class StreamingSpec extends SparkSpec {
 
       // every other publisher: a FALSE rename onto its target throws,
       // leaves the visible rows unchanged, and a retry succeeds
-      def failsOnce[T](suffix: String, visible: => T)(publish: => Unit): Unit = {
+      def failsOnce[T](suffix: String, visible: => T,
+          afterFail: => Unit = ())(publish: => Unit): Unit = {
         val before = visible
         FlakyRenameFs.failDstSuffix.set(suffix)
         val e = try intercept[java.io.IOException](publish)
           finally FlakyRenameFs.failDstSuffix.set(null)
         assert(e.getMessage.contains("rename"), e.getMessage)
         assert(visible == before, s"failed publish onto $suffix changed reads")
+        afterFail
         publish
       }
       val docs = Tables(spark, sfDir, "documents")
@@ -1525,7 +1527,12 @@ class StreamingSpec extends SparkSpec {
       val kept = all.filter(_._1 % 5 != 0)
       assert(visibleRows == kept)
       val more = (0L until 20L).map(i => (1000000000L + i, i % 17, i % 23))
-      failsOnce("batch=5", visibleRows)(more.toDF("rid", "a", "b").write
+      // the failed attempt's data stage must not outlive it
+      def commitStages = new java.io.File(zt.stripPrefix("graftfail:"))
+        .list().filter(_.startsWith(".commit_staging_")).toSeq
+      failsOnce("batch=5", visibleRows,
+        assert(commitStages.isEmpty, s"left behind: $commitStages"))(
+        more.toDF("rid", "a", "b").write
         .format("graft.sources.ZoneMapSource").option("batch", 5L)
         .mode("append").save(zt))
       assert(visibleRows == (kept ++ more).sorted)

@@ -674,8 +674,17 @@ class ZoneMapSourceSpec extends SparkSpec {
     graft.streaming.Streaming.zoneIngestBatch(
       rows.filter(pmod(col("rid"), lit(2)) === 0)
         .selectExpr("rid + 1000000000 AS rid", "a", "b"), 5L, dir)
+    // a batch from non-nullable columns stores `required` fields: the
+    // scan reads each file under its own footer schema
+    val ranged = spark.range(40)
+      .selectExpr("id + 2000000000 AS rid", "id % 7 AS a", "id % 11 AS b")
+    graft.streaming.Streaming.zoneIngestBatch(ranged, 6L, dir)
     val df = spark.read.format("graft.sources.ZoneMapSource").load(dir)
-    assert(df.count() ==
-      rows.count() + rows.filter(pmod(col("rid"), lit(2)) === 0).count())
+    assert(df.count() == rows.count() +
+      rows.filter(pmod(col("rid"), lit(2)) === 0).count() + 40)
+    def triples(d: org.apache.spark.sql.DataFrame) = d
+      .filter(col("rid") >= 2000000000L).select("rid", "a", "b").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    assert(triples(df) == triples(ranged))
   }
 }
