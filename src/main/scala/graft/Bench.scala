@@ -64,6 +64,8 @@ object Bench {
       .config("spark.sql.windowExec.buffer.in.memory.threshold", winBuf)
       .config("spark.sql.windowExec.buffer.spill.threshold", "4194304")
       .config("spark.ui.enabled", "false")
+      // the `file:` filesystem without chmod/readlink subprocesses
+      .config(graft.sources.LocalFs.sessionConf)
       .getOrCreate()
   }
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{Num, QueryDef}
 import graft.sources.DirTable
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
@@ -53,8 +53,10 @@ object Convert {
 
   /** What one conversion pass read, dropped and altered, observed in the
     * same scan (`Dataset.observe`, no second pass): input rows, rows
-    * dropped as corrupt, and ages narrowed to NULL by [[toParquet]]. */
-  final case class ConvertStats(rowsIn: Long, corruptDropped: Long, agesNulled: Long)
+    * dropped as corrupt, and ages narrowed to NULL by [[toParquet]];
+    * plus the keys [[jsonToParquetBatch]] skipped as naming no file. */
+  final case class ConvertStats(rowsIn: Long, corruptDropped: Long, agesNulled: Long,
+      skippedKeys: Seq[String] = Nil)
 
   /** JSON → Parquet with the reference writer's exact knobs
     * (`convertor/convertor.go:180-182`): 16 MiB row groups, SNAPPY,
@@ -139,9 +141,11 @@ object Convert {
     * directory to its key's output (delete, then rename; a FALSE rename
     * or delete throws) and removes the staging directory once it is
     * empty. A key with no surviving rows gets a zero-row file. Every
-    * move overwrites, so a replayed batch id is idempotent. Missing
-    * objects are skipped, the rest converted, then the call throws
-    * naming them, so the caller's batch does not commit. */
+    * move overwrites, so a replayed batch id is idempotent. A key that
+    * names a directory (an S3 console "folder" placeholder such as
+    * `incoming/`, or the empty key) is skipped and reported in the
+    * result. Missing objects are skipped, the rest converted, then the
+    * call throws naming them, so the caller's batch does not commit. */
   def jsonToParquetBatch(
       spark: SparkSession,
       objectRoot: String,
@@ -151,19 +155,22 @@ object Convert {
       maxTasks: Option[Int] = None): ConvertStats = {
     val conf = spark.sessionState.newHadoopConf()
     val fs = new Path(outDir).getFileSystem(conf)
-    // each object's path in the form `_metadata.file_path` reports it:
-    // percent-encoded, and `file:/…` where the qualified path is `file:///…`
     val located = keys.map { k =>
       val p = new Path(s"$objectRoot/$k")
-      k -> (try {
-        val u = p.getFileSystem(conf).getFileStatus(p).getPath.toUri
-        Some(new java.net.URI(u.getScheme, Option(u.getAuthority).filter(_.nonEmpty)
-          .orNull, u.getPath, null, null).toString)
-      } catch { case _: java.io.FileNotFoundException => None })
+      k -> (try Some(p.getFileSystem(conf).getFileStatus(p))
+        catch { case _: java.io.FileNotFoundException => None })
+    }
+    // each object's path in the form `_metadata.file_path` reports it:
+    // percent-encoded, and `file:/…` where the qualified path is `file:///…`
+    def filePath(st: FileStatus): String = {
+      val u = st.getPath.toUri
+      new java.net.URI(u.getScheme, Option(u.getAuthority).filter(_.nonEmpty)
+        .orNull, u.getPath, null, null).toString
     }
     // keys naming one object differ only in spelling (`a//b`, `a/b`),
     // which the output path normalizes too: one read and one move each
-    val files = located.collect { case (k, Some(f)) => (k, f) }.distinctBy(_._2)
+    val files = located.collect { case (k, Some(st)) if st.isFile => (k, filePath(st)) }
+      .distinctBy(_._2)
     val index = files.map(_._2).zipWithIndex.toMap
     val stage = new Path(s"$outDir/_staging/$batchId")
     val file = col("_metadata.file_path")
@@ -192,7 +199,7 @@ object Convert {
     val missing = located.collect { case (k, None) => k }
     if (missing.nonEmpty) throw new RuntimeException(s"batch $batchId left " +
       s"${missing.length} unconverted keys (no object): ${missing.mkString(",")}")
-    stats
+    stats.copy(skippedKeys = located.collect { case (k, Some(st)) if !st.isFile => k })
   }
 
   /** Schema-INFERENCE mode — the second source mode SURVEY §1 promises:

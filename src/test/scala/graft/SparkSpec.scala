@@ -5,7 +5,8 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs: same conf shape as Verify/Bench
-  * (UTC, small shuffle fan-out, nanos-as-long for events.parquet). */
+  * (UTC, small shuffle fan-out, nanos-as-long for events.parquet, the
+  * fork-free `file:` filesystem). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -16,6 +17,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
     .config("spark.ui.enabled", "false")
+    .config(graft.sources.LocalFs.sessionConf)
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"

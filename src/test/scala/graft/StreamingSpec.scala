@@ -176,15 +176,48 @@ class StreamingSpec extends SparkSpec {
     val keys = Seq("plain.json", "with space.json", "a+b.json", "100%.json",
       "Élodie.json", "nested/dir a/deep.json")
     keys.zipWithIndex.foreach { case (k, i) => writeObject(objects, k, person(s"id$i")) }
-    // the same key twice in one batch (an at-least-once redelivery), and
-    // a second spelling of one key's path
-    Streaming.convertNotificationBatch(notificationBatch(
-      keys :+ "plain.json" :+ "nested//dir a/deep.json": _*), 0L, objects, out)
+    // the same key twice in one batch (an at-least-once redelivery), a
+    // second spelling of one key's path, an S3 console folder
+    // placeholder and the empty key, both naming a directory
+    val s = Streaming.convertNotificationBatch(notificationBatch(
+      keys :+ "plain.json" :+ "nested//dir a/deep.json" :+ "nested/" :+ "": _*),
+      0L, objects, out)
     assert(outputKeys(out) == keys.toSet)
+    assert(s.skippedKeys.toSet == Set("nested/", ""))
+    assert(s.rowsIn == keys.length)
     keys.zipWithIndex.foreach { case (k, i) =>
       assert(spark.read.parquet(s"$out/$k.parquet").collect()
         .map(_.getString(0)).toSeq == Seq(s"id$i"), k)
     }
+  }
+
+  test("notification batch parses its keys with no shuffle") {
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    val objects = tmpDir("parse_objects")
+    val out = tmpDir("parse_out")
+    val keys = Seq("a.json", "b.json", "c.json")
+    keys.foreach(k => writeObject(objects, k, person(k)))
+    val stages = new AtomicInteger
+    val shuffleBytes = new AtomicLong
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet()
+        Option(e.stageInfo.taskMetrics).foreach(m =>
+          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.GraftCoreBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try Streaming.convertNotificationBatch(notificationBatch(keys: _*), 0L, objects, out)
+    finally {
+      org.apache.spark.GraftCoreBridge.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(outputKeys(out) == keys.toSet)
+    assert(stages.get > 0 && shuffleBytes.get == 0,
+      s"${stages.get} stages wrote ${shuffleBytes.get} shuffle bytes")
   }
 
   test("notification batch gives zero-row outputs for all-corrupt, empty and truncated objects") {
