@@ -1,16 +1,17 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{CosineSimilarity, HllSketch, Shingles}
+import graft.functions.Functions
 
-/** Production wiring for the engine's custom functions: users add
+/** Production wiring for the engine: users add
   * `spark.sql.extensions=graft.GraftExtensions` to their session config
-  * and get `graft_cosine` / `graft_hll` in every session — the supported
-  * SparkSessionExtensions path, vs. the per-session
-  * `CosineSimilarity.register(spark)` convenience used inside queries.
+  * and every session gets the optimizer, planner and check rules below
+  * plus every `graft_*` SQL function. The functions are injected from
+  * the one catalog, [[graft.functions.Functions]], whose rows
+  * [[QueryDef]] also installs on the session a query runs on — so a
+  * session built with or without the extensions binds the same names
+  * to the same builders.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -25,110 +26,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => plans.AsOfJoinStrategy)
     // analysis-time governance tier: opt-in cartesian-product guard
     ext.injectCheckRule(_ => plans.CartesianGuard)
-    // builders are shared with each companion's register() so the two
-    // registration surfaces cannot drift
-    ext.injectFunction((
-      FunctionIdentifier("graft_topk"),
-      new ExpressionInfo(classOf[functions.TopK].getName, "graft_topk"),
-      functions.TopK.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      CosineSimilarity.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_hll"),
-      new ExpressionInfo(classOf[HllSketch].getName, "graft_hll"),
-      HllSketch.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_hll_regs"),
-      new ExpressionInfo(
-        classOf[functions.HllRegisters].getName, "graft_hll_regs"),
-      HllSketch.regsBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_hll_union"),
-      new ExpressionInfo(
-        classOf[functions.HllUnion].getName, "graft_hll_union"),
-      HllSketch.unionBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_hll_est"),
-      new ExpressionInfo(
-        classOf[functions.HllEstimate].getName, "graft_hll_est"),
-      HllSketch.estBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_freq"),
-      new ExpressionInfo(classOf[functions.FreqSketch].getName, "graft_freq"),
-      functions.FreqSketch.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[Shingles].getName, "graft_shingles"),
-      Shingles.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_theta"),
-      new ExpressionInfo(classOf[functions.ThetaSketch].getName, "graft_theta"),
-      functions.ThetaSketch.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_theta_est"),
-      new ExpressionInfo(
-        classOf[functions.ThetaEstimate].getName, "graft_theta_est"),
-      functions.ThetaSketch.estBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_theta_intersect"),
-      new ExpressionInfo(
-        classOf[functions.ThetaIntersectEstimate].getName,
-        "graft_theta_intersect"),
-      functions.ThetaSketch.intersectBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom"),
-      new ExpressionInfo(classOf[functions.BloomSketch].getName, "graft_bloom"),
-      functions.BloomSketch.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(
-        classOf[functions.BloomMightContain].getName, "graft_bloom_contains"),
-      functions.BloomSketch.mightContainBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_normalize"),
-      new ExpressionInfo(
-        classOf[functions.UnicodeNormalize].getName, "graft_normalize"),
-      functions.UnicodeNormalize.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_multi_match"),
-      new ExpressionInfo(
-        classOf[functions.MultiMatch].getName, "graft_multi_match"),
-      functions.MultiMatch.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kll"),
-      new ExpressionInfo(classOf[functions.KllSketch].getName, "graft_kll"),
-      functions.KllSketch.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kll_bin"),
-      new ExpressionInfo(
-        classOf[functions.KllSketchBin].getName, "graft_kll_bin"),
-      functions.KllSketch.binBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kll_merge"),
-      new ExpressionInfo(
-        classOf[functions.KllMerge].getName, "graft_kll_merge"),
-      functions.KllSketch.mergeBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_lcs_len"),
-      new ExpressionInfo(
-        classOf[functions.LcsLength].getName, "graft_lcs_len"),
-      functions.Align.lcsBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_sw_score"),
-      new ExpressionInfo(
-        classOf[functions.SwScore].getName, "graft_sw_score"),
-      functions.Align.swBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_chrf"),
-      new ExpressionInfo(
-        classOf[functions.ChrfScore].getName, "graft_chrf"),
-      functions.Align.chrfBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bleu_counts"),
-      new ExpressionInfo(
-        classOf[functions.BleuCounts].getName, "graft_bleu_counts"),
-      functions.Align.bleuBuilder))
+    Functions.all.foreach(f => ext.injectFunction((f.id, f.info, f.build)))
   }
 }

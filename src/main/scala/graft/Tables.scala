@@ -203,10 +203,19 @@ object QueryDef {
   /** Query with a DuckDB oracle. */
   def apply(name: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, Some(oracle))
+    QueryDef(name, installing(fn), Some(oracle))
 
   /** Non-SQL-expressible query (driver records a rows-only check). */
   def noOracle(name: String)(
       fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None)
+    QueryDef(name, installing(fn), None)
+
+  /** `fn`, first installing the function catalog on the session it is
+    * given, so a query can call any `graft_*` function by name on
+    * whatever session runs it. */
+  private def installing(fn: (SparkSession, String) => DataFrame)
+      : (SparkSession, String) => DataFrame = { (s, dir) =>
+    graft.functions.Functions.install(s)
+    fn(s, dir)
+  }
 }

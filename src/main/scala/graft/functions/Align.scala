@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -475,12 +474,8 @@ object Align {
     v.asInstanceOf[Int]
   }
 
-  /** Single builders shared by [[register]] and GraftExtensions. */
-  private[graft] def lcsBuilder(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 2, "graft_lcs_len takes (array, array)")
-    LcsLength(exprs(0), exprs(1))
-  }
-
+  /** `graft_sw_score(a, b, match, mismatch, gap)`'s [[Functions]]
+    * builder: the three scores must be non-null int literals. */
   private[graft] def swBuilder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 5,
       "graft_sw_score takes (array, array, match, mismatch, gap)")
@@ -488,30 +483,5 @@ object Align {
       requireFoldableInt(exprs(2), "match"),
       requireFoldableInt(exprs(3), "mismatch"),
       requireFoldableInt(exprs(4), "gap"))
-  }
-
-  private[graft] def chrfBuilder(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 2, "graft_chrf takes (string, string)")
-    ChrfScore(exprs(0), exprs(1))
-  }
-
-  private[graft] def bleuBuilder(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 2,
-      "graft_bleu_counts takes (array<string>, array<string>)")
-    BleuCounts(exprs(0), exprs(1))
-  }
-
-  /** Registers `graft_lcs_len(a, b)`,
-    * `graft_sw_score(a, b, match, mismatch, gap)`,
-    * `graft_chrf(cand, ref)` and `graft_bleu_counts(cand, ref)`. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lcs_len", lcsBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sw_score", swBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_chrf", chrfBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bleu_counts", bleuBuilder, "built-in")
   }
 }

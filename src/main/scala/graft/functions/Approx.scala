@@ -102,7 +102,6 @@ object Approx {
         |    AS hll_est,
         |  true AS builtin_ok
         |FROM lineitem GROUP BY l_returnflag""".stripMargin) { (s, dir) =>
-      HllSketch.register(s)
       // The exact distinct and the two sketches aggregate SEPARATELY and
       // join on the 3-row group key: mixing a distinct aggregate with
       // imperative sketch aggregates in one plan made Catalyst run an
@@ -154,7 +153,6 @@ object Approx {
         |n AS (SELECT count(*) AS n FROM s)
         |SELECT tok, true AS present, true AS bounds_ok
         |FROM cnt, n WHERE c >= 3.0 * n / 16""".stripMargin) { (s, dir) =>
-      FreqSketch.register(s)
       // feeds three branches (sketch, total, exact heavy counts) —
       // cache so the scan + token derivation runs once
       val toks = Tables(s, dir, "lineitem").select(
@@ -310,7 +308,6 @@ object Approx {
         |  AS n_both,
         |  est
         |FROM est""".stripMargin) { (s, dir) =>
-      ThetaSketch.register(s)
       val o = Tables(s, dir, "orders")
       def custs(yr: Int) =
         o.filter(year(col("o_orderdate")) === yr).select(col("o_custkey"))

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -136,23 +135,6 @@ object BloomSketch {
       case i: Int => i
       case l: Long => l.toInt
     }
-
-  val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 3, "graft_bloom takes (value, numBits, numHashes)")
-    BloomSketch(exprs(0), exprs(1), exprs(2))
-  }
-  val mightContainBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2, "graft_bloom_contains takes (sketch, value)")
-    BloomMightContain(exprs(0), exprs(1))
-  }
-
-  /** Registers graft_bloom / graft_bloom_contains. */
-  def register(spark: SparkSession): Unit = {
-    val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction("graft_bloom", builder, "built-in")
-    r.createOrReplaceTempFunction(
-      "graft_bloom_contains", mightContainBuilder, "built-in")
-  }
 }
 
 /** Static probe kernel, shaped for whole-stage codegen: the generated

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -107,19 +106,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object CosineSimilarity {
-  /** Single function builder shared by [[register]] and GraftExtensions
-    * so the two registration surfaces cannot drift. */
-  val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2, "graft_cosine takes exactly 2 arguments")
-    CosineSimilarity(exprs.head, exprs(1))
-  }
-
-  /** Registers `graft_cosine(a, b)` in the session's function registry so
-    * queries can call it via `expr("graft_cosine(...)")`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", builder, "built-in")
 }

@@ -3,7 +3,6 @@ package graft.functions
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -187,15 +186,4 @@ object FreqSketch {
         .foreach { case (item, ce) => entries.update(item, ce) }
     }
   }
-
-  /** Single function builder shared by [[register]] and GraftExtensions. */
-  val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2, "graft_freq takes (item, m)")
-    FreqSketch(exprs(0), exprs(1))
-  }
-
-  /** Registers `graft_freq(item, m)` in the session registry. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_freq", builder, "built-in")
 }

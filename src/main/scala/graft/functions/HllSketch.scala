@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
@@ -187,12 +186,8 @@ object HllSketch {
     estimate(buf)
   }
 
-  /** Single function builder shared by [[register]] and GraftExtensions. */
-  val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 1, "graft_hll takes exactly 1 argument")
-    HllSketch(exprs.head)
-  }
-
+  /** `graft_hll_regs(key[, registers])`'s [[Functions]] builder: the
+    * register count must be a power-of-two INT literal. */
   private[graft] val regsBuilder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 1 || exprs.length == 2,
       "graft_hll_regs takes 1 or 2 arguments: (key[, registers])")
@@ -203,33 +198,6 @@ object HllSketch {
           s"literal in [16, 65536], got $other")
     }
     HllRegisters(exprs.head, m)
-  }
-
-  private[graft] val unionBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 1, "graft_hll_union takes exactly 1 argument")
-    HllUnion(exprs.head)
-  }
-
-  private[graft] val estBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 1, "graft_hll_est takes exactly 1 argument")
-    HllEstimate(exprs.head)
-  }
-
-  /** Registers the sketch surface in the session function registry:
-    * `graft_hll(col)` (the estimate), `graft_hll_regs(col[, m])` (the
-    * raw register blob — for sketch tables and, at small m, the
-    * per-node counters of [[HllUnion]]-driven neighborhood functions),
-    * `graft_hll_union(blob)` (register-max re-aggregation of stored
-    * blobs) and `graft_hll_est(blob)` (blob → estimate scalar). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hll", builder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hll_regs", regsBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hll_union", unionBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hll_est", estBuilder, "built-in")
   }
 }
 

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -105,14 +104,4 @@ object JaroWinkler {
     while (p < max && a(p) == b(p)) p += 1
     j + p * 0.1 * (1.0 - j)
   }
-
-  private def builder(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 2, "graft_jaro_winkler takes (string, string)")
-    JaroWinkler(exprs(0), exprs(1))
-  }
-
-  /** Registers `graft_jaro_winkler(a, b)` in the session registry. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaro_winkler", builder, "built-in")
 }

@@ -4,7 +4,6 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -226,35 +225,6 @@ object KllSketch {
       h += 1
     }
     buf
-  }
-
-  /** Single function builder shared by [[register]] and GraftExtensions. */
-  val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2, "graft_kll takes (value, k)")
-    KllSketch(exprs(0), exprs(1))
-  }
-
-  val binBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2, "graft_kll_bin takes (value, k)")
-    KllSketchBin(exprs(0), exprs(1))
-  }
-
-  val mergeBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 1, "graft_kll_merge takes (sketch-binary)")
-    KllMerge(exprs.head)
-  }
-
-  /** Registers `graft_kll(value, k)` (weighted-sample output),
-    * `graft_kll_bin(value, k)` (serialized-sketch output — the
-    * sketch-table partial), and `graft_kll_merge(bin)` (fold stored
-    * partials back into one weighted sample). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kll", builder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kll_bin", binBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kll_merge", mergeBuilder, "built-in")
   }
 }
 

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -138,7 +137,9 @@ final class AcAutomaton(patterns: Array[String]) extends Serializable {
 
 object MultiMatch {
 
-  /** Shared by [[register]] and GraftExtensions' injectFunction. */
+  /** `graft_multi_match(s, array('p1', 'p2', …))`'s [[Functions]]
+    * builder: the patterns must be a literal array of distinct,
+    * non-NULL strings. */
   private[graft] def builder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2,
       "graft_multi_match takes (string, array-of-string literal)")
@@ -167,9 +168,4 @@ object MultiMatch {
           dupes.mkString("'", "', '", "'"))
     MultiMatch(exprs.head, pats)
   }
-
-  /** Registers `graft_multi_match(s, array('p1', 'p2', …))`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_multi_match", builder, "built-in")
 }

@@ -589,7 +589,6 @@ object Scalar {
         |  octet_length(encode(strip_accents(s))) AS strip_bytes,
         |  md5(strip_accents(s)) AS strip_md5
         |FROM d""".stripMargin) { (s, dir) =>
-      graft.functions.UnicodeNormalize.register(s)
       // \u escapes, not source glyphs: composed vs decomposed spelling
       // is the thing under test, so no file encoding may decide it
       val m = col("doc_id") % 6

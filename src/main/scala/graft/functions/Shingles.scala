@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -71,17 +70,4 @@ case class Shingles(child: Expression, nExpr: Expression)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Shingles =
     copy(child = newChildren(0), nExpr = newChildren(1))
-}
-
-object Shingles {
-  /** Single function builder shared by [[register]] and GraftExtensions. */
-  val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2, "graft_shingles takes (text, n)")
-    Shingles(exprs.head, exprs(1))
-  }
-
-  /** Registers `graft_shingles(text, n)` in the session registry. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles", builder, "built-in")
 }

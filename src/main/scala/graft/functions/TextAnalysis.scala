@@ -808,7 +808,6 @@ object TextAnalysis {
         |  CAST(sum((length(d.text) - length(replace(d.text, p.pat, '')))
         |    // length(p.pat)) AS BIGINT) AS n
         |FROM documents d, p GROUP BY 1, 2""".stripMargin) { (s, dir) =>
-      MultiMatch.register(s)
       t(s, dir, "documents")
         .select(col("source"),
           posexplode(expr(s"graft_multi_match(text, $mmPatsSqlArray)")))
@@ -1996,7 +1995,6 @@ object TextAnalysis {
     // q_eval_bleu's deterministic corruption — the two eval metrics
     // read the same system output.
     QueryDef("q_eval_rougel", rougeOracle) { (s, dir) =>
-      graft.functions.Align.register(s)
       val rw = split(col("text"), " ")
       val cwExpr = filter(
         transform(sequence(lit(1), size(col("rw"))),
@@ -2065,7 +2063,6 @@ object TextAnalysis {
     // hash-checks; zero-match orders take the −20 nat floor
     // (sacrebleu's epsilon smoothing, made explicit).
     QueryDef("q_eval_bleu", bleuOracle) { (s, dir) =>
-      graft.functions.Align.register(s)
       val rw = split(col("text"), " ")
       val cw = filter(
         transform(sequence(lit(1), size(col("rw"))),
@@ -2122,7 +2119,6 @@ object TextAnalysis {
     // in DuckDB, making the hash match a cross-SHAPE proof (relational
     // staircase ≡ kernel).
     QueryDef("q_eval_chrf", chrfOracle) { (s, dir) =>
-      graft.functions.Align.register(s)
       val rw = split(col("text"), " ")
       val cw = filter(
         transform(sequence(lit(1), size(col("rw"))),

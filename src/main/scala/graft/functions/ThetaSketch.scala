@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
@@ -188,28 +187,6 @@ object ThetaSketch {
     }
     if (thetaC == MaxTheta) common
     else math.round(common.toDouble * MaxTheta.toDouble / thetaC.toDouble)
-  }
-
-  val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 1, "graft_theta takes exactly 1 argument")
-    ThetaSketch(exprs.head)
-  }
-  val estBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 1, "graft_theta_est takes exactly 1 argument")
-    ThetaEstimate(exprs.head)
-  }
-  val intersectBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2, "graft_theta_intersect takes exactly 2 arguments")
-    ThetaIntersectEstimate(exprs.head, exprs(1))
-  }
-
-  /** Registers graft_theta / graft_theta_est / graft_theta_intersect. */
-  def register(spark: SparkSession): Unit = {
-    val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction("graft_theta", builder, "built-in")
-    r.createOrReplaceTempFunction("graft_theta_est", estBuilder, "built-in")
-    r.createOrReplaceTempFunction(
-      "graft_theta_intersect", intersectBuilder, "built-in")
   }
 }
 

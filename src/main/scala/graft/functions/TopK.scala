@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -132,17 +131,4 @@ case class TopK(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): TopK =
     copy(score = newChildren(0), id = newChildren(1), kExpr = newChildren(2))
-}
-
-object TopK {
-  /** Single function builder shared by [[register]] and GraftExtensions. */
-  val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 3, "graft_topk takes (score, id, k)")
-    TopK(exprs(0), exprs(1), exprs(2))
-  }
-
-  /** Registers `graft_topk(score, id, k)` in the session registry. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk", builder, "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -92,8 +91,8 @@ object UnicodeNormalize {
     UTF8String.fromString(out)
   }
 
-  /** Shared by [[register]] and GraftExtensions' injectFunction, so
-    * the two registration surfaces cannot drift. */
+  /** `graft_normalize(s, 'NFC'|'NFD'|'NFKC'|'NFKD'|'STRIP')`'s
+    * [[Functions]] builder: the form must be a literal. */
   private[graft] def builder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2,
       "graft_normalize takes (string, form-literal)")
@@ -105,10 +104,4 @@ object UnicodeNormalize {
     }
     UnicodeNormalize(exprs.head, form)
   }
-
-  /** Registers `graft_normalize(s, 'NFC'|'NFD'|'NFKC'|'NFKD'|'STRIP')`
-    * in the session registry. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_normalize", builder, "built-in")
 }

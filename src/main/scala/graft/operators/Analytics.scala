@@ -836,7 +836,6 @@ object Analytics {
         |  FROM p)
         |SELECT source, doc_id, rnk, ${Num.sql("pri", 9)} AS pri
         |FROM r WHERE rnk <= 5""".stripMargin) { (s, dir) =>
-      graft.functions.TopK.register(s)
       val u = (graft.functions.TextAnalysis.h32(
         concat(lit("wsamp:"), col("doc_id").cast("string"))) + 1) /
         lit(4294967296e0)
@@ -1320,7 +1319,6 @@ object Analytics {
         |CROSS JOIN (VALUES (250000), (500000), (900000)) qs(q_u)""".stripMargin) {
       (s, dir) =>
       import org.apache.spark.sql.expressions.Window
-      graft.functions.KllSketch.register(s)
       val li = t(s, dir, "lineitem")
         .select(col("l_linestatus"),
           floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("cents"))

@@ -1138,7 +1138,6 @@ object Behavior {
         |  CAST((num * 1000000) // (n0 * n1) AS BIGINT) AS w1_u,
         |  true AS ok
         |FROM agg""".stripMargin) { (s, dir) =>
-      graft.functions.KllSketch.register(s)
       val half = graft.functions.TextAnalysis.h32(
         concat(lit("ks:"), col("doc_id").cast("string"))) % 2
       val docs = t(s, dir, "documents")

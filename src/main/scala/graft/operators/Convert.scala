@@ -85,13 +85,12 @@ object Convert {
   private def convertPass(spark: SparkSession, in: Seq[String], out: String,
       schema: StructType = personSchema, multiLine: Boolean = true,
       maxTasks: Option[Int] = None, tag: Option[Column] = None): ConvertStats = {
-    val raw = spark.read.schema(schema.add("_corrupt_record", StringType))
-      .option("multiLine", multiLine).option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
+    val raw = spark.read.schema(schema.add(Corrupt, StringType))
+      .option("multiLine", multiLine).options(PermissiveJson)
       .json(in: _*)
     val tagged = tag.fold(raw)(raw.withColumn(KeyIndex, _))
     val obs = Observation()
-    val clean = col("_corrupt_record").isNull
+    val clean = col(Corrupt).isNull
     val kept = maxTasks.fold(tagged)(tagged.coalesce)
       .observe(obs,
         count(lit(1)).as("rows_in"),
@@ -104,17 +103,29 @@ object Convert {
     ConvertStats(m("rows_in"), m("corrupt"), m("nulled"))
   }
 
+  /** The column a PERMISSIVE JSON read fills, instead of the fields,
+    * for input that does not parse; every conversion drops those rows. */
+  private[graft] val Corrupt = "_corrupt_record"
+
+  /** The JSON reader options that route unparsable input to [[Corrupt]]. */
+  private[graft] val PermissiveJson: Map[String, String] = Map(
+    "mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> Corrupt)
+
   /** The reference writer's exact knobs (`convertor/convertor.go:180-182`)
-    * in ONE place, shared by every source mode — the sink contract must
-    * not drift between the explicit-schema, batched and inference paths. */
+    * in ONE place, shared by every source mode and the directory-watch
+    * stream — the sink contract must not drift between the
+    * explicit-schema, batched, inference and streaming paths. */
+  private[graft] val RefParquetOptions: Map[String, String] = Map(
+    "compression" -> "snappy",
+    "parquet.block.size" -> (16 * 1024 * 1024).toString,
+    "parquet.enable.dictionary" -> "true")
+
   private def writeRefParquet(
       df: DataFrame, out: String, partitionBy: Seq[String] = Nil): Unit =
     df.write
       .mode(SaveMode.Overwrite)
       .partitionBy(partitionBy: _*)
-      .option("compression", "snappy")
-      .option("parquet.block.size", 16 * 1024 * 1024)
-      .option("parquet.enable.dictionary", true)
+      .options(RefParquetOptions)
       .parquet(out)
 
   private val KeyIndex = "key_index"
@@ -226,15 +237,14 @@ object Convert {
     // converter makes (and documents) rather than paying 2× the scan
     val df = spark.read
       .option("multiLine", multiLine)
-      .option("mode", "PERMISSIVE")
       .option("samplingRatio", samplingRatio)
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
+      .options(PermissiveJson)
       .json(in)
     // inference only materializes _corrupt_record if some input didn't
     // parse; drop those rows when the column exists
     val clean =
-      if (df.columns.contains("_corrupt_record"))
-        df.filter(col("_corrupt_record").isNull).drop("_corrupt_record")
+      if (df.columns.contains(Corrupt))
+        df.filter(col(Corrupt).isNull).drop(Corrupt)
       else df
     writeRefParquet(clean, out)
     clean.schema

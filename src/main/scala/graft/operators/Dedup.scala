@@ -760,7 +760,6 @@ object Dedup {
       // same left-to-right element order as the oracle's list_sum, so the
       // results are bitwise identical — but it runs inside whole-stage
       // codegen instead of the interpreted higher-order-function path.
-      graft.functions.CosineSimilarity.register(s)
       // rebalance the streamed side so pair scoring uses every core
       val e = t(s, dir, "embeddings").transform(graft.Tables.fan(_, "vec_id"))
       val a = e.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"))
@@ -797,7 +796,6 @@ object Dedup {
         |  FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
         |SELECT id_a, id_b, ${Num.sql("c", 6)} AS cos
         |FROM p WHERE c >= 0.4""".stripMargin) { (s, dir) =>
-      graft.functions.CosineSimilarity.register(s)
       // bucket fold feeds both join sides — cache (id, 64 floats, 1 int)
       val e = t(s, dir, "embeddings")
         .transform(graft.Tables.fan(_, "vec_id"))
@@ -948,7 +946,6 @@ object Dedup {
         |SELECT t.doc_id, t.n_sh, h.n_hit,
         |  h.n_hit * 1.0 / t.n_sh >= 0.5 AS contaminated
         |FROM tot t JOIN hit h ON t.doc_id = h.doc_id""".stripMargin) { (s, dir) =>
-      graft.functions.BloomSketch.register(s)
       val sh = shingles(s, dir)
         .select(col("doc_id"), h60(col("shingle")).as("sid"))
         .cache() // feeds the bench set (twice: bloom + confirm) + corpus
@@ -1427,7 +1424,6 @@ object Dedup {
     // replays the wavefront as a recursive CTE, so the hash match is
     // the cross-algorithm proof.
     QueryDef("q_link_align", swOracle) { (s, dir) =>
-      graft.functions.Align.register(s)
       t(s, dir, "customer")
         .selectExpr("c_custkey AS id", "c_mktsegment AS seg",
           "c_name AS nm")
@@ -1468,7 +1464,6 @@ object Dedup {
         |  ON a.blk = b.blk AND a.p_name < b.p_name
         |WHERE jaro_winkler_similarity(a.p_name, b.p_name) >= 0.88""".stripMargin) {
       (s, dir) =>
-      graft.functions.JaroWinkler.register(s)
       val names = t(s, dir, "part")
         .select(col("p_name"),
           element_at(split(col("p_name"), " "), 2).as("blk"))

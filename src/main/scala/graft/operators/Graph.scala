@@ -1186,7 +1186,6 @@ object Graph {
     // counter iterate the added cost is one co-partitioned |V|-row
     // 4-way join and one top-k aggregate.
     QueryDef("q_graph_harmonic", harmonicOracle) { (s, dir) =>
-      graft.functions.TopK.register(s)
       val ests = anfBalls(s, dir).zipWithIndex.map { case (b, t) =>
         b.select(col("node"), expr("graft_hll_est(regs)").as(s"e$t"))
       }
@@ -1210,7 +1209,6 @@ object Graph {
     * adjacency and the cached 16-register counter table per radius
     * 0..anfRounds. */
   private def anfBalls(s: SparkSession, dir: String): Seq[DataFrame] = {
-    graft.functions.HllSketch.register(s)
     val e0 = Tables(s, dir, "lineitem")
       .select(col("l_partkey"), col("l_suppkey")).distinct()
     val sym = e0

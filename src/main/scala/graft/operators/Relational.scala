@@ -1096,7 +1096,6 @@ object Relational {
         |SELECT o_orderpriority,
         |  array_to_string(list(o_orderkey ORDER BY rn), ',') AS top_ids
         |FROM r WHERE rn <= 5 GROUP BY o_orderpriority""".stripMargin) { (s, dir) =>
-      graft.functions.TopK.register(s)
       t(s, dir, "orders")
         .groupBy(col("o_orderpriority"))
         .agg(expr("graft_topk(cast(o_totalprice as double), o_orderkey, 5)").as("top"))

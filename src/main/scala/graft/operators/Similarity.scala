@@ -92,8 +92,6 @@ object Similarity {
     * ONE hash(query_id) exchange — the three rankings are three
     * map-combinable graft_topk aggregates over the same scored rows. */
   private def mrlTops(s: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(s)
-    graft.functions.TopK.register(s)
     val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
@@ -449,7 +447,6 @@ object Similarity {
   /** Train the quantizer on `vecs` (K = [[IvfK]], [[IvfIters]] Lloyd
     * rounds) and persist the index at `idx`. One-time, O(corpus·K). */
   def ivfBuild(s: SparkSession, idx: String, vecs: DataFrame): Unit = {
-    CosineSimilarity.register(s)
     val e = vecs.transform(graft.Tables.fan(_, "vec_id"))
       .select(col("vec_id"), col("embedding")).cache()
     val eD = toDoubleVectors(e).cache()
@@ -465,7 +462,6 @@ object Similarity {
     * reference the maintenance spec compares against. */
   def ivfBuildWith(s: SparkSession, idx: String,
       vecs: DataFrame, cents: DataFrame): Unit = {
-    CosineSimilarity.register(s)
     ivfWriteCells(ivfAssignWith(vecs, cents), 0L, idx)
     cents.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$idx/centroids")
@@ -490,7 +486,6 @@ object Similarity {
   def ivfAppend(s: SparkSession, idx: String, vecs: DataFrame,
       waveId: Long): Unit = {
     require(waveId >= 0, s"waveId must be >= 0, got $waveId")
-    CosineSimilarity.register(s)
     val pcents = s.read.parquet(s"$idx/centroids")
     val first = IvfK.toLong * (waveId + 1L)
     ivfWriteCells(ivfAssignWith(vecs, pcents), first, idx,
@@ -529,7 +524,7 @@ object Similarity {
     * probed cells' files are planned), re-score candidates exactly,
     * return top-3 per query. No training, no corpus-wide pass. */
   def ivfServe(s: SparkSession, dir: String, idx: String): DataFrame = {
-    CosineSimilarity.register(s)
+    graft.functions.Functions.install(s)
     val pcents = s.read.parquet(s"$idx/centroids")
     val queries = toDoubleVectors(
       t(s, dir, "embeddings").filter(col("vec_id") < 10)
@@ -709,8 +704,6 @@ object Similarity {
         |  FROM s)
         |SELECT query_id, neighbor_id, rnk, ${Num.sql("c", 6)} AS cos
         |FROM r WHERE rnk <= 5""".stripMargin) { (s, dir) =>
-      CosineSimilarity.register(s)
-      graft.functions.TopK.register(s)
       val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
@@ -746,7 +739,6 @@ object Similarity {
         |  FROM s)
         |SELECT query_id, neighbor_id, rnk, ${Num.sql("c", 6)} AS cos
         |FROM r WHERE rnk <= 3""".stripMargin) { (s, dir) =>
-      CosineSimilarity.register(s)
       val e = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
           bucketCol(col("embedding")).as("bucket"))
@@ -816,7 +808,6 @@ object Similarity {
         |FROM truth t LEFT JOIN r
         |  ON r.query_id = t.query_id AND r.neighbor_id = t.true_nbr"""
         .stripMargin) { (s, dir) =>
-      CosineSimilarity.register(s)
       val e = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
           bucketCol(col("embedding")).as("bucket"))
@@ -901,7 +892,6 @@ object Similarity {
         |  FROM s)
         |SELECT query_id, neighbor_id, rnk, ${Num.sql("cc", 6)} AS cos
         |FROM r WHERE rnk <= 3""".stripMargin) { (s, dir) =>
-      CosineSimilarity.register(s)
       // feeds assignment, the query side, and the candidate side;
       // caller releases (QueryDef cache contract)
       val e = t(s, dir, "embeddings").transform(graft.Tables.fan(_, "vec_id"))
@@ -948,7 +938,6 @@ object Similarity {
     // because the quantizer must be trained on the same session for the
     // check to be self-contained.
     QueryDef("q_knn_ivf_trained", ivfTrainedOracleSql) { (s, dir) =>
-      CosineSimilarity.register(s)
       val e = t(s, dir, "embeddings").transform(graft.Tables.fan(_, "vec_id"))
         .select(col("vec_id"), col("embedding")).cache()
       // ONE normed relation, cached, shared by every training round AND
@@ -1006,7 +995,6 @@ object Similarity {
     // the DSv2 probe path are storage/plan changes, not semantic ones,
     // and the hash match proves it.
     QueryDef("q_knn_ivf_served", ivfTrainedOracleSql) { (s, dir) =>
-      CosineSimilarity.register(s)
       // content-fingerprint-keyed build-once (marker written last): a
       // regenerated corpus at the same path gets a fresh index, two
       // distinct dirs cannot collide the way 32-bit hashCode can, and
@@ -1037,7 +1025,6 @@ object Similarity {
     // ivfBuildWith. At 100 TB this is the difference between an
     // O(wave) nightly maintenance job and an O(corpus) retrain.
     QueryDef("q_knn_ivf_maintained", ivfMaintainedOracleSql) { (s, dir) =>
-      CosineSimilarity.register(s)
       val idx = graft.Tables.buildOnce(s, dir, "ivfm",
         Seq("embeddings")) { tbl =>
         val e = t(s, dir, "embeddings")
@@ -1103,7 +1090,6 @@ object Similarity {
         |  CAST(min(s_u) AS BIGINT) AS min_sil_u,
         |  CAST(max(s_u) AS BIGINT) AS max_sil_u
         |FROM sil GROUP BY 1""".stripMargin) { (s, dir) =>
-      CosineSimilarity.register(s)
       val eD = toDoubleVectors(
         t(s, dir, "embeddings").transform(graft.Tables.fan(_, "vec_id"))
           .select(col("vec_id"), col("embedding"))).cache()
@@ -1175,7 +1161,6 @@ object Similarity {
         |  ${Num.sql("coalesce(p.mc, -2)", 6)} AS maxcos
         |FROM assign s LEFT JOIN pairs p ON s.vec_id = p.vec_id""".stripMargin) {
       (s, dir) =>
-      CosineSimilarity.register(s)
       val e = t(s, dir, "embeddings").transform(graft.Tables.fan(_, "vec_id"))
         .select(col("vec_id"), col("embedding")).cache()
       val eD = toDoubleVectors(e).cache()
@@ -1270,8 +1255,6 @@ object Similarity {
         |SELECT h.query_id, h.lsh_hits, qs.lsh_cand, h.ivf_hits, i.ivf_cand
         |FROM hits h JOIN qside qs USING (query_id)
         |JOIN ivfcand i USING (query_id)""".stripMargin) { (s, dir) =>
-      CosineSimilarity.register(s)
-      graft.functions.TopK.register(s)
       val e = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
           bucketCol(col("embedding")).as("bucket"))
@@ -1561,7 +1544,6 @@ object Similarity {
         |  FROM bmr FULL JOIN cr ON bmr.doc_id = cr.doc_id)
         |SELECT doc_id, rb, rc, ${Num.sql("rrf_raw", 6)} AS rrf
         |FROM f ORDER BY rrf_raw DESC, doc_id LIMIT 10""".stripMargin) { (s, dir) =>
-      CosineSimilarity.register(s)
       val docs = t(s, dir, "documents")
       val toks = split(col("text"), " ")
       val terms = docs.select(col("doc_id"), explode(toks).as("term"))
@@ -1629,7 +1611,6 @@ object Similarity {
     // selection is bit-identical in both engines. The oracle replays
     // the rounds as generated CTEs.
     QueryDef("q_search_mmr", mmrOracle) { (s, dir) =>
-      CosineSimilarity.register(s)
       val e = t(s, dir, "embeddings")
       val q0 = e.filter(col("vec_id") === 0)
         .select(col("embedding").as("q_emb"))
@@ -1864,7 +1845,6 @@ object Similarity {
         |SELECT query_id, neighbor_id, rnk, ${Num.sql("adci / 1000000000e0", 6)}
         |  AS adc
         |FROM r WHERE rnk <= 3""".stripMargin) { (s, dir) =>
-      graft.functions.TopK.register(s)
       val subs = pqSubvectors(t(s, dir, "embeddings")).cache()
       val cb = pqTrainOnSubs(subs, PqIters)
       // per-query distance table: Q·M·K integer nano-unit entries
@@ -1946,7 +1926,6 @@ object Similarity {
         |  ${Num.sql("sum(g)", 6)} AS dcg,
         |  ${Num.sql(s"sum(g) / $idcgLit", 6)} AS ndcg
         |FROM scored GROUP BY query_id""".stripMargin) { (s, dir) =>
-      CosineSimilarity.register(s)
       val e = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
           bucketCol(col("embedding")).as("bucket"))
@@ -2273,7 +2252,6 @@ object Similarity {
         |  FROM s)
         |SELECT query_id, item_id, rnk, ${Num.sql("dot", 6)} AS dot
         |FROM r WHERE rnk <= 5""".stripMargin) { (s, dir) =>
-      graft.functions.TopK.register(s)
       val e = t(s, dir, "embeddings")
       val dd = transform(col("n_emb"), _.cast("double"))
       val qd = transform(col("q_emb"), _.cast("double"))
@@ -2323,8 +2301,6 @@ object Similarity {
         |  FROM s)
         |SELECT query_id, neighbor_id, rnk, ${Num.sql("c", 6)} AS cos
         |FROM r WHERE rnk <= 5""".stripMargin) { (s, dir) =>
-      CosineSimilarity.register(s)
-      graft.functions.TopK.register(s)
       val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))

@@ -37,11 +37,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 read path over a [[graft.streaming.Streaming]]
   * zone-map table (`data/` + `zones/` directories maintained by
-  * `zoneIngestBatch`/`zoneOptimize`) — the r11 VERDICT task 1 move:
-  * file skipping used to happen in library code (`zoneScan` collected
-  * the zone table and handed survivor paths to `spark.read`), which
-  * was correct and bounded but invisible to Catalyst. This provider
-  * makes the SAME pruning a PLANNING decision: Catalyst pushes the
+  * `zoneIngestBatch`/`zoneOptimize`), and the one reader of its rows.
+  * It makes file skipping a PLANNING decision: Catalyst pushes the
   * query's own `a`/`b` predicates into the scan through
   * [[SupportsPushDownFilters]], the scan consults the per-file
   * min/max zone rows at plan time, and the kept/total file count and
@@ -199,8 +196,8 @@ private[graft] object ZoneMapSource {
   }
 
   /** Data schema from the first visible part-file's parquet footer —
-    * the source serves whatever the ingest wrote (the r11 zoneScan
-    * schema lesson, applied from day one here). Supported leaf types:
+    * the source serves whatever the ingest wrote, so a box that prunes
+    * every file keeps the ingested column types. Supported leaf types:
     * INT32/INT64/DOUBLE/BINARY-UTF8, which covers the zone table's
     * numeric contract plus string payloads. */
   def dataSchema(dir: String): StructType = {
@@ -263,11 +260,15 @@ private[graft] object ZoneMapSource {
               if (g.getFieldRepetitionCount(i) != 1) null
               else g.getBinary(i, 0).getBytes
             }
+          // a table ingested from INT columns has INT32 min/max stats
+          def long(g: Group, name: String): Long =
+            if (g.getType.getType(name).asPrimitiveType.getPrimitiveTypeName
+                == PrimitiveTypeName.INT32) g.getInteger(name, 0).toLong
+            else g.getLong(name, 0)
           var g = rd.read()
           while (g != null) {
             out += ZoneRow(g.getString("file", 0),
-              g.getLong("la", 0), g.getLong("ha", 0),
-              g.getLong("lb", 0), g.getLong("hb", 0),
+              long(g, "la"), long(g, "ha"), long(g, "lb"), long(g, "hb"),
               g.getLong("n", 0),
               blob(g, "skr"), blob(g, "ska"), blob(g, "skb"))
             g = rd.read()

@@ -33,7 +33,9 @@ object Streaming {
     * files, convert each micro-batch to Parquet under `outDir`.
     * `maxFilesPerTrigger` ≈ the SQS receive batch of ≤10 messages
     * (`convertor/convertor.go:52`); the checkpoint replaces the
-    * visibility-timeout redelivery loop (`convertor.go:48`). */
+    * visibility-timeout redelivery loop (`convertor.go:48`). A file
+    * that does not parse is dropped and the parquet is written with the
+    * reference's knobs, as in [[Convert.jsonToParquet]]. */
   def jsonToParquetStream(
       spark: SparkSession,
       inDir: String,
@@ -43,15 +45,17 @@ object Streaming {
       maxFilesPerTrigger: Int = 10,
       backfill: Boolean = false): StreamingQuery = {
     val in = spark.readStream
-      .schema(schema)
+      .schema(schema.add(Convert.Corrupt, StringType))
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       // the reference's inputs are one multi-line object per file
       // (sample_json/*.json) — same whole-file parse as the batch path
       .option("multiLine", true)
+      .options(Convert.PermissiveJson)
       .json(inDir)
-    Convert.toParquet(in)
+    Convert.toParquet(in.filter(col(Convert.Corrupt).isNull))
       .writeStream
       .format("parquet")
+      .options(Convert.RefParquetOptions)
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
       // backfill = Trigger.AvailableNow: drain everything the source has
@@ -491,7 +495,7 @@ object Streaming {
     val iso = org.apache.spark.sql.graft.SessionShims
       .cloneWithIsolatedConf(batch.sparkSession)
     iso.conf.set("spark.sql.execution.useObjectHashAggregateExec", "false")
-    graft.functions.KllSketch.register(iso)
+    graft.functions.Functions.install(iso)
     org.apache.spark.sql.graft.SessionShims.ofRows(iso, batch)
       .repartition(col(groupCol))
       .sortWithinPartitions(col(groupCol), col(valCol))
@@ -505,7 +509,7 @@ object Streaming {
     * runs relationally on the sample exactly as in q_agg_kll. */
   def kllTable(
       spark: SparkSession, tableDir: String, groupCol: String): DataFrame = {
-    graft.functions.KllSketch.register(spark)
+    graft.functions.Functions.install(spark)
     spark.read.parquet(tableDir)
       .groupBy(col(groupCol))
       .agg(expr("graft_kll_merge(sk)").as("sample"))
@@ -531,7 +535,7 @@ object Streaming {
   def bloomIngestBatch(
       batch: DataFrame, batchId: Long, tableDir: String,
       keyCol: String, numBits: Int, numHashes: Int): Unit = {
-    graft.functions.BloomSketch.register(batch.sparkSession)
+    graft.functions.Functions.install(batch.sparkSession)
     batch
       .agg(expr(s"graft_bloom($keyCol, $numBits, $numHashes)").as("bloom"))
       .write.mode(SaveMode.Overwrite).parquet(s"$tableDir/batch=$batchId")
@@ -737,7 +741,7 @@ object Streaming {
     * (SupportsReportStatistics.columnStats → CBO join estimation). */
   private def zoneStats(data: DataFrame, file: Column, by: Column*)
       : DataFrame = {
-    graft.functions.HllSketch.register(data.sparkSession)
+    graft.functions.Functions.install(data.sparkSession)
     data.groupBy(by: _*)
       .agg(min(col("a")).as("la"), max(col("a")).as("ha"),
         min(col("b")).as("lb"), max(col("b")).as("hb"),
@@ -753,43 +757,6 @@ object Streaming {
   def zoneTable(spark: SparkSession, dir: String): DataFrame = {
     spark.read.parquet(DirTable.visible(spark, s"$dir/zones", "opt")
       .map(_.path.toString): _*)
-  }
-
-  /** Box scan THROUGH the index: prune files whose [min,max] rectangle
-    * misses the box, read only survivors, apply the exact predicate.
-    * Returns (matching rows, the file names actually read) — the skip
-    * set is the deliverable a 100 TB scan planner acts on. */
-  def zoneScan(spark: SparkSession, dir: String,
-      alo: Long, ahi: Long, blo: Long, bhi: Long)
-      : (DataFrame, Seq[String]) = {
-    val hit = zoneTable(spark, dir)
-      .filter(col("la") <= ahi && col("ha") >= alo &&
-        col("lb") <= bhi && col("hb") >= blo)
-      .select(col("file")).collect().map(_.getString(0)).toSeq.sorted
-    val df =
-      if (hit.isEmpty)
-        // r11 ADVICE fix: the no-hit frame must carry the INGESTED
-        // schema, not fabricated BIGINT literals — a table ingested
-        // with INT columns would otherwise change schema depending on
-        // whether the box pruned everything, breaking downstream
-        // unions. Read one visible data part at limit(0): schema only,
-        // zero row work (a zones row always points at complete data,
-        // so a visible part exists whenever the zone table is
-        // non-empty; a table with no parts at all keeps the empty
-        // zoneTable-shaped frame below, where no row can ever exist).
-        DirTable.visible(spark, s"$dir/data", "opt").headOption match {
-          case Some(part) =>
-            spark.read.parquet(part.path.toString)
-              .select(col("rid"), col("a"), col("b"))
-              .limit(0).filter(lit(false))
-          case None =>
-            zoneTable(spark, dir).limit(0)
-              .select(lit(0L).as("rid"), lit(0L).as("a"), lit(0L).as("b"))
-              .filter(lit(false))
-        }
-      else spark.read.parquet(hit.map(n => s"$dir/data/$n"): _*)
-        .filter(col("a").between(alo, ahi) && col("b").between(blo, bhi))
-    (df, hit)
   }
 
   /** OPTIMIZE: re-cluster every visible row into 8×8 Z-tiles (bounds
@@ -1276,7 +1243,7 @@ object Streaming {
     * the batch. */
   def sampleIngestBatch(
       batch: DataFrame, batchId: Long, tableDir: String, k: Int = 5): Unit = {
-    graft.functions.TopK.register(batch.sparkSession)
+    graft.functions.Functions.install(batch.sparkSession)
     val u = (graft.functions.TextAnalysis.h32(
       concat(lit("wsamp:"), col("doc_id").cast("string"))) + 1) /
       lit(4294967296e0)
@@ -1297,7 +1264,7 @@ object Streaming {
     * Emits the batch query's exact schema (rnk, Num-rounded pri). */
   def sampleTable(
       spark: SparkSession, tableDir: String, k: Int = 5): DataFrame = {
-    graft.functions.TopK.register(spark)
+    graft.functions.Functions.install(spark)
     spark.read.parquet(tableDir)
       .groupBy(col("source"))
       .agg(expr(s"graft_topk(-pri, doc_id, $k)").as("top"))
@@ -1736,7 +1703,7 @@ object Streaming {
       batch: DataFrame, batchId: Long,
       queries: DataFrame, tableDir: String, k: Int): Unit = {
     val s = batch.sparkSession
-    graft.functions.CosineSimilarity.register(s)
+    graft.functions.Functions.install(s)
     val fresh = batch
       .join(broadcast(queries), col("query_id") =!= col("vec_id"))
       .withColumn("cos", expr("graft_cosine(q_emb, embedding)"))

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.BloomSketch
 import org.apache.spark.sql.functions._
 
 /** Bloom membership sketch: the no-false-negative contract, a sane
@@ -12,12 +11,10 @@ class BloomSpec extends SparkSpec {
 
   private def bloomOf(df: org.apache.spark.sql.DataFrame,
       bits: Int = 65536, hashes: Int = 7) = {
-    BloomSketch.register(spark)
     df.agg(expr(s"graft_bloom(id, $bits, $hashes)").as("bf"))
   }
 
   test("no false negatives: every inserted key probes true") {
-    BloomSketch.register(spark)
     val keys = spark.range(4000).toDF("id")
     val misses = keys.crossJoin(broadcast(bloomOf(keys)))
       .filter(!expr("graft_bloom_contains(bf, id)")).count()
@@ -25,7 +22,6 @@ class BloomSpec extends SparkSpec {
   }
 
   test("false-positive rate near theory at 16 bits/key") {
-    BloomSketch.register(spark)
     // 4096 keys in 65536 bits, 7 hashes: fpp = (1-e^(-kn/m))^k ≈ 0.07%
     // ⇒ ~70 expected in 100k disjoint probes; 4× slack for hash luck.
     // This bound is the regression tripwire for the low-entropy h2 bug
@@ -39,7 +35,6 @@ class BloomSpec extends SparkSpec {
   }
 
   test("serialized filter is invariant under partitioning (merge order)") {
-    BloomSketch.register(spark)
     val df = spark.range(50000).toDF("id")
     def bytes(parts: Int): Seq[Byte] =
       df.repartition(parts).agg(expr("graft_bloom(id, 262144, 7)"))
@@ -49,7 +44,6 @@ class BloomSpec extends SparkSpec {
   }
 
   test("string probes share value identity with the build side") {
-    BloomSketch.register(spark)
     val words = spark.range(2000).selectExpr("concat('tok_', id) AS w")
     val bf = words.agg(expr("graft_bloom(w, 65536, 7)").as("bf"))
     val missed = words.crossJoin(broadcast(bf))
@@ -58,7 +52,6 @@ class BloomSpec extends SparkSpec {
   }
 
   test("the probe filter stays inside whole-stage codegen") {
-    BloomSketch.register(spark)
     val bf = spark.range(100).toDF("id")
       .agg(expr("graft_bloom(id, 4096, 5)").as("bf"))
     val probed = spark.range(10000).toDF("id")

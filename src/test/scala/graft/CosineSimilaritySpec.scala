@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.CosineSimilarity
 import org.apache.spark.sql.functions._
 
 /** The codegen'd cosine expression must agree bitwise with the
@@ -19,7 +18,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("matches the declarative composition bitwise on real embeddings") {
-    CosineSimilarity.register(spark)
     val e = Tables(spark, sfDir, "embeddings").limit(50)
     val a = e.select(col("vec_id").as("ia"), col("embedding").as("ea"))
     val b = e.select(col("vec_id").as("ib"), col("embedding").as("eb"))
@@ -39,7 +37,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("matches a plain Scala loop on random vectors (seeded)") {
-    CosineSimilarity.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(42)
     val cases = Seq.fill(25)((
@@ -52,7 +49,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("double-array overload folds identically to the float path's math") {
-    CosineSimilarity.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     val cases = Seq.fill(25)((
@@ -71,7 +67,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("mixed float/double arrays are rejected at analysis time") {
-    CosineSimilarity.register(spark)
     import spark.implicits._
     // silent promotion would hide WHERE the fold order changes — refuse
     val df = Seq((Array(1f, 2f), Array(1d, 2d))).toDF("a", "b")
@@ -81,7 +76,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("null array yields null") {
-    CosineSimilarity.register(spark)
     import spark.implicits._
     val df = Seq((Some(Array(1f, 2f)), Option.empty[Array[Float]]))
       .toDF("a", "b")
@@ -89,14 +83,12 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("dimension mismatch yields null, not a prefix cosine") {
-    CosineSimilarity.register(spark)
     import spark.implicits._
     val df = Seq((Array(1f, 2f, 3f), Array(1f, 2f))).toDF("a", "b")
     assert(df.select(expr("graft_cosine(a, b)")).collect()(0).isNullAt(0))
   }
 
   test("rejects non-float-array inputs at analysis time") {
-    CosineSimilarity.register(spark)
     import spark.implicits._
     val df = Seq((Array(1, 2), Array(3, 4))).toDF("a", "b")
     intercept[Exception] {

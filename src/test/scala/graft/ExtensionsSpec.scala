@@ -85,13 +85,29 @@ class ExtensionsSpec extends SparkSpec {
     }
   }
 
+  test("function catalog: every row resolves in the extensions-built " +
+    "session and, after Functions.install, in a plain session") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val names = functions.Functions.all.map(_.name)
+    assert(names.size == 23 && names.distinct == names, names)
+    def missing(s: SparkSession): Seq[String] = names.filterNot(n =>
+      s.sessionState.functionRegistry.functionExists(FunctionIdentifier(n)))
+    withExtSession(ext => assert(missing(ext).isEmpty))
+    val plain = spark.newSession()
+    assert(missing(plain) == names, "a new session starts without them")
+    functions.Functions.install(plain)
+    functions.Functions.install(plain) // a second install is harmless
+    assert(missing(plain).isEmpty)
+    assert(plain.sql("SELECT graft_jaro_winkler('martha', 'marhta')")
+      .collect()(0).getDouble(0) > 0.9)
+  }
+
   test("HLL blob surface rejects malformed inputs loudly") {
     def chain(e: Throwable): String = {
       var t = e; val sb = new StringBuilder
       while (t != null) { sb.append(t.getMessage).append(" | "); t = t.getCause }
       sb.toString
     }
-    functions.HllSketch.register(spark)
     // register-count argument: non-power-of-two, out of range
     for (bad <- Seq("graft_hll_regs(o_orderkey, 17)",
         "graft_hll_regs(o_orderkey, 8)",

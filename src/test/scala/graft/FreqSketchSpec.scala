@@ -50,7 +50,6 @@ class FreqSketchSpec extends SparkSpec {
   }
 
   test("Spark aggregate: heavy items reported with valid bounds") {
-    FreqSketch.register(spark)
     import spark.implicits._
     val stream = zipfStream(30000, seed = 9)
     val df = stream.toDF("tok").repartition(8)

@@ -1,13 +1,11 @@
 package graft
 
-import graft.functions.HllSketch
 import org.apache.spark.sql.functions._
 
 /** HLL sketch accuracy and merge semantics. */
 class HllSketchSpec extends SparkSpec {
 
   test("within 5% of exact on 1k / 10k / 100k distinct longs") {
-    HllSketch.register(spark)
     for (n <- Seq(1000L, 10000L, 100000L)) {
       val est = spark.range(n).toDF("id")
         .agg(expr("graft_hll(id)")).collect()(0).getLong(0)
@@ -16,7 +14,6 @@ class HllSketchSpec extends SparkSpec {
   }
 
   test("estimate is invariant under partitioning (merge correctness)") {
-    HllSketch.register(spark)
     val df = spark.range(50000).toDF("id")
     val one = df.repartition(1).agg(expr("graft_hll(id)")).collect()(0).getLong(0)
     val many = df.repartition(16).agg(expr("graft_hll(id)")).collect()(0).getLong(0)
@@ -24,7 +21,6 @@ class HllSketchSpec extends SparkSpec {
   }
 
   test("duplicates don't inflate the estimate") {
-    HllSketch.register(spark)
     val df = spark.range(1000).toDF("id")
     val single = df.agg(expr("graft_hll(id)")).collect()(0).getLong(0)
     val dup = df.union(df).union(df)
@@ -33,7 +29,6 @@ class HllSketchSpec extends SparkSpec {
   }
 
   test("grouped sketch tracks exact per group") {
-    HllSketch.register(spark)
     val li = Tables(spark, sfDir, "lineitem")
     val rows = li.groupBy(col("l_returnflag")).agg(
       countDistinct(col("l_partkey")).as("exact"),

@@ -52,7 +52,6 @@ class JaroWinklerSpec extends SparkSpec {
 
   test("expression evaluates identically via SQL, codegen on") {
     import spark.implicits._
-    JaroWinkler.register(spark)
     val df = Seq(("martha", "marhta"), ("dwayne", "duane"), ("", ""))
       .toDF("a", "b")
       .select(expr("graft_jaro_winkler(a, b)").as("jw"))

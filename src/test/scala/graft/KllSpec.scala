@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.KllSketch
-
 /** Pins for the derandomized KLL quantile sketch beyond q_agg_kll's
   * in-plan verdict: exactness below capacity, the weight-conservation
   * invariant, measured rank error under adversarial input orders, and
@@ -14,7 +12,6 @@ class KllSpec extends SparkSpec {
 
   private def sketch(values: Seq[Long], k: Int, parts: Int)
       : (Seq[(Long, Long)], Long) = {
-    KllSketch.register(spark)
     import spark.implicits._
     val row = values.toDF("v").repartition(parts)
       .agg(expr(s"graft_kll(v, $k)").as("s"), count(lit(1)).as("n"))
@@ -59,7 +56,6 @@ class KllSpec extends SparkSpec {
 
   test("the bin/merge duo: per-group serialized partials fold to the " +
     "same weight and the same error bound as direct sketching") {
-    KllSketch.register(spark)
     import spark.implicits._
     val vs = (1L to 60000L).map(i => (i % 7, (i * 48271L) % 999983L))
     val df = vs.toDF("g", "v").repartition(8)

@@ -13,7 +13,6 @@ import graft.functions.MultiMatch
 class MultiMatchSpec extends SparkSpec {
 
   private def counts(text: String, pats: Seq[String]): Seq[Long] = {
-    MultiMatch.register(spark)
     val arr = "array(" + pats.map(p => s"'$p'").mkString(", ") + ")"
     spark.sql(s"SELECT graft_multi_match('$text', $arr) AS c")
       .collect()(0).getSeq[Long](0)
@@ -55,7 +54,6 @@ class MultiMatchSpec extends SparkSpec {
 
   test("the expression survives whole-stage codegen over a real scan " +
     "and null texts yield null") {
-    MultiMatch.register(spark)
     val df = Tables(spark, sfDir, "documents")
       .selectExpr("graft_multi_match(text, array('scan', 'row')) AS c",
         "graft_multi_match(CAST(NULL AS STRING)," +

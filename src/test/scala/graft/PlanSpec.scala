@@ -349,7 +349,6 @@ class PlanSpec extends SparkSpec {
 
   test("q_knn_ivf cells partition the vectors (every vector in exactly one cell)") {
     import org.apache.spark.sql.functions._
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val cents = e.filter(col("vec_id") < 8)

@@ -384,7 +384,6 @@ class PropertySpec extends SparkSpec {
 
   test("graft_topk equals sort-take-k on random scores, ties included") {
     import spark.implicits._
-    graft.functions.TopK.register(spark)
     val rnd = new Random(7)
     // coarse scores force ties so the id tie-break is exercised
     val rows = Seq.fill(500)(

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.Shingles
 import org.apache.spark.sql.functions._
 
 /** The custom Generator must produce exactly the shingle relation the
@@ -8,7 +7,6 @@ import org.apache.spark.sql.functions._
 class ShinglesSpec extends SparkSpec {
 
   test("matches the declarative shingle derivation on real documents") {
-    Shingles.register(spark)
     val docs = Tables(spark, sfDir, "documents").limit(100)
     val viaGen = docs.select(col("doc_id"),
       expr("graft_shingles(text, 3)").as("shingle"))
@@ -25,7 +23,6 @@ class ShinglesSpec extends SparkSpec {
   }
 
   test("short and null inputs generate no rows") {
-    Shingles.register(spark)
     import spark.implicits._
     val df = Seq(Some("one two"), Some("a b c"), None).toDF("text")
     val out = df.select(expr("graft_shingles(text, 3)")).collect()
@@ -64,7 +61,6 @@ class ShinglesSpec extends SparkSpec {
   }
 
   test("rejects non-string input and n < 1 at analysis time") {
-    Shingles.register(spark)
     import spark.implicits._
     intercept[Exception] {
       Seq(1).toDF("x").select(expr("graft_shingles(x, 3)")).collect()

@@ -6,19 +6,24 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs: same conf shape as Verify/Bench
   * (UTC, small shuffle fan-out, nanos-as-long for events.parquet, the
-  * fork-free `file:` filesystem). */
+  * fork-free `file:` filesystem), with the `graft_*` function catalog
+  * installed, so a spec calls the functions by name as a query does. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .config("spark.ui.enabled", "false")
-    .config(graft.sources.LocalFs.sessionConf)
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .appName(getClass.getSimpleName)
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
+      .config("spark.ui.enabled", "false")
+      .config(graft.sources.LocalFs.sessionConf)
+      .getOrCreate()
+    graft.functions.Functions.install(s)
+    s
+  }
 
   val sfDir = "/root/testdata/sf0.001"
 

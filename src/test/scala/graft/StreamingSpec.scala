@@ -115,6 +115,23 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() == 8)
   }
 
+  test("directory-watch stream drops a malformed file as the batch path " +
+    "does, instead of writing an all-null row") {
+    val in = tmpDir("stream_bad_in")
+    val out = tmpDir("stream_bad_out")
+    val ckpt = tmpDir("stream_bad_ckpt")
+    Files.writeString(Paths.get(in, "good.json"),
+      """{ "ID": "1", "name": "A", "nationality": "CM", "age": 22 }""")
+    Files.writeString(Paths.get(in, "bad.json"), """{ "ID": "2", "name": """)
+    val q = Streaming.jsonToParquetStream(spark, in, out, ckpt)
+    try {
+      q.processAllAvailable()
+      val rows = spark.read.parquet(out)
+      assert(rows.columns.toSeq == Seq("ID", "name", "nationality", "age"))
+      assert(rows.collect().map(_.getString(0)).toSeq == Seq("1"))
+    } finally q.stop()
+  }
+
   test("notification batch naming many keys converts them all (concurrent key loop)") {
     val notify = tmpDir("notify_many_in")
     val objects = tmpDir("objects_many")
@@ -1252,7 +1269,6 @@ class StreamingSpec extends SparkSpec {
   test("incremental kNN maintenance equals the batch top-k after any number " +
     "of batches, and replay rebuilds a version bit-identically") {
     import org.apache.spark.sql.functions.col
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val queries = e.filter(col("vec_id") < 5)
@@ -1835,7 +1851,6 @@ class StreamingSpec extends SparkSpec {
   test("incremental bloom maintenance equals the one-shot filter " +
     "bit-for-bit and keeps the no-false-negative guarantee") {
     import spark.implicits._
-    graft.functions.BloomSketch.register(spark)
     val dir = tmpDir("bloom_state")
     val docs = Tables(spark, sfDir, "documents").select(col("doc_id"))
     val waves = (0 until 3).map(w => docs.filter(col("doc_id") % 3 === w))
@@ -2092,6 +2107,34 @@ class StreamingSpec extends SparkSpec {
     assert(Streaming.ivmView(spark, dir).count() == total)
   }
 
+  /** A box scan of the zone-map table at `dir` through its DSv2
+    * source: the rows, and the visible zone files overlapping the box,
+    * whose count must equal the kept count in the scan's description. */
+  private def zoneBoxScan(dir: String, alo: Long, ahi: Long, blo: Long,
+      bhi: Long): (org.apache.spark.sql.DataFrame, Seq[String]) = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.functions._
+    val df = spark.read.format("graft.sources.ZoneMapSource").load(dir)
+      .filter(col("a").between(alo, ahi) && col("b").between(blo, bhi))
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val desc = plan.collectFirst { case b: BatchScanExec =>
+      b.scan.description() }.getOrElse(fail(s"no BatchScan in $plan"))
+    val kept = raw"zones kept (\d+)/(\d+)".r.findFirstMatchIn(desc)
+      .getOrElse(fail(s"no kept/total in: $desc"))
+    val files = Streaming.zoneTable(spark, dir)
+      .filter(col("la") <= ahi && col("ha") >= alo &&
+        col("lb") <= bhi && col("hb") >= blo)
+      .select(col("file")).collect().map(_.getString(0)).toSeq.sorted
+    assert(kept.group(1).toInt == files.size, desc)
+    assert(kept.group(2).toLong == Streaming.zoneTable(spark, dir).count(),
+      desc)
+    (df, files)
+  }
+
   test("zone-map table: incremental stats serve pruned scans exactly; " +
     "optimize re-tiles crash-safely and a same-horizon re-run no-ops") {
     import org.apache.spark.sql.functions._
@@ -2119,9 +2162,9 @@ class StreamingSpec extends SparkSpec {
         assert(idx(s"batch=$w") == ((ref.getLong(0), ref.getLong(1),
           ref.getLong(2), ref.getLong(3), ref.getLong(4))))
       }
-      // box scan through the index == direct filter; full-span files
-      // mean no skips yet. Box bounds are domain-relative so the spec
-      // holds at any SF's key ranges.
+      // box scan through the zone-map source == direct filter;
+      // full-span files mean no skips yet. Box bounds are
+      // domain-relative so the spec holds at any SF's key ranges.
       val dom = rows.agg(max(col("a")), max(col("b"))).collect().head
       val (amax, bmax) = (dom.getLong(0), dom.getLong(1))
       val (alo, ahi, blo, bhi) =
@@ -2129,21 +2172,20 @@ class StreamingSpec extends SparkSpec {
       def direct: Set[Long] = rows
         .filter(col("a").between(alo, ahi) && col("b").between(blo, bhi))
         .select(col("rid")).collect().map(_.getLong(0)).toSet
-      val (scan1, files1) = Streaming.zoneScan(
-        spark, table, alo, ahi, blo, bhi)
+      val (scan1, files1) = zoneBoxScan(table, alo, ahi, blo, bhi)
       assert(scan1.select(col("rid")).collect().map(_.getLong(0)).toSet
         == direct)
       assert(files1 == Seq("batch=0", "batch=1", "batch=2"),
         "full-span ingest files cannot be skipped")
       // a box outside the global range prunes EVERYTHING (no read)
-      assert(Streaming.zoneScan(spark, table, -9, -1, 0, 9)._2.isEmpty)
+      val (scanNone, filesNone) = zoneBoxScan(table, -9, -1, 0, 9)
+      assert(filesNone.isEmpty && scanNone.count() == 0)
       // OPTIMIZE: same answers, and the box now skips most of the data
       Streaming.zoneOptimize(spark, table)
-      val (scan2, files2) = Streaming.zoneScan(
-        spark, table, alo, ahi, blo, bhi)
+      val (scan2, files2) = zoneBoxScan(table, alo, ahi, blo, bhi)
       assert(scan2.select(col("rid")).collect().map(_.getLong(0)).toSet
         == direct, "optimize changed scan results")
-      assert(files2.forall(_.startsWith("opt=2/tile=")))
+      assert(files2.nonEmpty && files2.forall(_.startsWith("opt=2/tile=")))
       val total = rows.count()
       val readRows = Streaming.zoneTable(spark, table)
         .filter(col("file").isin(files2: _*))
@@ -2169,8 +2211,7 @@ class StreamingSpec extends SparkSpec {
         rows.filter(col("rid") % 3 === 0)
           .selectExpr("rid + 1000000000 AS rid", "a", "b"),
         7L, table)
-      val (scan3, files3) = Streaming.zoneScan(
-        spark, table, alo, ahi, blo, bhi)
+      val (scan3, files3) = zoneBoxScan(table, alo, ahi, blo, bhi)
       assert(files3.contains("batch=7"))
       // row COUNTS here, not rid sets — rid is not unique in the
       // synthetic lineitem, and the copy batch duplicates rows
@@ -2180,8 +2221,7 @@ class StreamingSpec extends SparkSpec {
         col("a").between(alo, ahi) && col("b").between(blo, bhi)).count()
       assert(scan3.count() == directCnt + dup0)
       Streaming.zoneOptimize(spark, table)
-      val (scan4, files4) = Streaming.zoneScan(
-        spark, table, alo, ahi, blo, bhi)
+      val (scan4, files4) = zoneBoxScan(table, alo, ahi, blo, bhi)
       assert(scan4.count() == directCnt + dup0)
       assert(files4.forall(_.startsWith("opt=7/tile=")))
       assert(!NF.exists(NP.get(s"$table/data/opt=2")),
@@ -2196,6 +2236,7 @@ class StreamingSpec extends SparkSpec {
   test("zone-map scan: the prune-everything branch carries the INGESTED " +
     "schema, not fabricated BIGINT columns (r11 ADVICE)") {
     import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.IntegerType
     val table = tmpDir("zone_schema")
     // ingest INT-typed columns: the no-hit frame must come back INT too,
     // or a downstream union of hit and no-hit scans breaks on schema
@@ -2203,11 +2244,13 @@ class StreamingSpec extends SparkSpec {
       "CAST(l_orderkey * 10 + l_linenumber AS INT) AS rid",
       "CAST(l_partkey AS INT) AS a", "CAST(l_suppkey AS INT) AS b")
     Streaming.zoneIngestBatch(rows, 0L, table)
-    val (hitDf, hitFiles) = Streaming.zoneScan(
-      spark, table, 0L, Long.MaxValue, 0L, Long.MaxValue)
-    val (missDf, missFiles) = Streaming.zoneScan(
-      spark, table, -9L, -1L, -9L, -1L)
+    val (hitDf, hitFiles) =
+      zoneBoxScan(table, 0L, Long.MaxValue, 0L, Long.MaxValue)
+    val (missDf, missFiles) = zoneBoxScan(table, -9L, -1L, -9L, -1L)
     assert(hitFiles.nonEmpty && missFiles.isEmpty)
+    assert(hitDf.count() == rows.count())
+    assert(hitDf.schema.map(_.dataType) == Seq.fill(3)(IntegerType),
+      hitDf.schema.toString)
     assert(missDf.schema == hitDf.schema,
       s"no-hit schema ${missDf.schema} != ingested schema ${hitDf.schema}")
     assert(missDf.count() == 0)

@@ -8,7 +8,6 @@ class TextSpec extends SparkSpec {
 
   test("graft_normalize: all five forms behave per UAX #15 (codegen and " +
     "interpreted paths agree), including the forms the oracle can't see") {
-    graft.functions.UnicodeNormalize.register(spark)
     import spark.implicits._
     // (input, NFC, NFD, NFKC, STRIP) — escapes only, so the file
     // encoding cannot decide composed vs decomposed. U+FB01 (fi

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.ThetaSketch
 import org.apache.spark.sql.functions._
 
 /** Theta (KMV) sketch: exact mode, estimation accuracy, merge-order
@@ -8,7 +7,6 @@ import org.apache.spark.sql.functions._
 class ThetaSketchSpec extends SparkSpec {
 
   private def estOf(df: org.apache.spark.sql.DataFrame): Long = {
-    ThetaSketch.register(spark)
     df.agg(expr("graft_theta_est(graft_theta(id))")).collect()(0).getLong(0)
   }
 
@@ -25,7 +23,6 @@ class ThetaSketchSpec extends SparkSpec {
   }
 
   test("sketch bytes are invariant under partitioning (merge order)") {
-    ThetaSketch.register(spark)
     val df = spark.range(50000).toDF("id")
     def bytes(parts: Int): Seq[Byte] =
       df.repartition(parts).agg(expr("graft_theta(id)"))
@@ -36,7 +33,6 @@ class ThetaSketchSpec extends SparkSpec {
   }
 
   test("intersection: exact when both sketches are exact-mode") {
-    ThetaSketch.register(spark)
     // [0, 2000) ∩ [1000, 3500) = [1000, 2000): 1000 common values
     val a = spark.range(0, 2000).toDF("id")
       .agg(expr("graft_theta(id)").as("a"))
@@ -48,7 +44,6 @@ class ThetaSketchSpec extends SparkSpec {
   }
 
   test("intersection estimate within 15% when both sides saturate k") {
-    ThetaSketch.register(spark)
     // [0, 60k) ∩ [30k, 100k) = 30k common of 60k/70k distinct per side;
     // both sketches saturate k = 4096 → θ-restricted estimate. σ for the
     // intersection scales like 1/√(k·overlap-fraction) ≈ 2.5% here; 15%
@@ -63,7 +58,6 @@ class ThetaSketchSpec extends SparkSpec {
   }
 
   test("disjoint sets intersect to zero") {
-    ThetaSketch.register(spark)
     val a = spark.range(0, 5000).toDF("id").agg(expr("graft_theta(id)").as("a"))
     val b = spark.range(5000, 10000).toDF("id").agg(expr("graft_theta(id)").as("b"))
     val est = a.crossJoin(b)
@@ -72,7 +66,6 @@ class ThetaSketchSpec extends SparkSpec {
   }
 
   test("sketches survive a parquet round-trip (the sketch-table path)") {
-    ThetaSketch.register(spark)
     val dir = tmpDir("graft_theta_table")
     Tables(spark, sfDir, "orders")
       .groupBy(year(col("o_orderdate")).as("yr"))

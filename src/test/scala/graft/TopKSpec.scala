@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.TopK
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -9,7 +8,6 @@ import org.apache.spark.sql.functions._
 class TopKSpec extends SparkSpec {
 
   test("agrees with the ranking window on real data") {
-    TopK.register(spark)
     val o = Tables(spark, sfDir, "orders")
       .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
     val viaAgg = o.groupBy(col("o_custkey"))
@@ -28,7 +26,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("invariant under partitioning") {
-    TopK.register(spark)
     val o = Tables(spark, sfDir, "orders")
     def run(parts: Int) = o.repartition(parts)
       .agg(expr("graft_topk(o_totalprice, o_orderkey, 10)").as("top"))
@@ -37,7 +34,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("rejects bad input types and k < 1 at analysis time") {
-    TopK.register(spark)
     import spark.implicits._
     val df = Seq((1.0, 5L)).toDF("s", "i")
     intercept[Exception] {
@@ -50,7 +46,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("tie-break prefers the smaller id") {
-    TopK.register(spark)
     import spark.implicits._
     val df = Seq((1.0, 5L), (1.0, 2L), (1.0, 9L)).toDF("s", "i")
     val top = df.agg(expr("graft_topk(s, i, 2)").as("t"))

@@ -5,8 +5,9 @@
 
 The change is HEAD (commit it first: the tool refuses a tree with
 uncommitted tracked changes) and the base is its parent, HEAD~1, checked
-out with `git worktree add` into a temporary directory that is removed
-at the end, so each side builds from its own sources. Runs
+out in a `git clone` of this repository in a temporary directory
+(`$TMPDIR`) that is removed at the end, so each side builds from its own
+sources and this checkout's `.git` is left as it was. Runs
 `perfbench/run.py --trace 0` for BENCHMARK.json's run_seconds, one pair
 per seed (the same seed on both sides), base first on odd pairs and
 change first on even ones. Each A/B starts `--out` afresh and writes
@@ -149,7 +150,9 @@ def main():
         open(args.out, "w").close()
         tmp = tempfile.mkdtemp(prefix="ab_base_")
         base_dir = os.path.join(tmp, "base")
-        git("worktree", "add", "--detach", base_dir, commits["base"])
+        git("clone", "--quiet", "--no-checkout", ROOT, base_dir)
+        subprocess.run(["git", "checkout", "--quiet", "--detach", commits["base"]],
+                       cwd=base_dir, check=True)
         log(f"base {commits['base'][:12]} in {base_dir}, change {commits['change'][:12]}")
         try:
             for wl in args.workloads.split(","):
@@ -165,7 +168,6 @@ def main():
                         with open(args.out, "a") as f:
                             f.write(json.dumps(rec) + "\n")
         finally:
-            subprocess.run(["git", "worktree", "remove", "--force", base_dir], cwd=ROOT)
             shutil.rmtree(tmp, ignore_errors=True)
     with open(args.out) as f:
         records = [json.loads(ln) for ln in f if ln.strip()]
