@@ -90,13 +90,9 @@ object Convert {
       .json(in: _*)
     val tagged = tag.fold(raw)(raw.withColumn(KeyIndex, _))
     val obs = Observation()
-    val clean = col(Corrupt).isNull
     val kept = maxTasks.fold(tagged)(tagged.coalesce)
-      .observe(obs,
-        count(lit(1)).as("rows_in"),
-        count_if(!clean).as("corrupt"),
-        count_if(clean && col("age").isNotNull && narrowedAge.isNull).as("nulled"))
-      .filter(clean)
+      .observe(obs, Counters.head, Counters.tail: _*)
+      .filter(col(Corrupt).isNull)
     val keep = tag.map(_ => KeyIndex).toSeq
     writeRefParquet(toParquet(kept, keep: _*), out, keep)
     val m = obs.get.view.mapValues(_.asInstanceOf[Long])
@@ -110,6 +106,15 @@ object Convert {
   /** The JSON reader options that route unparsable input to [[Corrupt]]. */
   private[graft] val PermissiveJson: Map[String, String] = Map(
     "mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> Corrupt)
+
+  /** What a conversion counts in its read, as `Dataset.observe` metrics
+    * over the raw rows: `rows_in`, `corrupt` (rows the conversion drops)
+    * and `nulled` (ages [[toParquet]] narrows to NULL). */
+  private[graft] val Counters: Seq[Column] = {
+    val clean = col(Corrupt).isNull
+    Seq(count(lit(1)).as("rows_in"), count_if(!clean).as("corrupt"),
+      count_if(clean && col("age").isNotNull && narrowedAge.isNull).as("nulled"))
+  }
 
   /** The reference writer's exact knobs (`convertor/convertor.go:180-182`)
     * in ONE place, shared by every source mode and the directory-watch

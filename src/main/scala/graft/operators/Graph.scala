@@ -1,49 +1,136 @@
 package graft.operators
 
 import graft.{Num, QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics beyond connected components ([[Dedup.connectedComponents]]):
-  * PageRank over the part↔supplier bipartite graph derived from the fact
-  * table. Link-graph centrality is a standard corpus-quality signal in
-  * web-scale training pipelines (rank sources by authority before
-  * sampling), and its Spark shape is the canonical iterative keyed join:
+  * 17 queries over two graphs derived from the fact table, plus the
+  * customer successor graph of q_graph_scc.
   *
-  *   - node ids are LONGS (2·partkey for parts, 2·suppkey+1 for
-  *     suppliers) — an id scheme, not a display string: long keys hash,
-  *     shuffle, and cache at a fraction of the cost of concat'd strings
-  *     (measured: the string-id version spent most of its time building
-  *     the adjacency cache);
-  *   - the adjacency (symmetrized edges + out-degree) is hash-partitioned
-  *     by src ONCE and cached; every iteration reuses that partitioning;
-  *   - one iteration = adj ⋈ ranks (shuffle_hash, build = the |V|-sized
-  *     rank side) → groupBy dst (map-combinable sum) — cost scales with
-  *     |E|, never |V|², and nothing re-sorts or re-shuffles the cached
-  *     |E| rows. The hint matters twice: without it the planner picks a
-  *     sort-merge join and re-sorts the cached adjacency EVERY iteration,
-  *     and unlike `broadcast(ranks)` the hash join still holds when |V|
-  *     is beyond broadcast size at 100 TB;
-  *   - the iteration count is FIXED (k=3) and the loop is unrolled into
-  *     one lazy plan: depth-3 plans don't need the checkpoint machinery
-  *     the open-ended components loop carries;
-  *   - the graph is symmetric by construction, so there are no dangling
-  *     nodes (every node has out-degree ≥ 1) and rank mass is conserved
-  *     (GraphSpec pins Σpr = 1) — the one PageRank subtlety that
-  *     silently corrupts results at any scale if ignored.
+  *   - The SUPPLIER↔PART graph: the distinct (l_partkey, l_suppkey)
+  *     pairs of lineitem. Node ids are LONGS, 2·partkey for parts and
+  *     2·suppkey+1 for suppliers — an id scheme, not a display string:
+  *     long keys hash, shuffle, and cache at a fraction of the cost of
+  *     concat'd strings (measured: the string-id version spent most of
+  *     its time building the adjacency cache). [[supplierPart]] builds
+  *     it on the engine side and [[supplierPartSql]] as the oracles'
+  *     CTE: both directions as (src, dst), or the part→supplier half as
+  *     (u, v), optionally with one more per-edge column `w`.
+  *   - The ORDER CO-PURCHASE graph: parts bought together in an order
+  *     with quantity ≥ 30, as distinct (a, b) pairs with a < b.
+  *     [[coPurchase]] builds it in ONE shuffle (per-order sorted part
+  *     set, in-place half-matrix pair explode), never an |E|-sized
+  *     self-join of the fact table; [[coPurchaseSql]] is the oracles'
+  *     `li`/`e` CTE pair.
   *
-  * The oracle replays the SAME fixed iterations as generated DuckDB CTEs
-  * (pr1..pr3), the pattern the trained-k-means oracle established:
-  * deterministic initialization + a fixed iteration count makes an
-  * iterative algorithm hash-checkable cross-engine. Rounding is at 1e-9
-  * (not the usual 1e-6) because ranks live at the 1/|V| ≈ 5e-4 scale —
-  * six decimals would keep only two significant digits; float
-  * summation-order noise is ~1e-15, six orders below the rounding step.
+  * Iterative queries run a FIXED round count so both engines replay the
+  * same rounds (deterministic initialization + a fixed iteration count
+  * makes an iterative algorithm hash-checkable cross-engine, the
+  * pattern the trained-k-means oracle established); the oracle unrolls
+  * them as generated DuckDB CTEs. Engine-side eager loops go through
+  * [[rounds]], which states the one materialization rule.
   */
 object Graph {
 
   private val damping = 0.85
   private val iters = 3
+
+  /** The supplier↔part graph (see the object doc): both directions as
+    * (src, dst), or with `half` only part→supplier as (u, v); `w`, an
+    * expression over l_partkey and l_suppkey, rides along as column `w`
+    * on both directions. */
+  private def supplierPart(s: SparkSession, dir: String,
+      w: Option[Column] = None, half: Boolean = false): DataFrame = {
+    val e0 = Tables(s, dir, "lineitem")
+      .select(col("l_partkey"), col("l_suppkey")).distinct()
+    val (part, supp) = (col("l_partkey") * 2, col("l_suppkey") * 2 + 1)
+    if (half) e0.select(part.as("u"), supp.as("v"))
+    else {
+      val extra = w.map(_.as("w")).toSeq
+      e0.select(Seq(part.as("src"), supp.as("dst")) ++ extra: _*)
+        .union(e0.select(Seq(supp.as("src"), part.as("dst")) ++ extra: _*))
+    }
+  }
+
+  /** [[supplierPart]] as the oracles' CTE pair: `e0` and the edge CTE
+    * `name`, for a WITH clause. */
+  private def supplierPartSql(name: String = "edges", w: Option[String] = None,
+      half: Boolean = false): String = {
+    val (part, supp) = ("2*l_partkey", "2*l_suppkey + 1")
+    val extra = w.fold("")(x => s", $x AS w")
+    val edges =
+      if (half) s"SELECT $part AS u, $supp AS v FROM e0"
+      else s"""
+        |  SELECT $part AS src, $supp AS dst$extra FROM e0
+        |  UNION ALL
+        |  SELECT $supp AS src, $part AS dst$extra FROM e0"""
+    s"""e0 AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
+      |$name AS ($edges)""".stripMargin
+  }
+
+  /** The order co-purchase graph (see the object doc) as distinct
+    * (a, b) pairs, a < b. The explicit-width exchange goes BEFORE the
+    * aggregate (conf-derived, [[graft.Tables.fan]]): the part-set
+    * aggregate is tiny in BYTES (~2.8 MB) but feeds the quadratic
+    * half-matrix pair explode, and AQE's byte-based coalescing folded its
+    * exchange read to 2 tasks — the explode+distinct ran 2-wide for
+    * 2.4 s, behind a 3-task scan whose partial collect_set paid another
+    * 2.3 s (r15 profile; the central finding's explode case). Pinning
+    * AFTER the groupBy is a no-op — the optimizer drops a repartition
+    * whose partitioning the aggregate already provides, and the
+    * remaining coalescible exchange stays coalescible — so the pin rides
+    * the raw 2-column rows (~4 MB) into the groupBy, which then reuses
+    * the pinned clustering: scan fan-out, partial agg, final agg, pair
+    * explode and the distinct's map side all run at session width. */
+  private def coPurchase(s: SparkSession, dir: String): DataFrame = {
+    val parts = Tables(s, dir, "lineitem")
+      .filter(col("l_quantity") >= 30)
+      .select(col("l_orderkey").as("okey"), col("l_partkey").as("pk"))
+      .transform(graft.Tables.fan(_, "okey"))
+      .groupBy(col("okey"))
+      .agg(array_sort(collect_set(col("pk"))).as("pks"))
+      .filter(size(col("pks")) >= 2)
+    // pairs exploded in place (element i with every later element — the
+    // q_source_overlap half-matrix idiom), so a and b are already
+    // canonical (a < b) without a comparison pass
+    val pairsCol = flatten(transform(col("pks"), (x, i) =>
+      transform(slice(col("pks"), i + lit(2), size(col("pks"))),
+        y => struct(x.as("a"), y.as("b")))))
+    parts.select(explode(pairsCol).as("p"))
+      .select(col("p.a").as("a"), col("p.b").as("b"))
+      .distinct()
+  }
+
+  /** [[coPurchase]] as the oracles' `li`/`e` CTE pair, for a WITH
+    * clause: the textbook self-join, a < b. */
+  private val coPurchaseSql: String =
+    """li AS (
+      |  SELECT DISTINCT l_orderkey AS okey, l_partkey AS pk
+      |  FROM lineitem WHERE l_quantity >= 30),
+      |e AS (
+      |  SELECT DISTINCT x.pk AS a, y.pk AS b
+      |  FROM li x JOIN li y ON x.okey = y.okey AND x.pk < y.pk)""".stripMargin
+
+  /** The eager round loop: `init` and the `k` states after it, round i
+    * computed by `step(previous state, i)`. Each round's output is
+    * `localCheckpoint`ed, so each round runs as exactly one eager job
+    * when the helper returns, and the next round reads its rows, not its
+    * lineage.
+    *
+    * The materialization rule, stated once for the graph family:
+    * checkpoint a round table iff it has ≥2 consumers and is bounded by
+    * |V|. A round table the next round reads twice (a join probe plus a
+    * union, a frontier filter, a squaring self-join, the caller's final
+    * union), left lazy, makes the unrolled plan a 2^k tree, and the
+    * engine does not share the duplicated subtrees: the r15 BFS profile
+    * caught round 1 executing 4× at k = 3 (the q_pref_btl/BPE doubling
+    * regime). A table with one consumer stays lazy (q_graph_pagerank's
+    * rank chain is one plan and builds with no jobs), and an |E|-sized
+    * table is cached, not checkpointed (q_graph_anf's counters). */
+  private def rounds(init: DataFrame, k: Int)(
+      step: (DataFrame, Int) => DataFrame): Seq[DataFrame] =
+    (1 to k).scanLeft(init)((prev, i) => step(prev, i).localCheckpoint())
 
   /** One PageRank step as a DuckDB CTE over the previous rank relation:
     * pr_k(v) = (1-d)/N + d·Σ_{u→v} pr_{k-1}(u)/deg(u). */
@@ -101,26 +188,45 @@ object Graph {
       |  JOIN sv$i b ON e.dst = b.node)""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
+    // ------------------------------------------------------------------
+    // PageRank over the supplier↔part graph. Link-graph centrality is a
+    // standard corpus-quality signal in web-scale training pipelines
+    // (rank sources by authority before sampling), and its Spark shape
+    // is the canonical iterative keyed join:
+    //   - the adjacency (symmetrized edges + out-degree) is
+    //     hash-partitioned by src ONCE and cached; every iteration reuses
+    //     that partitioning;
+    //   - one iteration = adj ⋈ ranks (shuffle_hash, build = the
+    //     |V|-sized rank side) → groupBy dst (map-combinable sum) — cost
+    //     scales with |E|, never |V|², and nothing re-sorts or
+    //     re-shuffles the cached |E| rows. The hint matters twice:
+    //     without it the planner picks a sort-merge join and re-sorts the
+    //     cached adjacency EVERY iteration, and unlike `broadcast(ranks)`
+    //     the hash join still holds when |V| is beyond broadcast size at
+    //     100 TB;
+    //   - the iteration count is FIXED (k=3) and the loop is unrolled
+    //     into one lazy plan: each rank table has one consumer, so it
+    //     stays lazy under the [[rounds]] rule and building the query
+    //     runs no jobs;
+    //   - the graph is symmetric by construction, so there are no
+    //     dangling nodes (every node has out-degree ≥ 1) and rank mass is
+    //     conserved (GraphSpec pins Σpr = 1) — the one PageRank subtlety
+    //     that silently corrupts results at any scale if ignored.
+    // The oracle replays the SAME fixed iterations as generated DuckDB
+    // CTEs (pr1..pr3). Rounding is at 1e-9 (not the usual 1e-6) because
+    // ranks live at the 1/|V| ≈ 5e-4 scale — six decimals would keep
+    // only two significant digits; float summation-order noise is
+    // ~1e-15, six orders below the rounding step.
     QueryDef(
       "q_graph_pagerank",
-      s"""WITH e0 AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-        |edges AS (
-        |  SELECT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM e0
-        |  UNION ALL
-        |  SELECT 2*l_suppkey + 1 AS src, 2*l_partkey AS dst FROM e0),
+      s"""WITH ${supplierPartSql()},
         |deg AS (SELECT src, count(*) AS d FROM edges GROUP BY 1),
         |nn AS (SELECT count(*) AS n FROM deg),
         |pr0 AS (SELECT src AS node, 1.0/nn.n AS pr FROM deg, nn),
         |${(1 to iters).map(stepSql).mkString(",\n")}
         |SELECT node, ${Num.sql("pr", 9)} AS pr FROM pr$iters""".stripMargin) {
       (s, dir) =>
-      val e0 = Tables(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey")).distinct()
-      val sym = e0
-        .select((col("l_partkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-        .union(e0.select((col("l_suppkey") * 2 + 1).as("src"),
-          (col("l_partkey") * 2).as("dst")))
+      val sym = supplierPart(s, dir)
       // hash-partition by src once; deg reuses the exchange, the degree
       // join is co-partitioned (shuffle_hash: build the small deg side,
       // no sort of the |E| rows), and the result is THE cached relation
@@ -156,17 +262,14 @@ object Graph {
     },
 
     // ------------------------------------------------------------------
-    // Triangle counting + local clustering coefficient over the bulk
-    // co-purchase graph (parts appearing together in an order with
-    // quantity ≥ 30). Community density is the other standard link-graph
+    // Triangle counting + local clustering coefficient over the
+    // co-purchase graph. Community density is the other standard link-graph
     // quality signal next to PageRank — near-duplicate content farms show
     // up as abnormally dense neighborhoods. The Spark shape is the
     // node-iterator / "compact-forward" scheme (Schank & Wagner, "Finding,
     // counting and listing all triangles in large graphs", WEA 2005;
     // Suri & Vassilvitskii's MapReduce variant, WWW 2011):
-    //   - edges come from ONE shuffle (groupBy order → sorted part set →
-    //     in-place half-matrix pair explode), never an |E|-sized
-    //     self-join of the fact table;
+    //   - edges come from [[coPurchase]]'s one shuffle;
     //   - each edge is oriented from its lower-(degree, id) endpoint, so
     //     every out-neighborhood is O(√m) and the closure work — the
     //     step that decides whether the algorithm survives skew — is
@@ -185,12 +288,7 @@ object Graph {
     // answer, which is exactly what the hash check pins.
     QueryDef(
       "q_graph_triangles",
-      s"""WITH li AS (
-        |  SELECT l_orderkey AS okey, l_partkey AS pk
-        |  FROM lineitem WHERE l_quantity >= 30),
-        |e AS (
-        |  SELECT DISTINCT x.pk AS a, y.pk AS b
-        |  FROM li x JOIN li y ON x.okey = y.okey AND x.pk < y.pk),
+      s"""WITH $coPurchaseSql,
         |deg AS (
         |  SELECT node, count(*) AS d FROM (
         |    SELECT a AS node FROM e UNION ALL SELECT b FROM e)
@@ -209,42 +307,13 @@ object Graph {
         |SELECT p.node, p.n_tri,
         |  ${Num.sql("p.n_tri * 2e0 / (d.d * (d.d - 1))", 6)} AS cc
         |FROM pn p JOIN deg d ON p.node = d.node""".stripMargin) { (s, dir) =>
-      val li = Tables(s, dir, "lineitem")
-        .filter(col("l_quantity") >= 30)
-        .select(col("l_orderkey").as("okey"), col("l_partkey").as("pk"))
-      // one shuffle builds the edge list: per-order sorted part set,
-      // pairs exploded in place (element i with every later element —
-      // the q_source_overlap half-matrix idiom), so a and b are already
-      // canonical (a < b) without a comparison pass
-      // Explicit-width exchange BEFORE the aggregate (conf-derived,
-      // Tables.fan): the part-set aggregate is tiny in BYTES (~2.8 MB)
-      // but feeds the quadratic half-matrix pair explode, and AQE's
-      // byte-based coalescing folded its exchange read to 2 tasks — the
-      // explode+distinct ran 2-wide for 2.4 s, behind a 3-task scan
-      // whose partial collect_set paid another 2.3 s (r15 profile; the
-      // central finding's explode case). Pinning AFTER the groupBy is a
-      // no-op — the optimizer drops a repartition whose partitioning the
-      // aggregate already provides, and the remaining coalescible
-      // exchange stays coalescible — so the pin rides the raw 2-column
-      // rows (~4 MB) into the groupBy, which then reuses the pinned
-      // clustering: scan fan-out, partial agg, final agg, pair explode
-      // and the distinct's map side all run at session width.
-      val parts = li.transform(graft.Tables.fan(_, "okey"))
-        .groupBy(col("okey"))
-        .agg(array_sort(collect_set(col("pk"))).as("pks"))
-        .filter(size(col("pks")) >= 2)
-      val pairsCol = flatten(transform(col("pks"), (x, i) =>
-        transform(slice(col("pks"), i + lit(2), size(col("pks"))),
-          y => struct(x.as("a"), y.as("b")))))
-      val edges = parts.select(explode(pairsCol).as("p"))
-        .select(col("p.a").as("a"), col("p.b").as("b"))
-        .distinct()
+      val edges = coPurchase(s, dir)
         .cache() // feeds degrees, orientation, and the closing probe
       // |V|-sized degree table — GROWS WITH THE CORPUS (nodes are
       // parts, 200k·SF), so it joins shuffle_hash, never broadcast: a
       // forced broadcast of a ∝SF side bypasses
       // autoBroadcastJoinThreshold and driver-OOMs at 100× (the
-      // pagerank rule from this file's header, now applied uniformly).
+      // pagerank rule, now applied uniformly).
       // shuffle_hash builds the hash table from the |V| side only and
       // co-partitions with the edge relation. Cached: it feeds two
       // orientation joins plus the final cc join — uncached, every one
@@ -314,18 +383,12 @@ object Graph {
     // a 1-row relation (the q_active_trailing horizon pattern; at
     // 100 TB the exact |V|-sort quantile swaps for approx_percentile
     // or a chunked rank — only the 1-row k changes producer). The edge
-    // relation is localCheckpoint-truncated per generation because
-    // each generation references its predecessor THREE times (directly
-    // + via both survivor sides) — exactly the multiplied-lineage case
-    // the q_pref_btl lesson warns about: untreated, the plan tree
-    // grows 3^rounds.
+    // relation is a [[rounds]] state: each generation references its
+    // predecessor THREE times (directly + via both survivor sides), so
+    // left lazy the plan tree grows 3^rounds.
     QueryDef(
       "q_graph_kcore",
-      s"""WITH e0 AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-        |ed0 AS (
-        |  SELECT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM e0
-        |  UNION ALL
-        |  SELECT 2*l_suppkey + 1 AS src, 2*l_partkey AS dst FROM e0),
+      s"""WITH ${supplierPartSql("ed0")},
         |dg AS (SELECT src AS node, count(*) AS d FROM ed0 GROUP BY 1),
         |kk AS (
         |  SELECT d AS k FROM (
@@ -339,14 +402,9 @@ object Graph {
         |SELECT node, d AS deg, kk.k AS k FROM dgf, kk
         |WHERE d >= kk.k""".stripMargin) {
       (s, dir) =>
-      val e0 = Tables(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey")).distinct()
-      var edges = e0
-        .select((col("l_partkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-        .union(e0.select((col("l_suppkey") * 2 + 1).as("src"),
-          (col("l_partkey") * 2).as("dst")))
-        .repartition(col("src"))
+      // checkpointed before the peels: the k derivation and the first
+      // peel both read it
+      val edges = supplierPart(s, dir).repartition(col("src"))
         .localCheckpoint()
       val dg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
       // 20th-percentile degree by EXACT sorted position, derived via
@@ -376,18 +434,16 @@ object Graph {
       // the explicit hint) or a keyed anti-join is the fallback — the
       // semantics are identical either way, which is what the
       // unchanged oracle hash proves.
-      for (_ <- 0 until corePeels) {
-        val removed = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
+      val core = rounds(edges, corePeels) { (e, _) =>
+        val removed = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
           .crossJoin(broadcast(kRel))
           .filter(col("d") < col("k")).select(col("src"))
-        edges = edges
-          .join(broadcast(removed), Seq("src"), "left_anti")
+        e.join(broadcast(removed), Seq("src"), "left_anti")
           .join(broadcast(removed.withColumnRenamed("src", "dst")),
             Seq("dst"), "left_anti")
           .select(col("src"), col("dst"))
-          .localCheckpoint()
-      }
-      edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      }.last
+      core.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .crossJoin(broadcast(kRel))
         .filter(col("deg") >= col("k"))
         .select(col("src").as("node"), col("deg"), col("k"))
@@ -411,11 +467,8 @@ object Graph {
     //     re-reached nodes where a frontier formulation needs a
     //     distinct + anti-join pair (the first cut ran three shuffles
     //     per round and benched 3× slower);
-    //   - the round count is FIXED (3, unrolled into one lazy plan —
-    //     building the query runs no jobs), which caps the plan depth
-    //     the way pagerank's fixed k does. An open-ended BFS would add
-    //     the components loop's checkpoint machinery; on this dense
-    //     bipartite graph the 3-hop ball already covers everything
+    //   - the round count is FIXED (3), the way pagerank's k is. On this
+    //     dense bipartite graph the 3-hop ball already covers everything
     //     reachable, which GraphSpec pins independently.
     // The oracle replays frontier-BFS as unrolled CTEs (seeds, NOT-IN
     // subtraction) — a DIFFERENT derivation of the same labeling, so
@@ -423,26 +476,14 @@ object Graph {
     // not merely that one implementation agrees with itself.
     QueryDef(
       "q_graph_bfs",
-      s"""WITH e0 AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-        |edges AS (
-        |  SELECT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM e0
-        |  UNION ALL
-        |  SELECT 2*l_suppkey + 1 AS src, 2*l_partkey AS dst FROM e0),
+      s"""WITH ${supplierPartSql()},
         |f0 AS (SELECT DISTINCT src AS node FROM edges WHERE src % 14 = 1),
         |r0 AS (SELECT node, 0 AS dist FROM f0),
         |${(1 to bfsRounds).map(bfsSql).mkString(",\n")}
         |SELECT node, dist FROM r$bfsRounds""".stripMargin) { (s, dir) =>
-      val e0 = Tables(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey")).distinct()
       // cached src-partitioned adjacency (pagerank pattern; consumers
       // clearCache after their action)
-      val edges = e0
-        .select((col("l_partkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-        .union(e0.select((col("l_suppkey") * 2 + 1).as("src"),
-          (col("l_partkey") * 2).as("dst")))
-        .repartition(col("src"))
-        .cache()
+      val edges = supplierPart(s, dir).repartition(col("src")).cache()
       // MIN-PROPAGATION over the FRONTIER (r14 delta discipline): a
       // node at distance k has a neighbor at distance k−1, so round k
       // only expands nodes REACHED LAST ROUND — the frontier is free
@@ -453,30 +494,24 @@ object Graph {
       // ones. The first cut's frontier/distinct/anti-join cascade ran
       // THREE keyed shuffles per round and benched 5.7 s at sf0.1 —
       // this form pays nothing for the frontier. min() still absorbs
-      // re-reached nodes. lab feeds TWO consumers per round (the
-      // min-fold union + the frontier filter), so left lazy the plan
-      // tree is 2^k and the engine does NOT reuse the duplicated
-      // subtrees: the r15 profile showed round 1's min-fold executed
-      // FOUR times and round 2's twice (identical 64-task stages with
-      // byte-identical 0.68 MB writes, ~3.7 s of a 3.9 s action). Each
-      // round's |V|-bounded label table is therefore eagerly
-      // localCheckpointed — the HITS two-consumer discipline — so every
+      // re-reached nodes. The label table is a [[rounds]] state (the
+      // min-fold union + the frontier filter read it): the r15 profile
+      // showed round 1's min-fold executed FOUR times and round 2's
+      // twice when lazy (identical 64-task stages with byte-identical
+      // 0.68 MB writes, ~3.7 s of a 3.9 s action); checkpointed, every
       // round evaluates exactly once (7 → 3 evaluations at k = 3).
-      var lab = edges.filter(col("src") % 14 === 1)
+      val seeds = edges.filter(col("src") % 14 === 1)
         .select(col("src").as("node")).distinct()
         .select(col("node"), lit(0).as("dist"))
-      var frontier = lab.select(col("node"))
-      for (k <- 1 to bfsRounds) {
-        lab = edges
+      rounds(seeds, bfsRounds) { (lab, k) =>
+        val frontier = lab.filter(col("dist") === k - 1).select(col("node"))
+        edges
           .join(frontier.withColumnRenamed("node", "src")
             .hint("shuffle_hash"), "src")
           .select(col("dst").as("node"), lit(k).as("dist"))
           .union(lab)
           .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-          .localCheckpoint()
-        frontier = lab.filter(col("dist") === k).select(col("node"))
-      }
-      lab
+      }.last
     },
 
     // ------------------------------------------------------------------
@@ -496,35 +531,21 @@ object Graph {
     //     BFS — no frontier bookkeeping, two keyed exchanges a round;
     //   - all-BIGINT arithmetic: distances are exact, no rounding armor.
     // This is delta-stepping's degenerate single-bucket form; at 100 TB
-    // the cost per round is edges incident to labeled nodes, and the
-    // unrolled K-round plan stays one lazy job like pagerank's fixed k.
+    // the cost per round is edges incident to labeled nodes.
     // The oracle replays the identical relaxation rounds as CTEs; the
     // INDEPENDENT derivation check is GraphSpec's textbook-Dijkstra pin
     // on a small graph (relaxation ≡ Dijkstra whenever K ≥ the hop
     // count of some optimal path).
     QueryDef(
       "q_graph_sssp",
-      s"""WITH e0 AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-        |edges AS (
-        |  SELECT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst,
-        |    1 + (l_partkey*7 + l_suppkey*13) % 97 AS w FROM e0
-        |  UNION ALL
-        |  SELECT 2*l_suppkey + 1 AS src, 2*l_partkey AS dst,
-        |    1 + (l_partkey*7 + l_suppkey*13) % 97 AS w FROM e0),
+      s"""WITH ${supplierPartSql(w = Some("1 + (l_partkey*7 + l_suppkey*13) % 97"))},
         |s0 AS (
         |  SELECT DISTINCT src AS node, CAST(0 AS BIGINT) AS dist
         |  FROM edges WHERE src % 14 = 1),
         |${(1 to ssspRounds).map(ssspSql).mkString(",\n")}
         |SELECT node, dist FROM s$ssspRounds""".stripMargin) { (s, dir) =>
-      val e0 = Tables(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey")).distinct()
       val w = (col("l_partkey") * 7 + col("l_suppkey") * 13) % 97 + 1
-      val edges = e0
-        .select((col("l_partkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"), w.as("w"))
-        .union(e0.select((col("l_suppkey") * 2 + 1).as("src"),
-          (col("l_partkey") * 2).as("dst"), w.as("w")))
-        .repartition(col("src"))
+      val edges = supplierPart(s, dir, Some(w)).repartition(col("src"))
         .cache()
       // FULL RELAXATION, restored (r15): r14 tried delta relaxation —
       // round k joins edges only against nodes whose label improved in
@@ -545,25 +566,19 @@ object Graph {
       // shuffle_hash join + one map-combinable min per round, two
       // keyed exchanges, no compare join. The unrolled oracle hashes
       // identically under both forms.
-      // lab feeds TWO consumers per round (the relaxation join's probe
-      // side + the union), so left lazy the plan tree is 2^k and the
-      // engine replays the duplicated subtrees instead of reusing them
-      // (the r15 BFS profile caught round 1 executing 4× at k = 3) —
-      // each round's |V|-bounded label table is eagerly
-      // localCheckpointed, the HITS two-consumer discipline.
-      var lab = edges.filter(col("src") % 14 === 1)
+      // the label table is a [[rounds]] state: the relaxation join's
+      // probe side and the union read it
+      val seeds = edges.filter(col("src") % 14 === 1)
         .select(col("src").as("node")).distinct()
         .select(col("node"), lit(0L).as("dist"))
-      for (_ <- 1 to ssspRounds) {
-        lab = edges
+      rounds(seeds, ssspRounds) { (lab, _) =>
+        edges
           .join(lab.withColumnRenamed("node", "src").hint("shuffle_hash"),
             "src")
           .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
           .union(lab)
           .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-          .localCheckpoint()
-      }
-      lab
+      }.last
     },
 
     // ------------------------------------------------------------------
@@ -647,11 +662,7 @@ object Graph {
     // scale.
     QueryDef(
       "q_graph_assortativity",
-      s"""WITH e0 AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-        |edges AS (
-        |  SELECT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM e0
-        |  UNION ALL
-        |  SELECT 2*l_suppkey + 1 AS src, 2*l_partkey AS dst FROM e0),
+      s"""WITH ${supplierPartSql()},
         |deg AS (SELECT src AS node, count(*) AS d FROM edges GROUP BY 1),
         |j AS (
         |  SELECT da.d AS x, db.d AS y FROM edges e
@@ -671,13 +682,7 @@ object Graph {
             "sqrt(m * 1e0 * syy - sy * 1e0 * sy))", 6)}
         |    AS assortativity
         |FROM mm""".stripMargin) { (s, dir) =>
-      val e0 = Tables(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey")).distinct()
-      val edges = e0
-        .select((col("l_partkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-        .union(e0.select((col("l_suppkey") * 2 + 1).as("src"),
-          (col("l_partkey") * 2).as("dst")))
+      val edges = supplierPart(s, dir)
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
       // |V|-row degree table, ∝SF — both endpoint joins shuffle_hash
       val j = edges
@@ -828,19 +833,15 @@ object Graph {
     // and top-10 authorities via chunkedRank over the |V|-bounded
     // score relation.
     QueryDef("q_graph_hits", hitsOracle) { (s, dir) =>
-      val e0 = Tables(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey")).distinct()
-      val edges = e0.select((col("l_partkey") * 2).as("u"),
-        (col("l_suppkey") * 2 + 1).as("v")).cache()
+      val edges = supplierPart(s, dir, half = true).cache()
       var hub = edges.select(col("u")).distinct()
         .select(col("u"), lit(1000000L).as("h"))
       var auth: DataFrame = null
+      // its own loop, not [[rounds]]: the checkpointed tables are the raw
+      // half-steps inside a round (each read by its max and the
+      // normalization), measured at 60 s before these checkpoints and
+      // ~2 s after
       for (_ <- 1 to hitsRounds) {
-        // each raw half-step feeds TWO consumers (its max and the
-        // normalization), so without truncation the plan doubles per
-        // half-step — the q_pref_btl/BPE doubling regime, measured at
-        // 60 s before these checkpoints and ~2 s after. The
-        // checkpointed relations are |V|-sized score tables.
         val aRaw = edges.join(hub, "u")
           .groupBy(col("v")).agg(sum(col("h")).as("ar"))
           .localCheckpoint()
@@ -894,9 +895,8 @@ object Graph {
     // SF). Doubling state per node: cur = f^(2^i)(u) and mn = min of
     // the first 2^i path nodes; one round = ONE self-equi-join on the
     // |V|-row state (shuffle_hash — the rank side never broadcasts at
-    // scale), localCheckpoint'd per round because squaring references
-    // the previous state twice (an unchecked lineage doubles per
-    // round → 2^K-node plan). K = ⌈log₂|V|⌉ rounds cover any rho; the
+    // scale), a [[rounds]] state because squaring references the
+    // previous state twice. K = ⌈log₂|V|⌉ rounds cover any rho; the
     // outputs (cycle set = image of cur; scc id = path-min of a cycle
     // node; basins via one more composition) are STABLE for any
     // larger K, so the engine sizes K from a 1-row count while the
@@ -906,19 +906,17 @@ object Graph {
     QueryDef("q_graph_scc", sccOracle) { (s, dir) =>
       val cust = Tables(s, dir, "customer")
       val nv = cust.count() // 1-value sizing action: K = ceil(log2 |V|)
-      val rounds = math.max(1,
-        64 - java.lang.Long.numberOfLeadingZeros(nv - 1))
-      var st = cust.selectExpr("c_custkey AS u",
+      val k = math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(nv - 1))
+      val init = cust.selectExpr("c_custkey AS u",
         s"(c_custkey * c_custkey + 7) % ${nv}L AS cur",
         "c_custkey AS mn")
-      for (_ <- 1 to rounds.toInt) {
-        st = st.as("a")
+      val st = rounds(init, k) { (st, _) =>
+        st.as("a")
           .join(st.as("b").hint("shuffle_hash"),
             col("a.cur") === col("b.u"))
           .select(col("a.u"), col("b.cur").as("cur"),
             least(col("a.mn"), col("b.mn")).as("mn"))
-          .localCheckpoint()
-      }
+      }.last
       val cyc = st.select(col("cur").as("u")).distinct()
       val cl = st.join(cyc, Seq("u"), "left_semi")
         .groupBy(col("mn").as("scc_id"))
@@ -955,29 +953,26 @@ object Graph {
     // hash collision degrades progress, never parity.
     QueryDef("q_graph_mis", misOracle) { (s, dir) =>
       import graft.functions.TextAnalysis.h60
-      val e0 = Tables(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey")).distinct()
-      val sym = e0
-        .select((col("l_partkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-        .union(e0.select((col("l_suppkey") * 2 + 1).as("src"),
-          (col("l_partkey") * 2).as("dst")))
-      val edges = sym.repartition(col("src")).cache()
+      val edges = supplierPart(s, dir).repartition(col("src")).cache()
       // the min-neighbor-hash join keys on DST — without a standing
       // dst partitioning it re-shuffled the whole edge relation every
       // Luby round (56.5 MB at sf0.1). Pay that exchange ONCE, cached;
       // each round then moves only the |V|-row alive set (the
       // adjacency-shuffles-once discipline, applied to the second key).
-      // Built FROM the src-side cache, not from sym (r15): derived from
-      // sym each fill re-ran the lineitem-distinct union — e0 evaluated
-      // four times across the two fills; this way the raw edge build
-      // runs once and the dst fill is a re-shuffle of warm blocks.
+      // Built FROM the src-side cache, not from the raw edges (r15):
+      // derived from them each fill re-ran the lineitem-distinct union —
+      // e0 evaluated four times across the two fills; this way the raw
+      // edge build runs once and the dst fill is a re-shuffle of warm
+      // blocks.
       val edgesByDst = edges.select(col("src"), col("dst"))
         .repartition(col("dst")).cache()
       var alive = edges.select(col("src").as("v")).distinct()
         .withColumn("h", h60(concat(lit("mis:"), col("v").cast("string"))))
         .localCheckpoint()
       var mis: DataFrame = null
+      // its own loop, not [[rounds]]: each round checkpoints two tables,
+      // the candidates (read by the removal and the output) and the
+      // alive set
       for (r <- 1 to misRounds) {
         val mn = edgesByDst
           .join(alive.select(col("v").as("dst"), col("h").as("hn")), "dst")
@@ -998,22 +993,7 @@ object Graph {
     },
 
     QueryDef("q_graph_boruvka", boruvkaOracle) { (s, dir) =>
-      val li = Tables(s, dir, "lineitem")
-        .filter(col("l_quantity") >= 30)
-        .select(col("l_orderkey").as("okey"), col("l_partkey").as("pk"))
-      // same conf-width pin as the lpaLabels/triangles edge build: the
-      // scan fan-out, partial collect_set and the pair explode all run
-      // at session width instead of the 3 tasks AQE left them
-      val parts = li.transform(graft.Tables.fan(_, "okey"))
-        .groupBy(col("okey"))
-        .agg(array_sort(collect_set(col("pk"))).as("pks"))
-        .filter(size(col("pks")) >= 2)
-      val pairsCol = flatten(transform(col("pks"), (x, i) =>
-        transform(slice(col("pks"), i + lit(2), size(col("pks"))),
-          y => struct(x.as("a"), y.as("b")))))
-      val ew = parts.select(explode(pairsCol).as("p"))
-        .select(col("p.a").as("a"), col("p.b").as("b"))
-        .distinct()
+      val ew = coPurchase(s, dir)
         .withColumn("w",
           graft.functions.TextAnalysis.h60(concat(lit("mst:"),
             col("a").cast("string"), lit(":"), col("b").cast("string")))
@@ -1069,13 +1049,6 @@ object Graph {
     // trainer would window into skip-grams. The oracle replays the
     // identical steps; GraphSpec replays them sequentially driver-side.
     QueryDef("q_graph_walks", walksOracle) { (s, dir) =>
-      val e0 = Tables(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey")).distinct()
-      val sym = e0
-        .select((col("l_partkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-        .union(e0.select((col("l_suppkey") * 2 + 1).as("src"),
-          (col("l_partkey") * 2).as("dst")))
       // Per-node SORTED neighbor array instead of the r14 window-indexed
       // edge relation (row_number/count over the src partition): the
       // pick "eidx = h mod d over dst-sorted edges" is identically
@@ -1088,36 +1061,27 @@ object Graph {
       // aggregate hash-partitions by src once, the cached relation keeps
       // that clustering, and every step moves only the frontier
       // (shuffle_hash builds the small stepped side).
-      val adj = sym
+      val adj = supplierPart(s, dir)
         .groupBy(col("src"))
         .agg(array_sort(collect_list(col("dst"))).as("nbrs"))
         .withColumn("d", size(col("nbrs")).cast("long"))
         .cache()
       val seeds = adj.filter(col("src") % 4 === 1)
         .select(col("src").as("wid"), col("src").as("cur"))
-      val hops = scala.collection.mutable.Buffer[DataFrame](
-        seeds.selectExpr("wid", "CAST(0 AS INT) AS step", "cur AS node"))
-      var front = seeds
-      for (t <- 1 to walkLen) {
+      // each step's |walks|-row frontier is a [[rounds]] state: the next
+      // step and its own hop rows in the final union read it
+      rounds(seeds, walkLen) { (front, t) =>
         val h = graft.functions.TextAnalysis.h60(concat(
           lit(s"walk:$t:"), col("wid").cast("string"),
           lit(":"), col("cur").cast("string")))
-        // each step feeds TWO consumers (the next step's frontier + its
-        // own hop rows in the final union), so left lazy the union
-        // re-walks steps 1..t−1 for every t — the BFS/SSSP replay
-        // pattern; the eager checkpoint runs each step exactly once
-        // over the |walks|-row frontier
-        val stepped = adj
+        adj
           .join(front.withColumn("h", h).hint("shuffle_hash"),
             col("cur") === col("src"))
           .select(col("wid"), element_at(col("nbrs"),
             (col("h") % col("d")).cast("int") + 1).as("cur"))
-          .localCheckpoint()
-        front = stepped
-        hops += stepped.selectExpr("wid", s"CAST($t AS INT) AS step",
-          "cur AS node")
-      }
-      hops.reduce(_ unionAll _)
+      }.zipWithIndex.map { case (front, t) =>
+        front.selectExpr("wid", s"CAST($t AS INT) AS step", "cur AS node")
+      }.reduce(_ unionAll _)
     },
 
     // ------------------------------------------------------------------
@@ -1209,13 +1173,7 @@ object Graph {
     * adjacency and the cached 16-register counter table per radius
     * 0..anfRounds. */
   private def anfBalls(s: SparkSession, dir: String): Seq[DataFrame] = {
-    val e0 = Tables(s, dir, "lineitem")
-      .select(col("l_partkey"), col("l_suppkey")).distinct()
-    val sym = e0
-      .select((col("l_partkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .union(e0.select((col("l_suppkey") * 2 + 1).as("src"),
-        (col("l_partkey") * 2).as("dst")))
+    val sym = supplierPart(s, dir)
     // self-loop per node folds "keep your own previous ball" into the
     // one per-round aggregate; hash-partitioned by src ONCE and cached
     // (the pagerank adjacency discipline)
@@ -1331,11 +1289,7 @@ object Graph {
         |an${t}n AS (
         |  SELECT $t AS radius, CAST(sum(hll_est) AS BIGINT) AS nf
         |  FROM an${t}e)""".stripMargin
-    s"""WITH e0 AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-      |sym AS (
-      |  SELECT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM e0
-      |  UNION ALL
-      |  SELECT 2*l_suppkey + 1 AS src, 2*l_partkey AS dst FROM e0),
+    s"""WITH ${supplierPartSql("sym")},
       |adj AS (
       |  SELECT src, dst FROM sym
       |  UNION ALL
@@ -1362,11 +1316,7 @@ object Graph {
     val unions = (1 to walkLen).map(t =>
       s"SELECT wid, CAST($t AS INT) AS step, cur AS node FROM w$t")
       .mkString("\n  UNION ALL ")
-    s"""WITH e0 AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-      |edges AS (
-      |  SELECT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM e0
-      |  UNION ALL
-      |  SELECT 2*l_suppkey + 1 AS src, 2*l_partkey AS dst FROM e0),
+    s"""WITH ${supplierPartSql()},
       |adj AS (
       |  SELECT src, dst,
       |    row_number() OVER (PARTITION BY src ORDER BY dst) - 1 AS eidx,
@@ -1395,9 +1345,7 @@ object Graph {
         |hm$k AS (SELECT max(hr) AS hm FROM hr$k),
         |h$k AS (SELECT u, hr * 1000000 // hm AS h FROM hr$k, hm$k)""".stripMargin
     }.mkString(",\n")
-    s"""WITH e0 AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-      |edges AS (SELECT 2 * l_partkey AS u, 2 * l_suppkey + 1 AS v
-      |          FROM e0),
+    s"""WITH ${supplierPartSql(half = true)},
       |h0 AS (SELECT DISTINCT u, CAST(1000000 AS BIGINT) AS h
       |       FROM edges),
       |$rounds,
@@ -1417,12 +1365,7 @@ object Graph {
   private def boruvkaOracle: String = {
     val wExpr = graft.functions.TextAnalysis
       .h60sql("'mst:' || CAST(a AS VARCHAR) || ':' || CAST(b AS VARCHAR)")
-    s"""WITH li AS (
-      |  SELECT DISTINCT l_orderkey AS okey, l_partkey AS pk
-      |  FROM lineitem WHERE l_quantity >= 30),
-      |e AS (
-      |  SELECT DISTINCT x.pk AS a, y.pk AS b
-      |  FROM li x JOIN li y ON x.okey = y.okey AND x.pk < y.pk),
+    s"""WITH $coPurchaseSql,
       |ew AS (SELECT a, b, $wExpr % 100000 AS w FROM e),
       |sym AS (SELECT a AS node, a, b, w FROM ew
       |        UNION ALL SELECT b AS node, a, b, w FROM ew),
@@ -1452,16 +1395,10 @@ object Graph {
   // still read 0
   private def lpaRounds = 3
 
-  /** Shared by q_graph_labelprop and q_graph_modularity: the cached
-    * symmetric co-purchase adjacency (same one-shuffle edge build as
-    * q_graph_triangles — per-order sorted part set, half-matrix pair
-    * explode, a < b) and the synchronous label table after
-    * [[lpaRounds]] deterministic rounds.
-    *
-    * Each round references the previous labels exactly ONCE (the
-    * neighbor join), so lineage grows linearly and the loop stays
-    * fully lazy — the pagerank/PC1 regime, not the BPE/BTL doubling
-    * regime.
+  /** Shared by q_graph_labelprop, q_graph_modularity and
+    * q_graph_conductance: the cached symmetric [[coPurchase]] adjacency
+    * and the synchronous label table after [[lpaRounds]] deterministic
+    * rounds.
     *
     * DELIBERATELY NOT frontier-delta (r14, measured): maintaining the
     * (src, lbl) count table incrementally from changed-label nodes —
@@ -1476,23 +1413,7 @@ object Graph {
     * reaches. */
   private def lpaLabels(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    val li = Tables(s, dir, "lineitem")
-      .filter(col("l_quantity") >= 30)
-      .select(col("l_orderkey").as("okey"), col("l_partkey").as("pk"))
-    // same conf-width pin as the triangles edge build (and for the same
-    // reason): placed BEFORE the groupBy so the scan fan-out, partial
-    // collect_set and the pair explode all run at session width instead
-    // of the 2-3 tasks AQE's byte-based coalescing left them
-    val parts = li.transform(graft.Tables.fan(_, "okey"))
-      .groupBy(col("okey"))
-      .agg(array_sort(collect_set(col("pk"))).as("pks"))
-      .filter(size(col("pks")) >= 2)
-    val pairsCol = flatten(transform(col("pks"), (x, i) =>
-      transform(slice(col("pks"), i + lit(2), size(col("pks"))),
-        y => struct(x.as("a"), y.as("b")))))
-    val sym = parts.select(explode(pairsCol).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
-      .distinct()
+    val sym = coPurchase(s, dir)
       .select(array(struct(col("a").as("src"), col("b").as("dst")),
         struct(col("b").as("src"), col("a").as("dst"))).as("both"))
       .select(explode(col("both")).as("e"))
@@ -1507,26 +1428,20 @@ object Graph {
       // relation. The PageRank/BFS discipline applied to LPA's chassis.
       .repartition(col("src"))
       .cache() // reused by all rounds (the PageRank discipline)
-    var labels = sym.select(col("src").as("node")).distinct()
+    val init = sym.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
-    for (_ <- 1 to lpaRounds) {
-      val cnt = sym
-        .join(labels.withColumnRenamed("node", "dst"), "dst")
+    // the label table is a [[rounds]] state: the caller reads it many
+    // times — conductance joins it four ways (volumes, both edge
+    // endpoints, community sizes), and without the checkpoints each
+    // consumer re-ran the whole round chain (measured at sf0.1:
+    // conductance 5.7→3.8 s, modularity 6.0→3.9, labelprop 3.7→2.9)
+    val labels = rounds(init, lpaRounds) { (labels, _) =>
+      sym.join(labels.withColumnRenamed("node", "dst"), "dst")
         .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("cnt"))
-      // localCheckpoint per round (eager): truncates the unrolled
-      // lineage AND materializes the |V|-row label table, so the three
-      // LPA rounds execute exactly ONCE no matter how many times the
-      // caller consumes `labels` — conductance joins it four ways
-      // (volumes, both edge endpoints, community sizes) and without
-      // this each consumer re-ran the whole round chain (measured at
-      // sf0.1: conductance 5.7→3.8 s, modularity 6.0→3.9, labelprop
-      // 3.7→2.9)
-      labels = cnt
         .groupBy(col("src").as("node"))
         .agg(max(struct(col("cnt"), (-col("lbl")).as("nl"))).as("m"))
         .select(col("node"), (-col("m.nl")).as("lbl"))
-        .localCheckpoint()
-    }
+    }.last
     (sym, labels)
   }
 
@@ -1545,12 +1460,7 @@ object Graph {
         |    FROM c$k) rr
         |  WHERE rn = 1)""".stripMargin
     }.mkString(",\n")
-    s"""li AS (
-      |  SELECT DISTINCT l_orderkey AS okey, l_partkey AS pk
-      |  FROM lineitem WHERE l_quantity >= 30),
-      |e AS (
-      |  SELECT DISTINCT x.pk AS a, y.pk AS b
-      |  FROM li x JOIN li y ON x.okey = y.okey AND x.pk < y.pk),
+    s"""$coPurchaseSql,
       |sym AS (SELECT a AS src, b AS dst FROM e
       |        UNION ALL SELECT b AS src, a AS dst FROM e),
       |l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM sym),
@@ -1618,11 +1528,7 @@ object Graph {
     val out = (1 to misRounds)
       .map(r => s"SELECT v AS node, $r AS round FROM cand$r")
       .mkString("\n  UNION ALL ")
-    s"""WITH e0 AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-      |edges AS (
-      |  SELECT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM e0
-      |  UNION ALL
-      |  SELECT 2*l_suppkey + 1 AS src, 2*l_partkey AS dst FROM e0),
+    s"""WITH ${supplierPartSql()},
       |alive0 AS (
       |  SELECT DISTINCT src AS v,
       |    ${h60sql("'mis:' || CAST(src AS VARCHAR)")} AS h

@@ -35,7 +35,9 @@ object Streaming {
     * (`convertor/convertor.go:52`); the checkpoint replaces the
     * visibility-timeout redelivery loop (`convertor.go:48`). A file
     * that does not parse is dropped and the parquet is written with the
-    * reference's knobs, as in [[Convert.jsonToParquet]]. */
+    * reference's knobs, as in [[Convert.jsonToParquet]]; each batch's
+    * [[Convert.Counters]] appear in its progress's `observedMetrics`
+    * under "convert". */
   def jsonToParquetStream(
       spark: SparkSession,
       inDir: String,
@@ -52,7 +54,9 @@ object Streaming {
       .option("multiLine", true)
       .options(Convert.PermissiveJson)
       .json(inDir)
-    Convert.toParquet(in.filter(col(Convert.Corrupt).isNull))
+    import Convert.Counters
+    Convert.toParquet(in.observe("convert", Counters.head, Counters.tail: _*)
+        .filter(col(Convert.Corrupt).isNull))
       .writeStream
       .format("parquet")
       .options(Convert.RefParquetOptions)

@@ -177,6 +177,44 @@ class GraphSpec extends SparkSpec {
       s"construction launched $built job(s); the bare table read costs $floor")
   }
 
+  test("the eager round loops run one job set per round while building") {
+    // building each query runs its eager rounds (one localCheckpoint per
+    // round) plus the scan-metadata floor; a round that re-ran its
+    // predecessor, or a lost checkpoint, changes the count. AQE is off:
+    // its runtime re-planning made one count vary between runs
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // the floor is 1 (the lineitem or customer footer read); bfs, sssp
+    // and walks add one job per round, scc one sizing count and one job
+    // per doubling round (8 at 150 customers); labelprop and kcore add
+    // their broadcast jobs
+    val expected = Map("q_graph_kcore" -> 35, "q_graph_bfs" -> 4,
+      "q_graph_sssp" -> 4, "q_graph_scc" -> 10, "q_graph_walks" -> 5,
+      "q_graph_labelprop" -> 7)
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    val sc = spark.sparkContext
+    val got = expected.keys.toSeq.map { name =>
+      val jobs = new AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      // a relation an earlier build left cached would skip its fill
+      s2.catalog.clearCache()
+      org.apache.spark.GraftCoreBridge.drainListenerBus(sc)
+      sc.addSparkListener(listener)
+      try SparkEntry.queries(name)(s2, sfDir)
+      finally {
+        org.apache.spark.GraftCoreBridge.drainListenerBus(sc)
+        sc.removeSparkListener(listener)
+      }
+      name -> jobs.get
+    }.toMap
+    s2.catalog.clearCache()
+    assert(got == expected)
+  }
+
   test("q_graph_triangles: counts are consistent and the closing probe " +
     "stays keyed") {
     val df = SparkEntry.queries("q_graph_triangles")(spark, sfDir).cache()

@@ -1039,6 +1039,49 @@ class PlanSpec extends SparkSpec {
         s"boundedness allowlist entry:\n${offenders.distinct.mkString("\n")}")
   }
 
+  test("no graph query shuffles the same input twice without reusing it") {
+    // the replay sweep: two ShuffleExchangeExec nodes over one
+    // canonicalized child are one input computed twice, which the lazy
+    // plan does not share (the BFS rounds' 2^k replay class). Exchanges
+    // with an identical partitioning are merged by exchange reuse into a
+    // ReusedExchangeExec and are not counted; what is left differs only
+    // in its partitioning. Planned with AQE off so the static plan shows
+    // every exchange; a cached relation's plan is walked once. Each query
+    // builds on an empty cache manager, as Verify and Bench run them: a
+    // relation an earlier query left cached is matched into the next
+    // query's plan and reads as a second shuffle of the same input.
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.col
+    // name -> why the repeated input stays
+    val allow: Map[String, String] = Map()
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    def exchanges(p: SparkPlan, seen: scala.collection.mutable.Set[SparkPlan])
+        : Seq[ShuffleExchangeExec] =
+      p.collectWithSubqueries { case e: ShuffleExchangeExec => e } ++
+        p.collectWithSubqueries { case m: InMemoryTableScanExec => m.relation.cachedPlan }
+          .filter(seen.add).flatMap(exchanges(_, seen))
+    def replays(df: DataFrame): Seq[String] = {
+      val plan = df.queryExecution.executedPlan
+      s2.catalog.clearCache()
+      exchanges(plan, scala.collection.mutable.Set.empty)
+        .groupBy(_.child.canonicalized).toSeq.collect {
+          case (child, es) if es.size > 1 =>
+            s"${es.size} exchanges (${es.map(_.outputPartitioning).mkString(", ")}) " +
+              s"over one ${child.nodeName}"
+        }
+    }
+    // the sweep sees a replay: one aggregate shuffled by two keys
+    val agg = s2.range(100).selectExpr("id % 7 AS a", "id % 5 AS b").distinct()
+    assert(replays(agg.repartition(col("a")).union(agg.repartition(col("b")))).size == 1)
+    val offenders = graft.operators.Graph.defs.filterNot(d => allow.contains(d.name))
+      .flatMap(d => replays(d.fn(s2, sfDir)).map(r => s"${d.name}: $r"))
+    assert(offenders.isEmpty,
+      "graph queries shuffling one input twice without a replay allowlist " +
+        s"entry:\n${offenders.mkString("\n")}")
+  }
+
   test("no query plans an unpartitioned window over unbounded input") {
     // the CartesianGuard idiom for single-task sorts: a WindowExec with
     // an EMPTY partitionSpec moves ALL its input rows to one task — fine

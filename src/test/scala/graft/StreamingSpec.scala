@@ -129,6 +129,12 @@ class StreamingSpec extends SparkSpec {
       val rows = spark.read.parquet(out)
       assert(rows.columns.toSeq == Seq("ID", "name", "nationality", "age"))
       assert(rows.collect().map(_.getString(0)).toSeq == Seq("1"))
+      // the drop is counted: the batch's observed "convert" metrics
+      val counted = q.recentProgress.toSeq
+        .flatMap(p => Option(p.observedMetrics.get("convert")))
+      def total(c: String) = counted.map(_.getAs[Long](c)).sum
+      assert(total("rows_in") == 2 && total("corrupt") == 1,
+        s"observed ${counted.mkString(", ")}")
     } finally q.stop()
   }
 
