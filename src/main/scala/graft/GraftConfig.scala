@@ -24,7 +24,10 @@ package graft
   * .notificationDrivenStream` maps `Worker` to each batch's conversion
   * job's concurrent-task cap (≈ the worker goroutines, convertor.go:62-65)
   * and `Poller` to the per-trigger file cap (pollers × the 10-message
-  * poll batch, convertor.go:52).
+  * poll batch, convertor.go:52). How often the stream polls is not
+  * configured: the reference's long-poll has no interval setting either,
+  * and both conversion streams poll every `Streaming.PollInterval`
+  * (200 ms).
   */
 final case class GraftConfig(
     poller: Int,

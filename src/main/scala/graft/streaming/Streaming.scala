@@ -37,7 +37,9 @@ object Streaming {
     * that does not parse is dropped and the parquet is written with the
     * reference's knobs, as in [[Convert.jsonToParquet]]; each batch's
     * [[Convert.Counters]] appear in its progress's `observedMetrics`
-    * under "convert". */
+    * under "convert". Outside `backfill` it polls the directory every
+    * [[PollInterval]], as [[notificationDrivenStream]] polls its
+    * notifications: both stand in for the reference's SQS poller. */
   def jsonToParquetStream(
       spark: SparkSession,
       inDir: String,
@@ -67,10 +69,13 @@ object Streaming {
       // checkpointed) then STOP — the reprocess-the-backlog mode. A
       // 100 TB catch-up runs exactly this, then flips to the continuous
       // trigger on the same checkpoint.
-      .trigger(if (backfill) Trigger.AvailableNow()
-               else Trigger.ProcessingTime("1 second"))
+      .trigger(if (backfill) Trigger.AvailableNow() else PollInterval)
       .start()
   }
+
+  /** How often both conversion streams poll for new input; the reason
+    * for 200 ms and its measurements are in [[notificationDrivenStream]]. */
+  private[graft] val PollInterval = Trigger.ProcessingTime("200 milliseconds")
 
   /** The reference's FULL control flow: a stream of S3-event-notification
     * bodies (the SQS messages), each naming object keys to convert — not
@@ -88,18 +93,35 @@ object Streaming {
     * per-trigger notification intake at pollers × the 10-message poll
     * batch (`convertor.go:52`) via maxFilesPerTrigger.
     *
-    * The trigger fires every 500 ms. The reference long-polls
-    * (`convertor.go:79-104`): a poll returns as soon as messages arrive
-    * and the poller asks again at once, so a fixed clock costs each
-    * arrival half an interval of waiting on average and caps a backlog
-    * at one batch per interval. A drain batch takes about 500 ms or
-    * more, so at this interval a backlog drains in back-to-back batches.
+    * The trigger fires every [[PollInterval]], 200 ms. The reference
+    * long-polls (`convertor.go:79-104`): a poll returns as soon as
+    * messages arrive and the poller asks again at once, so a fixed clock
+    * costs each arrival half an interval of waiting on average (about
+    * 100 ms here) and caps a backlog at one batch per interval. A steady
+    * micro-batch takes 0.12-0.3 s on 4 cores and a 30-key drain batch
+    * 0.19-0.4 s, so at 200 ms the conversion, not the clock, sets most of
+    * the arrival-to-commit latency, and a backlog drains in back-to-back
+    * batches. A batch that runs longer than the interval makes Spark log
+    * "Current batch is falling behind"; during a drain that is expected.
     * A shorter interval adds micro-batches whose fixed cost (planning,
-    * and JIT compilation while the service is young) outweighs the wait
-    * it saves. On 4 cores, with the fork-free `file:` filesystem and
-    * the shuffle-free key parse, a 250 ms trigger cost 5-18% more CPU
-    * than the earlier 1 s trigger without them, and a 0 ms one 21% more,
-    * where 500 ms cost 7% less. */
+    * and JIT compilation while the service is young) buys less than the
+    * wait it saves; an idle poll costs about 1.4 ms.
+    *
+    * perfbench `convert_service` (`--seconds 17 --trace 0`, 4 cores),
+    * medians [quartiles] over 5-6 interleaved runs per interval, every
+    * run 201 operations attempted and 0 failed:
+    * {{{
+    * trigger  op_p50_s             op_p90_s  wall_s  cpu_s
+    * 500 ms   0.403 [0.389-0.444]  0.608     1.707   14.89 [14.04-15.65]
+    * 200 ms   0.251 [0.234-0.261]  0.327     0.818   17.07 [16.87-17.47]
+    * 100 ms   0.184                0.260     0.819   17.96
+    *   0 ms   0.143                0.231     0.801   20.98
+    * }}}
+    * (the 0 ms runs were a separate set, where 500 ms read cpu_s 15.41).
+    * The extra CPU is the extra batches: 44 against 32 at 500 ms in a
+    * JFR recording, mostly JIT compilation. 200 ms costs 15% more CPU
+    * than 500 ms; 100 ms and 0 ms cost 21% and 36% more for the little
+    * latency they save beyond it. */
   def notificationDrivenStream(
       spark: SparkSession,
       notifyDir: String,
@@ -119,7 +141,7 @@ object Streaming {
           config.map(_.worker))
         ()
       }
-      .trigger(Trigger.ProcessingTime("500 milliseconds"))
+      .trigger(PollInterval)
       .start()
   }
 
@@ -755,12 +777,6 @@ object Streaming {
         expr("graft_hll_regs(b)").as("skb"))
       .select(file.as("file"), col("la"), col("ha"), col("lb"), col("hb"),
         col("n"), col("skr"), col("ska"), col("skb"))
-  }
-
-  /** The visible zone-map index (one row per readable file). */
-  def zoneTable(spark: SparkSession, dir: String): DataFrame = {
-    spark.read.parquet(DirTable.visible(spark, s"$dir/zones", "opt")
-      .map(_.path.toString): _*)
   }
 
   /** OPTIMIZE: re-cluster every visible row into 8×8 Z-tiles (bounds

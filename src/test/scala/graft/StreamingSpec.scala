@@ -4,10 +4,12 @@ import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import graft.operators.Convert
+import graft.sources.DirTable
 import graft.streaming.Streaming
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery,
+  StreamingQueryProgress, Trigger}
 
 /** A local filesystem that FAILS renames into paths matching a suffix
   * by returning FALSE — Hadoop `FileSystem.rename`'s real failure mode
@@ -44,6 +46,10 @@ object FlakyRenameFs {
 class StreamingSpec extends SparkSpec {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
+
+  /** A zone-map table's visible index: one stats row per readable file. */
+  private def zoneIndex(dir: String) = spark.read.parquet(
+    DirTable.visible(spark, s"$dir/zones", "opt").map(_.path.toString): _*)
 
   test("file-stream JSON→Parquet service converts incrementally (the reference pipeline)") {
     val in = tmpDir("stream_in")
@@ -136,6 +142,78 @@ class StreamingSpec extends SparkSpec {
       assert(total("rows_in") == 2 && total("corrupt") == 1,
         s"observed ${counted.mkString(", ")}")
     } finally q.stop()
+  }
+
+  /** Runs a stream until it has committed all its input, then stops it;
+    * returns the progress of its batches. */
+  private def drain(q: StreamingQuery): Seq[StreamingQueryProgress] =
+    try { q.processAllAvailable(); q.recentProgress.toSeq } finally q.stop()
+
+  /** What a crash after batch 0's write and before its commit leaves:
+    * the checkpoint without the batch's commit entry. */
+  private def crashBeforeCommit(ckpt: String): Unit = {
+    val commit = Paths.get(ckpt, "commits", "0")
+    assert(Files.exists(commit), s"batch 0 never committed in $ckpt")
+    Files.delete(commit)
+    Files.deleteIfExists(Paths.get(ckpt, "commits", ".0.crc"))
+  }
+
+  private def replayedBatch0(progress: Seq[StreamingQueryProgress], ckpt: String): Unit = {
+    assert(progress.exists(_.batchId == 0),
+      s"batch 0 did not run again: ${progress.map(_.batchId)}")
+    assert(Files.exists(Paths.get(ckpt, "commits", "0")))
+  }
+
+  test("directory-watch stream crashed between a batch's write and its " +
+    "commit replays it without duplicating a row") {
+    val in = tmpDir("crash_stream_in")
+    val out = tmpDir("crash_stream_out")
+    val ckpt = tmpDir("crash_stream_ckpt")
+    Files.writeString(Paths.get(in, "a.json"),
+      """{ "ID": "1", "name": "A", "nationality": "CM", "age": 22 }""")
+    Files.writeString(Paths.get(in, "b.json"),
+      """[{ "ID": "2", "name": "B", "nationality": "US", "age": 30 },
+        | { "ID": "3", "name": "C", "nationality": "US", "age": 31 }]""".stripMargin)
+    def ids = spark.read.parquet(out).collect().map(_.getString(0)).toSeq.sorted
+    drain(Streaming.jsonToParquetStream(spark, in, out, ckpt))
+    assert(ids == Seq("1", "2", "3"))
+    crashBeforeCommit(ckpt)
+    replayedBatch0(drain(Streaming.jsonToParquetStream(spark, in, out, ckpt)), ckpt)
+    assert(ids == Seq("1", "2", "3"))
+    // a crash one step earlier, before the sink logged the batch's files:
+    // the replay writes them again, and the sink's log hides the orphans
+    crashBeforeCommit(ckpt)
+    Files.delete(Paths.get(out, "_spark_metadata", "0"))
+    Files.deleteIfExists(Paths.get(out, "_spark_metadata", ".0.crc"))
+    replayedBatch0(drain(Streaming.jsonToParquetStream(spark, in, out, ckpt)), ckpt)
+    assert(ids == Seq("1", "2", "3"))
+  }
+
+  test("notification stream crashed between a batch's write and its commit " +
+    "replays it to the same outputs") {
+    val notify = tmpDir("crash_notify")
+    val objects = tmpDir("crash_objects")
+    val out = tmpDir("crash_notify_out")
+    val ckpt = tmpDir("crash_notify_ckpt")
+    val keys = Seq("a.json", "sub/b c.json", "bad.json")
+    writeObject(objects, "a.json", person("a"))
+    writeObject(objects, "sub/b c.json", s"[${person("b1")}, ${person("b2", 300)}]")
+    writeObject(objects, "bad.json", "{ not json")
+    // the folder placeholder `sub/` names no object and gets no output
+    Files.writeString(Paths.get(notify, "n.json"),
+      notificationBatch(keys :+ "sub/": _*).collect()(0).getString(0))
+    drain(Streaming.notificationDrivenStream(spark, notify, objects, out, ckpt))
+    val first = keys.map(rowsOf(out, _))
+    assert(first == Seq(Seq("[a,Na,US,30]"),
+      Seq("[b1,Nb1,US,30]", "[b2,Nb2,US,null]"), Nil))
+    crashBeforeCommit(ckpt)
+    val replay = drain(
+      Streaming.notificationDrivenStream(spark, notify, objects, out, ckpt))
+    replayedBatch0(replay, ckpt)
+    assert(replay.exists(p => p.batchId == 0 && p.numInputRows == 1))
+    assert(keys.map(rowsOf(out, _)) == first)
+    assert(!Files.exists(Paths.get(out, "_staging")))
+    assert(outputKeys(out) == keys.toSet)
   }
 
   test("notification batch naming many keys converts them all (concurrent key loop)") {
@@ -1575,7 +1653,7 @@ class StreamingSpec extends SparkSpec {
       assert(visibleRows == all)
       failsOnce("opt=1", visibleRows)(Streaming.zoneOptimize(spark, zt))
       assert(visibleRows == all)
-      assert(Streaming.zoneTable(spark, zt).collect()
+      assert(zoneIndex(zt).collect()
         .forall(_.getAs[String]("file").startsWith("opt=1/")))
       failsOnce("gen=0", visibleRows)(
         Streaming.dvDelete(spark, zt, (rid, _, _) => rid % 5 == 0))
@@ -2131,12 +2209,12 @@ class StreamingSpec extends SparkSpec {
       b.scan.description() }.getOrElse(fail(s"no BatchScan in $plan"))
     val kept = raw"zones kept (\d+)/(\d+)".r.findFirstMatchIn(desc)
       .getOrElse(fail(s"no kept/total in: $desc"))
-    val files = Streaming.zoneTable(spark, dir)
+    val files = zoneIndex(dir)
       .filter(col("la") <= ahi && col("ha") >= alo &&
         col("lb") <= bhi && col("hb") >= blo)
       .select(col("file")).collect().map(_.getString(0)).toSeq.sorted
     assert(kept.group(1).toInt == files.size, desc)
-    assert(kept.group(2).toLong == Streaming.zoneTable(spark, dir).count(),
+    assert(kept.group(2).toLong == zoneIndex(dir).count(),
       desc)
     (df, files)
   }
@@ -2157,7 +2235,7 @@ class StreamingSpec extends SparkSpec {
           rows.filter(col("rid") % 3 === w), w.toLong, table)
       }
       // index rows == a from-scratch recompute per file
-      val idx = Streaming.zoneTable(spark, table).collect()
+      val idx = zoneIndex(table).collect()
         .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4), r.getLong(5))).toMap
       assert(idx.keySet == Set("batch=0", "batch=1", "batch=2"))
@@ -2193,7 +2271,7 @@ class StreamingSpec extends SparkSpec {
         == direct, "optimize changed scan results")
       assert(files2.nonEmpty && files2.forall(_.startsWith("opt=2/tile=")))
       val total = rows.count()
-      val readRows = Streaming.zoneTable(spark, table)
+      val readRows = zoneIndex(table)
         .filter(col("file").isin(files2: _*))
         .agg(sum(col("n"))).collect().head.getLong(0)
       assert(readRows < total / 2,
@@ -2234,7 +2312,7 @@ class StreamingSpec extends SparkSpec {
         "old generation not retired")
       // crash leftover below the horizon stays invisible to readers
       NF.createDirectories(NP.get(s"$table/zones/batch=3"))
-      assert(graft.sources.DirTable.visible(spark, s"$table/zones", "opt")
+      assert(DirTable.visible(spark, s"$table/zones", "opt")
         .map(_.name).forall(n => n == "opt=7"))
     } finally rows.unpersist()
   }
