@@ -158,6 +158,7 @@ class StreamingSpec extends SparkSpec {
     Files.deleteIfExists(Paths.get(ckpt, "commits", ".0.crc"))
   }
 
+  /** Checks that a restarted stream ran batch 0 again and committed it. */
   private def replayedBatch0(progress: Seq[StreamingQueryProgress], ckpt: String): Unit = {
     assert(progress.exists(_.batchId == 0),
       s"batch 0 did not run again: ${progress.map(_.batchId)}")
