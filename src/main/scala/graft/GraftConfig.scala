@@ -26,8 +26,7 @@ package graft
   * and `Poller` to the per-trigger file cap (pollers × the 10-message
   * poll batch, convertor.go:52). How often the stream polls is not
   * configured: the reference's long-poll has no interval setting either,
-  * and both conversion streams poll every `Streaming.PollInterval`
-  * (200 ms).
+  * and `notificationDrivenStream`'s scaladoc gives its interval.
   */
 final case class GraftConfig(
     poller: Int,

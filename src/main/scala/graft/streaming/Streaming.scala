@@ -38,8 +38,10 @@ object Streaming {
     * reference's knobs, as in [[Convert.jsonToParquet]]; each batch's
     * [[Convert.Counters]] appear in its progress's `observedMetrics`
     * under "convert". Outside `backfill` it polls the directory every
-    * [[PollInterval]], as [[notificationDrivenStream]] polls its
-    * notifications: both stand in for the reference's SQS poller. */
+    * 1 s, not at [[notificationDrivenStream]]'s 200 ms: a trickle of more
+    * than one file a second would then pay a micro-batch's fixed cost
+    * per file (on 4 cores, 5 files a second cost about 3 times the CPU
+    * of the 1 s trigger; CHANGES.md has the runs). */
   def jsonToParquetStream(
       spark: SparkSession,
       inDir: String,
@@ -69,13 +71,10 @@ object Streaming {
       // checkpointed) then STOP — the reprocess-the-backlog mode. A
       // 100 TB catch-up runs exactly this, then flips to the continuous
       // trigger on the same checkpoint.
-      .trigger(if (backfill) Trigger.AvailableNow() else PollInterval)
+      .trigger(if (backfill) Trigger.AvailableNow()
+               else Trigger.ProcessingTime("1 second"))
       .start()
   }
-
-  /** How often both conversion streams poll for new input; the reason
-    * for 200 ms and its measurements are in [[notificationDrivenStream]]. */
-  private[graft] val PollInterval = Trigger.ProcessingTime("200 milliseconds")
 
   /** The reference's FULL control flow: a stream of S3-event-notification
     * bodies (the SQS messages), each naming object keys to convert — not
@@ -93,11 +92,11 @@ object Streaming {
     * per-trigger notification intake at pollers × the 10-message poll
     * batch (`convertor.go:52`) via maxFilesPerTrigger.
     *
-    * The trigger fires every [[PollInterval]], 200 ms. The reference
-    * long-polls (`convertor.go:79-104`): a poll returns as soon as
-    * messages arrive and the poller asks again at once, so a fixed clock
-    * costs each arrival half an interval of waiting on average (about
-    * 100 ms here) and caps a backlog at one batch per interval. A steady
+    * The trigger fires every 200 ms. The reference long-polls
+    * (`convertor.go:79-104`): a poll returns as soon as messages arrive
+    * and the poller asks again at once, so a fixed clock costs each
+    * arrival half an interval of waiting on average (about 100 ms here)
+    * and caps a backlog at one batch per interval. A steady
     * micro-batch takes 0.12-0.3 s on 4 cores and a 30-key drain batch
     * 0.19-0.4 s, so at 200 ms the conversion, not the clock, sets most of
     * the arrival-to-commit latency, and a backlog drains in back-to-back
@@ -105,11 +104,16 @@ object Streaming {
     * "Current batch is falling behind"; during a drain that is expected.
     * A shorter interval adds micro-batches whose fixed cost (planning,
     * and JIT compilation while the service is young) buys less than the
-    * wait it saves; an idle poll costs about 1.4 ms.
+    * wait it saves. An idle poll lists the whole notification directory,
+    * and nothing removes delivered notifications, so its cost grows with
+    * how long the service has run: on 4 cores it took about 23 ms of
+    * process CPU with 150 notifications and 73 ms with 3000.
     *
-    * perfbench `convert_service` (`--seconds 17 --trace 0`, 4 cores),
-    * medians [quartiles] over 5-6 interleaved runs per interval, every
-    * run 201 operations attempted and 0 failed:
+    * Sizing, on a quiet 4-core host: perfbench `convert_service`
+    * (`--seconds 17 --trace 0`), medians [quartiles] over 5-6
+    * interleaved runs per interval, every run 201 operations attempted
+    * and 0 failed. The 10-pair A/B of 200 ms against 500 ms is in
+    * CHANGES.md.
     * {{{
     * trigger  op_p50_s             op_p90_s  wall_s  cpu_s
     * 500 ms   0.403 [0.389-0.444]  0.608     1.707   14.89 [14.04-15.65]
@@ -118,10 +122,10 @@ object Streaming {
     *   0 ms   0.143                0.231     0.801   20.98
     * }}}
     * (the 0 ms runs were a separate set, where 500 ms read cpu_s 15.41).
-    * The extra CPU is the extra batches: 44 against 32 at 500 ms in a
-    * JFR recording, mostly JIT compilation. 200 ms costs 15% more CPU
-    * than 500 ms; 100 ms and 0 ms cost 21% and 36% more for the little
-    * latency they save beyond it. */
+    * The extra CPU is the extra batches, mostly their JIT compilation:
+    * a JFR recording counted 44 batches at 200 ms against 32 at 500 ms.
+    * 100 ms and 0 ms cost 21% and 36% more CPU than 500 ms for the little
+    * latency they save beyond 200 ms. */
   def notificationDrivenStream(
       spark: SparkSession,
       notifyDir: String,
@@ -141,7 +145,7 @@ object Streaming {
           config.map(_.worker))
         ()
       }
-      .trigger(PollInterval)
+      .trigger(Trigger.ProcessingTime("200 milliseconds"))
       .start()
   }
 
