@@ -170,8 +170,11 @@ object Num {
 }
 
 /** One verifiable operator: a DataFrame query over the tables in `dir`,
-  * plus — when SQL-expressible — an equivalent DuckDB SQL oracle run by the
-  * driver on the same parquet files (registered under their table names).
+  * plus an equivalent DuckDB SQL oracle run by the driver on the same
+  * parquet files (registered under their table names). Every query has
+  * one (ContractSpec checks it), yet `oracle` stays an `Option`:
+  * perfbench's `Queries.scala` reads it as `.oracle.map(q -> _)`, which
+  * on a `String` would still compile, as a map over its characters.
   *
   * Contract notes (driver compare):
   *   - column NAMES must match between the Spark result and the oracle;
@@ -204,11 +207,6 @@ object QueryDef {
   def apply(name: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, installing(fn), Some(oracle))
-
-  /** Non-SQL-expressible query (driver records a rows-only check). */
-  def noOracle(name: String)(
-      fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, installing(fn), None)
 
   /** `fn`, first installing the function catalog on the session it is
     * given, so a query can call any `graft_*` function by name on

@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -264,15 +264,6 @@ object Convert {
     * operation — at 100 TB, file contents are not re-read. */
   def readEvolved(spark: SparkSession, path: String): DataFrame =
     spark.read.option("mergeSchema", true).parquet(path)
-
-  /** Typed path: the same source as a `Dataset[Person]` — compile-time
-    * field access where the schema is fixed, at zero runtime cost (the
-    * encoder maps straight onto the columnar rows). */
-  def typedPersons(spark: SparkSession, in: String): Dataset[Person] = {
-    import spark.implicits._
-    toParquet(spark.read.schema(personSchema).option("multiLine", true).json(in))
-      .as[Person]
-  }
 
   /** S3 event-notification schema: what the reference's SQS message body
     * carries (`convertor/convertor.go:35-44`). */

@@ -4,16 +4,6 @@ import graft.{Num, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** A decoded media asset row: the batch shape a real decoder returns.
-  * `features` stands in for pixel/audio features. */
-final case class DecodedAsset(
-    doc_id: Long,
-    mime: String,
-    n_bytes: Long,
-    width: Int,
-    height: Int,
-    features: Array[Float])
-
 /** A decoded image row: format, real header-parsed dimensions, and an
   * exact integer checksum over the pixel payload. */
 final case class DecodedImage(
@@ -189,9 +179,9 @@ final case class DecodedOgg(
   * spectral selection + successive approximation, EOB-run and
   * correction-bit coding) and LOSSLESS JPEG
   * ([[decodeJpegLossless]]: SOF3 Annex H predictive coding — exact by
-  * definition). Only formats whose decode genuinely needs a codec
-  * library (arithmetic-coded JPEG profiles, video codecs) still route
-  * to [[decodeStub]], a clearly-marked deterministic fake.
+  * definition). Formats whose decode genuinely needs a codec library
+  * (arithmetic-coded JPEG profiles, inter-frame video codecs) are not
+  * decoded here.
   * The batch shape is identical for both: per-partition iterators
   * (`mapPartitions`, the Scala analogue of a Pandas-UDF batch) so a real
   * codec binding amortizes its init across the batch.
@@ -2414,13 +2404,14 @@ object Multimodal {
       throw new IllegalArgumentException("unknown container")
     }
 
-  /** REAL decode kernel dispatched on magic bytes, in the same
-    * per-partition batch shape as [[decodeStub]]: PPM and BMP parse
+  /** REAL decode kernel dispatched on magic bytes, one partition per
+    * batch (`mapPartitions`, so a codec binding can amortize its init
+    * across the batch): PPM and BMP parse
     * straight off the bytes; PNG — a genuinely COMPRESSED format — goes
     * through the full chunk/CRC/inflate/filter pipeline ([[decodePng]],
     * pure `java.util.zip`, no external codec). Other compressed formats
     * (JPEG, ...) still throw — a production pipeline routes those to its
-    * codec binding (here: [[decodeStub]]). */
+    * codec binding. */
   def decodeImage(assets: Dataset[(Long, Array[Byte])]): Dataset[DecodedImage] = {
     import assets.sparkSession.implicits._
     assets.mapPartitions { it =>
@@ -3269,39 +3260,6 @@ object Multimodal {
     }.toVector
   }
 
-  /** STUB decode kernel — swap for a real codec binding in production.
-    * Remaining scope after r12 (baseline + 4:2:0 + progressive +
-    * LOSSLESS JPEG; MJPEG-in-AVI via [[decodeAviMjpeg]] + per-frame
-    * T.81; and INTER-FRAME MS-RLE8 video via [[decodeAviRle8]] with a
-    * real reference-frame carry, are all real): adaptive-arithmetic
-    * ENTROPY LAYERS only — arithmetic-coded JPEG profiles and the
-    * H.26x/VPx/AV1 family, whose range coders demand a
-    * conformance-tested codec library a zero-dependency sandbox
-    * cannot ship. Inter-frame STATE was never the hard part — RLE8
-    * delta frames prove the carry above — the entropy layer is.
-    * Deterministic: "features" are simple byte statistics, "dimensions"
-    * derive from the length. Runs per-partition so a real decoder could
-    * amortize codec init across the batch exactly like a Pandas UDF. */
-  def decodeStub(assets: Dataset[(Long, Array[Byte])]): Dataset[DecodedAsset] = {
-    import assets.sparkSession.implicits._
-    assets.mapPartitions { it =>
-      // per-partition "codec init" would happen here
-      it.map { case (id, bytes) =>
-        val n = bytes.length
-        var sum = 0L
-        var i = 0
-        while (i < n) { sum += (bytes(i) & 0xff); i += 1 }
-        DecodedAsset(
-          doc_id = id,
-          mime = "application/octet-stream",
-          n_bytes = n.toLong,
-          width = (n % 640) + 1,
-          height = (n % 480) + 1,
-          features = Array((n.toFloat), (sum.toFloat / math.max(n, 1))))
-      }
-    }
-  }
-
   /** MJPEG-in-AVI: one `vids/MJPG` stream whose frames are each an
     * independent baseline JPEG — MJPEG is exactly "every frame is a
     * keyframe JPEG". */
@@ -3321,8 +3279,8 @@ object Multimodal {
   case class DecodedAvi(w: Int, h: Int, rate: Int, nFrames: Int,
       hasIndex: Boolean, frames: Vector[Array[Byte]])
 
-  /** MJPEG-in-AVI container walk ([[aviRead]]) + frame extraction —
-    * retires the video decodeStub route: MJPEG is intra-only (each
+  /** MJPEG-in-AVI container walk ([[aviRead]]) + frame extraction.
+    * MJPEG is intra-only (each
     * `00dc` chunk is a complete baseline JPEG), so the repo's own T.81
     * decoder finishes the job per frame; only INTER-frame codecs
     * (H.26x/VPx/AV1 motion compensation + arithmetic coding) remain
@@ -3914,7 +3872,7 @@ object Multimodal {
     // correction-bit walks, ZRL folding) is MultimodalSpec's job via
     // plane-equality against a baseline encode of identical
     // coefficients — irrational IDCT values never cross the engine
-    // boundary. decodeStub now covers video codecs only.
+    // boundary.
     QueryDef(
       "q_multimodal_jpeg_prog",
       """WITH p AS (
@@ -4847,8 +4805,8 @@ object Multimodal {
     },
 
     // ------------------------------------------------------------------
-    // MJPEG-in-AVI VIDEO FRAME DECODE — retires the video decodeStub
-    // route (r11 VERDICT task 2): the RIFF container walk
+    // MJPEG-in-AVI VIDEO FRAME DECODE (r11 VERDICT task 2): the RIFF
+    // container walk
     // ([[decodeAviMjpeg]]) validates headers/index and yields the
     // per-frame byte streams, and each frame — MJPEG is intra-only,
     // every frame an independent baseline JPEG — runs through the
@@ -4863,9 +4821,8 @@ object Multimodal {
     // every pixel of every frame arithmetically from (doc_id, frame).
     // Same 100 TB shape as every codec kernel: the AVI payload is
     // built and decoded inside one executor partition, never
-    // shuffled; only (doc_id, frame, 12 ints) rows move. Remaining
-    // genuinely-stubbed scope is INTER-frame codecs only
-    // (motion-compensated H.26x/VPx/AV1 — see [[decodeStub]]).
+    // shuffled; only (doc_id, frame, 12 ints) rows move. Still out of
+    // scope: INTER-frame codecs (motion-compensated H.26x/VPx/AV1).
     QueryDef(
       "q_multimodal_mjpeg",
       """WITH p AS (

@@ -3,7 +3,8 @@ package graft.sources
 import java.io.IOException
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.StructType
 
 /** The directory-table protocol every maintainer here shares: a table is
@@ -97,17 +98,33 @@ private[graft] object DirTable {
   def superseded(base: String, h: Long)(p: Part): Boolean =
     (p.kind == "batch" && p.id <= h) || (p.kind == base && p.id < h)
 
-  /** The `batch=` partials of `root` with id < `k`, read with `schema`
-    * (a batch whose rows were all filtered leaves a directory schema
-    * inference would refuse); an empty frame when there are none. A
-    * replay of batch k reads exactly what its first attempt read, so it
-    * rewrites the same partial. */
-  def partialsBefore(spark: SparkSession, root: String, k: Long,
-      schema: StructType): DataFrame = {
-    val parts = list(spark, root)
-      .filter(p => p.kind == "batch" && p.id < k).map(_.path.toString)
-    if (parts.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
-    else spark.read.schema(schema).parquet(parts: _*)
+  /** Publish `df` as the `<kind>=<id>` part of `root`: write a hidden
+    * stage (`.<kind>=<id>.stage`, which [[list]] and Spark's directory
+    * reads skip), then [[publish]] it. A crash before the rename leaves
+    * the stage invisible, and a replayed id replaces its part instead of
+    * adding a second one. */
+  def writePart(df: DataFrame, root: String, id: Long,
+      kind: String = "batch"): Unit = {
+    val (fs, r) = this.fs(df.sparkSession, root)
+    val name = s"$kind=$id"
+    val stage = new Path(r, s".$name.stage")
+    df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+    publish(fs, stage, new Path(r, name), new Path(r, s".$name.aside"),
+      s"writePart($name)")
+  }
+
+  /** The [[visible]] partials of `root` (`compact=` as the base) with ids
+    * below `before`, as one frame with each row's batch id in column
+    * `batch` (null on a base). `schema`, when given, pins the columns: a
+    * batch whose rows were all filtered leaves a part that schema
+    * inference would refuse. A replay of batch k that reads the partials
+    * before k reads exactly what its first attempt read. */
+  def partials(spark: SparkSession, root: String, schema: StructType = null,
+      before: Long = Long.MaxValue): DataFrame = {
+    val parts = visible(spark, root, "compact", to = before - 1)
+    val read = if (schema == null) spark.read else spark.read.schema(schema)
+    read.parquet(parts.map(_.path.toString): _*).withColumn("batch", expr(
+      "try_cast(regexp_extract(_metadata.file_path, '/batch=(-?[0-9]+)/[^/]*$', 1) AS BIGINT)"))
   }
 
   /** Checked rename. */

@@ -11,16 +11,6 @@ import org.apache.spark.sql.functions.{col, lit, shiftleft, shiftrightunsigned}
   */
 object Layout {
 
-  /** Range-cluster `df` on `clusterCol` into `files` sorted files: each
-    * file covers a narrow, disjoint value span, so parquet min/max
-    * statistics skip whole row groups for selective range predicates. */
-  def writeClustered(
-      df: DataFrame, path: String, clusterCol: String,
-      files: Int = 32): Unit =
-    df.repartitionByRange(files, col(clusterCol))
-      .sortWithinPartitions(col(clusterCol))
-      .write.mode(SaveMode.Overwrite).parquet(path)
-
   /** Hive-style partition layout: one directory per `partitionCol`
     * value; equality/IN filters on it become directory pruning
     * (`PartitionFilters` at the scan). Use for low-cardinality columns
@@ -57,8 +47,8 @@ object Layout {
     * bits do) — the same per-column range normalization Delta/Iceberg
     * Z-ordering applies. The min/max pre-pass is one map-combinable
     * aggregate over the two columns (at 100 TB: read from table stats
-    * instead). The multi-dimensional analogue of [[writeClustered]],
-    * built from plain Spark primitives. */
+    * instead). The multi-dimensional analogue of a `repartitionByRange`
+    * on one column, built from plain Spark primitives. */
   def writeZOrdered(
       df: DataFrame, path: String, colX: String, colY: String,
       files: Int = 32, bits: Int = 16): Unit = {
@@ -112,41 +102,4 @@ object Layout {
     val files = math.max(1L, (srcBytes + targetBytes - 1) / targetBytes).toInt
     df.repartition(files).write.mode(SaveMode.Overwrite).parquet(dest)
   }
-
-  /** Parquet with a bloom filter on selected columns: point lookups
-    * (`key = x`, `key IN (...)`) on a HIGH-cardinality column skip row
-    * groups min/max statistics can't — a clustered file narrows value
-    * SPANS, but a high-cardinality key's span still covers everything,
-    * while its bloom filter answers "definitely absent" per row group
-    * at ~1 byte/distinct-value. The complement to [[writeClustered]]
-    * (range predicates) and hive partitioning (low-cardinality
-    * equality); `ndv` sizes the filter for the expected distincts per
-    * row group. Parquet only materializes the filter for chunks that
-    * fall back from dictionary encoding (a complete dictionary is
-    * already an exact membership structure, and readers filter on it) —
-    * exactly the high-cardinality regime bloom filters exist for, so
-    * the option composes correctly at every cardinality. PlanSpec
-    * verifies the footer filters exist and answer membership on a
-    * dictionary-overflowing key. */
-  def writeBloomFiltered(
-      df: DataFrame, path: String, bloomCols: Seq[String],
-      ndv: Long = 100000L): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
-    val configured = bloomCols.foldLeft(w) { (acc, c) =>
-      acc.option(s"parquet.bloom.filter.enabled#$c", "true")
-        .option(s"parquet.bloom.filter.expected.ndv#$c", ndv.toString)
-    }
-    configured.parquet(path)
-  }
-
-  /** Bucketed + sorted managed table: joins and aggregations on
-    * `bucketCol` between tables bucketed the same way need NO exchange —
-    * the steady-state layout for repeatedly-joined fact tables. */
-  def writeBucketed(
-      df: DataFrame, table: String, bucketCol: String,
-      buckets: Int = 64): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .saveAsTable(table)
 }

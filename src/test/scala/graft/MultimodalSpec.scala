@@ -32,29 +32,6 @@ class MultimodalSpec extends SparkSpec with TimeLimits {
     c
   }
 
-  test("decode stub preserves ids, is deterministic, and batches per partition") {
-    import spark.implicits._
-    val docs = Tables(spark, sfDir, "documents").limit(100)
-    val assets = docs.select(col("doc_id"), col("text").cast("binary").as("payload"))
-      .as[(Long, Array[Byte])]
-    val decoded = Multimodal.decodeStub(assets)
-    val rows = decoded.collect()
-    assert(rows.length == 100)
-    rows.foreach { a =>
-      assert(a.n_bytes > 0)
-      assert(a.width >= 1 && a.width <= 640)
-      assert(a.height >= 1 && a.height <= 480)
-      assert(a.features.length == 2)
-      assert(a.features(0) == a.n_bytes.toFloat) // deterministic stub contract
-    }
-    // determinism across runs and partitionings
-    val again = Multimodal.decodeStub(
-        assets.repartition(7)).collect().sortBy(_.doc_id)
-    assert(rows.sortBy(_.doc_id).zip(again)
-      .forall { case (x, y) => x == y || (x.doc_id == y.doc_id
-        && x.n_bytes == y.n_bytes && x.features.sameElements(y.features)) })
-  }
-
   test("real PPM decode recovers encoded dimensions and exact pixel sum") {
     import spark.implicits._
     // dimensions that exercise 1-wide, 1-tall, and non-square shapes

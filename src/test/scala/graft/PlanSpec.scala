@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
@@ -15,6 +15,33 @@ class PlanSpec extends SparkSpec {
     val df: DataFrame = SparkEntry.queries(name)(spark, sfDir)
     df.queryExecution.executedPlan.toString
   }
+
+  // Three storage layouts the specs below check on real writes; the
+  // engine's own layout writers are in `graft.sources.Layout`.
+
+  /** Range-cluster `df` on `clusterCol` into `files` sorted files, so
+    * parquet min/max statistics skip row groups for range predicates. */
+  private def writeClustered(df: DataFrame, path: String,
+      clusterCol: String, files: Int): Unit =
+    df.repartitionByRange(files, df(clusterCol))
+      .sortWithinPartitions(clusterCol)
+      .write.mode(SaveMode.Overwrite).parquet(path)
+
+  /** Parquet with a bloom filter sized for `ndv` distincts on each of
+    * `bloomCols`, for point lookups min/max statistics cannot skip. */
+  private def writeBloomFiltered(df: DataFrame, path: String,
+      bloomCols: Seq[String], ndv: Long): Unit =
+    bloomCols.foldLeft(df.write.mode(SaveMode.Overwrite)) { (w, c) =>
+      w.option(s"parquet.bloom.filter.enabled#$c", "true")
+        .option(s"parquet.bloom.filter.expected.ndv#$c", ndv.toString)
+    }.parquet(path)
+
+  /** A bucketed, sorted managed table: joins on `bucketCol` between
+    * tables bucketed alike need no exchange. */
+  private def writeBucketed(df: DataFrame, table: String,
+      bucketCol: String, buckets: Int): Unit =
+    df.write.mode(SaveMode.Overwrite).bucketBy(buckets, bucketCol)
+      .sortBy(bucketCol).saveAsTable(table)
 
   test("q_join_bhj broadcasts the dim side") {
     assert(plan("q_join_bhj").contains("BroadcastHashJoin"))
@@ -176,7 +203,7 @@ class PlanSpec extends SparkSpec {
   test("range-partitioned writes cluster data (file-level min/max narrow)") {
     import org.apache.spark.sql.functions._
     val out = tmpDir("graft_range_clustered")
-    graft.sources.Layout.writeClustered(
+    writeClustered(
       Tables(spark, sfDir, "orders"), out, "o_orderdate", files = 4)
     // each file should cover a narrow, mostly disjoint date range —
     // the clustering that lets min/max stats skip row groups at scale
@@ -1188,7 +1215,7 @@ class PlanSpec extends SparkSpec {
     // already exact membership) — 300k distinct longs forces the plain-
     // encoding fallback, the regime bloom filters exist for
     import org.apache.spark.sql.functions.{col, lit}
-    graft.sources.Layout.writeBloomFiltered(
+    writeBloomFiltered(
       spark.range(300000).select(
         col("id").as("o_orderkey"), col("id").as("o_custkey"),
         lit("x").as("o_orderpriority")).repartition(1),
@@ -1237,9 +1264,9 @@ class PlanSpec extends SparkSpec {
         rm(dir)
       }
     }
-    graft.sources.Layout.writeBucketed(li, "graft_li_bucketed",
+    writeBucketed(li, "graft_li_bucketed",
       "l_orderkey", buckets = 8)
-    graft.sources.Layout.writeBucketed(o, "graft_o_bucketed",
+    writeBucketed(o, "graft_o_bucketed",
       "o_orderkey", buckets = 8)
     val joined = spark.table("graft_li_bucketed")
       .join(spark.table("graft_o_bucketed"),

@@ -915,6 +915,58 @@ class StreamingSpec extends SparkSpec {
     assert(psi == p2, "replay must be idempotent")
   }
 
+  test("partials fold: a staged but unpublished partial stays invisible, " +
+    "a replayed batch replaces its partial, and the fold equals the union") {
+    import spark.implicits._
+    import java.nio.file.{Files => NF, Paths => NP}
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftfail.impl", classOf[FlakyRenameFs].getName)
+    val local = tmpDir("partials_crash")
+    val root = "graftfail:" + local
+    def rows(lo: Long, hi: Long) =
+      (lo until hi).map(k => (k % 7, k)).toDF("g", "k")
+    def fold(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Long)] =
+      df.groupBy(col("g")).agg(count(lit(1)), sum(col("k"))).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val waves = Seq(rows(0, 100), rows(100, 250), rows(250, 300))
+    val union = fold(waves.reduce(_ unionAll _))
+    try {
+      waves.zipWithIndex.foreach { case (w, i) =>
+        DirTable.writePart(w, root, i.toLong) }
+      assert(fold(DirTable.partials(spark, root)) == union)
+      // a crash between the stage write and its rename: batch 3's rows
+      // are on disk under the stage, and no read may see them
+      FlakyRenameFs.failDstSuffix.set("/batch=3")
+      intercept[java.io.IOException](
+        DirTable.writePart(rows(1000, 1100), root, 3L))
+      FlakyRenameFs.failDstSuffix.set(null)
+      assert(NF.exists(NP.get(local, ".batch=3.stage")), "nothing was staged")
+      assert(fold(DirTable.partials(spark, root)) == union,
+        "an unpublished stage leaked into the fold")
+      assert(spark.read.parquet(root).count() == 300L,
+        "an unpublished stage leaked into a plain directory read")
+      // a replayed batch replaces its partial: replaying batch 1 leaves
+      // one batch=1 and the fold unchanged (a second copy would double
+      // its counts and sums)
+      DirTable.writePart(waves(1), root, 1L)
+      assert(DirTable.list(spark, root).map(_.name).sorted ==
+        Seq("batch=0", "batch=1", "batch=2"))
+      assert(fold(DirTable.partials(spark, root)) == union,
+        "three batches plus a replay must fold to the union")
+      // each row carries the id of the batch it came from
+      val ids = DirTable.partials(spark, root).groupBy(col("batch")).count()
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(ids == Map(0L -> 100L, 1L -> 150L, 2L -> 50L), ids.toString)
+      // reading the state before a batch sees only the earlier ids
+      assert(DirTable.partials(spark, root, before = 2L).count() == 250L)
+      assert(DirTable.partials(spark, root, waves(0).schema, before = 0L)
+        .count() == 0L)
+    } finally {
+      FlakyRenameFs.failDstSuffix.set(null)
+      spark.sparkContext.hadoopConfiguration.unset("fs.graftfail.impl")
+    }
+  }
+
   test("incrementalDedupStream service: file source in, deduped corpus out") {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val in = tmpDir("ingest_svc_in")
@@ -1115,57 +1167,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("transformWithState event-time timers close idle sessions from the " +
-    "watermark, not from new per-user events") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val mem = MemoryStream[(Long, Long)] // (user_id, ts_ms)
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    def sessions: Set[(Long, Long, Long, Long)] = spark.table("session_test")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSet
-    try {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val watermarked = mem.toDS().toDF("user_id", "ts_ms")
-        .withColumn("ts", timestamp_millis(col("ts_ms")))
-        .withWatermark("ts", "0 seconds")
-      q = Streaming.sessionTimeout(watermarked, gapMs = 10000L)
-        .writeStream.format("memory").queryName("session_test")
-        .option("checkpointLocation", tmpDir("session_ckpt"))
-        .outputMode(OutputMode.Append()).start()
-      // batch 1, user 1: two events 2s apart + an intra-batch gap >10s —
-      // the first session must close INLINE without any timer involved
-      mem.addData((1L, 1000L), (1L, 3000L), (1L, 20000L))
-      q.processAllAvailable()
-      assert(sessions == Set((1L, 1000L, 3000L, 2L)),
-        s"intra-batch gap must close inline: $sessions")
-      // batch 2, other user far in the future: advances the WATERMARK
-      // past user 1's trailing expiry (20000+10000) but delivers no
-      // user-1 event. The timer — not an event — must close the session.
-      mem.addData((9L, 50000L))
-      q.processAllAvailable()
-      // batch 3 triggers evaluation under the advanced watermark
-      mem.addData((9L, 50001L))
-      q.processAllAvailable()
-      assert(sessions.contains((1L, 20000L, 20000L, 1L)),
-        s"watermark-driven timer close missing: $sessions")
-      // user 9's own session stays OPEN (watermark 50001 < 50001+10000):
-      // re-armed timers must not fire early
-      assert(!sessions.exists(_._1 == 9L),
-        s"open session closed prematurely: $sessions")
-    } finally {
-      if (q != null) q.stop()
-      prev match {
-        case Some(v) => spark.conf
-          .set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf
-          .unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("transformWithState list-state attribution matches the stream-stream " +
     "join twin when the cap doesn't bind, and evicts oldest-first when it does") {
     import spark.implicits._
@@ -1242,88 +1243,6 @@ class StreamingSpec extends SparkSpec {
         s"cap must keep only the newest click: $got")
     } finally {
       if (q2 != null) q2.stop()
-      prev match {
-        case Some(v) => spark.conf
-          .set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf
-          .unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("transformWithState map-state profile counts accumulate by point " +
-    "updates and the changelog reconstructs the batch truth") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val mem = MemoryStream[(Long, String)]
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    def changelog: Seq[(Long, String, Long)] = spark.table("profile_test")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
-    try {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      q = Streaming.profileCounts(mem.toDS())
-        .writeStream.format("memory").queryName("profile_test")
-        .option("checkpointLocation", tmpDir("profile_ckpt"))
-        .outputMode(OutputMode.Append()).start()
-      mem.addData((1L, "click"), (1L, "click"), (1L, "view"), (2L, "view"))
-      q.processAllAvailable()
-      assert(changelog.toSet == Set((1L, "click", 2L), (1L, "view", 1L),
-        (2L, "view", 1L)))
-      // batch 2: only touched (user, type) cells emit, counts accumulate
-      // across batches through the map's point reads
-      mem.addData((1L, "click"), (2L, "purchase"))
-      q.processAllAvailable()
-      val b2 = changelog.diff(Seq((1L, "click", 2L), (1L, "view", 1L),
-        (2L, "view", 1L)))
-      assert(b2.toSet == Set((1L, "click", 3L), (2L, "purchase", 1L)),
-        s"unexpected batch-2 changelog: $b2")
-      // the LAST changelog row per (user, type) must equal the global
-      // group-count truth — the upsert-sink contract
-      val last = changelog.groupBy(t => (t._1, t._2))
-        .map { case (k, v) => k -> v.last._3 }
-      assert(last == Map((1L, "click") -> 3L, (1L, "view") -> 1L,
-        (2L, "view") -> 1L, (2L, "purchase") -> 1L))
-    } finally {
-      if (q != null) q.stop()
-      prev match {
-        case Some(v) => spark.conf
-          .set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf
-          .unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("transformWithState initial state seeds quota counters from a batch " +
-    "table before the first streaming row") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val mem = MemoryStream[(String, Long, Long)] // (source, doc_id, n_tokens)
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // batch-mode history: srcA already exhausted its 100-token quota,
-      // srcB half-way; srcC never seen in batch
-      val seed = Seq(("srcA", 100L), ("srcB", 50L)).toDS()
-      q = Streaming.quotaAdmitSeeded(mem.toDS(), quota = 100L, initial = seed)
-        .writeStream.format("memory").queryName("seeded_quota_test")
-        .option("checkpointLocation", tmpDir("seeded_quota_ckpt"))
-        .outputMode(OutputMode.Append()).start()
-      mem.addData(("srcA", 1L, 10L), ("srcB", 2L, 60L), ("srcB", 3L, 60L),
-        ("srcC", 4L, 10L))
-      q.processAllAvailable()
-      val got = spark.table("seeded_quota_test")
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-      // srcA: seeded at quota -> nothing admits. srcB: 50 consumed, doc 2
-      // admits (soft cap) and exhausts, doc 3 rejected. srcC: fresh.
-      assert(got == Set(("srcB", 2L), ("srcC", 4L)),
-        s"seeded admission wrong: $got")
-    } finally {
-      if (q != null) q.stop()
       prev match {
         case Some(v) => spark.conf
           .set("spark.sql.streaming.stateStore.providerClass", v)
@@ -2626,46 +2545,6 @@ class StreamingSpec extends SparkSpec {
           s"wave $wave: ${stateRows(q)} state rows for $users users " +
             "(state must not scale with click volume)")
       }
-    } finally if (q != null) q.stop()
-  }
-
-  test("bounded-state audit: the session automaton stays within two " +
-    "state rows (<=48-byte value + timer) per ACTIVE user and frees " +
-    "closed sessions") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val enc = org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.scalaLong)
-    val width = stateRowBytes(enc,
-      (Long.MaxValue, Long.MaxValue, Long.MaxValue))
-    assert(width <= 48, s"session state value grew to $width B/key")
-    val mem = MemoryStream[(Long, Long)]
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try withRocksDb {
-      val watermarked = mem.toDS().toDF("user_id", "ts_ms")
-        .withColumn("ts", timestamp_millis(col("ts_ms")))
-        .withWatermark("ts", "0 seconds")
-      q = Streaming.sessionTimeout(watermarked, gapMs = 10000L)
-        .writeStream.format("memory").queryName("session_bound")
-        .option("checkpointLocation", tmpDir("session_bound_ckpt"))
-        .outputMode(OutputMode.Append()).start()
-      val users = 30L
-      for (wave <- 0 until 3) {
-        mem.addData((0L until users).map(u =>
-          (u, wave * 2000L + u)): _*)
-        q.processAllAvailable()
-        // value row + armed expiry timer: never more than 2 rows/user
-        assert(stateRows(q) <= 2 * users,
-          s"wave $wave: ${stateRows(q)} state rows for $users users")
-      }
-      // a watermark-advancing wave from one far-future user closes
-      // every other session: state must SHRINK to the active few
-      mem.addData((999L, 10000000L)); q.processAllAvailable()
-      mem.addData((999L, 10000001L)); q.processAllAvailable()
-      assert(stateRows(q) <= 2 * 1,
-        s"closed sessions not freed: ${stateRows(q)} rows remain")
     } finally if (q != null) q.stop()
   }
 

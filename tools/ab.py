@@ -15,6 +15,11 @@ every run to it as one JSON line tagged with both commits, so an
 interrupted A/B keeps its runs; `--report-only` prints the report of the
 runs in that file whose commits are the current HEAD~1 and HEAD.
 
+perfbench wipes its work directory at the next run, so after each run
+the run's `raw.json` and `jvm.log` are copied to
+`<out>.runs/<side>-<workload>-<seed>/`, which its JSON line names as
+`evidence`: an outlier can be examined after the A/B.
+
 The report gives, per workload and end-to-end metric of BENCHMARK.json:
 each side's median and quartiles, the change/base ratio of the medians,
 the pairs the change won (ties count for neither), the base's spread
@@ -73,6 +78,18 @@ def run_once(side, cwd, workload, seed, seconds):
     else:
         rec["error"] = p.stderr[-2000:]
     return rec
+
+
+def keep_evidence(rec, cwd, runs_dir):
+    """Copy the run's raw.json and jvm.log out of perfbench's work
+    directory into its own directory under runs_dir; name it in rec."""
+    dest = os.path.join(runs_dir, f"{rec['side']}-{rec['workload']}-{rec['seed']}")
+    os.makedirs(dest, exist_ok=True)
+    work = os.path.join(cwd, "perfbench", ".work", rec["workload"])
+    for name in ("raw.json", "jvm.log"):
+        if os.path.exists(os.path.join(work, name)):
+            shutil.copy2(os.path.join(work, name), dest)
+    rec["evidence"] = dest
 
 
 def quartiles(xs):
@@ -148,6 +165,8 @@ def main():
         seeds = parse_seeds(args.seeds)
         os.makedirs(os.path.dirname(os.path.abspath(args.out)), exist_ok=True)
         open(args.out, "w").close()
+        runs_dir = os.path.abspath(args.out) + ".runs"
+        shutil.rmtree(runs_dir, ignore_errors=True)
         tmp = tempfile.mkdtemp(prefix="ab_base_")
         base_dir = os.path.join(tmp, "base")
         git("clone", "--quiet", "--no-checkout", ROOT, base_dir)
@@ -162,6 +181,7 @@ def main():
                         cwd = base_dir if side == "base" else ROOT
                         rec = run_once(side, cwd, wl, seed, bench["run_seconds"])
                         rec.update(commits)
+                        keep_evidence(rec, cwd, runs_dir)
                         m = rec.get("metrics", {})
                         log(f"{wl} seed {seed} {side}: " + (", ".join(
                             f"{k}={v:.3f}" for k, v in m.items()) or rec.get("error", "")[-300:]))
