@@ -119,12 +119,13 @@ private[graft] object DirTable {
     * batch whose rows were all filtered leaves a part that schema
     * inference would refuse. A replay of batch k that reads the partials
     * before k reads exactly what its first attempt read. */
-  def partials(spark: SparkSession, root: String, schema: StructType = null,
+  def partials(spark: SparkSession, root: String,
+      schema: Option[StructType] = None,
       before: Long = Long.MaxValue): DataFrame = {
     val parts = visible(spark, root, "compact", to = before - 1)
-    val read = if (schema == null) spark.read else spark.read.schema(schema)
-    read.parquet(parts.map(_.path.toString): _*).withColumn("batch", expr(
-      "try_cast(regexp_extract(_metadata.file_path, '/batch=(-?[0-9]+)/[^/]*$', 1) AS BIGINT)"))
+    schema.fold(spark.read)(spark.read.schema)
+      .parquet(parts.map(_.path.toString): _*).withColumn("batch", expr(
+        "try_cast(regexp_extract(_metadata.file_path, '/batch=(-?[0-9]+)/[^/]*$', 1) AS BIGINT)"))
   }
 
   /** Checked rename. */

@@ -398,7 +398,7 @@ object Streaming {
         .orderBy(col("doc_id"))))
       .filter(col("__rn") === 1).drop("__rn")
     val seen = DirTable.partials(batch.sparkSession, stateDir,
-      StructType(Seq(StructField("h", StringType))), before = batchId)
+      Some(StructType(Seq(StructField("h", StringType)))), before = batchId)
     val fresh = hashed.join(seen, Seq("h"), "left_anti").cache()
     try {
       DirTable.writePart(fresh.drop("h"), corpusDir, batchId)
@@ -437,8 +437,8 @@ object Streaming {
     val bands = Dedup.minhashBandKeys(Dedup.minhashSignatures(batch)).cache()
     try {
       val seen = DirTable.partials(batch.sparkSession, bandsDir,
-        StructType(Seq(StructField("band", IntegerType),
-          StructField("band_key", StringType))), before = batchId)
+        Some(StructType(Seq(StructField("band", IntegerType),
+          StructField("band_key", StringType)))), before = batchId)
       val dupCross = bands
         .join(seen, Seq("band", "band_key"), "left_semi")
         .select(col("doc_id"))
@@ -665,8 +665,8 @@ object Streaming {
     val cols = Seq(col("k"), col("av"), col("bv"))
     val da = dA.select(col("k"), col("av"))
     val db = dB.select(col("k"), col("bv"))
-    def stored(side: DataFrame, sub: String) =
-      DirTable.partials(spark, s"$dir/$sub", side.schema, before = batchId)
+    def stored(side: DataFrame, sub: String) = DirTable.partials(
+      spark, s"$dir/$sub", Some(side.schema), before = batchId)
     val terms = Seq(da.join(stored(db, "b"), "k"),
       db.join(stored(da, "a"), "k"), da.join(db, "k")).map(_.select(cols: _*))
     DirTable.writePart(terms.reduce(_ unionAll _), s"$dir/v", batchId)

@@ -959,7 +959,7 @@ class StreamingSpec extends SparkSpec {
       assert(ids == Map(0L -> 100L, 1L -> 150L, 2L -> 50L), ids.toString)
       // reading the state before a batch sees only the earlier ids
       assert(DirTable.partials(spark, root, before = 2L).count() == 250L)
-      assert(DirTable.partials(spark, root, waves(0).schema, before = 0L)
+      assert(DirTable.partials(spark, root, Some(waves(0).schema), before = 0L)
         .count() == 0L)
     } finally {
       FlakyRenameFs.failDstSuffix.set(null)
